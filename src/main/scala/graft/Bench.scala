@@ -38,26 +38,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // local-mode fix: Tungsten page size scales with heap; with a big
-      // driver heap 32 tasks each zero multi-MB pages per operator and
-      // page allocation dominates small-SF runs (113s -> 15s observed)
-      .config("spark.buffer.pageSize", "4m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // let AQE replan INSIDE cached-plan compilation (off by default):
-      // without it the hot-set anti-join inside the persisted shingle
-      // relation stays a SortMergeJoin with two corpus-shingle
-      // exchanges even when the hot set is runtime-tiny — the r8
-      // shingle-family regression's actual mechanism (adjudicated r9,
-      // BASELINE.md "Shingle-family A/B"). Scale-safe: AQE still falls
-      // back to the shuffle join when the build side is genuinely big
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     // warm up the JVM/codegen/shuffle machinery once so the first timed
     // query doesn't absorb ~4s of session start-up cost
     spark.range(1000000).selectExpr("sum(id % 7)").collect()

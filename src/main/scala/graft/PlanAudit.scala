@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Diagnostic harness (r16): replicate PlanSpec's plan-audit loop
-  * outside sbt — same session shape (local[4], 4 shuffle partitions),
+  * outside sbt — same session (`GraftSession.local(4)`),
   * same sorted construction order (memo warmth matches the spec) —
   * and dump each non-streaming query's executedPlan string plus its
   * "Exchange hashpartitioning" count to a directory for offline diff.
@@ -11,36 +9,19 @@ import org.apache.spark.sql.SparkSession
   * Usage: tools/run.sh graft.PlanAudit <sfDir> <outDir> [only,csv]
   */
 object PlanAudit {
-  private val streaming =
-    Set("stream_hourly", "stream_session", "stream_session_multibatch",
-      "stream_append", "stream_dedup", "stream_stateful", "stream_tws",
-      "stream_static_join", "stream_stream_join", "stream_dsv2",
-      "stream_session_append", "stream_timers", "stream_mapstate",
-      "stream_init_state", "stream_list_state", "stream_join_left",
-      "stream_join_full", "stream_union", "stream_fp_dedup",
-      "stream_avro", "stream_observe", "stream_quality_gate",
-      "stream_quality_windowed", "stream_incremental_ingest")
-
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outDir = args(1)
     val only = args.lift(2).map(_.split(",").toSet)
     new java.io.File(outDir).mkdirs()
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-plan-audit")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(4)
     val counts = new java.io.PrintWriter(s"$outDir/_exchanges.tsv", "UTF-8")
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      if (!streaming(name)) {
+    SparkEntry.registry.toSeq.sortBy(_._1).foreach { case (name, q) =>
+      if (!q.streaming) {
         val t0 = System.nanoTime()
         val (p, fmt) =
           try {
-            val qe = fn(spark, sfDir).queryExecution
+            val qe = q.build(spark, sfDir).queryExecution
             (qe.executedPlan.toString,
               qe.explainString(
                 org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))

@@ -2,12 +2,15 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.analytics._
+
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
   * Each entry in `queries` is an operator/query from SURVEY.md §2; the
   * matching `oracleSql` is ANSI SQL that DuckDB runs over the same
   * parquet tables for a hash-compare. Column names/aliases match
-  * exactly on both sides (the driver sorts columns by name).
+  * exactly on both sides (the driver sorts columns by name). Both are
+  * views of `registry`, where each family registers a query once.
   */
 object SparkEntry {
 
@@ -17,56 +20,28 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     analytics.EventsPipeline.splitInvalid(spark, "/root/testdata/sf0.001")
 
+  /** Every family's queries by name; a name registered twice fails. */
+  lazy val registry: Map[String, QueryDef] = {
+    val families = Seq(Relational.registry, EventsPipeline.registry,
+      TextAnalysis.registry, Dedup.registry, Similarity.registry,
+      Multimodal.registry, StreamingQueries.registry, Curation.registry,
+      CorpusBuild.registry, IncrementalBuild.registry,
+      MixtureOptimize.registry, DocEmbed.registry, ReleaseComputed.registry,
+      Chunking.registry, Bpe.registry, BpeBytes.registry, Unigram.registry,
+      License.registry, TokenizerEval.registry, Stats.registry,
+      Geo.registry, Web.registry, Codecs.registry)
+    val all = families.flatten
+    val dups = all.groupBy(_._1).collect { case (n, es) if es.size > 1 => n }
+    require(dups.isEmpty, s"query names registered twice: ${dups.mkString(", ")}")
+    all.toMap
+  }
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    analytics.Relational.queries ++
-      analytics.EventsPipeline.queries ++
-      analytics.TextAnalysis.queries ++
-      analytics.Dedup.queries ++
-      analytics.Similarity.queries ++
-      analytics.Multimodal.queries ++
-      analytics.StreamingQueries.queries ++
-      analytics.Curation.queries ++
-      analytics.CorpusBuild.queries ++
-      analytics.IncrementalBuild.queries ++
-      analytics.MixtureOptimize.queries ++
-      analytics.DocEmbed.queries ++
-      analytics.ReleaseComputed.queries ++
-      analytics.Chunking.queries ++
-      analytics.Bpe.queries ++
-      analytics.BpeBytes.queries ++
-      analytics.Unigram.queries ++
-      analytics.License.queries ++
-      analytics.TokenizerEval.queries ++
-      analytics.Stats.queries ++
-      analytics.Geo.queries ++
-      analytics.Web.queries ++
-      analytics.Codecs.queries
+    registry.map { case (n, q) => n -> q.build }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
+    * the same parquet tables. */
   def oracleSql: Map[String, String] =
-    analytics.Relational.oracle ++
-      analytics.EventsPipeline.oracle ++
-      analytics.TextAnalysis.oracle ++
-      analytics.Dedup.oracle ++
-      analytics.Similarity.oracle ++
-      analytics.Multimodal.oracle ++
-      analytics.StreamingQueries.oracle ++
-      analytics.Curation.oracle ++
-      analytics.CorpusBuild.oracle ++
-      analytics.IncrementalBuild.oracle ++
-      analytics.MixtureOptimize.oracle ++
-      analytics.DocEmbed.oracle ++
-      analytics.ReleaseComputed.oracle ++
-      analytics.Chunking.oracle ++
-      analytics.Bpe.oracle ++
-      analytics.BpeBytes.oracle ++
-      analytics.Unigram.oracle ++
-      analytics.License.oracle ++
-      analytics.TokenizerEval.oracle ++
-      analytics.Stats.oracle ++
-      analytics.Geo.oracle ++
-      analytics.Web.oracle ++
-      analytics.Codecs.oracle
+    registry.map { case (n, q) => n -> q.oracle }
 }

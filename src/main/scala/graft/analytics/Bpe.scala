@@ -254,12 +254,6 @@ object Bpe {
           .over(Window.orderBy(col("n_merges"))) - col("n_tokens"), lit(0L)))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "bpe_merges" -> (bpeMerges _),
-    "bpe_encode" -> (bpeEncode _),
-    "bpe_segment" -> (bpeSegment _),
-    "bpe_vocab_curve" -> (bpeVocabCurve _),
-    "token_budget" -> (tokenBudget _))
 
   // ---------------------------------------------------------------
   // DuckDB oracle: the full training unrolled as MATERIALIZED CTEs
@@ -319,31 +313,35 @@ object Bpe {
           SELECT $key, unnest(string_split(text, ' ')) AS w FROM documents) z
         WHERE length(w) > 0 GROUP BY 1, 2)"""
 
-  val oracle: Map[String, String] = Map(
-    "bpe_merges" -> (oracleTraining + "\n" +
+  val registry: Map[String, QueryDef] = Map(
+    "bpe_merges" -> QueryDef(bpeMerges _,
+      (oracleTraining + "\n" +
       "SELECT merge_rank, lhs, rhs, cnt FROM (" +
       (1 to rounds).map(r =>
         s"SELECT $r AS merge_rank, a AS lhs, b AS rhs, CAST(cnt AS BIGINT) AS cnt FROM top$r")
-        .mkString(" UNION ALL ") + ") u"),
-    "bpe_encode" -> (oracleTraining + pricingCtes("doc_id") + s"""
+        .mkString(" UNION ALL ") + ") u")),
+    "bpe_encode" -> QueryDef(bpeEncode _,
+      (oracleTraining + pricingCtes("doc_id") + s"""
       SELECT doc_id,
         CAST(sum(c * ntok) AS BIGINT) AS n_tok_bpe,
         CAST(sum(c * length(w)) AS BIGINT) AS n_tok_char,
         CAST((sum(c * length(w)) * 1000000) // sum(c * ntok) AS BIGINT)
           AS char_per_tok_ppm
-      FROM dw JOIN wtc USING (w) GROUP BY 1"""),
-    "bpe_segment" -> (oracleTraining + s""",
+      FROM dw JOIN wtc USING (w) GROUP BY 1""")),
+    "bpe_segment" -> QueryDef(bpeSegment _,
+      (oracleTraining + s""",
       top AS (SELECT w, wcnt FROM words ORDER BY wcnt DESC, w LIMIT 100),
       seg AS (SELECT w, string_agg(tok, '|' ORDER BY pos) AS toks_str,
           count(*) AS n_toks
         FROM t$rounds GROUP BY w)
       SELECT top.w, top.wcnt, seg.toks_str, CAST(seg.n_toks AS INT) AS n_toks
-      FROM top JOIN seg ON top.w = seg.w"""),
+      FROM top JOIN seg ON top.w = seg.w""")),
     // bpe_encode's pricing join rolled to source; share in the HUGEINT
     // lane (== Spark DECIMAL(38,0) div)
     // one wcnt-weighted count per checkpointed round table; r = 0 is
     // the char tokenizer, so its count doubles as the char total
-    "bpe_vocab_curve" -> (oracleTraining + s""",
+    "bpe_vocab_curve" -> QueryDef(bpeVocabCurve _,
+      (oracleTraining + s""",
       cv AS (${(0 to rounds).map(r =>
         s"SELECT $r AS n_merges, CAST(sum(wcnt) AS BIGINT) AS n_tokens FROM t$r")
         .mkString(" UNION ALL ")}),
@@ -353,8 +351,9 @@ object Bpe {
           AS char_per_tok_ppm,
         CAST(coalesce(lag(n_tokens) OVER (ORDER BY n_merges) - n_tokens, 0)
           AS BIGINT) AS delta_tokens
-      FROM cv CROSS JOIN c0"""),
-    "token_budget" -> (oracleTraining + pricingCtes("source") + s""",
+      FROM cv CROSS JOIN c0""")),
+    "token_budget" -> QueryDef(tokenBudget _,
+      (oracleTraining + pricingCtes("source") + s""",
       per AS (
         SELECT source, sum(c * ntok) AS n_tok_bpe, sum(c) AS n_words
         FROM dw JOIN wtc USING (w) GROUP BY source),
@@ -362,5 +361,6 @@ object Bpe {
       SELECT source, CAST(n_tok_bpe AS BIGINT) AS n_tok_bpe,
         CAST(n_words AS BIGINT) AS n_words,
         CAST((n_tok_bpe * 1000000) // tot_bpe AS BIGINT) AS share_ppm
-      FROM per CROSS JOIN tot"""))
+      FROM per CROSS JOIN tot""")),
+  )
 }

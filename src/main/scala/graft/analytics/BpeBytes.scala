@@ -148,9 +148,6 @@ object BpeBytes {
         decode(unhex(concat_ws("", toks)), "UTF-8").as("rt"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "bpe_bytes"         -> bpeBytes _,
-    "bpe_bytes_segment" -> bpeBytesSegment _)
 
   // ---------------------------------------------------------------
   // DuckDB oracle: the byte-table seed + the SAME unrolled merge
@@ -174,13 +171,15 @@ object BpeBytes {
   private def oracleTraining: String =
     oracleBase + ",\n" + (1 to rounds).map(Bpe.oracleRound).mkString(",\n")
 
-  val oracle: Map[String, String] = Map(
-    "bpe_bytes" -> (oracleTraining + "\n" +
+  val registry: Map[String, QueryDef] = Map(
+    "bpe_bytes" -> QueryDef(bpeBytes _,
+      (oracleTraining + "\n" +
       "SELECT merge_rank, lhs, rhs, cnt FROM (" +
       (1 to rounds).map(r =>
         s"SELECT $r AS merge_rank, a AS lhs, b AS rhs, CAST(cnt AS BIGINT) AS cnt FROM top$r")
-        .mkString(" UNION ALL ") + ") u"),
-    "bpe_bytes_segment" -> (oracleTraining + s""",
+        .mkString(" UNION ALL ") + ") u")),
+    "bpe_bytes_segment" -> QueryDef(bpeBytesSegment _,
+      (oracleTraining + s""",
       mb AS (SELECT w, wcnt FROM words WHERE length(hex(w)) > 2 * length(w)),
       topw AS (SELECT w, wcnt FROM words ORDER BY wcnt DESC, w LIMIT 100),
       pop AS (SELECT DISTINCT w, wcnt FROM (
@@ -192,5 +191,6 @@ object BpeBytes {
         CAST(length(hex(pop.w)) // 2 AS INT) AS n_bytes,
         CAST(seg.n_toks AS INT) AS n_toks, seg.toks_str,
         decode(unhex(seg.hx)) AS rt
-      FROM pop JOIN seg ON seg.w = pop.w"""))
+      FROM pop JOIN seg ON seg.w = pop.w""")),
+  )
 }

@@ -675,29 +675,12 @@ object Chunking {
 
   private def paraSql: String = paraCtesFrom("documents", "text", "doc_id")
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "span_corruption" -> ((s: SparkSession, d: String) => spanCorruption(s, d)),
-    "text_chunk"    -> textChunk _,
-    "dedup_chunks"  -> dedupChunks _,
-    "dedup_cdc"     -> dedupCdc _,
-    "dedup_substring" -> dedupSubstring _,
-    "dedup_spans"   -> dedupSpans _,
-    "text_winnow"   -> textWinnow _,
-    "dedup_profile" -> dedupProfile _,
-    "text_selfrep"  -> textSelfrep _,
-    "dedup_winnow"  -> dedupWinnow _,
-    "dedup_strip"   -> dedupStrip _,
-    "dedup_paragraphs" -> dedupParagraphs _,
-    "contamination" -> ((s: SparkSession, d: String) => contamination(s, d)),
-    "pack_sequences" -> ((s: SparkSession, d: String) => packSequences(s, d)),
-  )
-
-  val oracle: Map[String, String] = Map(
+  val registry: Map[String, QueryDef] = Map(
     // same boundary rule (md5 last nibble '0' ends a chunk); the oracle
     // spells chunk membership as a running boundary count BEFORE each
     // token (boundary token belongs to the chunk it ends), rebuilds the
     // chunk text order-exactly, then runs the same two-level rollup
-    "dedup_cdc" ->
+    "dedup_cdc" -> QueryDef(dedupCdc _,
       """WITH t AS (
           SELECT doc_id, source, string_split(text, ' ') AS tk
           FROM documents),
@@ -733,11 +716,11 @@ object Chunking {
             * 1000000) // CAST(sum(n) AS BIGINT) AS crossdoc_ppm,
           (CAST(sum(tok) AS BIGINT) * 100) // CAST(sum(n) AS BIGINT)
             AS avg_chunk_toks_x100
-        FROM perkey GROUP BY source""",
+        FROM perkey GROUP BY source"""),
     // identical periodic schedule: token i masked iff (i-1)%20 < 3,
     // span sentinel at each span start; both engines filter the ''
     // placeholders before joining on ' '
-    "span_corruption" ->
+    "span_corruption" -> QueryDef(spanCorruption(_, _),
       """WITH t AS (SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
         b AS (
           SELECT doc_id, len(tk) AS n_tokens,
@@ -761,25 +744,25 @@ object Chunking {
           CAST(n_spans AS BIGINT) AS n_spans,
           md5(array_to_string(list_filter(inp, x -> x <> ''), ' ')) AS input_fp,
           md5(array_to_string(list_filter(tgt, x -> x <> ''), ' ')) AS target_fp
-        FROM b""",
-    "text_chunk" ->
+        FROM b"""),
+    "text_chunk" -> QueryDef(textChunk _,
       """WITH t AS (SELECT doc_id, string_split(text, ' ') AS tk FROM documents)
         SELECT doc_id, CAST((start - 1) // 24 AS BIGINT) AS chunk_idx,
           len(tk[start:start+31]) AS chunk_tokens,
           md5(array_to_string(tk[start:start+31], ' ')) AS chunk_hash
-        FROM t, unnest(generate_series(1, len(tk), 24)) AS u(start)""",
-    "dedup_chunks" ->
+        FROM t, unnest(generate_series(1, len(tk), 24)) AS u(start)"""),
+    "dedup_chunks" -> QueryDef(dedupChunks _,
       """WITH t AS (SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
         ch AS (
           SELECT doc_id, md5(array_to_string(tk[start:start+7], ' ')) AS chunk_hash
           FROM t, unnest(generate_series(1, len(tk), 8)) AS u(start))
         SELECT chunk_hash, count(DISTINCT doc_id) AS n_docs, count(*) AS n_occ
-        FROM ch GROUP BY chunk_hash HAVING count(DISTINCT doc_id) > 1""",
+        FROM ch GROUP BY chunk_hash HAVING count(DISTINCT doc_id) > 1"""),
     // sliding 8-token windows, 60-bit md5-derived fingerprints (the
     // text_rolling_hash token-hash encoding), 0-mod-8 sampling, df>32
     // cap, pair join on fingerprint; anchors via arg_min (fp values
     // are distinct within a pair after the per-(doc,fp) min(pos))
-    "dedup_substring" ->
+    "dedup_substring" -> QueryDef(dedupSubstring _,
       """WITH t AS (
           SELECT doc_id, string_split(text, ' ') AS tk FROM documents
           WHERE len(string_split(text, ' ')) >= 8),
@@ -800,11 +783,11 @@ object Chunking {
           arg_min(a.pos, a.fp) AS anchor_a,
           arg_min(b.pos, a.fp) AS anchor_b
         FROM kept a JOIN kept b ON a.fp = b.fp AND a.doc_id < b.doc_id
-        GROUP BY 1, 2""",
+        GROUP BY 1, 2"""),
     // full sliding windows, df>32 cap, gaps-and-islands on the
     // (pos_a - pos_b) diagonal; island of r windows = span of r+k-1
     // tokens; report the longest and the count of spans >= 16
-    "dedup_spans" ->
+    "dedup_spans" -> QueryDef(dedupSpans _,
       """WITH t AS (
           SELECT doc_id, string_split(text, ' ') AS tk FROM documents
           WHERE len(string_split(text, ' ')) >= 8),
@@ -833,10 +816,10 @@ object Chunking {
           CAST(sum(CASE WHEN span_tokens >= 16 THEN 1 ELSE 0 END) AS BIGINT)
             AS n_spans
         FROM sp GROUP BY 1, 2
-        HAVING max(span_tokens) >= 16""",
+        HAVING max(span_tokens) >= 16"""),
     // the dedup_spans pair table rolled to per-doc worst span, then
     // bucketed clean/light/heavy per source
-    "dedup_profile" ->
+    "dedup_profile" -> QueryDef(dedupProfile _,
       """WITH t AS (
           SELECT doc_id, string_split(text, ' ') AS tk FROM documents
           WHERE len(string_split(text, ' ')) >= 8),
@@ -877,11 +860,11 @@ object Chunking {
           count(*) AS n_docs,
           coalesce(max(p.max_span), 0) AS worst_span
         FROM documents d LEFT JOIN per_doc p ON d.doc_id = p.doc_id
-        GROUP BY 1, 2""",
+        GROUP BY 1, 2"""),
     // dedup_paragraphs: keep-first per paragraph hash; the rewrite
     // digest is rebuilt from the KEPT rows in idx order (identical to
     // the engine's indexed-lambda filter over the paragraph array)
-    "dedup_paragraphs" ->
+    "dedup_paragraphs" -> QueryDef(dedupParagraphs _,
       s"""WITH $paraSql,
         keep AS (
           SELECT p.doc_id, p.idx, p.para
@@ -903,11 +886,11 @@ object Chunking {
           coalesce(agg.kept_md5, md5('')) AS kept_md5
         FROM pa
         LEFT JOIN rm ON rm.doc_id = pa.doc_id
-        LEFT JOIN agg ON agg.doc_id = pa.doc_id""",
+        LEFT JOIN agg ON agg.doc_id = pa.doc_id"""),
     // dedup_strip: dedup_spans' islands -> covered positions of the
     // later doc -> indexed list_filter strip, digested as md5
     // (keep-first policy)
-    "dedup_strip" ->
+    "dedup_strip" -> QueryDef(dedupStrip _,
       """WITH t AS (
           SELECT doc_id, string_split(text, ' ') AS tk FROM documents
           WHERE len(string_split(text, ' ')) >= 8),
@@ -949,10 +932,10 @@ object Chunking {
               i -> NOT coalesce(list_contains(c.cov, CAST(i - 1 AS BIGINT)),
                 false)),
             i -> string_split(d.text, ' ')[i]), ' '), '')) AS stripped_md5
-        FROM documents d LEFT JOIN cova c ON d.doc_id = c.doc_id""",
+        FROM documents d LEFT JOIN cova c ON d.doc_id = c.doc_id"""),
     // winnow selection (as text_winnow) → per-(doc,fp) first pos →
     // df-cap → pair equi-join on fingerprint, substring-style anchors
-    "dedup_winnow" ->
+    "dedup_winnow" -> QueryDef(dedupWinnow _,
       """WITH t AS (
           SELECT doc_id, string_split(text, ' ') AS tk FROM documents
           WHERE len(string_split(text, ' ')) >= 8),
@@ -982,10 +965,10 @@ object Chunking {
           arg_min(a.pos, a.fp) AS anchor_a,
           arg_min(b.pos, a.fp) AS anchor_b
         FROM kept a JOIN kept b ON a.fp = b.fp AND a.doc_id < b.doc_id
-        GROUP BY 1, 2""",
+        GROUP BY 1, 2"""),
     // per-(doc, fp) multiplicities → per-doc repetition stats; sums
     // cast to BIGINT (DuckDB sum(BIGINT) widens to HUGEINT)
-    "text_selfrep" ->
+    "text_selfrep" -> QueryDef(textSelfrep _,
       """WITH t AS (
           SELECT doc_id, string_split(text, ' ') AS tk FROM documents
           WHERE len(string_split(text, ' ')) >= 8),
@@ -1003,11 +986,11 @@ object Chunking {
           max(mult) AS max_mult,
           CAST(sum(CASE WHEN mult > 1 THEN mult ELSE 0 END) AS DOUBLE)
             / CAST(sum(mult) AS DOUBLE) AS rep_fraction
-        FROM m GROUP BY 1""",
+        FROM m GROUP BY 1"""),
     // winnowing w=4 over 8-token window hashes: per window-of-4 the
     // min hash (rightmost on ties, via min(struct(fp, -pos))),
     // distinct selections, then per-doc coverage stats
-    "text_winnow" ->
+    "text_winnow" -> QueryDef(textWinnow _,
       """WITH t AS (
           SELECT doc_id, string_split(text, ' ') AS tk FROM documents
           WHERE len(string_split(text, ' ')) >= 8),
@@ -1033,8 +1016,8 @@ object Chunking {
         SELECT doc_id, max(nw) AS n_windows, count(*) AS n_selected,
           coalesce(max(gap), 0) AS max_gap,
           CAST(count(*) AS DOUBLE) / CAST(max(nw) AS DOUBLE) AS density
-        FROM g GROUP BY 1""",
-    "contamination" ->
+        FROM g GROUP BY 1"""),
+    "contamination" -> QueryDef(contamination(_, _),
       """WITH sh AS (SELECT DISTINCT doc_id, shingle FROM (
           SELECT doc_id, unnest(list_transform(
             generate_series(1, len(string_split(text, ' ')) - 4),
@@ -1046,14 +1029,14 @@ object Chunking {
           CAST(count(ev.shingle) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS contam_ratio,
           (count(ev.shingle) > 0)::INT AS contaminated
         FROM tr LEFT JOIN ev ON tr.shingle = ev.shingle
-        GROUP BY tr.doc_id""",
-    "pack_sequences" ->
+        GROUP BY tr.doc_id"""),
+    "pack_sequences" -> QueryDef(packSequences(_, _),
       """SELECT doc_id, source, n_tokens,
           CAST((cum - n_tokens) // 512 AS BIGINT) AS pack_id
         FROM (
           SELECT doc_id, source, len(string_split(text, ' ')) AS n_tokens,
             sum(len(string_split(text, ' '))) OVER (PARTITION BY source
               ORDER BY doc_id ROWS UNBOUNDED PRECEDING) AS cum
-          FROM documents)""",
+          FROM documents)"""),
   )
 }

@@ -100,15 +100,11 @@ object Codecs {
         "ok_deflate", "ok_zstd", "ok_lz4", "ok_snappy")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "binary_codecs" -> binaryCodecs _,
-  )
-
-  val oracle: Map[String, String] = Map(
+  val registry: Map[String, QueryDef] = Map(
     // recovered bytes must sha-match the original text and every
     // codec's bit-exact flag must be 1 — any real decompressor
     // disagreement flips a column and fails the hash
-    "binary_codecs" ->
+    "binary_codecs" -> QueryDef(binaryCodecs _,
       """SELECT doc_id,
           CAST(octet_length(encode(text)) AS BIGINT) AS n_raw,
           sha256(text) AS roundtrip_sha,
@@ -116,6 +112,6 @@ object Codecs {
           CAST(1 AS BIGINT) AS ok_zstd,
           CAST(1 AS BIGINT) AS ok_lz4,
           CAST(1 AS BIGINT) AS ok_snappy
-        FROM documents""",
+        FROM documents"""),
   )
 }

@@ -796,15 +796,6 @@ object CorpusBuild {
           x => x.getField("pack_fp")))).as("seg_fp"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "corpus_build"      -> corpusBuild _,
-    "corpus_build_docs" -> corpusBuildDocs _,
-    "corpus_build_mix"  -> corpusBuildMix _,
-    "corpus_datasheet"  -> corpusDatasheet _,
-    "corpus_manifest"   -> corpusManifest _,
-    "curriculum_order"  -> curriculumOrder _,
-    "shard_export"      -> shardExport _,
-    "shard_export_curriculum" -> shardExportCurriculum _)
 
   // ---------------------------------------------------------------
   // DuckDB oracle — the ENTIRE pipeline re-derived from scratch:
@@ -1015,8 +1006,8 @@ object CorpusBuild {
             AS BIGINT) AS mean_bits_ppm
           FROM cpk)"""
 
-  val oracle: Map[String, String] = Map(
-    "corpus_build" ->
+  val registry: Map[String, QueryDef] = Map(
+    "corpus_build" -> QueryDef(corpusBuild _,
       s"""$withChain
         SELECT CAST(r AS INT) AS stage_rank, stage, n_in,
           n_in - n_out AS n_dropped, n_out
@@ -1041,13 +1032,13 @@ object CorpusBuild {
           UNION ALL SELECT 9, 'contamination',
             (SELECT count(*) FROM s8), (SELECT count(*) FROM s9)
           UNION ALL SELECT 10, 'semantic',
-            (SELECT count(*) FROM s9), (SELECT count(*) FROM s10)) u""",
-    "corpus_build_docs" ->
+            (SELECT count(*) FROM s9), (SELECT count(*) FROM s10)) u"""),
+    "corpus_build_docs" -> QueryDef(corpusBuildDocs _,
       s"""$withChain$releaseCtes
         SELECT doc_id, source, n_tokens, n_emails, n_phones, clean_fp,
           CAST(pack_id AS BIGINT) AS pack_id
-        FROM packed""",
-    "corpus_build_mix" ->
+        FROM packed"""),
+    "corpus_build_mix" -> QueryDef(corpusBuildMix _,
       s"""$withChain$releaseCtes,
         per AS (
           SELECT source, count(*) AS n_docs,
@@ -1064,12 +1055,12 @@ object CorpusBuild {
           CAST((CAST(n_tokens AS HUGEINT) * 1000000) // tot_n AS BIGINT)
             AS prop_ppm,
           sq / sq_tot AS temp_share
-        FROM sq CROSS JOIN tot""",
+        FROM sq CROSS JOIN tot"""),
     // the release datasheet: survivor-slice license tags come from the
     // SAME gate decoration (dsl), margins from the already-derived cm
     // (s10 ⊆ s7, so every survivor has a scored row), tokens from the
     // shared release tail (packed)
-    "corpus_datasheet" ->
+    "corpus_datasheet" -> QueryDef(corpusDatasheet _,
       s"""$withChain$releaseCtes,
         dsl AS (
           SELECT doc_id, ${License.primarySqlOn(s"($licDecSql)")} AS pl
@@ -1107,22 +1098,22 @@ object CorpusBuild {
             AS margin_per_doc_ppm,
           CAST((CAST(n_tokens AS HUGEINT) * 1000000) // n_docs AS BIGINT)
             AS tok_per_doc_ppm
-        FROM dsq JOIN dtop USING (source) CROSS JOIN dtot""",
+        FROM dsq JOIN dtop USING (source) CROSS JOIN dtot"""),
     // the curriculum schedule: word-MDL bits over the scrubbed release
     // corpus, pack rollup, global rank (row_number is the SQL twin of
     // the engine's offset-composed globalRowNumber)
-    "curriculum_order" ->
+    "curriculum_order" -> QueryDef(curriculumOrder _,
       s"""$withChain$releaseCtes,
         $curriculumCtes
         SELECT row_number() OVER (ORDER BY mean_bits_ppm, source, pack_id)
             AS rank_pos,
           source, CAST(pack_id AS BIGINT) AS pack_id, n_docs, n_tokens,
           mean_bits_ppm
-        FROM cpm""",
+        FROM cpm"""),
     // the curriculum-aware cursor: rank → quantile bucket, hash order
     // within the bucket, segment folds in cursor order; the shard
     // count is the SAME Sizing derivation as shard_export
-    "shard_export_curriculum" ->
+    "shard_export_curriculum" -> QueryDef(shardExportCurriculum _,
       s"""$withChain$releaseCtes,
         $curriculumCtes,
         ${shardCtesFrom("packed", "")},
@@ -1141,10 +1132,10 @@ object CorpusBuild {
           md5(string_agg(k.pack_fp, '' ORDER BY k.hk, k.source, k.pack_id))
             AS seg_fp
         FROM spk k JOIN crk r USING (source, pack_id)
-        GROUP BY 1, 2""",
+        GROUP BY 1, 2"""),
     // the shard pseudo-shuffle: hash key, shard assignment, cursor-
     // order fold and the root fold all re-derived
-    "shard_export" ->
+    "shard_export" -> QueryDef(shardExport _,
       s"""$withChain$releaseCtes,
         ${shardCtesFrom("packed", "")}
         SELECT shard_id, n_packs, n_docs, n_tokens, shard_fp FROM shd
@@ -1152,9 +1143,9 @@ object CorpusBuild {
         SELECT -1, CAST(sum(n_packs) AS BIGINT), CAST(sum(n_docs) AS BIGINT),
           CAST(sum(n_tokens) AS BIGINT),
           md5(string_agg(shard_fp, '' ORDER BY shard_id))
-        FROM shd""",
+        FROM shd"""),
     // both manifest levels with the same pinned orderings
-    "corpus_manifest" ->
+    "corpus_manifest" -> QueryDef(corpusManifest _,
       s"""$withChain$releaseCtes,
         mpk AS (
           SELECT source, pack_id, count(*) AS n_docs,
@@ -1168,5 +1159,6 @@ object CorpusBuild {
         SELECT '*', -1, CAST(sum(n_docs) AS BIGINT),
           CAST(sum(n_tokens) AS BIGINT),
           md5(string_agg(pack_fp, '' ORDER BY source, pack_id))
-        FROM mpk""")
+        FROM mpk"""),
+  )
 }

@@ -664,24 +664,6 @@ object Curation {
         (col("sq") / col("sq_tot")).as("temp_share"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "sample_balanced" -> sampleBalanced _,
-    "training_select" -> trainingSelect _,
-    "pii_scrub"       -> piiScrub _,
-    "curation_report" -> curationReport _,
-    "dataset_split"   -> datasetSplit _,
-    "split_leakage"   -> splitLeakage _,
-    "privacy_kanon"   -> privacyKanon _,
-    "privacy_ldiversity" -> privacyLdiversity _,
-    "privacy_tcloseness" -> privacyTcloseness _,
-    "privacy_dp_counts" -> privacyDpCounts _,
-    "privacy_dp_release" -> privacyDpRelease _,
-    "privacy_dp_histogram" -> privacyDpHistogram _,
-    "dsir_select"        -> ((s: SparkSession, d: String) => dsirSelect(s, d)),
-    "quality_classifier" -> qualityClassifier _,
-    "quality_train"      -> qualityTrain _,
-    "mixture_temperature" -> mixtureTemperature _,
-  )
 
   /** The whole averaged-perceptron training replayed in SQL: hashed
     * features + integer labels, then `QualityRounds` unrolled
@@ -814,10 +796,10 @@ object Curation {
           CAST(margin > 0 AS INT) AS accept
         FROM sc"""
 
-  val oracle: Map[String, String] = Map(
+  val registry: Map[String, QueryDef] = Map(
     // ppm rates via HUGEINT multiply + // (== Spark DECIMAL(28,0) div);
     // sums over per-token small ints, projected as BIGINT
-    "dsir_select" ->
+    "dsir_select" -> QueryDef(dsirSelect(_, _),
       """WITH tb AS (
           SELECT doc_id, lang, substr(md5(t), 1, 2) AS b FROM (
             SELECT doc_id, lang, unnest(string_split(text, ' ')) AS t
@@ -838,10 +820,10 @@ object Curation {
           count(*) AS n_tokens
         FROM tb JOIN rates USING (b)
         GROUP BY doc_id
-        ORDER BY score DESC, doc_id LIMIT 100""",
+        ORDER BY score DESC, doc_id LIMIT 100"""),
     // α=1/2 temperature via IEEE sqrt; denominator forced sequential
     // with the running-window trick; proportional ppm in the exact lane
-    "mixture_temperature" ->
+    "mixture_temperature" -> QueryDef(mixtureTemperature _,
       """WITH per AS (
           SELECT source,
             CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_tokens
@@ -857,19 +839,19 @@ object Curation {
           CAST((CAST(n_tokens AS HUGEINT) * 1000000) // tot_n AS BIGINT)
             AS prop_ppm,
           sq / sq_tot AS temp_share
-        FROM sq CROSS JOIN tot""",
+        FROM sq CROSS JOIN tot"""),
     // the TRAINED classifier (r12): replay the full training CTE
     // chain, then score every document with the averaged-perceptron
     // vote weights (bias = bucket 32) — all integer sums
-    "quality_classifier" ->
+    "quality_classifier" -> QueryDef(qualityClassifier _,
       s"""WITH $qualityTrainCtes
-        ${classifierScoreSqlFrom("documents")}""",
+        ${classifierScoreSqlFrom("documents")}"""),
     // the learned weight table itself: final + averaged-vote weights
-    "quality_train" ->
+    "quality_train" -> QueryDef(qualityTrain _,
       s"""WITH $qualityTrainCtes
-        SELECT bucket, w, w_sum FROM wavg""",
+        SELECT bucket, w, w_sum FROM wavg"""),
     // identical md5 rank order and broadcast min-class scalar
-    "sample_balanced" ->
+    "sample_balanced" -> QueryDef(sampleBalanced _,
       """WITH lab AS (
           SELECT vec_id, label, md5(CAST(vec_id AS VARCHAR)) AS h
           FROM embeddings),
@@ -881,10 +863,10 @@ object Curation {
             row_number() OVER (PARTITION BY label ORDER BY h, vec_id) AS rk
           FROM lab)
         SELECT vec_id, label, CAST(rk AS BIGINT) AS rk
-        FROM rk, mn WHERE rk <= min_n""",
+        FROM rk, mn WHERE rk <= min_n"""),
     // same nine conditional cumulative sums + broadcast global + exact
     // integer EMD numerator and gate (see privacyTcloseness scaladoc)
-    "privacy_tcloseness" -> {
+    "privacy_tcloseness" -> QueryDef(privacyTcloseness _, {
       val gc = (0 to 8).map(i =>
         s"sum(CASE WHEN sens <= $i THEN 1 ELSE 0 END) AS c$i").mkString(", ")
       val gg = (0 to 8).map(i =>
@@ -909,8 +891,8 @@ object Curation {
           CAST(sum(CASE WHEN emd_num * 5 > n * nn * 9 THEN n ELSE 0 END)
             AS BIGINT) AS weak_rows
         FROM terms GROUP BY event_type"""
-    },
-    "curation_report" ->
+    }),
+    "curation_report" -> QueryDef(curationReport _,
       """WITH base AS (
           SELECT source, lang, n_chars, md5(text) AS fp FROM documents),
         stats AS (
@@ -926,18 +908,18 @@ object Curation {
             FROM base GROUP BY source, lang) WHERE rn = 1)
         SELECT s.source, s.n_docs, s.n_unique, s.dup_rate, s.mean_chars,
           t.top_lang
-        FROM stats s JOIN top t USING (source)""",
+        FROM stats s JOIN top t USING (source)"""),
     // same four gates: quality predicate inline, language CTE nested
     // (standard SQL allows WITH inside a derived table), exact-canonical
     // group-min, and the recursive-CTE connected components from
-    // Dedup.oracle("dedup_clusters")
-    "training_select" ->
+    // Dedup.registry("dedup_clusters").oracle
+    "training_select" -> QueryDef(trainingSelect _,
       s"""${Dedup.shCte.replaceFirst("WITH ", "WITH RECURSIVE ")}, ${Dedup.minhashCtes},
         ${Dedup.clusterCtes},
         losers AS (
           SELECT doc_id FROM clusters WHERE cluster_id <> doc_id),
         en AS (
-          SELECT doc_id FROM (${TextAnalysis.oracle("lang_id")})
+          SELECT doc_id FROM (${TextAnalysis.registry("lang_id").oracle})
           WHERE pred_lang = 'en'),
         canon AS (
           SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text))
@@ -949,17 +931,17 @@ object Curation {
               / CAST(len(string_split(text, ' ')) AS DOUBLE) < 0.3
           AND doc_id IN (SELECT doc_id FROM en)
           AND doc_id IN (SELECT doc_id FROM canon)
-          AND doc_id NOT IN (SELECT doc_id FROM losers)""",
+          AND doc_id NOT IN (SELECT doc_id FROM losers)"""),
     // same injection, RE2 spelling; DuckDB regexp_replace needs the 'g'
     // option to match Spark's replace-all default
-    "pii_scrub" ->
+    "pii_scrub" -> QueryDef(piiScrub _,
       s"""WITH ${piiCtesFrom("documents")}
         SELECT doc_id, n_emails, n_phones,
           md5(st) AS scrub_fp,
           CAST(len(st) AS BIGINT) AS scrub_len
-        FROM scrub""",
+        FROM scrub"""),
     // same QID grouping as kanon + a count(DISTINCT cohort) per group
-    "privacy_ldiversity" ->
+    "privacy_ldiversity" -> QueryDef(privacyLdiversity _,
       """WITH groups AS (
           SELECT event_type, hour(ts) AS hh,
             CAST(floor(value) AS BIGINT) // 50 AS vb,
@@ -971,10 +953,10 @@ object Curation {
             AS weak_groups,
           CAST(sum(CASE WHEN l < 3 THEN n ELSE 0 END) AS BIGINT)
             AS weak_rows
-        FROM groups GROUP BY 1""",
+        FROM groups GROUP BY 1"""),
     // parallel composition over the disjoint (type × hour) bins: the
     // same threshold table per bin, zero-clamped post-processing
-    "privacy_dp_histogram" ->
+    "privacy_dp_histogram" -> QueryDef(privacyDpHistogram _,
       """WITH c AS (
           SELECT event_type, CAST(hour(ts) AS INT) AS hh,
             CAST(count(*) AS BIGINT) AS n_true,
@@ -999,11 +981,11 @@ object Curation {
           FROM c)
         SELECT event_type, hh, n_true, noise,
           greatest(n_true + noise, 0) AS n_noised
-        FROM n""",
+        FROM n"""),
     // same md5-derived 48-bit uniform and the SAME literal
     // discrete-Laplace threshold table (ε = 1) — the noise draw is
     // table lookup arithmetic on both engines
-    "privacy_dp_counts" ->
+    "privacy_dp_counts" -> QueryDef(privacyDpCounts _,
       """WITH c AS (
           SELECT event_type, CAST(count(*) AS BIGINT) AS n_true,
             CAST(('0x' || substr(md5('dp-' || event_type), 1, 12))
@@ -1026,9 +1008,9 @@ object Curation {
               t -> t <= u)) - 20 AS BIGINT) AS noise
           FROM c)
         SELECT event_type, n_true, noise, n_true + noise AS n_noised
-        FROM n""",
+        FROM n"""),
     // the release projection: noised counts ONLY (no n_true/noise)
-    "privacy_dp_release" ->
+    "privacy_dp_release" -> QueryDef(privacyDpRelease _,
       """WITH c AS (
           SELECT event_type, CAST(count(*) AS BIGINT) AS n_true,
             CAST(('0x' || substr(md5('dp-' || event_type), 1, 12))
@@ -1048,8 +1030,8 @@ object Curation {
             281474913763698, 281474953553764, 281474968191711,
             281474973576711, 281474975557742, 281474976286522,
             281474976710656], t -> t <= u)) - 20 AS BIGINT) AS n_noised
-        FROM c""",
-    "privacy_kanon" ->
+        FROM c"""),
+    "privacy_kanon" -> QueryDef(privacyKanon _,
       """WITH groups AS (
           SELECT event_type, hour(ts) AS hh,
             CAST(floor(value) AS BIGINT) // 50 AS vb, count(*) AS n
@@ -1061,8 +1043,8 @@ object Curation {
             AS suppressed_rows,
           CAST(sum(CASE WHEN n >= 5 THEN n ELSE 0 END) AS BIGINT)
             AS kept_rows
-        FROM groups GROUP BY 1""",
-    "dataset_split" ->
+        FROM groups GROUP BY 1"""),
+    "dataset_split" -> QueryDef(datasetSplit _,
       """SELECT
           CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) < 'cc'
             THEN 'train'
@@ -1071,10 +1053,10 @@ object Curation {
           count(*) AS n_docs,
           CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_tokens,
           CAST(count(DISTINCT lang) AS INT) AS n_langs
-        FROM documents GROUP BY 1""",
+        FROM documents GROUP BY 1"""),
     // the production MinHash candidate pairs (dedup_minhash's exact
     // CTE chain) x the same md5 split rule, rolled per unordered pair
-    "split_leakage" ->
+    "split_leakage" -> QueryDef(splitLeakage _,
       s"""${Dedup.shCte}, ${Dedup.minhashCtes},
         mp AS (
           SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
@@ -1093,6 +1075,6 @@ object Curation {
           CAST(least(x.sp, y.sp) <> greatest(x.sp, y.sp) AS INT) AS is_leak
         FROM mp JOIN spl x ON x.doc_id = mp.doc_a
         JOIN spl y ON y.doc_id = mp.doc_b
-        GROUP BY 1, 2, 4""",
+        GROUP BY 1, 2, 4"""),
   )
 }

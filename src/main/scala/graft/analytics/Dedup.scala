@@ -1,6 +1,7 @@
 package graft.analytics
 
 import graft.analytics.Caches.TrackedPersist
+import graft.GraftSession
 import graft.Tables._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -167,7 +168,7 @@ object Dedup {
     labelpropOf(dedupMinhash(s, d).select(col("doc_a"), col("doc_b")), 3)
 
   def labelpropOf(pairs: DataFrame, rounds: Int): DataFrame =
-    withLoopShufflePartitions(pairs.sparkSession) {
+    GraftSession.withConf(pairs.sparkSession, LoopShufflePartitions) {
       val edges = pairs.union(pairs.select(col("doc_b"), col("doc_a")))
         .toDF("src", "dst").localCheckpoint(true)
       var labels = edges.select(col("src").as("doc_id")).distinct()
@@ -488,25 +489,15 @@ object Dedup {
     // after — same trick StreamingQueries uses for state stores). On a
     // real cluster |V| is large and this knob would stay at the
     // session default; it right-sizes the local[32] harness only.
-    withLoopShufflePartitions(pairs.sparkSession)(clustersLoop(pairs))
+    GraftSession.withConf(pairs.sparkSession, LoopShufflePartitions)(clustersLoop(pairs))
   }
 
-  /** Runs `body` with `spark.sql.shuffle.partitions` pinned to 8 and
-    * restores the previous value after — the local[32] right-sizing
-    * for the iterative graph loops, whose per-round eager actions
-    * shuffle id-only tables where 32 partitions are pure task
-    * overhead. CAVEAT: the conf is SESSION-GLOBAL mutable state, so
-    * this assumes no concurrent query on the same session while `body`
-    * runs (true for Verify/Bench, which execute queries serially); a
-    * concurrent planner would observe the pinned value. On a real
-    * cluster the loop tables are large and callers would skip the pin
-    * entirely — AQE coalescing makes the point moot there. */
-  private def withLoopShufflePartitions[A](sess: SparkSession)(body: => A): A = {
-    val prev = sess.conf.get("spark.sql.shuffle.partitions")
-    sess.conf.set("spark.sql.shuffle.partitions", "8")
-    try body
-    finally sess.conf.set("spark.sql.shuffle.partitions", prev)
-  }
+  /** Shuffle width for the iterative graph loops, whose per-round eager
+    * actions shuffle id-only tables where 32 partitions are pure task
+    * overhead (the local[32] right-sizing). On a real cluster the loop
+    * tables are large and callers would skip the pin entirely — AQE
+    * coalescing makes the point moot there. */
+  private val LoopShufflePartitions = "spark.sql.shuffle.partitions" -> "8"
 
   private def clustersLoop(pairs: DataFrame): DataFrame = {
     // materialize the pair generator ONCE before mirroring: the union
@@ -647,7 +638,7 @@ object Dedup {
   def pagerankOf(pairs: DataFrame, iters: Int): DataFrame =
     // same local[32] right-sizing as clustersOf: the loop's tables are
     // id-sized, 32-partition shuffles are pure task overhead
-    withLoopShufflePartitions(pairs.sparkSession) {
+    GraftSession.withConf(pairs.sparkSession, LoopShufflePartitions) {
       val adj = pairs.union(pairs.select(col("doc_b"), col("doc_a")))
         .toDF("src", "dst").localCheckpoint(true)
       val deg = adj.groupBy(col("src")).agg(count(lit(1)).as("deg"))
@@ -984,7 +975,7 @@ object Dedup {
     // same local-harness right-sizing as clustersOf: the hop loop's
     // id-only tables are tiny, so 32 shuffle partitions = pure task
     // overhead per eager action
-    withLoopShufflePartitions(s)(graphBfsLoop(s, d))
+    GraftSession.withConf(s, LoopShufflePartitions)(graphBfsLoop(s, d))
 
   /** BFS testbed corpus: the documents table plus a PLANTED dense
     * near-dup component detectable at PRODUCTION (64-bit) SimHash
@@ -1170,34 +1161,6 @@ object Dedup {
       .agg(count(lit(1)).as("n_pairs"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dedup_source_matrix" -> dedupSourceMatrix _,
-    "dedup_exact"     -> dedupExact _,
-    "dedup_incremental" -> dedupIncremental _,
-    "dedup_ngram"     -> dedupNgram _,
-    "dedup_containment" -> dedupContainment _,
-    "dedup_incremental_bloom" -> dedupIncrementalBloom _,
-    "text_novelty"    -> textNovelty _,
-    "graph_labelprop" -> graphLabelprop _,
-    "dedup_minhash"   -> dedupMinhash _,
-    "dedup_simhash"   -> dedupSimhash _,
-    "dedup_simhash64" -> dedupSimhash64 _,
-    "dedup_simhash_pairs" -> ((s: SparkSession, d: String) => simhashPairs(s, d)),
-    "dedup_simhash64_pairs" -> ((s: SparkSession, d: String) => simhash64Pairs(s, d)),
-    "dedup_phash"     -> dedupPhash _,
-    "dedup_clusters"  -> dedupClusters _,
-    "dedup_keep_best" -> dedupKeepBest _,
-    "dedup_embedding" -> dedupEmbedding _,
-    "dedup_embedding_recall" -> dedupEmbeddingRecall _,
-    "graph_triangles" -> graphTriangles _,
-    "graph_pagerank"  -> graphPagerank _,
-    "graph_degree"    -> graphDegree _,
-    "minhash_jaccard_est" -> minhashJaccardEst _,
-    "dedup_edit"      -> dedupEdit _,
-    "emb_clusters"    -> embClusters _,
-    "emb_prune_stats" -> embPruneStats _,
-    "graph_bfs"       -> graphBfs _,
-  )
 
   /** The distinct 5-gram shingle SELECT over an arbitrary
     * (doc_id, <textCol>) relation — one SQL spelling for every
@@ -1376,16 +1339,16 @@ object Dedup {
           SELECT vec_id, v FROM e UNION ALL SELECT vec_id, v FROM pv),
         ${embProdChainFrom("corpus", "e")}"""
 
-  val oracle: Map[String, String] = Map(
-    "dedup_exact" ->
+  val registry: Map[String, QueryDef] = Map(
+    "dedup_exact" -> QueryDef(dedupExact _,
       """SELECT md5(text) AS fp, min(doc_id) AS canonical_id, count(*) AS dup_cnt
-        FROM documents GROUP BY md5(text) HAVING count(*) > 1""",
+        FROM documents GROUP BY md5(text) HAVING count(*) > 1"""),
     // the df cap is part of the oracle too, spelled as the SAME
     // Sizing.dfCap rule (greatest(64, least(4096, nDocs/1000)) as a
     // scalar subquery) so both engines define one capped shingle
     // universe at ANY corpus size — a hardcoded 64 here would silently
     // diverge from the engine's derived cap past 65k documents
-    "dedup_ngram" ->
+    "dedup_ngram" -> QueryDef(dedupNgram _,
       s"""$shCte,
         hot AS (SELECT shingle FROM sh GROUP BY shingle
           HAVING count(*) > (SELECT greatest(64, least(4096, count(*) // 1000))
@@ -1402,14 +1365,14 @@ object Dedup {
         FROM pairs
         JOIN sizes sa ON sa.doc_id = doc_a
         JOIN sizes sb ON sb.doc_id = doc_b
-        WHERE CAST(inter AS DOUBLE) / CAST(sa.sz + sb.sz - inter AS DOUBLE) >= 0.6""",
-    "dedup_minhash" ->
+        WHERE CAST(inter AS DOUBLE) / CAST(sa.sz + sb.sz - inter AS DOUBLE) >= 0.6"""),
+    "dedup_minhash" -> QueryDef(dedupMinhash _,
       s"""$shCte, $minhashCtes
         SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
         FROM bands a JOIN bands b
-          ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id""",
+          ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id"""),
     // same first-arrival ownership over the shared shingle CTE
-    "text_novelty" ->
+    "text_novelty" -> QueryDef(textNovelty _,
       s"""$shCte,
         owner AS (SELECT shingle, min(doc_id) AS owner FROM sh GROUP BY 1)
         SELECT sh.doc_id, count(*) AS n_shingles,
@@ -1418,19 +1381,19 @@ object Dedup {
           CAST(sum(CASE WHEN owner.owner = sh.doc_id THEN 1 ELSE 0 END)
             AS DOUBLE) / count(*) AS novelty
         FROM sh JOIN owner ON owner.shingle = sh.shingle
-        GROUP BY sh.doc_id""",
+        GROUP BY sh.doc_id"""),
     // the bloom prescreen is a plan optimization with zero false
     // negatives — the semantic IS the plain exact anti-join
-    "dedup_incremental_bloom" ->
+    "dedup_incremental_bloom" -> QueryDef(dedupIncrementalBloom _,
       """WITH corpus AS (
           SELECT DISTINCT md5(lower(text)) AS fp FROM documents
           WHERE doc_id < 400)
         SELECT doc_id, lang, source
         FROM (SELECT doc_id, lang, source, md5(lower(text)) AS fp
               FROM documents WHERE doc_id >= 400) b
-        WHERE fp NOT IN (SELECT fp FROM corpus)""",
+        WHERE fp NOT IN (SELECT fp FROM corpus)"""),
     // same capped universe as dedup_ngram; exact 10*inter >= 8*min gate
-    "dedup_containment" ->
+    "dedup_containment" -> QueryDef(dedupContainment _,
       s"""$shCte,
         hot AS (SELECT shingle FROM sh GROUP BY shingle
           HAVING count(*) > (SELECT greatest(64, least(4096, count(*) // 1000))
@@ -1448,10 +1411,10 @@ object Dedup {
         FROM pairs
         JOIN sizes sa ON sa.doc_id = doc_a
         JOIN sizes sb ON sb.doc_id = doc_b
-        WHERE inter * 10 >= least(sa.sz, sb.sz) * 8""",
+        WHERE inter * 10 >= least(sa.sz, sb.sz) * 8"""),
     // three unrolled synchronous LPA rounds, (count DESC, label ASC)
     // argmax — the same deterministic tiebreak the Spark loop uses
-    "graph_labelprop" -> {
+    "graph_labelprop" -> QueryDef(graphLabelprop _, {
       val rounds = (1 to 3).map { k =>
         s"""cnt$k AS (
             SELECT e.dst, l.label, count(*) AS cnt
@@ -1475,9 +1438,9 @@ object Dedup {
         l0 AS (SELECT DISTINCT src AS doc_id, src AS label FROM edges),
         $rounds
         SELECT doc_id, label FROM l3"""
-    },
+    }),
     // the same pair CTE joined back to each side's source
-    "dedup_source_matrix" ->
+    "dedup_source_matrix" -> QueryDef(dedupSourceMatrix _,
       s"""$shCte, $minhashCtes,
         p AS (
           SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
@@ -1490,17 +1453,17 @@ object Dedup {
         FROM p
         JOIN documents da ON p.doc_a = da.doc_id
         JOIN documents db ON p.doc_b = db.doc_id
-        GROUP BY 1, 2""",
+        GROUP BY 1, 2"""),
     // same minhash banding, then connected components: the recursive
     // closure computes min-reachable-id per doc — the DuckDB spelling of
     // the Spark side's iterative min-label propagation
-    "dedup_clusters" ->
+    "dedup_clusters" -> QueryDef(dedupClusters _,
       s"""${shCte.replaceFirst("WITH ", "WITH RECURSIVE ")}, $minhashCtes,
         $clusterCtes
-        SELECT doc_id, cluster_id FROM clusters""",
+        SELECT doc_id, cluster_id FROM clusters"""),
     // dedup_clusters' chain + a token-count quality join + one argmax
     // window per cluster (count(*) OVER has no frame dependence)
-    "dedup_keep_best" ->
+    "dedup_keep_best" -> QueryDef(dedupKeepBest _,
       s"""${shCte.replaceFirst("WITH ", "WITH RECURSIVE ")}, $minhashCtes,
         $clusterCtes,
         scored AS (
@@ -1515,8 +1478,8 @@ object Dedup {
               ORDER BY n_tokens DESC, doc_id) AS rk,
             count(*) OVER (PARTITION BY cluster_id) AS n_members
           FROM scored)
-        WHERE rk = 1""",
-    "dedup_edit" ->
+        WHERE rk = 1"""),
+    "dedup_edit" -> QueryDef(dedupEdit _,
       s"""$shCte, $minhashCtes,
         mpairs AS (
           SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
@@ -1528,8 +1491,8 @@ object Dedup {
           CAST(1 AS DOUBLE) - CAST(levenshtein(pa.pfx, pb.pfx) AS DOUBLE)
             / CAST(greatest(len(pa.pfx), len(pb.pfx)) AS DOUBLE) AS edit_sim
         FROM mpairs JOIN pfx pa ON pa.doc_id = doc_a
-                    JOIN pfx pb ON pb.doc_id = doc_b""",
-    "minhash_jaccard_est" ->
+                    JOIN pfx pb ON pb.doc_id = doc_b"""),
+    "minhash_jaccard_est" -> QueryDef(minhashJaccardEst _,
       s"""$shCte, $minhashCtes,
         mpairs AS (
           SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
@@ -1557,8 +1520,8 @@ object Dedup {
         FROM m
         LEFT JOIN inter i ON i.doc_a = m.doc_a AND i.doc_b = m.doc_b
         JOIN sizes sa ON sa.doc_id = m.doc_a
-        JOIN sizes sb ON sb.doc_id = m.doc_b""",
-    "graph_triangles" ->
+        JOIN sizes sb ON sb.doc_id = m.doc_b"""),
+    "graph_triangles" -> QueryDef(graphTriangles _,
       s"""$shCte, $minhashCtes,
         mpairs AS (
           SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
@@ -1566,11 +1529,11 @@ object Dedup {
             ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id)
         SELECT a.doc_a AS v1, a.doc_b AS v2, b.doc_b AS v3
         FROM mpairs a JOIN mpairs b ON b.doc_a = a.doc_b
-        JOIN mpairs c ON c.doc_a = a.doc_a AND c.doc_b = b.doc_b""",
+        JOIN mpairs c ON c.doc_a = a.doc_a AND c.doc_b = b.doc_b"""),
     // same integer µ-unit damped iterations as pagerankOf, unrolled:
     // rank//deg and (85·Σ)//100 are floor divisions of nonnegative
     // values in both engines, so every round is bit-exact
-    "graph_pagerank" -> {
+    "graph_pagerank" -> QueryDef(graphPagerank _, {
       val rounds = (1 to 3).map { k =>
         s"""c$k AS (
             SELECT e.dst AS id, sum(r.r // d.dg) AS cs
@@ -1595,8 +1558,8 @@ object Dedup {
         r0 AS (SELECT src AS id, CAST(1000000 AS BIGINT) AS r FROM deg),
         $rounds
         SELECT id AS doc_id, r AS rank FROM r3"""
-    },
-    "graph_degree" ->
+    }),
+    "graph_degree" -> QueryDef(graphDegree _,
       s"""$shCte, $minhashCtes,
         mpairs AS (
           SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
@@ -1607,12 +1570,12 @@ object Dedup {
             SELECT doc_a AS doc_id FROM mpairs
             UNION ALL SELECT doc_b FROM mpairs)
           GROUP BY doc_id)
-        SELECT degree, count(*) AS n_docs FROM deg GROUP BY degree""",
-    "dedup_simhash" -> simhashSql,
-    "dedup_simhash64" -> simhash64Sql,
+        SELECT degree, count(*) AS n_docs FROM deg GROUP BY degree"""),
+    "dedup_simhash" -> QueryDef(dedupSimhash _, simhashSql),
+    "dedup_simhash64" -> QueryDef(dedupSimhash64 _, simhash64Sql),
     // identical banding (4-bit buckets) + hamming over the same 16-bit
     // fingerprints the dedup_simhash oracle computes
-    "dedup_simhash_pairs" ->
+    "dedup_simhash_pairs" -> QueryDef(simhashPairs(_, _),
       s"""WITH fp AS ($simhashSql),
         banded AS (
           SELECT doc_id, simhash, b.band,
@@ -1628,10 +1591,10 @@ object Dedup {
             CAST(len(list_filter(generate_series(1, 16),
               i -> substr(sh_a, i, 1) <> substr(sh_b, i, 1))) AS INT) AS hamming
           FROM cand)
-        WHERE hamming <= 2""",
+        WHERE hamming <= 2"""),
     // 16-bit banding over the 64-bit fingerprints, hamming ≤ 3 (4 bands
     // > maxDist ⇒ pigeonhole-guaranteed recall)
-    "dedup_simhash64_pairs" ->
+    "dedup_simhash64_pairs" -> QueryDef(simhash64Pairs(_, _),
       s"""WITH fp AS ($simhash64Sql),
         banded AS (
           SELECT doc_id, simhash64, b.band,
@@ -1647,11 +1610,11 @@ object Dedup {
             CAST(len(list_filter(generate_series(1, 64),
               i -> substr(sh_a, i, 1) <> substr(sh_b, i, 1))) AS INT) AS hamming
           FROM cand)
-        WHERE hamming <= 3""",
+        WHERE hamming <= 3"""),
     // identical banding tail over the dHash pattern fingerprint; the
     // 30 planted {base, same-pattern, one-flip} triples must come out
     // at hamming {0, 1, 1} and nothing else lands within 3 bits
-    "dedup_phash" ->
+    "dedup_phash" -> QueryDef(dedupPhash _,
       s"""WITH $phashSql,
         banded AS (
           SELECT doc_id, phash, b.band,
@@ -1667,8 +1630,8 @@ object Dedup {
             CAST(len(list_filter(generate_series(1, 64),
               i -> substr(sh_a, i, 1) <> substr(sh_b, i, 1))) AS INT) AS hamming
           FROM cand)
-        WHERE hamming <= 3""",
-    "dedup_incremental" ->
+        WHERE hamming <= 3"""),
+    "dedup_incremental" -> QueryDef(dedupIncremental _,
       s"""$shCte, $minhashCtes,
         mpairs AS (
           SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
@@ -1686,14 +1649,14 @@ object Dedup {
           SELECT doc_a FROM mpairs WHERE doc_b < 400 AND doc_a >= 400)
         SELECT doc_id, lang, source FROM batch
         WHERE fp NOT IN (SELECT fp FROM corpus_fp)
-          AND doc_id NOT IN (SELECT dup_id FROM near)""",
+          AND doc_id NOT IN (SELECT dup_id FROM near)"""),
     // 3-hop BFS unrolled (bounded hops keep the oracle finite on
     // cycles), r9: over the PRODUCTION-width (64-bit, hamming ≤ 3)
     // pair graph of documents + the planted dense component — the
     // identical cumulative-salt plant as bfsTestbedDocs (string_agg
     // over a prefix join ≡ mkString; DuckDB cannot correlate
     // generate_series bounds, hence the s.g <= p.i*step join spelling)
-    "graph_bfs" ->
+    "graph_bfs" -> QueryDef(graphBfs _,
       s"""WITH salt AS (
           SELECT g.g AS g, 'plant' || g.g AS tok
           FROM generate_series(1, ${BfsPlants * BfsStep}) g(g)),
@@ -1747,12 +1710,12 @@ object Dedup {
         SELECT doc_id, dist FROM d0
         UNION ALL SELECT doc_id, dist FROM d1
         UNION ALL SELECT doc_id, dist FROM d2
-        UNION ALL SELECT doc_id, dist FROM d3""",
+        UNION ALL SELECT doc_id, dist FROM d3"""),
     // production embedding near-dup pairs fed through the same
     // recursive-closure components as dedup_clusters — the planted
     // {base, plant, plant} triples must merge transitively even when
     // the plant–plant edge was missed by the banding
-    "emb_clusters" ->
+    "emb_clusters" -> QueryDef(embClusters _,
       s"""WITH RECURSIVE $embProdPairsCte,
         edges AS (
           SELECT vec_a AS src, vec_b AS dst FROM prod_pairs
@@ -1764,7 +1727,7 @@ object Dedup {
           SELECT e2.dst AS doc_id, r.label
           FROM reach r JOIN edges e2 ON e2.src = r.doc_id)
         SELECT doc_id AS vec_id, min(label) AS cluster_id
-        FROM reach GROUP BY doc_id""",
+        FROM reach GROUP BY doc_id"""),
     // the FULL production pipeline replayed in SQL: plant synthesis
     // (binary-exact coordinate scaling), Sizing-derived band width
     // (ceil-log2 via binary-string length, floor 16), corpus-derived
@@ -1772,14 +1735,14 @@ object Dedup {
     // candidate join, exact cosine rerank at 0.95 — a slip anywhere
     // (plant arithmetic, band width, bucket assembly, rerank) changes
     // the pair set and fails the hash
-    "dedup_embedding" ->
+    "dedup_embedding" -> QueryDef(dedupEmbedding _,
       s"""WITH $embProdPairsCte
-        SELECT vec_a, vec_b, cos FROM prod_pairs""",
+        SELECT vec_a, vec_b, cos FROM prod_pairs"""),
     // the recall gate: exact ≥0.95 pairs over the 30-probe sample
     // LEFT-joined against the LSH pairs; counts and integer-exact
     // recall_ppm are hash-pinned, so the ACHIEVED recall of the
     // production banding is oracle-checked, not asserted
-    "dedup_embedding_recall" ->
+    "dedup_embedding_recall" -> QueryDef(dedupEmbeddingRecall _,
       s"""WITH $embProdPairsCte,
         exact AS (
           SELECT a.vec_id AS vec_a, b2.vec_id AS vec_b
@@ -1792,14 +1755,14 @@ object Dedup {
           CAST(count(f.vec_a) * 1000000 // count(*) AS BIGINT)
             AS recall_ppm
         FROM exact x LEFT JOIN prod_pairs f
-          ON f.vec_a = x.vec_a AND f.vec_b = x.vec_b""",
+          ON f.vec_a = x.vec_a AND f.vec_b = x.vec_b"""),
     // the prune diagnostic as CTEs: band width re-derived from corpus
     // size (ceil-log2 via binary-string length = Spark's
     // 64 − numberOfLeadingZeros, floor 16), hyperplanes read straight
     // from the table (vec_id 100..100+3·bits), signs of the identical
     // left-to-right double dot product, exact-integer counts, one
     // final double division
-    "emb_prune_stats" ->
+    "emb_prune_stats" -> QueryDef(embPruneStats _,
       """WITH e AS (
           SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
           FROM embeddings),
@@ -1833,6 +1796,6 @@ object Dedup {
           CASE WHEN total_pairs > 0
             THEN CAST(cand_pairs AS DOUBLE) / CAST(total_pairs AS DOUBLE)
             ELSE 0.0 END AS prune_ratio
-        FROM agg ORDER BY band""",
+        FROM agg ORDER BY band"""),
   )
 }

@@ -446,13 +446,6 @@ object DocEmbed {
         expr("n_found * 1000000 div n_exact").as("recall_ppm"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "doc_embed"                       -> docEmbed _,
-    "contamination_semantic_computed" -> contaminationSemanticComputed _,
-    "doc_embed_recall"                -> docEmbedRecall _,
-    "doc_embed_coverage"              -> docEmbedCoverage _,
-    "dedup_semantic_computed"         -> dedupSemanticComputed _,
-    "dedup_semantic_computed_recall"  -> dedupSemanticComputedRecall _)
 
   // ---------------------------------------------------------------
   // DuckDB oracle — buckets, IDF bits, every sign cell and the
@@ -602,16 +595,16 @@ object DocEmbed {
           FROM qemb),
         ${Dedup.embProdChainFrom("qcd", "qcd")}"""
 
-  val oracle: Map[String, String] = Map(
-    "dedup_semantic_computed" ->
+  val registry: Map[String, QueryDef] = Map(
+    "dedup_semantic_computed" -> QueryDef(dedupSemanticComputed _,
       s"""WITH $sgnCte,
         $dupCtes,
         wit AS (SELECT vec_b AS doc_id, min(vec_a) AS dup_of
                 FROM prod_pairs GROUP BY 1)
         SELECT c.vec_id AS doc_id, coalesce(w.dup_of, -1) AS dup_of,
           CAST(w.dup_of IS NULL AS INT) AS kept
-        FROM qcd c LEFT JOIN wit w ON w.doc_id = c.vec_id""",
-    "dedup_semantic_computed_recall" ->
+        FROM qcd c LEFT JOIN wit w ON w.doc_id = c.vec_id"""),
+    "dedup_semantic_computed_recall" -> QueryDef(dedupSemanticComputedRecall _,
       s"""WITH $sgnCte,
         $dupCtes,
         qprobe AS (SELECT vec_id AS pa, v AS pv, nrm AS pn FROM n2
@@ -629,19 +622,19 @@ object DocEmbed {
           CAST(sum(coalesce(f.hit, 0)) AS BIGINT) AS n_found,
           CAST(sum(coalesce(f.hit, 0)) * 1000000 // count(*) AS BIGINT)
             AS recall_ppm
-        FROM qexact e LEFT JOIN qfound f USING (vec_a, vec_b)""",
-    "doc_embed" ->
+        FROM qexact e LEFT JOIN qfound f USING (vec_a, vec_b)"""),
+    "doc_embed" -> QueryDef(docEmbed _,
       s"""WITH $sgnCte,
         ${embedCtes("n", "documents")}
         SELECT doc_id, n_toks,
           CAST(list_sum(list_transform(v, z -> z * z)) AS BIGINT) AS norm2,
           md5(array_to_string(v, ',')) AS emb_fp
-        FROM nemb JOIN nnt USING (doc_id)""",
-    "contamination_semantic_computed" ->
+        FROM nemb JOIN nnt USING (doc_id)"""),
+    "contamination_semantic_computed" -> QueryDef(contaminationSemanticComputed _,
       s"""WITH $sgnCte,
         $screenCtes
-        SELECT doc_id, eval_id, cos FROM flags""",
-    "doc_embed_recall" ->
+        SELECT doc_id, eval_id, cos FROM flags"""),
+    "doc_embed_recall" -> QueryDef(docEmbedRecall _,
       s"""WITH $sgnCte,
         $screenCtes,
         ${CorpusBuild.vecCtes}
@@ -651,8 +644,8 @@ object DocEmbed {
           (SELECT count(*) FROM semdrop JOIN flags USING (doc_id)) AS n_both,
           CASE WHEN (SELECT count(*) FROM semdrop) = 0 THEN 0
             ELSE (SELECT count(*) FROM semdrop JOIN flags USING (doc_id))
-              * 1000000 // (SELECT count(*) FROM semdrop) END AS recall_ppm""",
-    "doc_embed_coverage" ->
+              * 1000000 // (SELECT count(*) FROM semdrop) END AS recall_ppm"""),
+    "doc_embed_coverage" -> QueryDef(docEmbedCoverage _,
       s"""SELECT d.source, count(*) AS n_docs,
           CAST(sum(CASE WHEN e.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
             AS n_supplied,
@@ -661,5 +654,6 @@ object DocEmbed {
           count(*) AS n_computed,
           CAST(1000000 AS BIGINT) AS computed_ppm
         FROM documents d LEFT JOIN embeddings e ON e.vec_id = d.doc_id
-        GROUP BY 1""")
+        GROUP BY 1"""),
+  )
 }

@@ -1538,89 +1538,6 @@ object EventsPipeline {
       col("ts").cast("date").as("event_date"),
       upper(col("event_type")).as("event_type_uc"))
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "split_valid"         -> splitValid _,
-    "split_invalid"       -> splitInvalid _,
-    "observe_metrics"     -> observeMetrics _,
-    "str_collation"       -> strCollation _,
-    "reasons_array"       -> reasonsArray _,
-    "expect_suite"        -> expectSuite _,
-    "expect_suite_json"   -> expectSuiteJson _,
-    "expect_fk"           -> expectFk _,
-    "expect_schema"       -> expectSchema _,
-    "expect_unique"       -> expectUnique _,
-    "expect_drift"        -> expectDrift _,
-    "try_funcs"           -> tryFuncs _,
-    "typed_agg"           -> typedAgg _,
-    "typed_aggregator"    -> typedAggregator _,
-    "lineage"             -> lineageCounts _,
-    "clean_nan_null"      -> cleanNanNull _,
-    "pred_null"           -> predNull _,
-    "pred_between"        -> predBetween _,
-    "pred_isin"           -> predIsin _,
-    "pred_conj"           -> predConj _,
-    "json_parse_struct"   -> jsonParseStruct _,
-    "project_nested_star" -> projectNestedStar _,
-    "nested_access"       -> nestedAccess _,
-    "json_parse_array"    -> jsonParseArray _,
-    "gen_explode"         -> genExplode _,
-    "gen_explode_outer"   -> explodeOuter _,
-    "events_funnel"       -> eventsFunnel _,
-    "events_cooccur"      -> eventsCooccur _,
-    "events_lag_features" -> eventsLagFeatures _,
-    "expect_volume"       -> expectVolume _,
-    "expect_cardinality"  -> expectCardinality _,
-    "typed_cogroup"       -> typedCogroup _,
-    "typed_sorted_groups" -> typedSortedGroups _,
-    "json_get"            -> jsonGet _,
-    "json_variant"        -> jsonVariant _,
-    "join_shuffle_hash"   -> joinShuffleHash _,
-    "win_median"          -> winMedian _,
-    "gen_inline"          -> genInline _,
-    "part_prune"          -> partPrune _,
-    "hof_funcs"           -> hofFuncs _,
-    "str_format"          -> strFormat _,
-    "ts_tz_shift"         -> tsTzShift _,
-    "warehouse_load"      -> warehouseLoad _,
-    "win_hourly"          -> winHourly _,
-    "proj_distinct"       -> projDistinct _,
-    "csv_roundtrip"       -> csvRoundtrip _,
-    "expect_suite_sample" -> expectSuiteSample _,
-    "expect_suite_agg"    -> expectSuiteAgg _,
-    "expect_suite_mostly" -> expectSuiteMostly _,
-    "freq_items"          -> freqItems _,
-    "sketch_cms"          -> sketchCms _,
-    "events_attribution"  -> eventsAttribution _,
-    "json_roundtrip"      -> jsonRoundtrip _,
-    "orc_roundtrip"       -> orcRoundtrip _,
-    "avro_roundtrip"      -> avroRoundtrip _,
-    "avro_functions"      -> avroFunctions _,
-    "proto_functions"     -> protoFunctions _,
-    "xml_roundtrip"       -> xmlRoundtrip _,
-    "ingest_badrecords"   -> ingestBadrecords _,
-    "join_asof"           -> joinAsof _,
-    "join_asof_tol"       -> joinAsofTol _,
-    "join_asof_fwd"       -> joinAsofFwd _,
-    "join_asof_nearest"   -> joinAsofNearest _,
-    "events_markov"       -> eventsMarkov _,
-    "events_pattern"      -> eventsPattern _,
-    "join_asof_native"    -> joinAsofNative _,
-    "join_range"          -> joinRange _,
-    "str_funcs"           -> strFuncs _,
-    "array_funcs"         -> arrayFuncs _,
-    "agg_unpivot"         -> aggUnpivot _,
-    "date_funcs"          -> dateFuncs _,
-    "explode_pos"         -> explodePos _,
-    "ts_gapfill"          -> tsGapfill _,
-    "ts_interp"           -> tsInterp _,
-    "anomaly_zscore"      -> anomalyZscore _,
-    "events_retention"    -> eventsRetention _,
-    "events_streaks"      -> eventsStreaks _,
-    "win_sliding"         -> winSliding _,
-    "scd_intervals"       -> scdIntervals _,
-    "scd_asof"            -> scdAsof _,
-    "zorder_value"        -> zorderValue _,
-  )
 
   /** Shared validation CTE for the oracle side — the same four rules as
     * `rules`, spelled in DuckDB SQL. */
@@ -1708,11 +1625,11 @@ object EventsPipeline {
         CAST(sum(CASE WHEN NOT (json_extract(props,'$.k')::INT BETWEEN 0 AND 89) THEN 1 ELSE 0 END) AS BIGINT) AS viol_k_between
       FROM events)"""
 
-  val oracle: Map[String, String] = Map(
+  val registry: Map[String, QueryDef] = Map(
     // HUGEINT is DuckDB's exact 128-bit lane — the same values the
     // Spark side carries as DECIMAL(38,0); only BIGINT/BOOLEAN reach
     // the output so the driver hash sees identical widths
-    "anomaly_zscore" ->
+    "anomaly_zscore" -> QueryDef(anomalyZscore _,
       """WITH e AS (
           SELECT event_id, event_type,
             CAST(CAST(value AS DECIMAL(18,2)) * 100 AS HUGEINT) AS vc
@@ -1724,10 +1641,10 @@ object EventsPipeline {
         SELECT e.event_id, e.event_type, CAST(e.vc AS BIGINT) AS value_cents,
           ((st.n * e.vc - st.s1) * (st.n * e.vc - st.s1)
             > 9 * (st.n * st.s2 - st.s1 * st.s1))::INT AS is_outlier
-        FROM e JOIN st USING (event_type)""",
+        FROM e JOIN st USING (event_type)"""),
     // 30-min time_bucket is epoch-aligned like Spark's window(); every
     // event expands to its two covering 1h/30min-slide window starts
-    "win_sliding" ->
+    "win_sliding" -> QueryDef(winSliding _,
       """WITH b AS (
           SELECT event_type, value,
             time_bucket(INTERVAL '30 minutes', CAST(ts AS TIMESTAMP)) AS t30
@@ -1738,8 +1655,8 @@ object EventsPipeline {
           FROM b)
         SELECT window_start, event_type, count(*) AS cnt,
           CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-        FROM w GROUP BY 1, 2""",
-    "scd_intervals" ->
+        FROM w GROUP BY 1, 2"""),
+    "scd_intervals" -> QueryDef(scdIntervals _,
       """SELECT user_id, event_id, event_type,
           epoch_us(CAST(ts AS TIMESTAMP)) AS valid_from_us,
           lead(epoch_us(CAST(ts AS TIMESTAMP))) OVER (
@@ -1748,10 +1665,10 @@ object EventsPipeline {
           (lead(epoch_us(CAST(ts AS TIMESTAMP))) OVER (
             PARTITION BY user_id
             ORDER BY epoch_us(CAST(ts AS TIMESTAMP)), event_id) IS NULL)::INT AS is_current
-        FROM events WHERE user_id IS NOT NULL""",
+        FROM events WHERE user_id IS NOT NULL"""),
     // same 16-bit min/max rank-space normalization then bit interleave;
     // all quantities nonnegative, so // matches Spark's div exactly
-    "zorder_value" -> {
+    "zorder_value" -> QueryDef(zorderValue _, {
       val terms = (0 until 16).flatMap(i => Seq(
         s"(((a16 >> $i) & 1) << ${2 * i})",
         s"(((b16 >> $i) & 1) << ${2 * i + 1})"))
@@ -1771,8 +1688,8 @@ object EventsPipeline {
         SELECT event_id, user_id, vc AS value_cents,
           (${terms.mkString(" | ")}) AS zval
         FROM s"""
-    },
-    "events_retention" ->
+    }),
+    "events_retention" -> QueryDef(eventsRetention _,
       """WITH act AS (
           SELECT DISTINCT user_id, CAST(ts AS DATE) AS day
           FROM events WHERE user_id IS NOT NULL),
@@ -1781,9 +1698,9 @@ object EventsPipeline {
           date_diff('day', c.cohort_day, a.day) AS day_offset,
           count(DISTINCT a.user_id) AS n_users
         FROM act a JOIN coh c USING (user_id)
-        GROUP BY 1, 2""",
+        GROUP BY 1, 2"""),
     // gaps-and-islands: day-ordinal − row_number is the island key
-    "events_streaks" ->
+    "events_streaks" -> QueryDef(eventsStreaks _,
       """WITH act AS (
           SELECT DISTINCT user_id, CAST(ts AS DATE) AS day
           FROM events WHERE user_id IS NOT NULL),
@@ -1797,8 +1714,8 @@ object EventsPipeline {
           CAST(sum(len) AS BIGINT) AS n_days,
           CAST(max(len) AS BIGINT) AS max_streak,
           count(*) AS n_streaks
-        FROM s GROUP BY 1""",
-    "date_funcs" ->
+        FROM s GROUP BY 1"""),
+    "date_funcs" -> QueryDef(dateFuncs _,
       """SELECT o_orderkey,
           CAST(o_orderdate AS DATE) AS od,
           CAST(o_orderdate AS DATE) + CAST(o_orderkey % 30 AS INT) AS ship_by,
@@ -1807,13 +1724,13 @@ object EventsPipeline {
           year(o_orderdate) AS yr,
           quarter(o_orderdate) AS qtr,
           month(o_orderdate) AS mo
-        FROM orders""",
-    "explode_pos" ->
+        FROM orders"""),
+    "explode_pos" -> QueryDef(explodePos _,
       """SELECT doc_id, CAST(p.pos AS INT) AS pos, p.tok AS token FROM (
           SELECT doc_id, unnest(list_transform(string_split(text, ' '),
             (t, i) -> struct_pack(pos := i - 1, tok := t))) AS p
-          FROM documents)""",
-    "ts_gapfill" ->
+          FROM documents)"""),
+    "ts_gapfill" -> QueryDef(tsGapfill _,
       """WITH h AS (
           SELECT event_type,
             (epoch_ns(ts) // 1000) - (epoch_ns(ts) // 1000) % 3600000000 AS hour_us,
@@ -1833,10 +1750,10 @@ object EventsPipeline {
             PARTITION BY g.event_type ORDER BY g.hour_us
             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sum_filled
         FROM grid g LEFT JOIN h
-          ON g.event_type = h.event_type AND g.hour_us = h.hour_us""",
+          ON g.event_type = h.event_type AND g.hour_us = h.hour_us"""),
     // identical grid + two IGNORE-NULLS frames; the interpolation
     // arithmetic is spelled identically so the floats hash-match
-    "ts_interp" ->
+    "ts_interp" -> QueryDef(tsInterp _,
       """WITH h AS (
           SELECT event_type,
             (epoch_ns(ts) // 1000) - (epoch_ns(ts) // 1000) % 3600000000 AS hour_us,
@@ -1867,22 +1784,22 @@ object EventsPipeline {
           CASE WHEN sum_value IS NOT NULL THEN sum_value
                ELSE pv + (nv - pv) * (CAST(hour_us - ph AS DOUBLE)
                  / CAST(nh - ph AS DOUBLE)) END AS sum_interp
-        FROM f""",
-    "split_valid" ->
+        FROM f"""),
+    "split_valid" -> QueryDef(splitValid _,
       s"""$vCte
         SELECT event_id, user_id, event_type, value, k,
           'VALID' AS data_quality_flag
-        FROM v WHERE r1 AND r2 AND r3 AND r4""",
-    "split_invalid" ->
+        FROM v WHERE r1 AND r2 AND r3 AND r4"""),
+    "split_invalid" -> QueryDef(splitInvalid _,
       s"""$vCte
         SELECT event_id, event_type, value, k,
           $reasonsExpr AS rejection_reasons
-        FROM v WHERE NOT (r1 AND r2 AND r3 AND r4)""",
+        FROM v WHERE NOT (r1 AND r2 AND r3 AND r4)"""),
     // UTF8_LCASE-collated grouping is definitionally lower()-keyed
     // grouping; the binary min (uppercase sorts first in both
     // engines' binary order) pins that every case variant landed in
     // the right group
-    "str_collation" ->
+    "str_collation" -> QueryDef(strCollation _,
       """WITH m AS (
           SELECT CASE WHEN event_id % 3 = 0 THEN upper(event_type)
             WHEN event_id % 3 = 1 THEN
@@ -1892,33 +1809,33 @@ object EventsPipeline {
         SELECT lower(min(mixed)) AS etype,
           min(mixed) AS variant_min,
           CAST(count(*) AS BIGINT) AS cnt
-        FROM m GROUP BY lower(mixed)""",
+        FROM m GROUP BY lower(mixed)"""),
     // the observed pass counts exactly the valid-split rows; DECIMAL
     // sum cast to double at the edge matches the engine's exact fold
-    "observe_metrics" ->
+    "observe_metrics" -> QueryDef(observeMetrics _,
       s"""$vCte
         SELECT CAST(count(*) AS BIGINT) AS n_valid,
           CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value,
           max(value) AS max_value,
           CAST(min(k) AS INT) AS min_k,
           CAST(max(k) AS INT) AS max_k
-        FROM v WHERE r1 AND r2 AND r3 AND r4""",
-    "reasons_array" ->
+        FROM v WHERE r1 AND r2 AND r3 AND r4"""),
+    "reasons_array" -> QueryDef(reasonsArray _,
       s"""$vCte
         SELECT $reasonsExpr AS rejection_reasons, count(*) AS cnt
         FROM v WHERE NOT (r1 AND r2 AND r3 AND r4)
-        GROUP BY 1""",
+        GROUP BY 1"""),
     // BIGINT casts: DuckDB's integer sum() is HUGEINT, which the
     // driver's hasher represents differently from Spark's BIGINT
-    "expect_suite" -> expectSuiteOracle,
+    "expect_suite" -> QueryDef(expectSuite _, expectSuiteOracle),
     // the JSON-loaded suite must be indistinguishable from the
     // code-defined one — the SAME oracle string, shared so a future
     // bounds edit cannot miss the twin
-    "expect_suite_json" -> expectSuiteOracle,
+    "expect_suite_json" -> QueryDef(expectSuiteJson _, expectSuiteOracle),
     // mostly tier: the identical viol counts + per-expectation ok
     // flags from the exact ppm-integer comparison (no float division);
     // k's 10% violation rate fails mostly 0.95, the others pass
-    "expect_suite_mostly" ->
+    "expect_suite_mostly" -> QueryDef(expectSuiteMostly _,
       """SELECT viol_value_between, viol_event_type_in_set, viol_k_between,
           ok_value_between, ok_event_type_in_set, ok_k_between,
           CASE WHEN ok_value_between + ok_event_type_in_set + ok_k_between = 3
@@ -1935,8 +1852,8 @@ object EventsPipeline {
           CAST(sum(CASE WHEN NOT (event_type IN ('click','view','purchase','signup')) THEN 1 ELSE 0 END) AS BIGINT) AS viol_event_type_in_set,
           CAST(sum(CASE WHEN NOT (json_extract(props,'$.k')::INT BETWEEN 0 AND 89) THEN 1 ELSE 0 END) AS BIGINT) AS viol_k_between,
           CAST(count(*) AS BIGINT) AS n
-        FROM events))""",
-    "expect_suite_sample" ->
+        FROM events))"""),
+    "expect_suite_sample" -> QueryDef(expectSuiteSample _,
       """SELECT *,
           CASE WHEN viol_user_id_not_null + viol_value_between
                  + viol_event_type_in_set + viol_k_between = 0
@@ -1946,11 +1863,11 @@ object EventsPipeline {
           CAST(sum(CASE WHEN NOT (value BETWEEN 0 AND 450) THEN 1 ELSE 0 END) AS BIGINT) AS viol_value_between,
           CAST(sum(CASE WHEN NOT (event_type IN ('click','view','purchase','signup')) THEN 1 ELSE 0 END) AS BIGINT) AS viol_event_type_in_set,
           CAST(sum(CASE WHEN NOT (json_extract(props,'$.k')::INT BETWEEN 0 AND 89) THEN 1 ELSE 0 END) AS BIGINT) AS viol_k_between
-        FROM (SELECT * FROM events ORDER BY event_id LIMIT 500))""",
+        FROM (SELECT * FROM events ORDER BY event_id LIMIT 500))"""),
     // aggregate-shaped tier: uniqueness = every row of a duplicated
     // value (GE semantics, nulls ignored); proportion flag = one
     // double division of two exact counts, 0/1 as BIGINT
-    "expect_suite_agg" ->
+    "expect_suite_agg" -> QueryDef(expectSuiteAgg _,
       """SELECT *,
           CASE WHEN viol_event_id_not_null + viol_event_id_unique
                  + viol_user_id_unique + viol_user_id_unique_proportion
@@ -1975,14 +1892,14 @@ object EventsPipeline {
             AS viol_user_id_unique_proportion,
           (SELECT CAST(CASE WHEN count(*) BETWEEN 1 AND 100000000
                THEN 0 ELSE 1 END AS BIGINT) FROM events)
-            AS viol_table_row_count)""",
-    "expect_schema" ->
+            AS viol_table_row_count)"""),
+    "expect_schema" -> QueryDef(expectSchema _,
       """SELECT * FROM (VALUES
           ('event_id', 1, 1), ('ts', 1, 1),
           ('ts_ns', 1, 1), ('user_id', 1, 1),
           ('event_type', 1, 1), ('value', 1, 1),
-          ('props', 1, 1)) AS t(col_name, present, type_ok)""",
-    "expect_fk" ->
+          ('props', 1, 1)) AS t(col_name, present, type_ok)"""),
+    "expect_fk" -> QueryDef(expectFk _,
       """SELECT 'lineitem.l_orderkey->orders' AS relation, count(*) AS n_rows,
           CAST(sum(CASE WHEN o.pk IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_orphans,
           CASE WHEN sum(CASE WHEN o.pk IS NULL THEN 1 ELSE 0 END) = 0
@@ -2005,8 +1922,8 @@ object EventsPipeline {
             THEN 'PASSED' ELSE 'FAILED' END
         FROM customer cu
         LEFT JOIN (SELECT DISTINCT n_nationkey AS pk FROM nation) n
-          ON cu.c_nationkey = n.pk""",
-    "expect_unique" ->
+          ON cu.c_nationkey = n.pk"""),
+    "expect_unique" -> QueryDef(expectUnique _,
       """SELECT 'orders.o_orderkey' AS relation, CAST(sum(cnt) AS BIGINT) AS n_rows,
           count(*) AS n_keys,
           CAST(sum(CASE WHEN cnt > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_keys,
@@ -2030,20 +1947,20 @@ object EventsPipeline {
           CAST(sum(CASE WHEN cnt > 1 THEN 1 ELSE 0 END) AS BIGINT),
           CASE WHEN sum(CASE WHEN cnt > 1 THEN 1 ELSE 0 END) = 0
             THEN 'PASSED' ELSE 'FAILED' END
-        FROM (SELECT doc_id, count(*) AS cnt FROM documents GROUP BY 1)""",
-    "typed_aggregator" ->
+        FROM (SELECT doc_id, count(*) AS cnt FROM documents GROUP BY 1)"""),
+    "typed_aggregator" -> QueryDef(typedAggregator _,
       """SELECT event_type,
           CAST(sum(CAST(round(value * 100) AS BIGINT)) AS DOUBLE) / 100
             AS total
-        FROM events GROUP BY event_type""",
+        FROM events GROUP BY event_type"""),
     // cents = round(value*100): both engines round the identical double
     // half-away-from-zero (positive domain), so the fold is exact
-    "typed_agg" ->
+    "typed_agg" -> QueryDef(typedAgg _,
       """SELECT user_id, count(*) AS n,
           CAST(sum(CAST(round(value * 100) AS BIGINT)) AS DOUBLE) / 100
             AS total
-        FROM events GROUP BY user_id""",
-    "expect_drift" ->
+        FROM events GROUP BY user_id"""),
+    "expect_drift" -> QueryDef(expectDrift _,
       """WITH e AS (
           SELECT event_type, epoch_ns(ts) // 1000 AS tus FROM events),
         m AS (SELECT min(tus) + (max(tus) - min(tus)) / 2 AS mid FROM e),
@@ -2063,22 +1980,22 @@ object EventsPipeline {
           CAST(h2 AS DOUBLE) / CAST(t2 AS DOUBLE) AS share2,
           abs(CAST(h1 AS DOUBLE) / CAST(t1 AS DOUBLE)
             - CAST(h2 AS DOUBLE) / CAST(t2 AS DOUBLE)) AS drift
-        FROM shares, t""",
-    "try_funcs" ->
+        FROM shares, t"""),
+    "try_funcs" -> QueryDef(tryFuncs _,
       """SELECT event_id,
           TRY_CAST(event_type AS INT) AS bad_int,
           TRY_CAST(json_extract_string(props, '$.k') AS INT) AS k_int,
           value / CAST(NULLIF(event_id % 3, 0) AS DOUBLE) AS div3,
           CASE WHEN event_id = 0 THEN 9223372036854775807 END AS ovf
-        FROM events""",
+        FROM events"""),
     // sketch counts are exact when k > distinct items (no decrements)
-    "freq_items" ->
+    "freq_items" -> QueryDef(freqItems _,
       """SELECT event_type AS item, count(*) AS cnt FROM events
-        WHERE event_type IS NOT NULL GROUP BY event_type""",
+        WHERE event_type IS NOT NULL GROUP BY event_type"""),
     // the CMS is deterministic end-to-end, so the oracle REBUILDS the
     // sketch in SQL: h_d(key) = md5 hex digits (2d, 2d+1) mod 64, cell =
     // total count hashed there, est = min over the 4 rows
-    "sketch_cms" ->
+    "sketch_cms" -> QueryDef(sketchCms _,
       """WITH keys AS (
           SELECT CAST(user_id AS VARCHAR) AS k, count(*) AS exact_cnt
           FROM events WHERE user_id IS NOT NULL GROUP BY 1),
@@ -2091,8 +2008,8 @@ object EventsPipeline {
         SELECT h.k AS user_key, h.exact_cnt AS exact_cnt,
           CAST(min(c.cell) AS BIGINT) AS cms_est
         FROM hashed h JOIN cells c ON c.d = h.d AND c.b = h.b
-        GROUP BY h.k, h.exact_cnt""",
-    "events_attribution" ->
+        GROUP BY h.k, h.exact_cnt"""),
+    "events_attribution" -> QueryDef(eventsAttribution _,
       """WITH t AS (
           SELECT event_id, user_id, event_type,
             epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us,
@@ -2102,13 +2019,13 @@ object EventsPipeline {
                     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS last_click_id
           FROM events WHERE user_id IS NOT NULL)
         SELECT event_id AS purchase_id, user_id, ts_us, last_click_id
-        FROM t WHERE event_type = 'purchase'""",
-    "lineage" ->
+        FROM t WHERE event_type = 'purchase'"""),
+    "lineage" -> QueryDef(lineageCounts _,
       s"""$vCte, f AS (SELECT (r1 AND r2 AND r3 AND r4) AS ok FROM v)
         SELECT 'raw' AS layer, count(*) AS record_count FROM f
         UNION ALL SELECT 'curated', count(*) FROM f WHERE ok
-        UNION ALL SELECT 'rejected', count(*) FROM f WHERE NOT ok""",
-    "clean_nan_null" ->
+        UNION ALL SELECT 'rejected', count(*) FROM f WHERE NOT ok"""),
+    "clean_nan_null" -> QueryDef(cleanNanNull _,
       """SELECT event_type, count(*) AS cnt, count(cleaned) AS n_clean,
           CAST(sum(CAST(cleaned AS DECIMAL(18,2))) AS DOUBLE) AS sum_clean
         FROM (SELECT event_type,
@@ -2116,45 +2033,45 @@ object EventsPipeline {
           FROM (SELECT event_type,
             CASE WHEN event_type = 'error' THEN 'NaN'::DOUBLE ELSE value END AS t
             FROM events))
-        GROUP BY event_type""",
-    "pred_null" ->
+        GROUP BY event_type"""),
+    "pred_null" -> QueryDef(predNull _,
       """SELECT event_id, user_id FROM events
-        WHERE nullif(event_type, 'error') IS NULL""",
-    "pred_between" ->
-      "SELECT event_id, value FROM events WHERE value BETWEEN 100 AND 200",
-    "pred_isin" ->
+        WHERE nullif(event_type, 'error') IS NULL"""),
+    "pred_between" -> QueryDef(predBetween _,
+      "SELECT event_id, value FROM events WHERE value BETWEEN 100 AND 200"),
+    "pred_isin" -> QueryDef(predIsin _,
       """SELECT event_type, count(*) AS cnt FROM events
-        WHERE event_type IN ('click', 'purchase') GROUP BY event_type""",
-    "pred_conj" ->
+        WHERE event_type IN ('click', 'purchase') GROUP BY event_type"""),
+    "pred_conj" -> QueryDef(predConj _,
       """SELECT event_id, user_id, value FROM events
         WHERE value BETWEEN 50 AND 400 AND event_type <> 'error'
-          AND user_id % 2 = 0""",
-    "json_parse_struct" ->
+          AND user_id % 2 = 0"""),
+    "json_parse_struct" -> QueryDef(jsonParseStruct _,
       """SELECT event_id, json_extract(props, '$.k')::INT AS k FROM events
-        WHERE json_extract(props, '$.k')::INT >= 50""",
-    "project_nested_star" ->
-      "SELECT event_id, json_extract(props, '$.k')::INT AS k FROM events",
-    "nested_access" ->
+        WHERE json_extract(props, '$.k')::INT >= 50"""),
+    "project_nested_star" -> QueryDef(projectNestedStar _,
+      "SELECT event_id, json_extract(props, '$.k')::INT AS k FROM events"),
+    "nested_access" -> QueryDef(nestedAccess _,
       """SELECT event_id,
           json_extract(props,'$.k')::INT * json_extract(props,'$.k')::INT AS k_sq
-        FROM events WHERE event_type = 'view'""",
-    "json_parse_array" ->
+        FROM events WHERE event_type = 'view'"""),
+    "json_parse_array" -> QueryDef(jsonParseArray _,
       """SELECT val, count(*) AS cnt FROM (
           SELECT unnest(CAST(('[' || CAST(event_id % 10 AS VARCHAR) || ','
             || CAST(user_id % 7 AS VARCHAR) || ']')::JSON AS INT[])) AS val
           FROM events)
-        GROUP BY val""",
-    "gen_explode" ->
+        GROUP BY val"""),
+    "gen_explode" -> QueryDef(genExplode _,
       """SELECT token, count(*) AS cnt FROM (
           SELECT unnest(string_split(text, ' ')) AS token FROM documents)
-        GROUP BY token""",
-    "json_get" ->
+        GROUP BY token"""),
+    "json_get" -> QueryDef(jsonGet _,
       """SELECT event_id,
           CAST(json_extract_string(props, '$.k') AS BIGINT) AS k_path,
           CAST(json_extract_string(props, '$.k') AS BIGINT) AS k_tuple
-        FROM events""",
+        FROM events"""),
     // forall spelled as "no counter-example"; aggregate as list_sum
-    "hof_funcs" ->
+    "hof_funcs" -> QueryDef(hofFuncs _,
       """WITH t AS (SELECT doc_id, string_split(text, ' ') AS tk FROM documents)
         SELECT doc_id,
           len(list_filter(tk, x -> length(x) > 4)) AS n_long,
@@ -2163,36 +2080,36 @@ object EventsPipeline {
           CAST(list_sum(list_transform(tk, x -> length(x))) AS BIGINT) AS sum_len,
           array_to_string(list_transform(tk, x -> substr(x, 1, 1)), '') AS initials,
           len(list_distinct(flatten([tk, tk]))) AS n_uniq
-        FROM t""",
-    "gen_inline" ->
+        FROM t"""),
+    "gen_inline" -> QueryDef(genInline _,
       """SELECT doc_id, tok, CAST(length(tok) AS BIGINT) AS tok_len
         FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS tok
-              FROM documents)""",
-    "part_prune" ->
+              FROM documents)"""),
+    "part_prune" -> QueryDef(partPrune _,
       """SELECT CAST(ts AS DATE) AS event_date, count(*) AS cnt,
           CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
         FROM events
         WHERE CAST(ts AS DATE) BETWEEN DATE '2024-01-10' AND DATE '2024-01-12'
-        GROUP BY 1""",
-    "json_variant" ->
+        GROUP BY 1"""),
+    "json_variant" -> QueryDef(jsonVariant _,
       """SELECT event_id,
           CAST(json_extract(props, '$.k') AS BIGINT) AS k_long,
           json_extract_string(props, '$.k') AS k_str,
           CAST(json_extract(props, '$.missing') AS BIGINT) AS k_missing
-        FROM events""",
-    "join_shuffle_hash" ->
+        FROM events"""),
+    "join_shuffle_hash" -> QueryDef(joinShuffleHash _,
       """WITH per_user AS (
           SELECT user_id, count(*) AS n_events FROM events
           WHERE user_id IS NOT NULL GROUP BY user_id)
         SELECT p.n_events AS user_activity, count(*) AS n_purchases
         FROM events e JOIN per_user p ON e.user_id = p.user_id
         WHERE e.event_type = 'purchase'
-        GROUP BY p.n_events""",
-    "win_median" ->
+        GROUP BY p.n_events"""),
+    "win_median" -> QueryDef(winMedian _,
       """SELECT event_id, event_type,
           median(value) OVER (PARTITION BY event_type) AS type_median
-        FROM events""",
-    "events_funnel" ->
+        FROM events"""),
+    "events_funnel" -> QueryDef(eventsFunnel _,
       """WITH per AS (
           SELECT user_id,
             min(CASE WHEN event_type = 'signup' THEN epoch_ns(ts) // 1000 END) AS t_signup,
@@ -2202,9 +2119,9 @@ object EventsPipeline {
         SELECT count(t_signup) AS n_signup,
           count(CASE WHEN t_click > t_signup THEN 1 END) AS n_click_after,
           count(CASE WHEN t_purchase > t_click AND t_click > t_signup THEN 1 END) AS n_full_funnel
-        FROM per""",
+        FROM per"""),
     // same incidences → ordered-pair self-join → multiply-through lift
-    "events_cooccur" ->
+    "events_cooccur" -> QueryDef(eventsCooccur _,
       """WITH incid AS (
           SELECT DISTINCT user_id, event_type FROM events),
         nu AS (SELECT count(DISTINCT user_id) AS n_users FROM incid),
@@ -2221,9 +2138,9 @@ object EventsPipeline {
         FROM pairs
         JOIN marg ma ON ma.event_type = type_a
         JOIN marg mb ON mb.event_type = type_b
-        CROSS JOIN nu""",
+        CROSS JOIN nu"""),
     // the sorted-iterator fold == the declarative cumulative window
-    "typed_sorted_groups" ->
+    "typed_sorted_groups" -> QueryDef(typedSortedGroups _,
       """SELECT user_id, event_id,
           CAST(floor(abs(value) * 100) AS BIGINT) AS cents,
           CAST(sum(CAST(floor(abs(value) * 100) AS BIGINT))
@@ -2231,10 +2148,10 @@ object EventsPipeline {
               ORDER BY epoch_ns(ts) // 1000, event_id
               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
             AS BIGINT) AS run_cents
-        FROM events""",
+        FROM events"""),
     // the cogroup merge re-derived relationally: first-click scalar
     // per user + conditional counts over the same key space
-    "typed_cogroup" ->
+    "typed_cogroup" -> QueryDef(typedCogroup _,
       """WITH e AS (
           SELECT user_id, event_type, epoch_ns(ts) // 1000 AS tus
           FROM events WHERE event_type IN ('click', 'purchase')),
@@ -2250,9 +2167,9 @@ object EventsPipeline {
             AND e.tus > fc.first_click THEN 1 END) AS BIGINT)
             AS n_after_first_click
         FROM e LEFT JOIN fc ON fc.user_id = e.user_id
-        GROUP BY e.user_id""",
+        GROUP BY e.user_id"""),
     // same one-pass exact distinct counts + literal bounds, unpivoted
-    "expect_cardinality" ->
+    "expect_cardinality" -> QueryDef(expectCardinality _,
       """WITH agg AS (
           SELECT count(DISTINCT event_type) AS c_type,
             count(DISTINCT user_id) AS c_user,
@@ -2269,9 +2186,9 @@ object EventsPipeline {
         SELECT col_name, n_distinct, lo, hi,
           CAST(CASE WHEN n_distinct >= lo AND n_distinct <= hi
             THEN 1 ELSE 0 END AS BIGINT) AS ok
-        FROM rows_""",
+        FROM rows_"""),
     // same trailing window excluding current day; exact integer gate
-    "expect_volume" ->
+    "expect_volume" -> QueryDef(expectVolume _,
       """WITH daily AS (
           SELECT epoch_ns(ts) // 86400000000000 AS day, count(*) AS n
           FROM events GROUP BY 1),
@@ -2286,9 +2203,9 @@ object EventsPipeline {
           CAST(CASE WHEN n7 < 3 THEN -1
             WHEN abs(n * n7 - sum7) * 5 > sum7 THEN 1
             ELSE 0 END AS BIGINT) AS flag
-        FROM w""",
+        FROM w"""),
     // one shared (user, time) window; HUGEINT rolling sum cast back
-    "events_lag_features" ->
+    "events_lag_features" -> QueryDef(eventsLagFeatures _,
       """WITH base AS (
           SELECT user_id, event_id,
             CAST(floor(abs(value) * 100) AS BIGINT) AS cents,
@@ -2306,45 +2223,45 @@ object EventsPipeline {
             / CAST(count(*) OVER (w ROWS BETWEEN 2 PRECEDING AND CURRENT ROW)
               AS DOUBLE) AS roll3_mean
         FROM base
-        WINDOW w AS (PARTITION BY user_id ORDER BY tus, event_id)""",
+        WINDOW w AS (PARTITION BY user_id ORDER BY tus, event_id)"""),
     // unnest([NULL]) emulates explode_outer's null row for empty arrays
-    "gen_explode_outer" ->
+    "gen_explode_outer" -> QueryDef(explodeOuter _,
       """SELECT doc_id, count(*) AS n_rows, count(tok) AS n_spark FROM (
           SELECT doc_id,
             unnest(CASE WHEN len(l) = 0 THEN [CAST(NULL AS VARCHAR)] ELSE l END) AS tok
           FROM (SELECT doc_id,
                   list_filter(string_split(text, ' '), t -> t = 'spark') AS l
                 FROM documents))
-        GROUP BY doc_id""",
-    "str_format" ->
+        GROUP BY doc_id"""),
+    "str_format" -> QueryDef(strFormat _,
       """SELECT 'USER_' || lpad(CAST(user_id % 100 AS VARCHAR), 3, '0') AS user_tag,
           count(*) AS cnt
-        FROM events GROUP BY 1""",
-    "ts_tz_shift" ->
+        FROM events GROUP BY 1"""),
+    "ts_tz_shift" -> QueryDef(tsTzShift _,
       """SELECT event_id,
           CAST(ts + INTERVAL 330 MINUTE AS DATE) AS ist_date,
           hour(ts + INTERVAL 330 MINUTE) AS ist_hour
-        FROM events""",
-    "win_hourly" ->
+        FROM events"""),
+    "win_hourly" -> QueryDef(winHourly _,
       """SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS window_start,
           event_type, count(*) AS cnt,
           CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-        FROM events GROUP BY 1, 2""",
-    "proj_distinct" ->
-      """SELECT DISTINCT event_type, user_id % 7 AS cohort FROM events""",
+        FROM events GROUP BY 1, 2"""),
+    "proj_distinct" -> QueryDef(projDistinct _,
+      """SELECT DISTINCT event_type, user_id % 7 AS cohort FROM events"""),
     // round-trips are lossless, so the oracles aggregate the source table
-    "csv_roundtrip"  -> roundtripOracle,
-    "json_roundtrip" -> roundtripOracle,
-    "orc_roundtrip"  -> roundtripOracle,
-    "xml_roundtrip"  -> roundtripOracle,
-    "avro_roundtrip" -> roundtripOracle,
-    "avro_functions" -> avroBytesOracle,
+    "csv_roundtrip" -> QueryDef(csvRoundtrip _, roundtripOracle),
+    "json_roundtrip" -> QueryDef(jsonRoundtrip _, roundtripOracle),
+    "orc_roundtrip" -> QueryDef(orcRoundtrip _, roundtripOracle),
+    "xml_roundtrip" -> QueryDef(xmlRoundtrip _, roundtripOracle),
+    "avro_roundtrip" -> QueryDef(avroRoundtrip _, roundtripOracle),
+    "avro_functions" -> QueryDef(avroFunctions _, avroBytesOracle),
     // the proto wire layout replayed arithmetically: three 1-byte
     // tags, a PLAIN varint for the id (thresholds on id itself —
     // proto int64 is not zigzag), a plain 1-byte length varint for
     // the short ASCII event_type (exact for len < 128 here, unlike
     // Avro's zigzag lengths), and a fixed 8-byte double
-    "proto_functions" ->
+    "proto_functions" -> QueryDef(protoFunctions _,
       """SELECT event_type, count(*) AS cnt,
           CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value,
           CAST(sum(
@@ -2358,21 +2275,21 @@ object EventsPipeline {
                  WHEN event_id < 72057594037927936 THEN 8
                  ELSE 9 END
             + 12 + length(event_type)) AS BIGINT) AS sum_proto_bytes
-        FROM events GROUP BY event_type""",
+        FROM events GROUP BY event_type"""),
     // corruption rule re-applied to the clean table: event_id % 7 = 0
     // rows are the quarantined ones, everything else must parse
-    "ingest_badrecords" ->
+    "ingest_badrecords" -> QueryDef(ingestBadrecords _,
       """SELECT event_type, count(*) AS cnt,
           count(CASE WHEN event_id % 7 = 0 THEN 1 END) AS n_corrupt,
           CAST(sum(CASE WHEN event_id % 7 <> 0
             THEN CAST(value AS DECIMAL(18,2)) END) AS DOUBLE) AS sum_value_good,
           CAST(sum(CASE WHEN event_id % 7 <> 0 THEN event_id END) AS BIGINT)
             AS sum_id_good
-        FROM events GROUP BY event_type""",
-    "join_asof" -> asofOracle,
+        FROM events GROUP BY event_type"""),
+    "join_asof" -> QueryDef(joinAsof _, asofOracle),
     // both directional carries in one WINDOW clause pair, the same
     // tie-to-backward CASE
-    "join_asof_nearest" ->
+    "join_asof_nearest" -> QueryDef(joinAsofNearest _,
       """WITH e AS (
           SELECT event_id, user_id, event_type, epoch_ns(ts) // 1000 AS tus,
             CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS is_p
@@ -2402,19 +2319,19 @@ object EventsPipeline {
           CASE WHEN b_id IS NOT NULL
               AND (f_id IS NULL OR tus - b_tus <= f_tus - tus)
             THEN tus - b_tus ELSE f_tus - tus END AS dist_us
-        FROM c WHERE event_type = 'purchase'""",
+        FROM c WHERE event_type = 'purchase'"""),
     // the same carry-forward CTE with the 30-min tolerance predicate
     // applied after it; unmatched purchases keep a NULL-click row
-    "join_asof_tol" ->
+    "join_asof_tol" -> QueryDef(joinAsofTol _,
       s"""WITH base AS ($asofOracle)
         SELECT purchase_id, user_id,
           CASE WHEN lag_us <= 1800000000 THEN click_id END AS click_id,
           CASE WHEN lag_us <= 1800000000 THEN lag_us END AS lag_us,
           CAST(CASE WHEN lag_us <= 1800000000 THEN 1 ELSE 0 END AS BIGINT)
             AS matched
-        FROM base""",
+        FROM base"""),
     // same interval CTE as scd_intervals + a 1-row exact-midpoint probe
-    "scd_asof" ->
+    "scd_asof" -> QueryDef(scdAsof _,
       """WITH e AS (
           SELECT user_id, event_id, event_type, epoch_ns(ts) // 1000 AS tus
           FROM events WHERE user_id IS NOT NULL),
@@ -2429,8 +2346,8 @@ object EventsPipeline {
         SELECT user_id, event_id, event_type, valid_from_us, mid_us
         FROM iv, m
         WHERE valid_from_us <= mid_us
-          AND (valid_to_us IS NULL OR valid_to_us > mid_us)""",
-    "events_pattern" ->
+          AND (valid_to_us IS NULL OR valid_to_us > mid_us)"""),
+    "events_pattern" -> QueryDef(eventsPattern _,
       """WITH e AS (
           SELECT event_id, user_id, event_type, epoch_ns(ts) // 1000 AS tus
           FROM events),
@@ -2444,8 +2361,8 @@ object EventsPipeline {
         SELECT event_id AS click_id, user_id, tus2 - tus AS span_us
         FROM led
         WHERE event_type = 'click' AND t1 = 'view' AND t2 = 'purchase'
-          AND tus2 - tus <= 172800000000""",
-    "events_markov" ->
+          AND tus2 - tus <= 172800000000"""),
+    "events_markov" -> QueryDef(eventsMarkov _,
       """WITH e AS (
           SELECT user_id, event_id, event_type, epoch_ns(ts) AS tns
           FROM events),
@@ -2461,9 +2378,9 @@ object EventsPipeline {
         SELECT from_type, to_type, n,
           CAST(n AS DOUBLE) / CAST(sum(n) OVER (PARTITION BY from_type)
             AS DOUBLE) AS p
-        FROM cnt""",
+        FROM cnt"""),
     // the forward mirror: identical window machinery, descending order
-    "join_asof_fwd" ->
+    "join_asof_fwd" -> QueryDef(joinAsofFwd _,
       """WITH e AS (
           SELECT event_id, user_id, event_type, epoch_ns(ts) // 1000 AS tus,
             CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS is_p
@@ -2480,43 +2397,43 @@ object EventsPipeline {
           WINDOW w AS (PARTITION BY user_id
             ORDER BY tus DESC, is_p DESC, event_id DESC
             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
-        WHERE event_type = 'click'""",
+        WHERE event_type = 'click'"""),
     // the custom-operator spelling must give exactly the same rows
-    "join_asof_native" -> asofOracle,
-    "agg_unpivot" ->
+    "join_asof_native" -> QueryDef(joinAsofNative _, asofOracle),
+    "agg_unpivot" -> QueryDef(aggUnpivot _,
       """SELECT event_id, 'value' AS metric, value AS val FROM events
         UNION ALL
         SELECT event_id, 'k' AS metric,
           CAST(json_extract(props, '$.k')::INT AS DOUBLE) AS val
-        FROM events""",
-    "str_funcs" ->
+        FROM events"""),
+    "str_funcs" -> QueryDef(strFuncs _,
       """SELECT event_id,
           coalesce(regexp_extract(props, '"k":\s*(\d+)', 1), '') AS k_str,
           upper(substr(event_type, 1, 1)) || substr(event_type, 2) AS etype_cap,
           reverse(event_type) AS etype_rev,
           levenshtein(event_type, 'click') AS lev,
           substr(event_type, 1, 3) AS etype3
-        FROM events""",
-    "array_funcs" ->
+        FROM events"""),
+    "array_funcs" -> QueryDef(arrayFuncs _,
       """SELECT doc_id,
           len(string_split(text, ' ')) AS n_tokens,
           len(list_distinct(string_split(text, ' '))) AS n_distinct,
           list_contains(string_split(text, ' '), 'the')::INT AS has_the,
           array_to_string(list_sort(list_distinct(string_split(text, ' ')))[1:5], ' ')
             AS first5_sorted
-        FROM documents""",
-    "join_range" ->
+        FROM documents"""),
+    "join_range" -> QueryDef(joinRange _,
       """WITH e AS (
           SELECT event_id, user_id, epoch_ns(ts) // 1000 AS tus FROM events)
         SELECT a.event_id AS id_a, b.event_id AS id_b, b.tus - a.tus AS gap_us
         FROM e a JOIN e b ON a.user_id = b.user_id
           AND b.tus - a.tus BETWEEN 0 AND 60000000
-          AND (a.tus < b.tus OR (a.tus = b.tus AND a.event_id < b.event_id))""",
-    "warehouse_load" ->
+          AND (a.tus < b.tus OR (a.tus = b.tus AND a.event_id < b.event_id))"""),
+    "warehouse_load" -> QueryDef(warehouseLoad _,
       """SELECT CAST(event_id AS VARCHAR) AS event_id_str,
           CAST(CAST(value AS DECIMAL(10,2)) AS DOUBLE) AS value_num,
           CAST(ts AS DATE) AS event_date,
           upper(event_type) AS event_type_uc
-        FROM events""",
+        FROM events"""),
   )
 }

@@ -108,23 +108,17 @@ object Geo {
         min(col("event_id")).as("first_event"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "geo_grid"    -> geoGrid _,
-    "geo_nearest" -> geoNearest _,
-    "geo_join"    -> geoJoin _,
-  )
-
-  val oracle: Map[String, String] = Map(
-    "geo_grid" ->
+  val registry: Map[String, QueryDef] = Map(
+    "geo_grid" -> QueryDef(geoGrid _,
       """SELECT ((event_id * 7919) % 18000) // 500 AS cell_lat,
           ((event_id * 104729) % 36000) // 500 AS cell_lon,
           count(*) AS n_events,
           count(DISTINCT user_id) AS n_users,
           min(event_id) AS first_event
-        FROM events GROUP BY 1, 2""",
+        FROM events GROUP BY 1, 2"""),
     // blocking-free exact containment per depot — equality with the
     // grid-blocked join proves the 9x9 cover loses no candidates
-    "geo_join" ->
+    "geo_join" -> QueryDef(geoJoin _,
       """WITH pos AS (
           SELECT event_id,
             (event_id * 7919) % 18000 AS la,
@@ -142,8 +136,8 @@ object Geo {
         SELECT depot_id, count(*) AS n_within,
           CAST(min(d2) AS BIGINT) AS min_d2,
           min(event_id) AS first_event
-        FROM within GROUP BY 1""",
-    "geo_nearest" ->
+        FROM within GROUP BY 1"""),
+    "geo_nearest" -> QueryDef(geoNearest _,
       """WITH pos AS (
           SELECT (event_id * 7919) % 18000 AS la,
             (event_id * 104729) % 36000 AS lo
@@ -160,6 +154,6 @@ object Geo {
           count(*) AS n_events,
           min(least(d1, d2, d3, d4)) AS min_d2,
           CAST(sum(least(d1, d2, d3, d4)) AS BIGINT) AS sum_d2
-        FROM dist GROUP BY 1""",
+        FROM dist GROUP BY 1"""),
   )
 }

@@ -1,6 +1,7 @@
 package graft.analytics
 
 import graft.analytics.Caches.TrackedPersist
+import graft.GraftSession
 import graft.Tables._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -730,63 +731,60 @@ object IncrementalBuild {
         val nArrived = batch.count()
         if (nArrived > 0) {
           // batch-sized shuffle parallelism for the gate chain's many
-          // small joins/rollups (r17, the withLoopShufflePartitions
-          // precedent): the session's full-corpus setting ran every
-          // per-batch shuffle as 32 near-empty tasks; restored in the
-          // finally below, so only this batch's jobs are affected. At
-          // a production batch size the same rule derives full
-          // parallelism.
+          // small joins/rollups (r17, the graph-loop precedent): the
+          // session's full-corpus setting ran every per-batch shuffle as
+          // 32 near-empty tasks; scoped by withConf, so only this
+          // batch's jobs are affected. At a production batch size the
+          // same rule derives full parallelism.
           val bp = Sizing.batchDocPartitions(nArrived,
             s.sparkContext.defaultParallelism)
-          val prevSp = s.conf.get("spark.sql.shuffle.partitions")
-          s.conf.set("spark.sql.shuffle.partitions", bp.toString)
-          try {
-          // fan the micro-batch out before decorating: a one-file
-          // trigger arrives as a SINGLE partition, and severing it
-          // as-is would run every downstream text stage (shingles,
-          // paragraphs, gopher, classifier) on one task (the r14
-          // single-split serialization class). Fan-out is SIZED TO THE
-          // BATCH (r17, Sizing.batchDocPartitions — the one-partition
-          // count is a single-split scan, ~free): the r16
-          // defaultParallelism pin made every per-batch job 32
-          // near-empty tasks at test SF, the dominant share of the
-          // ~20-short-jobs-per-batch chain the r16 verdict flagged
-          val b = sever(CorpusBuild.decorateAt(batch, bp))
-          val sets = deltaStackAgainst(b, Stores(fpS, bandS, paraS), b,
-            stGates, lean = true)
-          val appendedB = sets.last
-          // store accumulation (r16): sever the batch-sized INCREMENTS
-          // and accumulate by plain union of the severed leaves — the
-          // old spelling re-distinct-ed and re-checkpointed the whole
-          // accumulated store every micro-batch (O(store) per batch).
-          // All three gates are dup-safe by construction (fp: anti-
-          // join; band: semi-join; paragraph: the semi-join-union
-          // spelling above), so cross-batch duplicate keys are
-          // harmless, and a 4-level union of checkpointed leaves stays
-          // a flat plan.
-          val upd = storesFrom(b, sets)
-          // the three increment materializations are independent —
-          // sever them concurrently so the batch's tail fills the
-          // cores one job's stragglers leave idle (guide §2.6)
-          val Seq(fpU, bandU, paraU) = Seq(upd.fp, upd.band, upd.para)
-            .map(df => scala.concurrent.Future(sever(df))(
-              scala.concurrent.ExecutionContext.global))
-            .map(f => scala.concurrent.Await.result(f,
-              scala.concurrent.duration.Duration.Inf))
-          fpS = fpS.unionByName(fpU)
-          bandS = bandS.unionByName(bandU)
-          paraS = paraS.unionByName(paraU)
-          appended = appended.unionByName(appendedB)
-          // ONE ledger job: appended count + the id fold crossJoined.
-          // n_arrived is the count already taken for the fan-out
-          // (decorate is a pure projection — row-preserving), so the
-          // r16 b.agg leg re-scanned the batch for a number the driver
-          // already held
-          val row = appendedB.agg(count(lit(1)).as("nb"))
-            .crossJoin(idFoldDf(appendedB)).head
-          ledger += ((batchId, nArrived, row.getLong(0),
-            row.getString(1)))
-          } finally s.conf.set("spark.sql.shuffle.partitions", prevSp)
+          GraftSession.withConf(s, "spark.sql.shuffle.partitions" -> bp.toString) {
+            // fan the micro-batch out before decorating: a one-file
+            // trigger arrives as a SINGLE partition, and severing it
+            // as-is would run every downstream text stage (shingles,
+            // paragraphs, gopher, classifier) on one task (the r14
+            // single-split serialization class). Fan-out is SIZED TO THE
+            // BATCH (r17, Sizing.batchDocPartitions — the one-partition
+            // count is a single-split scan, ~free): the r16
+            // defaultParallelism pin made every per-batch job 32
+            // near-empty tasks at test SF, the dominant share of the
+            // ~20-short-jobs-per-batch chain the r16 verdict flagged
+            val b = sever(CorpusBuild.decorateAt(batch, bp))
+            val sets = deltaStackAgainst(b, Stores(fpS, bandS, paraS), b,
+              stGates, lean = true)
+            val appendedB = sets.last
+            // store accumulation (r16): sever the batch-sized INCREMENTS
+            // and accumulate by plain union of the severed leaves — the
+            // old spelling re-distinct-ed and re-checkpointed the whole
+            // accumulated store every micro-batch (O(store) per batch).
+            // All three gates are dup-safe by construction (fp: anti-
+            // join; band: semi-join; paragraph: the semi-join-union
+            // spelling above), so cross-batch duplicate keys are
+            // harmless, and a 4-level union of checkpointed leaves stays
+            // a flat plan.
+            val upd = storesFrom(b, sets)
+            // the three increment materializations are independent —
+            // sever them concurrently so the batch's tail fills the
+            // cores one job's stragglers leave idle (guide §2.6)
+            val Seq(fpU, bandU, paraU) = Seq(upd.fp, upd.band, upd.para)
+              .map(df => scala.concurrent.Future(sever(df))(
+                scala.concurrent.ExecutionContext.global))
+              .map(f => scala.concurrent.Await.result(f,
+                scala.concurrent.duration.Duration.Inf))
+            fpS = fpS.unionByName(fpU)
+            bandS = bandS.unionByName(bandU)
+            paraS = paraS.unionByName(paraU)
+            appended = appended.unionByName(appendedB)
+            // ONE ledger job: appended count + the id fold crossJoined.
+            // n_arrived is the count already taken for the fan-out
+            // (decorate is a pure projection — row-preserving), so the
+            // r16 b.agg leg re-scanned the batch for a number the driver
+            // already held
+            val row = appendedB.agg(count(lit(1)).as("nb"))
+              .crossJoin(idFoldDf(appendedB)).head
+            ledger += ((batchId, nArrived, row.getLong(0),
+              row.getString(1)))
+          }
         }
         ()
       }
@@ -807,13 +805,6 @@ object IncrementalBuild {
     ledgerDf.unionByName(finalRow)
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "corpus_build_incremental" -> corpusBuildIncremental _,
-    "corpus_incr_equiv"        -> corpusIncrEquiv _,
-    "corpus_diff"              -> corpusDiff _,
-    "corpus_incr_equiv_computed" -> corpusIncrEquivComputed _,
-    "stream_incremental_ingest" -> streamIncrementalIngest _,
-    "shard_export_incremental" -> shardExportIncremental _)
 
   // ---------------------------------------------------------------
   // DuckDB oracle: plants, the old stack, the union stack, and the
@@ -986,13 +977,13 @@ object IncrementalBuild {
             md5(string_agg(doc_id, ',' ORDER BY doc_id)) AS gfp
           FROM $rel WHERE $pred GROUP BY 1) zf)"""
 
-  val oracle: Map[String, String] = Map(
+  val registry: Map[String, QueryDef] = Map(
     // the streamed ingest's receipt re-derived from the BATCH path:
     // per-arrival-window counts and folds over x10 (the one-shot delta
     // survivors) — a hash match proves the foreachBatch execution
     // appended exactly the one-shot survivor set, batch by batch, and
     // that the replay appended nothing
-    "stream_incremental_ingest" ->
+    "stream_incremental_ingest" -> QueryDef(streamIncrementalIngest _,
       s"""$incrCtes
         SELECT CAST(0 AS BIGINT) AS batch_id,
           (SELECT count(*) FROM xpop WHERE doc_id < $CopyBase) AS n_arrived,
@@ -1015,8 +1006,8 @@ object IncrementalBuild {
           (SELECT count(*) FROM xpop)
             + (SELECT count(*) FROM xpop WHERE doc_id < $CopyBase),
           (SELECT count(*) FROM x10),
-          ${foldSql("x10", "TRUE")}""",
-    "corpus_build_incremental" ->
+          ${foldSql("x10", "TRUE")}""", streaming = true),
+    "corpus_build_incremental" -> QueryDef(corpusBuildIncremental _,
       s"""$incrCtes
         SELECT CAST(r AS INT) AS stage_rank, stage, n_in,
           n_in - n_out AS n_dropped, n_out
@@ -1041,8 +1032,8 @@ object IncrementalBuild {
           UNION ALL SELECT 9, 'contamination',
             (SELECT count(*) FROM x8), (SELECT count(*) FROM x9)
           UNION ALL SELECT 10, 'semantic',
-            (SELECT count(*) FROM x9), (SELECT count(*) FROM x10)) u""",
-    "corpus_incr_equiv_computed" ->
+            (SELECT count(*) FROM x9), (SELECT count(*) FROM x10)) u"""),
+    "corpus_incr_equiv_computed" -> QueryDef(corpusIncrEquivComputed _,
       s"""$incrCtes,
         ${DocEmbed.sgnCte},
         ${DocEmbed.pinnedIdfCtes},
@@ -1068,8 +1059,8 @@ object IncrementalBuild {
             (SELECT doc_id FROM u10c EXCEPT SELECT doc_id FROM incrc) b)
             AS n_only_scratch,
           (SELECT count(*) FROM u9
-           WHERE doc_id IN (SELECT doc_id FROM csemdrop)) AS n_sem_dropped""",
-    "corpus_incr_equiv" ->
+           WHERE doc_id IN (SELECT doc_id FROM csemdrop)) AS n_sem_dropped"""),
+    "corpus_incr_equiv" -> QueryDef(corpusIncrEquiv _,
       s"""$incrCtes,
         incr AS (SELECT doc_id FROM o10 UNION ALL SELECT doc_id FROM x10)
         SELECT
@@ -1082,8 +1073,8 @@ object IncrementalBuild {
             AS n_only_incremental,
           (SELECT count(*) FROM
             (SELECT doc_id FROM u10 EXCEPT SELECT doc_id FROM incr) b)
-            AS n_only_scratch""",
-    "corpus_diff" ->
+            AS n_only_scratch"""),
+    "corpus_diff" -> QueryDef(corpusDiff _,
       s"""$incrCtes,
         tagged AS (
           SELECT doc_id, 'unchanged' AS status FROM o10
@@ -1110,8 +1101,8 @@ object IncrementalBuild {
             WHERE doc_id NOT IN (SELECT doc_id FROM x10))
         SELECT f.source, t.status, count(*) AS n_docs
         FROM tagged t JOIN ifx f USING (doc_id)
-        GROUP BY 1, 2""",
-    "shard_export_incremental" ->
+        GROUP BY 1, 2"""),
+    "shard_export_incremental" -> QueryDef(shardExportIncremental _,
       s"""$incrCtes,
         orel AS (SELECT doc_id, source, ftext FROM o10),
         nrel AS (SELECT doc_id, source, ftext FROM o10
@@ -1125,5 +1116,6 @@ object IncrementalBuild {
           coalesce(b.n_packs, 0) AS n_packs_new,
           CAST(NOT (a.shard_fp IS NOT DISTINCT FROM b.shard_fp) AS INT)
             AS changed
-        FROM roshd a FULL JOIN rnshd b ON a.shard_id = b.shard_id""")
+        FROM roshd a FULL JOIN rnshd b ON a.shard_id = b.shard_id"""),
+  )
 }

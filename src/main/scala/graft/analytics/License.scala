@@ -171,9 +171,6 @@ object License {
         "(n_docs * 1000000) div src_total AS share_ppm")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "text_license" -> textLicense _,
-    "license_mix"  -> licenseMix _)
 
   // oracle: the SAME rule table rendered into SQL — contains() for
   // phrases, RE2 regexp_matches for URL shapes, the same decoration
@@ -229,12 +226,12 @@ object License {
         FROM dec)"""
   }
 
-  val oracle: Map[String, String] = Map(
-    "text_license" ->
+  val registry: Map[String, QueryDef] = Map(
+    "text_license" -> QueryDef(textLicense _,
       s"""WITH $licenseCtes
         SELECT doc_id, source, licenses, primary_license, n_matched
-        FROM tags""",
-    "license_mix" ->
+        FROM tags"""),
+    "license_mix" -> QueryDef(licenseMix _,
       s"""WITH $licenseCtes,
         mix AS (
           SELECT source, primary_license, count(*) AS n_docs
@@ -243,5 +240,6 @@ object License {
           CAST((n_docs * 1000000)
             // sum(n_docs) OVER (PARTITION BY source) AS BIGINT)
             AS share_ppm
-        FROM mix""")
+        FROM mix"""),
+  )
 }

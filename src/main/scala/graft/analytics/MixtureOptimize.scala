@@ -249,10 +249,6 @@ object MixtureOptimize {
           .as("achieved_ppm"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "mixture_optimize"   -> mixtureOptimize _,
-    "mixture_opt_rounds" -> mixtureOptRounds _,
-    "mixture_sample"     -> mixtureSample _)
 
   // ---------------------------------------------------------------
   // DuckDB oracle: gopher gate + the FULL unrolled cascade + the
@@ -288,8 +284,9 @@ object MixtureOptimize {
         s0 AS (SELECT source, b, FALSE AS capped FROM mass),
         $roundCtes"""
 
-  val oracle: Map[String, String] = Map(
-    "mixture_opt_rounds" -> (baseCtes + "\n" +
+  val registry: Map[String, QueryDef] = Map(
+    "mixture_opt_rounds" -> QueryDef(mixtureOptRounds _,
+      (baseCtes + "\n" +
       (1 to Rounds).map { k =>
         s"""SELECT $k AS round,
           (SELECT CAST(nc AS BIGINT) FROM a$k) AS n_capped,
@@ -297,13 +294,15 @@ object MixtureOptimize {
             AS free_mass_ppm,
           (SELECT CAST(coalesce(max(CASE WHEN NOT capped AND v > $CapPpm
               THEN v - $CapPpm END), 0) AS BIGINT) FROM v$k) AS max_over_ppm"""
-      }.mkString(" UNION ALL ")),
-    "mixture_optimize" -> (allocCtes + """
-      SELECT source, b_tokens, raw_ppm, opt_ppm, is_capped FROM fin"""),
+      }.mkString(" UNION ALL "))),
+    "mixture_optimize" -> QueryDef(mixtureOptimize _,
+      (allocCtes + """
+      SELECT source, b_tokens, raw_ppm, opt_ppm, is_capped FROM fin""")),
     // the sampling chain over the allocation: max-ratio normalizer by
     // the same integer quotient key, exact 24-bit thresholds, and the
     // md5 keep decision replayed per document
-    "mixture_sample" -> (allocCtes + s""",
+    "mixture_sample" -> QueryDef(mixtureSample _,
+      (allocCtes + s""",
       aq AS (
         SELECT source, b_tokens, opt_ppm,
           CAST((CAST(opt_ppm AS HUGEINT) * 1000000000000) // b_tokens
@@ -338,7 +337,8 @@ object MixtureOptimize {
       SELECT source, thresh, n_docs, n_kept, tok_kept, target_ppm,
         CAST((CAST(tok_kept AS HUGEINT) * 1000000) // kt.tot_kept
           AS BIGINT) AS achieved_ppm
-      FROM ks CROSS JOIN kt"""))
+      FROM ks CROSS JOIN kt""")),
+  )
 
   /** Shared final-allocation CTE chain ending in
     * `fin(source, b_tokens, raw_ppm, opt_ppm, is_capped)`. */

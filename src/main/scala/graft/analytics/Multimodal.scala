@@ -2087,26 +2087,6 @@ object Multimodal {
         col("n_stripped"), col("doc_keep"), col("kept_fp"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "multimodal_align"    -> multimodalAlign _,
-    "multimodal_interleaved" -> multimodalInterleaved _,
-    "multimodal_sniff"    -> multimodalSniff _,
-    "multimodal_stub"     -> multimodalStub _,
-    "multimodal_features" -> featuresScalar _,
-    "multimodal_frames"   -> multimodalFrames _,
-    "multimodal_resize"   -> ((s: SparkSession, d: String) => multimodalResize(s, d)),
-    "multimodal_wav"      -> multimodalWav _,
-    "multimodal_bmp"      -> multimodalBmp _,
-    "multimodal_png"      -> multimodalPng _,
-    "multimodal_jpeg"     -> multimodalJpeg _,
-    "multimodal_exif"     -> multimodalExif _,
-    "multimodal_exif_strip" -> multimodalExifStrip _,
-    "multimodal_gif"      -> multimodalGif _,
-    "multimodal_mjpeg"    -> multimodalMjpeg _,
-    "multimodal_mp4"      -> multimodalMp4 _,
-    "multimodal_tar"      -> multimodalTar _,
-    "multimodal_audio_gate" -> multimodalAudioGate _,
-  )
 
   /** hex-pair → byte value, DuckDB spelling (strpos is 1-based). */
   private val byteExpr =
@@ -2189,14 +2169,15 @@ object Multimodal {
             ORDER BY s), '')) AS kept_fp
         FROM ss GROUP BY 1"""
 
-  val oracle: Map[String, String] = Map(
-    "multimodal_align" -> alignSql,
-    "multimodal_interleaved" -> interleavedSql,
+  val registry: Map[String, QueryDef] = Map(
+    "multimodal_align" -> QueryDef(multimodalAlign _, alignSql),
+    "multimodal_interleaved" -> QueryDef(multimodalInterleaved _,
+      interleavedSql),
     // every EXIF field is a construction rule over doc_id, so the
     // oracle replays the PLANT arithmetically while the query only
     // reproduces it by correctly walking markers + both TIFF byte
     // orders; dims_match = 1 is the two-reader corroboration verdict
-    "multimodal_exif" ->
+    "multimodal_exif" -> QueryDef(multimodalExif _,
       """SELECT doc_id AS asset_id,
           CASE WHEN doc_id % 2 = 0 THEN 'MM' ELSE 'II' END AS byte_order,
           CAST(1 + doc_id % 8 AS INT) AS orientation,
@@ -2207,24 +2188,24 @@ object Multimodal {
           CAST(48 + (doc_id % 4) * 16 AS INT) AS exif_w,
           CAST(32 + (doc_id % 2) * 32 AS INT) AS exif_h,
           CAST(1 AS INT) AS dims_match
-        FROM documents""",
+        FROM documents"""),
     // bytes_saved replays the planted APP1's closed-form size: 2
     // (marker) + 2 (length) + 6 (Exif\0\0) + TIFF(8 header + 54 IFD0 +
     // 30 ExifIFD + even-padded make (12 for any 1-or-2-digit id) + 20
     // DateTime) = 134; the 1-bits are the two corroboration verdicts
     // (bit-identical restore of the pre-splice codec bytes + decode)
-    "multimodal_exif_strip" ->
+    "multimodal_exif_strip" -> QueryDef(multimodalExifStrip _,
       """SELECT doc_id AS asset_id,
           CAST(134 AS BIGINT) AS bytes_saved,
           CAST(1 AS INT) AS match_original,
           CAST(1 AS INT) AS decode_ok
-        FROM documents""",
+        FROM documents"""),
     // both detection AND dispatched decode are pinned: media_type by
     // the synthesis rotation (the sniffer never sees the rotation —
     // only correct magic-byte detection reproduces it) and n_units by
     // each format's construction rule as recovered by the REAL parser
     // (pixels / pixel-frames / samples / members / records)
-    "multimodal_sniff" ->
+    "multimodal_sniff" -> QueryDef(multimodalSniff _,
       """SELECT doc_id AS asset_id,
           CASE CAST(doc_id % 7 AS INT)
             WHEN 0 THEN 'image/png'
@@ -2243,24 +2224,24 @@ object Multimodal {
             WHEN 5 THEN 2 + doc_id % 3
             ELSE 1 + 2 * (1 + doc_id % 3) END AS BIGINT) AS n_units,
           CAST(1 AS BIGINT) AS ok
-        FROM documents""",
-    "multimodal_stub" ->
+        FROM documents"""),
+    "multimodal_stub" -> QueryDef(multimodalStub _,
       """SELECT doc_id, octet_length(encode(text)) AS n_bytes,
           sha256(text) AS content_sha,
           CAST(octet_length(encode(text)) // 256 AS INT) + 1 AS n_frames
-        FROM documents""",
+        FROM documents"""),
     // stub features are the first 8 sha256 digest bytes / 255 — the
     // oracle recomputes the bytes from the hex digest
-    "multimodal_features" ->
+    "multimodal_features" -> QueryDef(featuresScalar _,
       s"""SELECT doc_id AS asset_id, octet_length(encode(text)) AS n_bytes,
           sha AS sha256,
           CAST(octet_length(encode(text)) // 256 AS INT) + 1 AS n_frames,
           array_to_string(list_transform(generate_series(0, 7),
             i -> CAST($byteExpr AS VARCHAR)), ',') AS features_b
-        FROM (SELECT *, sha256(text) AS sha FROM documents)""",
+        FROM (SELECT *, sha256(text) AS sha FROM documents)"""),
     // the same every-4th-byte sample, character-wise (ASCII corpus:
     // byte == char), hashed with the same sha256
-    "multimodal_resize" ->
+    "multimodal_resize" -> QueryDef(multimodalResize(_, _),
       """WITH r AS (
           SELECT doc_id AS asset_id, octet_length(encode(text)) AS n_bytes,
             array_to_string(list_transform(list_filter(
@@ -2271,8 +2252,8 @@ object Multimodal {
         SELECT asset_id, n_bytes,
           CAST(octet_length(encode(resized)) AS BIGINT) AS resized_bytes,
           sha256(resized) AS resized_sha
-        FROM r""",
-    "multimodal_frames" ->
+        FROM r"""),
+    "multimodal_frames" -> QueryDef(multimodalFrames _,
       """WITH a AS (
           SELECT doc_id AS asset_id,
             CAST(octet_length(encode(text)) // 256 AS INT) + 1 AS n_frames
@@ -2280,11 +2261,11 @@ object Multimodal {
         SELECT asset_id, n_frames,
           CAST(u.f AS BIGINT) AS frame_idx,
           CAST(u.f * 256 AS BIGINT) AS byte_off
-        FROM a, unnest(generate_series(0, n_frames - 1, 4)) AS u(f)""",
+        FROM a, unnest(generate_series(0, n_frames - 1, 4)) AS u(f)"""),
     // the WAV construction rule recomputed sample-by-sample: if the
     // engine-side RIFF parse misreads an offset, sign, or sample
     // order, sum/max/positional-checksum diverge
-    "multimodal_wav" ->
+    "multimodal_wav" -> QueryDef(multimodalWav _,
       """WITH a AS (
           SELECT doc_id, GREATEST(1, n_chars) AS n FROM documents),
         s AS (
@@ -2298,10 +2279,10 @@ object Multimodal {
           CAST(sum(abs(v)) AS BIGINT) AS sum_abs,
           CAST(max(abs(v)) AS BIGINT) AS max_abs,
           CAST(sum((i + 1) * v) AS BIGINT) AS checksum
-        FROM s GROUP BY doc_id""",
+        FROM s GROUP BY doc_id"""),
     // the BMP pixel rule recomputed per (x, y): the positional
     // checksum pins bottom-up row order and pad-skip
-    "multimodal_bmp" ->
+    "multimodal_bmp" -> QueryDef(multimodalBmp _,
       """WITH a AS (
           SELECT doc_id, 16 + doc_id % 16 AS w, 8 + doc_id % 8 AS h
           FROM documents),
@@ -2320,12 +2301,12 @@ object Multimodal {
           CAST(sum(g) AS BIGINT) AS sum_g,
           CAST(sum(b) AS BIGINT) AS sum_b,
           CAST(sum((y * w + x + 1) * (r + g + b)) AS BIGINT) AS checksum
-        FROM px GROUP BY doc_id""",
+        FROM px GROUP BY doc_id"""),
     // the PNG pixel rule recomputed per (x, y) — the engine side only
     // matches after a correct chunk walk + CRC check + inflate +
     // un-filter of all five rotating filter types, so a single wrong
     // predictor byte anywhere hash-mismatches
-    "multimodal_png" ->
+    "multimodal_png" -> QueryDef(multimodalPng _,
       """WITH a AS (
           SELECT doc_id, 8 + doc_id % 17 AS w, 4 + doc_id % 11 AS h
           FROM documents),
@@ -2344,14 +2325,14 @@ object Multimodal {
           CAST(sum(g) AS BIGINT) AS sum_g,
           CAST(sum(b) AS BIGINT) AS sum_b,
           CAST(sum((y * w + x + 1) * (r + g + b)) AS BIGINT) AS checksum
-        FROM px GROUP BY doc_id""",
+        FROM px GROUP BY doc_id"""),
     // JPEG decode GATE (lossy codec — exact replay impossible): the
     // oracle carries the planted dims/colors and ALL-ONES tolerance
     // flags; the engine's flags come from genuinely decoding its own
     // real-codec encoding, so any decode break flips them and fails
     // the hash. Tolerance ±6 vs a measured worst error of 4 over the
     // exhaustive 192-id construction cycle (AnalyticsSpec sweep).
-    "multimodal_jpeg" ->
+    "multimodal_jpeg" -> QueryDef(multimodalJpeg _,
       """SELECT doc_id AS asset_id,
           CAST(48 + (doc_id % 4) * 16 AS INT) AS width,
           CAST(32 + (doc_id % 2) * 32 AS INT) AS height,
@@ -2363,12 +2344,12 @@ object Multimodal {
           CAST(32 + (doc_id * 17 + 32) % 192 AS BIGINT) AS bot_b,
           CAST(1 AS BIGINT) AS ok_top,
           CAST(1 AS BIGINT) AS ok_bottom
-        FROM documents""",
+        FROM documents"""),
     // the GIF frame rule replayed exactly (lossless codec): full-pixel
     // sums are w·h·color per frame, and the (f+1)-weighted checksum
     // pins frame ORDER — a dropped, duplicated, or reordered frame
     // hash-mismatches
-    "multimodal_gif" ->
+    "multimodal_gif" -> QueryDef(multimodalGif _,
       """WITH a AS (
           SELECT doc_id, 16 + doc_id % 16 AS w, 8 + doc_id % 8 AS h,
             2 + doc_id % 6 AS nf
@@ -2387,7 +2368,7 @@ object Multimodal {
           CAST(sum(w * h * g) AS BIGINT) AS sum_g,
           CAST(sum(w * h * b) AS BIGINT) AS sum_b,
           CAST(sum((f + 1) * w * h * (r + g + b)) AS BIGINT) AS checksum
-        FROM fr GROUP BY doc_id""",
+        FROM fr GROUP BY doc_id"""),
     // MJPEG-AVI decode GATE (lossy codec, like multimodal_jpeg): the
     // oracle replays the container construction arithmetically (dims,
     // frame count, duration from the avih rate rule, the per-frame
@@ -2395,7 +2376,7 @@ object Multimodal {
     // idx_ok = 1; the engine's counts come from genuinely demuxing
     // the RIFF tree, cross-checking idx1, and decoding every frame
     // with the real codec — any demux or decode break flips them
-    "multimodal_mjpeg" ->
+    "multimodal_mjpeg" -> QueryDef(multimodalMjpeg _,
       """WITH a AS (
           SELECT doc_id, 48 + (doc_id % 3) * 16 AS w,
             32 + (doc_id % 2) * 32 AS h,
@@ -2422,12 +2403,12 @@ object Multimodal {
           CAST(a.nf AS BIGINT) AS ok_frames,
           CAST(1 AS BIGINT) AS idx_ok,
           CAST(ck.plant_ck AS BIGINT) AS plant_checksum
-        FROM a JOIN ck ON ck.doc_id = a.doc_id""",
+        FROM a JOIN ck ON ck.doc_id = a.doc_id"""),
     // the tar member rule replayed exactly: names from the string
     // rule, sizes/bytes from the arithmetic rule, and a (member,
     // position)-weighted checksum that a mis-walked block boundary,
     // bad octal parse, or padding slip breaks
-    "multimodal_tar" ->
+    "multimodal_tar" -> QueryDef(multimodalTar _,
       """WITH a AS (
           SELECT doc_id, 2 + doc_id % 3 AS nmem FROM documents),
         m AS (
@@ -2450,13 +2431,13 @@ object Multimodal {
           CAST(mm.sum_bytes AS BIGINT) AS sum_bytes,
           CAST(mm.sum_name_len AS BIGINT) AS sum_name_len,
           CAST(bb.ck AS BIGINT) AS checksum
-        FROM mm JOIN bb ON mm.doc_id = bb.doc_id""",
+        FROM mm JOIN bb ON mm.doc_id = bb.doc_id"""),
     // the MP4 construction rule replayed arithmetically: duration_ms
     // is exactly integral ((600+30k)·1000/600 = 1000+50k, no
     // truncation ambiguity), and the mdat positional checksum pins
     // payload byte ORDER through the box walk — a size/endianness/
     // largesize/nesting mistake shifts it
-    "multimodal_mp4" ->
+    "multimodal_mp4" -> QueryDef(multimodalMp4 _,
       """WITH a AS (
           SELECT doc_id, 64 + doc_id % 97 AS nb FROM documents),
         m AS (
@@ -2475,12 +2456,12 @@ object Multimodal {
           CAST(d.doc_id % 2 AS BIGINT) AS n_audio,
           CAST(64 + d.doc_id % 97 AS BIGINT) AS mdat_bytes,
           m.ck AS mdat_checksum
-        FROM documents d JOIN m ON m.doc_id = d.doc_id""",
+        FROM documents d JOIN m ON m.doc_id = d.doc_id"""),
     // the amplitude rule replayed frame-by-frame: truncating //
     // matches the engine's Long division toward zero, the clamp is
     // the write-side saturation, and the last partial frame is judged
     // against its own length
-    "multimodal_audio_gate" ->
+    "multimodal_audio_gate" -> QueryDef(multimodalAudioGate _,
       """WITH a AS (
           SELECT doc_id, GREATEST(1, n_chars) AS n FROM documents),
         s AS (
@@ -2504,6 +2485,6 @@ object Multimodal {
         SELECT doc_id AS asset_id, n_frames, n_silent, n_clipped,
           CASE WHEN 2 * n_silent > n_frames
             THEN 'drop_silent' ELSE 'keep' END AS verdict
-        FROM g""",
+        FROM g"""),
   )
 }

@@ -1,7 +1,7 @@
 package graft.analytics
 
 import graft.analytics.Caches.TrackedPersist
-import graft.Tables
+import graft.{GraftSession, Tables}
 import graft.Tables._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -17,7 +17,7 @@ import org.apache.spark.sql.types.DecimalType
   * /root/reference/Glue/Glue_job.py:31-93), so these are the engine
   * capabilities a user would need to analyze its curated/rejected output
   * at scale. Each query is paired with DuckDB oracle SQL in
-  * `Relational.oracle`.
+  * `Relational.registry`.
   *
   * Scale notes (100 TB thinking):
   *  - `join_broadcast` broadcasts the dimension tables explicitly; the
@@ -1536,7 +1536,7 @@ object Relational {
   /** The ONE SQL text both engines run verbatim — the SQL front-end
     * parity query. Spark executes it through `spark.sql` over a temp
     * view (same parser → analyzer → Catalyst path a SQL-first user
-    * hits); the oracle map carries the IDENTICAL string for DuckDB, so
+    * hits); its registry entry carries the IDENTICAL string for DuckDB, so
     * this query pins the dialect-shared subset (CTEs, grouped decimal
     * aggregation, ranking window, top-k) end-to-end. */
   // top-50 via ORDER BY + LIMIT *before* the ranking window: Spark
@@ -1708,13 +1708,12 @@ object Relational {
       .createOrReplaceTempView("graft_rungs")
     s.createDataFrame(Seq(Tuple1(row.getLong(0)))).toDF("n")
       .createOrReplaceTempView("graft_rung_total")
-    val prev = s.conf.getOption("spark.sql.scripting.enabled")
-    s.conf.set("spark.sql.scripting.enabled", "true")
     // rungs tested: 2, 4, …, 2⁴⁰ (first rung probed before the loop;
     // the 2⁴⁰ cap bounds the loop AND matches the oracle's rung
     // domain, so degenerate inputs — empty table, all-huge values —
     // agree cross-engine instead of diverging or overflowing)
-    try s.sql("""BEGIN
+    GraftSession.withConf(s, "spark.sql.scripting.enabled" -> "true") {
+      s.sql("""BEGIN
         DECLARE n BIGINT DEFAULT 0;
         DECLARE thr BIGINT DEFAULT 2;
         DECLARE kept BIGINT DEFAULT 0;
@@ -1726,9 +1725,6 @@ object Relational {
         END WHILE;
         SELECT thr AS threshold_cents, kept AS n_kept, n AS n_total;
       END""")
-    finally prev match {
-      case Some(v) => s.conf.set("spark.sql.scripting.enabled", v)
-      case None    => s.conf.unset("spark.sql.scripting.enabled")
     }
   }
 
@@ -2359,135 +2355,6 @@ object Relational {
         FROM graft.data.embeddings""")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "catalog_sql"       -> catalogSql _,
-    "catalog_function"  -> catalogFunction _,
-    "q1_agg"            -> q1Agg _,
-    "q3_topk"           -> q3Topk _,
-    "q10_returns"       -> q10Returns _,
-    "q5_local"          -> q5Local _,
-    "q2_min_supplier"   -> q2MinSupplier _,
-    "q4_priority"       -> q4Priority _,
-    "q7_volume"         -> q7Volume _,
-    "q8_share"          -> q8Share _,
-    "q9_profit"         -> q9Profit _,
-    "q13_custdist"      -> q13Custdist _,
-    "q15_top_supplier"  -> q15TopSupplier _,
-    "q16_supplier_cnt"  -> q16SupplierCnt _,
-    "q17_small_qty"     -> q17SmallQty _,
-    "q19_disjunction"   -> q19Disjunction _,
-    "q11_stock_value"   -> q11StockValue _,
-    "q12_late_priority" -> q12LatePriority _,
-    "q20_excess_shippers" -> q20ExcessShippers _,
-    "q21_waiting"       -> q21Waiting _,
-    "q22_idle_rich"     -> q22IdleRich _,
-    "schema_evolution"  -> schemaEvolution _,
-    "join_inner"        -> joinInner _,
-    "join_broadcast"    -> joinBroadcast _,
-    "join_left"         -> joinLeft _,
-    "join_semi"         -> joinSemi _,
-    "join_anti"         -> joinAnti _,
-    "agg_group"         -> aggGroup _,
-    "agg_distinct"      -> aggDistinct _,
-    "agg_hll"           -> aggHll _,
-    "agg_hll_union"     -> aggHllUnion _,
-    "sketch_theta"      -> sketchTheta _,
-    "agg_bitmap_distinct" -> aggBitmapDistinct _,
-    "agg_predicates"    -> aggPredicates _,
-    "agg_approx_quantile" -> aggApproxQuantile _,
-    "skew_stats"        -> skewStats _,
-    "orders_rfm"        -> ordersRfm _,
-    "ts_mom"            -> tsMom _,
-    "agg_moments"       -> aggMoments _,
-    "events_anomaly_iqr" -> eventsAnomalyIqr _,
-    "agg_count"         -> aggCount _,
-    "agg_rollup"        -> aggRollup _,
-    "agg_stats"         -> aggStats _,
-    "win_latest"        -> winLatest _,
-    "win_lag"           -> winLag _,
-    "win_sum"           -> winSum _,
-    "sort_topk"         -> sortTopk _,
-    "limit_n"           -> limitN _,
-    "set_union_by_name" -> setUnionByName _,
-    "set_intersect"     -> setIntersect _,
-    "set_except"        -> setExcept _,
-    "ts_trunc"          -> tsTrunc _,
-    "agg_salted"        -> aggSalted _,
-    "agg_cube"          -> aggCube _,
-    "agg_pivot"         -> aggPivot _,
-    "win_session"       -> winSession _,
-    "agg_grouping_sets" -> aggGroupingSets _,
-    "agg_quantile"      -> aggQuantile _,
-    "win_rank"          -> winRank _,
-    "agg_arg_extrema"   -> aggArgExtrema _,
-    "subquery_scalar"   -> subqueryScalar _,
-    "join_full"         -> joinFull _,
-    "join_cross"        -> joinCross _,
-    "subquery_exists"   -> subqueryExists _,
-    "subquery_correlated" -> subqueryCorrelated _,
-    "join_null_safe"    -> joinNullSafe _,
-    "agg_grouping_id"   -> aggGroupingId _,
-    "topk_per_key"      -> topkPerKey _,
-    "win_range_frame"   -> winRangeFrame _,
-    "agg_conditional"   -> aggConditional _,
-    "agg_string_agg"    -> aggStringAgg _,
-    "sample_det"        -> sampleDet _,
-    "map_funcs"         -> mapFuncs _,
-    "win_nth"           -> winNth _,
-    "pred_like"         -> predLike _,
-    "cdc_diff"          -> cdcDiff _,
-    "cdc_apply"         -> cdcApply _,
-    "win_ntile"         -> winNtile _,
-    "win_lead"          -> winLead _,
-    "win_distinct"      -> winDistinct _,
-    "win_ratio"         -> winRatio _,
-    "win_percentile"    -> winPercentile _,
-    "na_funcs"          -> naFuncs _,
-    "agg_mode"          -> aggMode _,
-    "agg_bitwise"       -> aggBitwise _,
-    "q6_filter"         -> q6Filter _,
-    "q18_having"        -> q18Having _,
-    "join_salted"       -> joinSalted _,
-    "join_fuzzy"        -> joinFuzzy _,
-    "ts_backlog"        -> tsBacklog _,
-    "win_session_native" -> winSessionNative _,
-    "source_dsv2"       -> sourceDsv2 _,
-    "source_kafka_shaped" -> sourceKafkaShaped _,
-    "sql_text"          -> sqlText _,
-    "sql_recursive"     -> sqlRecursive _,
-    "sql_udf"           -> sqlUdf _,
-    "sql_udtf"          -> sqlUdtf _,
-    "sql_pipe"          -> sqlPipe _,
-    "sql_script"        -> sqlScript _,
-    "df_transpose"      -> dfTranspose _,
-    "sql_params"        -> sqlParams _,
-    "xml_scalar"        -> xmlScalar _,
-    "set_intersect_all" -> setIntersectAll _,
-    "set_except_all"    -> setExceptAll _,
-    "agg_ols"           -> aggOls _,
-    "agg_corr"          -> aggCorr _,
-    "ts_resample"       -> tsResample _,
-    "ts_seasonal"       -> tsSeasonal _,
-    "events_forecast"   -> eventsForecast _,
-    "agg_benford"       -> aggBenford _,
-    "orders_cohort"     -> ordersCohort _,
-    "orders_abc"        -> ordersAbc _,
-    "agg_gini"          -> aggGini _,
-    "ts_autocorr"       -> tsAutocorr _,
-    "win_drawdown"      -> winDrawdown _,
-    "analyze_stats"     -> analyzeStats _,
-    "win_rolling_corr"  -> winRollingCorr _,
-    "win_null_order"    -> winNullOrder _,
-    "join_lateral"      -> joinLateral _,
-    "set_union_distinct" -> setUnionDistinct _,
-    "agg_pivot_multi"   -> aggPivotMulti _,
-    "events_rolling_dau" -> eventsRollingDau _,
-    "q14_promo"         -> q14Promo _,
-    "events_bounce"     -> eventsBounce _,
-    "hash_funcs"        -> hashFuncs _,
-    "bit_scalar"        -> bitScalar _,
-    "math_funcs"        -> mathFuncs _,
-  )
 
   private val sumQty  = "CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE)"
   private val discExp = "CAST(l_extendedprice AS DECIMAL(12,2)) * (CAST(1 AS DECIMAL(4,2)) - CAST(l_discount AS DECIMAL(4,2)))"
@@ -2503,8 +2370,8 @@ object Relational {
             ELSE CAST(o_totalprice AS DECIMAL(12,2)) END AS p
         FROM orders WHERE o_orderkey % 5 <> 0)"""
 
-  val oracle: Map[String, String] = Map(
-    "cdc_diff" ->
+  val registry: Map[String, QueryDef] = Map(
+    "cdc_diff" -> QueryDef(cdcDiff _,
       s"""$cdcCtes
         SELECT coalesce(o.k, n.k) AS o_orderkey,
           CASE WHEN o.k IS NULL THEN 'insert'
@@ -2513,13 +2380,13 @@ object Relational {
           CAST(o.p AS DOUBLE) AS old_price,
           CAST(n.p AS DOUBLE) AS new_price
         FROM old o FULL OUTER JOIN new n ON o.k = n.k
-        WHERE o.k IS NULL OR n.k IS NULL OR o.p <> n.p""",
+        WHERE o.k IS NULL OR n.k IS NULL OR o.p <> n.p"""),
     // apply(diff(old, new), old) must equal new — the oracle IS the new
     // snapshot, proving the MERGE round-trip is the identity
-    "cdc_apply" ->
+    "cdc_apply" -> QueryDef(cdcApply _,
       s"""$cdcCtes
-        SELECT k AS o_orderkey, CAST(p AS DOUBLE) AS price FROM new""",
-    "q1_agg" ->
+        SELECT k AS o_orderkey, CAST(p AS DOUBLE) AS price FROM new"""),
+    "q1_agg" -> QueryDef(q1Agg _,
       s"""SELECT l_returnflag, l_linestatus,
           $sumQty AS sum_qty,
           CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE) AS sum_base_price,
@@ -2529,19 +2396,19 @@ object Relational {
           count(*) AS cnt
         FROM lineitem
         WHERE l_shipdate <= TIMESTAMP '2000-12-01 00:00:00'
-        GROUP BY l_returnflag, l_linestatus""",
-    "join_inner" ->
+        GROUP BY l_returnflag, l_linestatus"""),
+    "join_inner" -> QueryDef(joinInner _,
       s"""SELECT o_orderpriority, count(*) AS cnt, CAST(sum($discExp) AS DOUBLE) AS revenue
         FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        GROUP BY o_orderpriority""",
+        GROUP BY o_orderpriority"""),
     // gen-1 rows (orderkey < 7500) predate the column → NULL group
-    "schema_evolution" ->
+    "schema_evolution" -> QueryDef(schemaEvolution _,
       """SELECT CASE WHEN o_orderkey < 7500 THEN NULL
             ELSE o_orderpriority END AS o_orderpriority,
           count(*) AS cnt,
           CAST(sum(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) AS total
-        FROM orders GROUP BY 1""",
-    "q2_min_supplier" ->
+        FROM orders GROUP BY 1"""),
+    "q2_min_supplier" -> QueryDef(q2MinSupplier _,
       s"""WITH offers AS (
             SELECT p_partkey, p_name, s_suppkey,
               CAST(s_acctbal AS DECIMAL(12,2)) AS bal
@@ -2553,16 +2420,16 @@ object Relational {
         SELECT p_partkey, p_name, min(s_suppkey) AS s_suppkey,
           CAST(min(bal) AS DOUBLE) AS s_acctbal
         FROM offers JOIN mb ON p_partkey = mp AND bal = min_bal
-        GROUP BY p_partkey, p_name""",
-    "q4_priority" ->
+        GROUP BY p_partkey, p_name"""),
+    "q4_priority" -> QueryDef(q4Priority _,
       """SELECT o_orderpriority, count(*) AS order_count
         FROM orders
         WHERE o_orderdate >= TIMESTAMP '1997-01-01'
           AND o_orderdate < TIMESTAMP '1997-04-01'
           AND EXISTS (SELECT 1 FROM lineitem
                       WHERE l_orderkey = o_orderkey AND l_shipdate > o_orderdate)
-        GROUP BY 1""",
-    "q7_volume" ->
+        GROUP BY 1"""),
+    "q7_volume" -> QueryDef(q7Volume _,
       s"""SELECT supp_nation, cust_nation, l_year,
           CAST(sum(vol) AS DOUBLE) AS revenue
         FROM (
@@ -2577,8 +2444,8 @@ object Relational {
           WHERE n1.n_name IN ('NATION_1', 'NATION_2')
             AND n2.n_name IN ('NATION_1', 'NATION_2')
             AND n1.n_name <> n2.n_name)
-        GROUP BY 1, 2, 3""",
-    "q8_share" ->
+        GROUP BY 1, 2, 3"""),
+    "q8_share" -> QueryDef(q8Share _,
       s"""SELECT year(o_orderdate) AS o_year,
           COALESCE(CAST(sum(CASE WHEN sn.n_name = 'NATION_3'
             THEN $discExp END) AS DOUBLE), 0.0)
@@ -2591,8 +2458,8 @@ object Relational {
         JOIN region ON cn.n_regionkey = r_regionkey AND r_name = 'AMERICA'
         JOIN supplier ON l_suppkey = s_suppkey
         JOIN nation sn ON s_nationkey = sn.n_nationkey
-        GROUP BY 1""",
-    "q9_profit" ->
+        GROUP BY 1"""),
+    "q9_profit" -> QueryDef(q9Profit _,
       s"""SELECT nation, o_year, CAST(sum(amount) AS DOUBLE) AS sum_profit
         FROM (
           SELECT n_name AS nation, year(o_orderdate) AS o_year,
@@ -2604,16 +2471,16 @@ object Relational {
           JOIN supplier ON l_suppkey = s_suppkey
           JOIN nation ON s_nationkey = n_nationkey
           JOIN orders ON l_orderkey = o_orderkey)
-        GROUP BY 1, 2""",
-    "q13_custdist" ->
+        GROUP BY 1, 2"""),
+    "q13_custdist" -> QueryDef(q13Custdist _,
       """WITH cc AS (
           SELECT c_custkey, count(o_orderkey) AS c_count
           FROM customer
           LEFT JOIN orders ON c_custkey = o_custkey
             AND o_orderpriority <> '1-URGENT'
           GROUP BY c_custkey)
-        SELECT c_count, count(*) AS custdist FROM cc GROUP BY 1""",
-    "q15_top_supplier" ->
+        SELECT c_count, count(*) AS custdist FROM cc GROUP BY 1"""),
+    "q15_top_supplier" -> QueryDef(q15TopSupplier _,
       s"""WITH rev AS (
           SELECT l_suppkey AS s_suppkey, sum($discExp) AS r
           FROM lineitem
@@ -2621,16 +2488,16 @@ object Relational {
             AND l_shipdate < TIMESTAMP '1997-04-01'
           GROUP BY 1)
         SELECT s_suppkey, CAST(r AS DOUBLE) AS total_revenue
-        FROM rev WHERE r = (SELECT max(r) FROM rev)""",
-    "q16_supplier_cnt" ->
+        FROM rev WHERE r = (SELECT max(r) FROM rev)"""),
+    "q16_supplier_cnt" -> QueryDef(q16SupplierCnt _,
       """SELECT p_brand, p_size, count(DISTINCT l_suppkey) AS supplier_cnt
         FROM lineitem
         JOIN part ON l_partkey = p_partkey
         WHERE p_type <> 'PROMO' AND p_size <= 20
           AND l_suppkey NOT IN
             (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
-        GROUP BY 1, 2""",
-    "q17_small_qty" ->
+        GROUP BY 1, 2"""),
+    "q17_small_qty" -> QueryDef(q17SmallQty _,
       """WITH li AS (
             SELECT l_partkey, l_quantity, l_extendedprice
             FROM lineitem
@@ -2643,8 +2510,8 @@ object Relational {
             / 7.0 AS avg_yearly,
           count(*) AS cnt_small
         FROM li JOIN st ON l_partkey = sp
-        WHERE CAST(l_quantity AS DECIMAL(6,2)) * 5 * cnt < sum_qty""",
-    "q19_disjunction" ->
+        WHERE CAST(l_quantity AS DECIMAL(6,2)) * 5 * cnt < sum_qty"""),
+    "q19_disjunction" -> QueryDef(q19Disjunction _,
       s"""SELECT CAST(sum($discExp) AS DOUBLE) AS revenue, count(*) AS cnt
         FROM lineitem JOIN part ON l_partkey = p_partkey
         WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 5
@@ -2652,8 +2519,8 @@ object Relational {
            OR (p_brand = 'Brand#2' AND p_size BETWEEN 1 AND 10
                AND l_quantity BETWEEN 10 AND 20)
            OR (p_brand = 'Brand#3' AND p_size BETWEEN 1 AND 15
-               AND l_quantity BETWEEN 20 AND 30)""",
-    "q21_waiting" ->
+               AND l_quantity BETWEEN 20 AND 30)"""),
+    "q21_waiting" -> QueryDef(q21Waiting _,
       """WITH late AS (
             SELECT DISTINCT l_orderkey AS lo, l_suppkey AS ls
             FROM lineitem JOIN orders ON l_orderkey = o_orderkey
@@ -2665,8 +2532,8 @@ object Relational {
         WHERE EXISTS (SELECT 1 FROM allsup WHERE o2 = lo AND s2 <> ls)
           AND NOT EXISTS (SELECT 1 FROM late l2
                           WHERE l2.lo = late.lo AND l2.ls <> late.ls)
-        GROUP BY 1""",
-    "q11_stock_value" ->
+        GROUP BY 1"""),
+    "q11_stock_value" -> QueryDef(q11StockValue _,
       s"""WITH byp AS (
           SELECT l_partkey, sum($discExp) AS value
           FROM lineitem
@@ -2678,8 +2545,8 @@ object Relational {
         SELECT l_partkey, CAST(value AS DOUBLE) AS value
         FROM byp
         WHERE value * (SELECT count(*) FROM byp)
-          > 2 * (SELECT sum(value) FROM byp)""",
-    "q12_late_priority" ->
+          > 2 * (SELECT sum(value) FROM byp)"""),
+    "q12_late_priority" -> QueryDef(q12LatePriority _,
       """SELECT CASE WHEN datediff('day', o_orderdate, l_shipdate) <= 30
             THEN 'FAST'
           WHEN datediff('day', o_orderdate, l_shipdate) <= 90
@@ -2691,8 +2558,8 @@ object Relational {
         FROM lineitem JOIN orders ON l_orderkey = o_orderkey
         WHERE l_shipdate >= TIMESTAMP '1997-01-01'
           AND l_shipdate < TIMESTAMP '1998-01-01'
-        GROUP BY 1""",
-    "q20_excess_shippers" ->
+        GROUP BY 1"""),
+    "q20_excess_shippers" -> QueryDef(q20ExcessShippers _,
       """WITH pq AS (
           SELECT l_suppkey, l_partkey, count(*) AS n,
             sum(CAST(l_quantity AS DECIMAL(18,2))) AS q_all,
@@ -2706,8 +2573,8 @@ object Relational {
         SELECT s_suppkey, s_name, n_name
         FROM supplier JOIN nation ON s_nationkey = n_nationkey
         WHERE s_suppkey IN
-          (SELECT l_suppkey FROM pq WHERE n >= 3 AND q_97 * 2 > q_all)""",
-    "q22_idle_rich" ->
+          (SELECT l_suppkey FROM pq WHERE n >= 3 AND q_97 * 2 > q_all)"""),
+    "q22_idle_rich" -> QueryDef(q22IdleRich _,
       """WITH pos AS (
           SELECT count(*) AS cnt_pos,
             sum(CAST(c_acctbal AS DECIMAL(12,2))) AS sum_pos
@@ -2719,8 +2586,8 @@ object Relational {
           AND NOT EXISTS (SELECT 1 FROM orders
                           WHERE o_custkey = c_custkey
                             AND o_orderdate >= TIMESTAMP '2000-06-01')
-        GROUP BY 1""",
-    "q3_topk" ->
+        GROUP BY 1"""),
+    "q3_topk" -> QueryDef(q3Topk _,
       s"""SELECT l_orderkey, o_orderdate, CAST(sum($discExp) AS DOUBLE) AS revenue
         FROM customer
         JOIN orders ON c_custkey = o_custkey
@@ -2729,8 +2596,8 @@ object Relational {
           AND o_orderdate < TIMESTAMP '1998-06-01 00:00:00'
           AND l_shipdate > TIMESTAMP '1998-06-01 00:00:00'
         GROUP BY l_orderkey, o_orderdate
-        ORDER BY revenue DESC, l_orderkey LIMIT 10""",
-    "q10_returns" ->
+        ORDER BY revenue DESC, l_orderkey LIMIT 10"""),
+    "q10_returns" -> QueryDef(q10Returns _,
       s"""SELECT c_custkey, c_name, n_name, CAST(sum($discExp) AS DOUBLE) AS revenue
         FROM customer
         JOIN orders ON c_custkey = o_custkey
@@ -2740,8 +2607,8 @@ object Relational {
           AND o_orderdate < TIMESTAMP '1997-10-01 00:00:00'
           AND l_returnflag = 'R'
         GROUP BY c_custkey, c_name, n_name
-        ORDER BY revenue DESC, c_custkey LIMIT 20""",
-    "q5_local" ->
+        ORDER BY revenue DESC, c_custkey LIMIT 20"""),
+    "q5_local" -> QueryDef(q5Local _,
       s"""SELECT n_name, CAST(sum($discExp) AS DOUBLE) AS revenue
         FROM customer
         JOIN orders ON c_custkey = o_custkey
@@ -2752,10 +2619,10 @@ object Relational {
         WHERE r_name = 'ASIA'
           AND o_orderdate >= TIMESTAMP '1997-01-01 00:00:00'
           AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
-        GROUP BY n_name""",
+        GROUP BY n_name"""),
     // identical exact-integer moment sums, identical double finish —
     // see aggStats' scaladoc for why this beats var_pop/corr built-ins
-    "agg_stats" ->
+    "agg_stats" -> QueryDef(aggStats _,
       """WITH s AS (
           SELECT l_returnflag,
             count(*) AS n,
@@ -2775,212 +2642,213 @@ object Relational {
           (CAST(n AS DOUBLE) * CAST(sqp AS DOUBLE) - CAST(sq AS DOUBLE) * CAST(sp AS DOUBLE))
             / (sqrt(CAST(n AS DOUBLE) * CAST(sqq AS DOUBLE) - CAST(sq AS DOUBLE) * CAST(sq AS DOUBLE))
                * sqrt(CAST(n AS DOUBLE) * CAST(spp AS DOUBLE) - CAST(sp AS DOUBLE) * CAST(sp AS DOUBLE))) AS corr_qp
-        FROM s""",
-    "join_broadcast" ->
+        FROM s"""),
+    "join_broadcast" -> QueryDef(joinBroadcast _,
       """SELECT n_name, count(*) AS cnt,
           CAST(sum(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) AS total
         FROM orders
         JOIN customer ON o_custkey = c_custkey
         JOIN nation ON c_nationkey = n_nationkey
         JOIN region ON n_regionkey = r_regionkey
-        GROUP BY n_name""",
-    "join_left" ->
+        GROUP BY n_name"""),
+    "join_left" -> QueryDef(joinLeft _,
       """SELECT c_custkey, count(o_orderkey) AS n_orders,
           coalesce(CAST(sum(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE), 0.0) AS total_spent
         FROM customer LEFT JOIN orders ON c_custkey = o_custkey
-        GROUP BY c_custkey""",
-    "join_semi" ->
+        GROUP BY c_custkey"""),
+    "join_semi" -> QueryDef(joinSemi _,
       """SELECT o_orderstatus, count(*) AS cnt FROM orders
         WHERE o_orderkey IN (SELECT l_orderkey FROM lineitem WHERE l_quantity >= 49)
-        GROUP BY o_orderstatus""",
-    "join_anti" ->
+        GROUP BY o_orderstatus"""),
+    "join_anti" -> QueryDef(joinAnti _,
       """SELECT c_custkey, c_name FROM customer
-        WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)""",
-    "join_full" ->
+        WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)"""),
+    "join_full" -> QueryDef(joinFull _,
       """SELECT coalesce(c.nationkey, p.nationkey) AS nationkey,
           coalesce(c.n_cust, 0) AS n_cust, coalesce(p.n_supp, 0) AS n_supp
         FROM (SELECT CAST(c_nationkey AS INT) AS nationkey, count(*) AS n_cust
               FROM customer WHERE c_nationkey % 3 = 0 GROUP BY 1) c
         FULL JOIN (SELECT CAST(s_nationkey AS INT) AS nationkey, count(*) AS n_supp
               FROM supplier WHERE s_nationkey % 2 = 0 GROUP BY 1) p
-          ON c.nationkey = p.nationkey""",
-    "join_cross" ->
+          ON c.nationkey = p.nationkey"""),
+    "join_cross" -> QueryDef(joinCross _,
       """SELECT n_name, r_name, n_nationkey * 10 + r_regionkey AS pair_key
-        FROM nation CROSS JOIN region""",
-    "subquery_exists" ->
+        FROM nation CROSS JOIN region"""),
+    "subquery_exists" -> QueryDef(subqueryExists _,
       """SELECT c_custkey, c_name FROM customer c
         WHERE EXISTS (SELECT 1 FROM orders o
                       WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 150000)
           AND NOT EXISTS (SELECT 1 FROM orders o
-                          WHERE o.o_custkey = c.c_custkey AND o.o_orderstatus = 'F')""",
-    "subquery_correlated" ->
+                          WHERE o.o_custkey = c.c_custkey AND o.o_orderstatus = 'F')"""),
+    "subquery_correlated" -> QueryDef(subqueryCorrelated _,
       """SELECT o_orderkey, o_custkey, o_totalprice FROM orders o
         WHERE CAST(o_totalprice AS DECIMAL(12,2))
                 * (SELECT count(*) FROM orders o2
                    WHERE o2.o_custkey = o.o_custkey)
               > (SELECT sum(CAST(o2.o_totalprice AS DECIMAL(12,2)))
-                 FROM orders o2 WHERE o2.o_custkey = o.o_custkey)""",
-    "join_null_safe" ->
+                 FROM orders o2 WHERE o2.o_custkey = o.o_custkey)"""),
+    "join_null_safe" -> QueryDef(joinNullSafe _,
       """WITH e AS (SELECT event_id, nullif(user_id % 50, 7) AS k FROM events),
         dim AS (SELECT DISTINCT k AS d_k FROM e WHERE k IS NULL OR k < 10)
         SELECT d_k, count(*) AS cnt FROM e
         JOIN dim ON e.k IS NOT DISTINCT FROM dim.d_k
-        GROUP BY d_k""",
-    "topk_per_key" ->
+        GROUP BY d_k"""),
+    "topk_per_key" -> QueryDef(topkPerKey _,
       """SELECT event_type, event_id, value FROM (
           SELECT event_type, event_id, value,
             row_number() OVER (PARTITION BY event_type
               ORDER BY value DESC, event_id) AS rn
           FROM events)
-        WHERE rn <= 3""",
+        WHERE rn <= 3"""),
     // DuckDB's multi-arg GROUPING bitmask uses the same first-arg-is-MSB
     // convention as Spark's grouping_id()
-    "agg_grouping_id" ->
+    "agg_grouping_id" -> QueryDef(aggGroupingId _,
       """SELECT l_returnflag, l_linestatus, count(*) AS cnt,
           CAST(GROUPING(l_returnflag, l_linestatus) AS BIGINT) AS gid,
           CAST(GROUPING(l_returnflag) AS BIGINT) AS g_flag
-        FROM lineitem GROUP BY CUBE(l_returnflag, l_linestatus)""",
-    "win_range_frame" ->
+        FROM lineitem GROUP BY CUBE(l_returnflag, l_linestatus)"""),
+    "win_range_frame" -> QueryDef(winRangeFrame _,
       """SELECT event_id, user_id,
           count(*) OVER w AS n_30m,
           CAST(sum(CAST(value AS DECIMAL(18,2))) OVER w AS DOUBLE) AS sum_30m
         FROM (SELECT event_id, user_id, value, epoch_ns(ts) // 1000 AS tus FROM events)
         WINDOW w AS (PARTITION BY user_id ORDER BY tus
-          RANGE BETWEEN 1800000000 PRECEDING AND CURRENT ROW)""",
-    "agg_conditional" ->
+          RANGE BETWEEN 1800000000 PRECEDING AND CURRENT ROW)"""),
+    "agg_conditional" -> QueryDef(aggConditional _,
       """SELECT event_type,
           CAST(count(*) FILTER (WHERE value > 300) AS BIGINT) AS n_high,
           bool_or(value > 480)::INT AS any_extreme,
           bool_and(value >= 0)::INT AS all_nonneg,
           coalesce(CAST(sum(CAST(value AS DECIMAL(18,2))) FILTER (WHERE value < 100)
             AS DOUBLE), 0.0) AS low_sum
-        FROM events GROUP BY event_type""",
-    "agg_string_agg" ->
+        FROM events GROUP BY event_type"""),
+    "agg_string_agg" -> QueryDef(aggStringAgg _,
       """SELECT CAST(c_nationkey AS INT) AS nationkey, count(*) AS n_cust,
           string_agg(c_name, ',' ORDER BY c_name) AS names
-        FROM customer GROUP BY 1""",
-    "sample_det" ->
+        FROM customer GROUP BY 1"""),
+    "sample_det" -> QueryDef(sampleDet _,
       """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-        WHERE substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 1) IN ('0', '1')""",
-    "map_funcs" ->
+        WHERE substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 1) IN ('0', '1')"""),
+    "map_funcs" -> QueryDef(mapFuncs _,
       """SELECT user_id,
           CAST(count(DISTINCT event_type) AS INT) AS n_types,
           CASE WHEN count(*) FILTER (WHERE event_type = 'click') > 0
             THEN CAST(count(*) FILTER (WHERE event_type = 'click') AS BIGINT)
             ELSE NULL END AS clicks,
           string_agg(DISTINCT event_type, ',' ORDER BY event_type) AS keys_sorted
-        FROM events GROUP BY user_id""",
-    "win_nth" ->
+        FROM events GROUP BY user_id"""),
+    "win_nth" -> QueryDef(winNth _,
       """SELECT event_id, user_id,
           first_value(value) OVER w AS first_value,
           nth_value(value, 3) OVER w AS third_value
         FROM events
-        WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)""",
-    "pred_like" ->
+        WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)"""),
+    "pred_like" -> QueryDef(predLike _,
       """SELECT event_id, event_type FROM events
         WHERE (event_type LIKE 'c%' OR
                (event_type LIKE '%up' AND event_type NOT LIKE 'sign%p_'))
-          AND regexp_matches(props, '"k":\s*[0-9]{2}')""",
-    "agg_group" ->
+          AND regexp_matches(props, '"k":\s*[0-9]{2}')"""),
+    "agg_group" -> QueryDef(aggGroup _,
       """SELECT event_type, count(*) AS cnt, count(DISTINCT user_id) AS n_users,
           CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value,
           min(value) AS min_value, max(value) AS max_value,
           CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) / count(*) AS avg_value
-        FROM events GROUP BY event_type""",
-    "agg_distinct" ->
+        FROM events GROUP BY event_type"""),
+    "agg_distinct" -> QueryDef(aggDistinct _,
       """SELECT event_type, count(DISTINCT user_id) AS n_users,
           count(DISTINCT CAST(value AS DECIMAL(18,2))) AS n_values
-        FROM events GROUP BY event_type""",
-    "agg_count" -> "SELECT count(*) AS n FROM lineitem",
+        FROM events GROUP BY event_type"""),
+    "agg_count" -> QueryDef(aggCount _,
+      "SELECT count(*) AS n FROM lineitem"),
     // the sketch itself is Spark-side; the oracle pins the exact count
     // and asserts the declared tolerance verdict is uniformly TRUE
-    "agg_hll" ->
+    "agg_hll" -> QueryDef(aggHll _,
       """SELECT event_type, count(DISTINCT user_id) AS exact_users,
           1 AS within_tol
-        FROM events GROUP BY event_type""",
-    "agg_rollup" ->
+        FROM events GROUP BY event_type"""),
+    "agg_rollup" -> QueryDef(aggRollup _,
       """SELECT l_returnflag, l_linestatus, count(*) AS cnt,
           CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-        FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)""",
-    "win_latest" ->
+        FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)"""),
+    "win_latest" -> QueryDef(winLatest _,
       """SELECT user_id, event_id, event_type, value FROM (
           SELECT user_id, event_id, event_type, value,
             row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-          FROM events) WHERE rn = 1""",
-    "win_lag" ->
+          FROM events) WHERE rn = 1"""),
+    "win_lag" -> QueryDef(winLag _,
       """SELECT event_id, user_id, value, prev_value, value - prev_value AS delta FROM (
           SELECT event_id, user_id, value,
             lag(value, 1) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_value
-          FROM events)""",
-    "win_sum" ->
+          FROM events)"""),
+    "win_sum" -> QueryDef(winSum _,
       """SELECT event_id, user_id,
           CAST(sum(CAST(value AS DECIMAL(18,2))) OVER (
             PARTITION BY user_id ORDER BY ts, event_id
             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS running_value
-        FROM events""",
-    "sort_topk" ->
+        FROM events"""),
+    "sort_topk" -> QueryDef(sortTopk _,
       """SELECT o_orderkey, o_totalprice FROM orders
-        ORDER BY o_totalprice DESC, o_orderkey LIMIT 100""",
-    "limit_n" ->
+        ORDER BY o_totalprice DESC, o_orderkey LIMIT 100"""),
+    "limit_n" -> QueryDef(limitN _,
       """SELECT o_orderkey, o_custkey, o_orderstatus FROM orders
-        ORDER BY o_orderkey LIMIT 50""",
-    "set_union_by_name" ->
+        ORDER BY o_orderkey LIMIT 50"""),
+    "set_union_by_name" -> QueryDef(setUnionByName _,
       """SELECT nationkey, src FROM (
           SELECT DISTINCT CAST(c_nationkey AS INT) AS nationkey, 'customer' AS src FROM customer
           UNION ALL
-          SELECT DISTINCT CAST(s_nationkey AS INT) AS nationkey, 'supplier' AS src FROM supplier)""",
-    "set_intersect" ->
+          SELECT DISTINCT CAST(s_nationkey AS INT) AS nationkey, 'supplier' AS src FROM supplier)"""),
+    "set_intersect" -> QueryDef(setIntersect _,
       """SELECT CAST(c_nationkey AS INT) AS nationkey FROM customer
-        INTERSECT SELECT CAST(s_nationkey AS INT) AS nationkey FROM supplier""",
-    "set_except" ->
+        INTERSECT SELECT CAST(s_nationkey AS INT) AS nationkey FROM supplier"""),
+    "set_except" -> QueryDef(setExcept _,
       """SELECT CAST(c_nationkey AS INT) AS nationkey FROM customer
-        EXCEPT SELECT CAST(s_nationkey AS INT) AS nationkey FROM supplier""",
-    "ts_trunc" ->
+        EXCEPT SELECT CAST(s_nationkey AS INT) AS nationkey FROM supplier"""),
+    "ts_trunc" -> QueryDef(tsTrunc _,
       """SELECT CAST(date_trunc('month', o_orderdate) AS DATE) AS order_month, count(*) AS cnt,
           CAST(sum(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) AS total
-        FROM orders GROUP BY date_trunc('month', o_orderdate)""",
+        FROM orders GROUP BY date_trunc('month', o_orderdate)"""),
     // integer sum() must be cast: DuckDB yields HUGEINT (int128) which
     // the driver's hasher represents differently from Spark's BIGINT
-    "agg_pivot" ->
+    "agg_pivot" -> QueryDef(aggPivot _,
       """SELECT user_id % 7 AS cohort,
           CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS click,
           CAST(sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS BIGINT) AS view,
           CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS purchase,
           CAST(sum(CASE WHEN event_type = 'signup' THEN 1 ELSE 0 END) AS BIGINT) AS signup,
           CAST(sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS error
-        FROM events GROUP BY user_id % 7""",
-    "agg_cube" ->
+        FROM events GROUP BY user_id % 7"""),
+    "agg_cube" -> QueryDef(aggCube _,
       """SELECT l_returnflag, l_linestatus, count(*) AS cnt,
           CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-        FROM lineitem GROUP BY CUBE(l_returnflag, l_linestatus)""",
-    "agg_grouping_sets" ->
+        FROM lineitem GROUP BY CUBE(l_returnflag, l_linestatus)"""),
+    "agg_grouping_sets" -> QueryDef(aggGroupingSets _,
       """SELECT l_returnflag, l_linestatus, count(*) AS cnt,
           CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
         FROM lineitem
-        GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())""",
+        GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())"""),
     // sketch-quantile rank-error gate: the oracle pins the exact count
     // and asserts the declared verdicts are uniformly TRUE
-    "agg_hll_union" ->
+    "agg_hll_union" -> QueryDef(aggHllUnion _,
       """SELECT count(DISTINCT user_id) AS exact_users, 1 AS within_tol
-        FROM events""",
+        FROM events"""),
     // bitmaps are exact, so the oracle is plain count(DISTINCT) at
     // both rollup levels
-    "agg_bitmap_distinct" ->
+    "agg_bitmap_distinct" -> QueryDef(aggBitmapDistinct _,
       """SELECT event_type, count(DISTINCT user_id) AS distinct_users
         FROM events GROUP BY 1
         UNION ALL
         SELECT 'ALL' AS event_type, count(DISTINCT user_id) AS distinct_users
-        FROM events""",
-    "agg_predicates" ->
+        FROM events"""),
+    "agg_predicates" -> QueryDef(aggPredicates _,
       """SELECT event_type,
           bool_and(value >= 0)::INT AS all_nonneg,
           bool_or(value > 99)::INT AS any_large,
           count_if(value > 50)::BIGINT AS n_over_50,
           count_if(user_id % 2 = 0)::BIGINT AS n_even_user
-        FROM events GROUP BY 1""",
+        FROM events GROUP BY 1"""),
     // theta set algebra: exact counts recomputed from the same
     // flag-aggregation; all three sketch error verdicts asserted TRUE
-    "sketch_theta" ->
+    "sketch_theta" -> QueryDef(sketchTheta _,
       """WITH f AS (
           SELECT user_id,
             bool_or(event_type = 'click') AS clicked,
@@ -2991,12 +2859,12 @@ object Relational {
           count(CASE WHEN clicked AND purchased THEN 1 END) AS exact_inter,
           count(CASE WHEN clicked AND NOT purchased THEN 1 END) AS exact_diff,
           1 AS union_tol, 1 AS inter_tol, 1 AS diff_tol
-        FROM f""",
-    "agg_approx_quantile" ->
+        FROM f"""),
+    "agg_approx_quantile" -> QueryDef(aggApproxQuantile _,
       """SELECT event_type, count(*) AS n,
           1 AS ok25, 1 AS ok50, 1 AS ok90
-        FROM events GROUP BY event_type""",
-    "agg_moments" ->
+        FROM events GROUP BY event_type"""),
+    "agg_moments" -> QueryDef(aggMoments _,
       """WITH c AS (
           SELECT l_returnflag,
             CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS cents
@@ -3022,8 +2890,8 @@ object Relational {
             / ((CAST(sd2 AS DOUBLE) / CAST(n AS DOUBLE))
               * (CAST(sd2 AS DOUBLE) / CAST(n AS DOUBLE))) - 3.0
             AS ex_kurtosis
-        FROM a""",
-    "events_anomaly_iqr" ->
+        FROM a"""),
+    "events_anomaly_iqr" -> QueryDef(eventsAnomalyIqr _,
       """WITH e AS (
           SELECT event_type, value FROM events
           WHERE value IS NOT NULL AND NOT isnan(value)),
@@ -3040,8 +2908,8 @@ object Relational {
           CAST(sum(CASE WHEN e.value < g.lo OR e.value > g.hi
             THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers
         FROM e JOIN g USING (event_type)
-        GROUP BY e.event_type""",
-    "ts_mom" ->
+        GROUP BY e.event_type"""),
+    "ts_mom" -> QueryDef(tsMom _,
       """WITH m AS (
           SELECT CAST(date_trunc('month', o_orderdate) AS DATE) AS order_month,
             CAST(sum(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) AS total
@@ -3051,8 +2919,8 @@ object Relational {
           CASE WHEN lag(total) OVER (ORDER BY order_month) IS NOT NULL
             THEN (total - lag(total) OVER (ORDER BY order_month))
               / lag(total) OVER (ORDER BY order_month) END AS mom_ratio
-        FROM m""",
-    "orders_rfm" ->
+        FROM m"""),
+    "orders_rfm" -> QueryDef(ordersRfm _,
       """WITH mx AS (SELECT max(CAST(o_orderdate AS DATE)) AS maxd FROM orders),
         per AS (
           SELECT o_custkey, max(CAST(o_orderdate AS DATE)) AS last_d,
@@ -3063,22 +2931,22 @@ object Relational {
           CASE WHEN date_diff('day', last_d, maxd) <= 90 THEN 'active'
                WHEN date_diff('day', last_d, maxd) <= 365 THEN 'warm'
                ELSE 'cold' END AS segment
-        FROM per, mx""",
-    "skew_stats" ->
+        FROM per, mx"""),
+    "skew_stats" -> QueryDef(skewStats _,
       """WITH g AS (SELECT user_id, count(*) AS sz FROM events GROUP BY user_id)
         SELECT count(*) AS n_keys, CAST(max(sz) AS BIGINT) AS max_sz,
           quantile_cont(sz, 0.99) AS p99_sz,
           CAST(sum(sz) AS DOUBLE) / count(*) AS mean_sz,
           CAST(max(sz) AS DOUBLE) / (CAST(sum(sz) AS DOUBLE) / count(*))
             AS skew_ratio
-        FROM g""",
-    "agg_quantile" ->
+        FROM g"""),
+    "agg_quantile" -> QueryDef(aggQuantile _,
       """SELECT event_type,
           quantile_cont(value, 0.25) AS p25,
           quantile_cont(value, 0.5) AS p50,
           quantile_cont(value, 0.9) AS p90
-        FROM events GROUP BY event_type""",
-    "win_rank" ->
+        FROM events GROUP BY event_type"""),
+    "win_rank" -> QueryDef(winRank _,
       """SELECT event_id, event_type,
           rank() OVER w AS rnk,
           dense_rank() OVER w AS drnk,
@@ -3087,21 +2955,21 @@ object Relational {
           cume_dist() OVER w AS cdist
         FROM events
         WINDOW w AS (PARTITION BY event_type
-          ORDER BY epoch_ns(ts) // 1000, event_id)""",
-    "agg_arg_extrema" ->
+          ORDER BY epoch_ns(ts) // 1000, event_id)"""),
+    "agg_arg_extrema" -> QueryDef(aggArgExtrema _,
       """SELECT event_type,
           arg_max(event_id, CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)
             * 100000000000 + event_id) AS max_value_event,
           arg_min(event_id, CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)
             * 100000000000 + event_id) AS min_value_event,
           max(value) AS max_value, min(value) AS min_value
-        FROM events GROUP BY event_type""",
-    "subquery_scalar" ->
+        FROM events GROUP BY event_type"""),
+    "subquery_scalar" -> QueryDef(subqueryScalar _,
       """SELECT o_orderkey, o_totalprice FROM orders
         WHERE CAST(o_totalprice AS DECIMAL(12,2))
                 * (SELECT count(*) FROM orders) * 10
-              > 18 * (SELECT sum(CAST(o_totalprice AS DECIMAL(12,2))) FROM orders)""",
-    "win_session" ->
+              > 18 * (SELECT sum(CAST(o_totalprice AS DECIMAL(12,2))) FROM orders)"""),
+    "win_session" -> QueryDef(winSession _,
       """WITH x AS (
           SELECT user_id, event_id, value, epoch_ns(ts) AS tns FROM events),
         l AS (
@@ -3123,28 +2991,28 @@ object Relational {
         SELECT user_id, session_id, count(*) AS n_events,
           max(tns) - min(tns) AS duration_ns,
           CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS session_value
-        FROM sess GROUP BY user_id, session_id""",
+        FROM sess GROUP BY user_id, session_id"""),
     // the salted two-phase plan must produce exactly the direct groupBy
-    "agg_salted" ->
+    "agg_salted" -> QueryDef(aggSalted _,
       """SELECT event_type, count(*) AS cnt,
           CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value,
           min(value) AS min_value, max(value) AS max_value
-        FROM events GROUP BY event_type""",
-    "win_ntile" ->
+        FROM events GROUP BY event_type"""),
+    "win_ntile" -> QueryDef(winNtile _,
       """SELECT event_id, user_id,
           ntile(4) OVER w AS quartile,
           percent_rank() OVER w AS pr,
           cume_dist() OVER w AS cd
         FROM (SELECT event_id, user_id, epoch_ns(ts) AS tns FROM events)
-        WINDOW w AS (PARTITION BY user_id ORDER BY tns, event_id)""",
-    "win_lead" ->
+        WINDOW w AS (PARTITION BY user_id ORDER BY tns, event_id)"""),
+    "win_lead" -> QueryDef(winLead _,
       """SELECT event_id, user_id, value,
           lead(value, 1, -1.0) OVER w AS next_value,
           lead(event_type, 2) OVER w AS type_after_next
         FROM (SELECT event_id, user_id, value, event_type, epoch_ns(ts) AS tns
               FROM events)
-        WINDOW w AS (PARTITION BY user_id ORDER BY tns, event_id)""",
-    "win_distinct" ->
+        WINDOW w AS (PARTITION BY user_id ORDER BY tns, event_id)"""),
+    "win_distinct" -> QueryDef(winDistinct _,
       """WITH x AS (
           SELECT event_id, user_id, event_type, epoch_ns(ts) AS tns FROM events),
         m AS (
@@ -3157,27 +3025,27 @@ object Relational {
           CAST(sum(is_first) OVER (PARTITION BY user_id ORDER BY tns, event_id
             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
             AS distinct_types_so_far
-        FROM m""",
-    "win_ratio" ->
+        FROM m"""),
+    "win_ratio" -> QueryDef(winRatio _,
       """SELECT event_id, user_id, value,
           value / CAST(sum(CAST(value AS DECIMAL(18,2)))
             OVER (PARTITION BY user_id) AS DOUBLE) AS share
-        FROM events""",
-    "win_percentile" ->
+        FROM events"""),
+    "win_percentile" -> QueryDef(winPercentile _,
       """SELECT event_id, user_id, value,
           percent_rank() OVER (PARTITION BY user_id
             ORDER BY value, event_id) AS pct_rank,
           cume_dist() OVER (PARTITION BY user_id
             ORDER BY value, event_id) AS cum_dist
-        FROM events WHERE value IS NOT NULL AND NOT isnan(value)""",
-    "na_funcs" ->
+        FROM events WHERE value IS NOT NULL AND NOT isnan(value)"""),
+    "na_funcs" -> QueryDef(naFuncs _,
       """SELECT event_id, user_id,
           CASE WHEN value IS NULL OR isnan(value) THEN -1.0
                ELSE value END AS value,
           CASE WHEN event_type = 'click' THEN 'CLICK'
                ELSE event_type END AS event_type
-        FROM events WHERE user_id IS NOT NULL""",
-    "agg_mode" ->
+        FROM events WHERE user_id IS NOT NULL"""),
+    "agg_mode" -> QueryDef(aggMode _,
       """WITH c AS (
           SELECT user_id, event_type, count(*) AS cnt
           FROM events GROUP BY 1, 2),
@@ -3186,15 +3054,15 @@ object Relational {
             row_number() OVER (PARTITION BY user_id
               ORDER BY cnt DESC, event_type) AS rn
           FROM c)
-        SELECT user_id, event_type AS modal_type, cnt FROM r WHERE rn = 1""",
-    "agg_bitwise" ->
+        SELECT user_id, event_type AS modal_type, cnt FROM r WHERE rn = 1"""),
+    "agg_bitwise" -> QueryDef(aggBitwise _,
       """SELECT o_orderpriority,
           bit_and(o_orderkey) AS key_and,
           bit_or(o_orderkey) AS key_or,
           bit_xor(o_orderkey) AS key_xor,
           count(*) AS cnt
-        FROM orders GROUP BY o_orderpriority""",
-    "q6_filter" ->
+        FROM orders GROUP BY o_orderpriority"""),
+    "q6_filter" -> QueryDef(q6Filter _,
       """SELECT CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2))
             * CAST(l_discount AS DECIMAL(4,2))) AS DOUBLE) AS revenue,
           count(*) AS cnt
@@ -3202,8 +3070,8 @@ object Relational {
         WHERE l_shipdate >= TIMESTAMP '1997-01-01'
           AND l_shipdate < TIMESTAMP '1998-01-01'
           AND l_discount BETWEEN 0.02 AND 0.04
-          AND l_quantity < 24""",
-    "q18_having" ->
+          AND l_quantity < 24"""),
+    "q18_having" -> QueryDef(q18Having _,
       """WITH big AS (
           SELECT l_orderkey, sum(CAST(l_quantity AS DECIMAL(18,2))) AS sum_qty
           FROM lineitem GROUP BY 1
@@ -3212,9 +3080,9 @@ object Relational {
           CAST(sum_qty AS DOUBLE) AS sum_qty
         FROM big
         JOIN orders ON l_orderkey = o_orderkey
-        JOIN customer ON o_custkey = c_custkey""",
+        JOIN customer ON o_custkey = c_custkey"""),
     // the salted join must produce exactly the plain equi-join
-    "ts_backlog" ->
+    "ts_backlog" -> QueryDef(tsBacklog _,
       """WITH closes AS (
           SELECT l_orderkey, max(l_shipdate) AS close_ts
           FROM lineitem GROUP BY 1),
@@ -3231,8 +3099,8 @@ object Relational {
         SELECT d, CAST(sum(delta) OVER (ORDER BY d
           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
           AS n_open
-        FROM deltas""",
-    "join_fuzzy" ->
+        FROM deltas"""),
+    "join_fuzzy" -> QueryDef(joinFuzzy _,
       """WITH probes AS (
           SELECT s_suppkey AS probe_id,
             substr(s_name, 1, s_suppkey % length(s_name))
@@ -3247,16 +3115,16 @@ object Relational {
         SELECT DISTINCT probe_id, s_suppkey,
           CAST(levenshtein(probe, s_name) AS INT) AS dist
         FROM probes JOIN variants ON probe = variant
-        WHERE levenshtein(probe, s_name) <= 1""",
-    "join_salted" ->
+        WHERE levenshtein(probe, s_name) <= 1"""),
+    "join_salted" -> QueryDef(joinSalted _,
       """SELECT c_mktsegment, count(*) AS cnt,
           CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
         FROM events JOIN customer ON user_id = c_custkey
-        GROUP BY c_mktsegment""",
+        GROUP BY c_mktsegment"""),
     // native session_window: a new session starts when the gap is
     // >= 30 min (the window [ts, ts+gap) of the next event no longer
     // overlaps) — one boundary tighter than win_session's `> gap`
-    "win_session_native" ->
+    "win_session_native" -> QueryDef(winSessionNative _,
       """WITH x AS (
           SELECT user_id, event_id, value, epoch_ns(ts) AS tns FROM events),
         l AS (
@@ -3276,10 +3144,10 @@ object Relational {
         SELECT user_id, CAST(min(tns) // 1000 AS BIGINT) AS start_us,
           count(*) AS n_events,
           CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS session_value
-        FROM sess GROUP BY user_id, sid""",
+        FROM sess GROUP BY user_id, sid"""),
     // re-computes the connector's multiplicative-hash stream: mval is
     // exact BIGINT arithmetic, uval an exact power-of-two division
-    "source_dsv2" ->
+    "source_dsv2" -> QueryDef(sourceDsv2 _,
       """WITH g AS (SELECT range AS id FROM range(0, 100000)),
         x AS (
           SELECT id, CAST(id % 97 AS INT) AS bucket,
@@ -3290,42 +3158,42 @@ object Relational {
           min(uval) AS min_uval, max(uval) AS max_uval
         FROM x
         WHERE id >= 12345 AND id < 98765 AND bucket % 3 = 1
-        GROUP BY bucket""",
+        GROUP BY bucket"""),
     // re-derives the Kafka-twin's round-robin geometry and 1 msg/s
     // event-time from the global message index
-    "source_kafka_shaped" ->
+    "source_kafka_shaped" -> QueryDef(sourceKafkaShaped _,
       """WITH g AS (SELECT range AS i FROM range(0, 1200))
         SELECT CAST(i % 3 AS INT) AS partition, count(*) AS n,
           min(i // 3) AS lo, max(i // 3) AS hi,
           CAST(sum((1700000000 + i) * 1000000) AS BIGINT) AS sum_tus
-        FROM g GROUP BY 1""",
+        FROM g GROUP BY 1"""),
     // catalog-resolved tables are the same parquet scans — the oracle
     // is the identical query with bare table names
-    "catalog_sql" ->
+    "catalog_sql" -> QueryDef(catalogSql _,
       """SELECT c.c_mktsegment, count(*) AS n_orders,
           CAST(sum(CAST(o.o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
         FROM orders o
         JOIN customer c ON o.o_custkey = c.c_custkey
         WHERE o.o_orderstatus = 'F'
-        GROUP BY c.c_mktsegment""",
+        GROUP BY c.c_mktsegment"""),
     // the catalog function's fold = list_dot_product's fold
-    "catalog_function" ->
+    "catalog_function" -> QueryDef(catalogFunction _,
       """SELECT vec_id,
           list_dot_product(list_transform(embedding, x -> CAST(x AS DOUBLE)),
             list_transform(embedding, x -> CAST(x AS DOUBLE))) AS sq
-        FROM embeddings""",
+        FROM embeddings"""),
     // the SAME string spark.sql executes — SQL front-end parity
-    "sql_text" -> sqlTextShared,
-    "sql_recursive" -> recursiveShared,
+    "sql_text" -> QueryDef(sqlText _, sqlTextShared),
+    "sql_recursive" -> QueryDef(sqlRecursive _, recursiveShared),
     // the SQL-UDF bodies inlined — the function layer is pure sugar
-    "sql_udf" ->
+    "sql_udf" -> QueryDef(sqlUdf _,
       """SELECT event_type,
           CASE WHEN value < 50 THEN 'low'
             WHEN value < 200 THEN 'mid' ELSE 'high' END AS band,
           count(*) AS n,
           CAST(sum(CAST(floor(abs(value) * 100) AS BIGINT)) AS BIGINT)
             AS sum_cents
-        FROM events GROUP BY 1, 2""",
+        FROM events GROUP BY 1, 2"""),
     // the transposed table spelled as conditional aggregates, one row
     // per former metric column.
     // TESTDATA COUPLING (advisor note, r7): this list hardcodes the
@@ -3335,7 +3203,7 @@ object Relational {
     // different type domain, this oracle fails with a SCHEMA mismatch
     // (wrong column names) — update the list here and the bounds in
     // expect_cardinality (c_type between 3 and 10) together.
-    "df_transpose" -> {
+    "df_transpose" -> QueryDef(dfTranspose _, {
       val types = Seq("click", "error", "purchase", "signup", "view")
       def row(metric: String) =
         s"SELECT '$metric' AS key, " + types.map(t =>
@@ -3349,13 +3217,13 @@ object Relational {
         ${row("n")}
         UNION ALL
         ${row("cents")}"""
-    },
+    }),
     // the WHILE loop's fixpoint spelled declaratively: the smallest
     // rung in {2, 4, …, 2^40} keeping at most half the events (the
     // coalesce is the loop's 2^40 cap for all-huge corpora); the
     // LEFT JOIN tolerates empty `cents` (empty table → rung 2, k=0 —
     // identical to the loop's no-iteration exit)
-    "sql_script" ->
+    "sql_script" -> QueryDef(sqlScript _,
       """WITH ns AS (SELECT count(*) AS n FROM events),
         cents AS (
           SELECT CAST(floor(value * 100) AS BIGINT) AS c FROM events),
@@ -3371,10 +3239,10 @@ object Relational {
           FROM kept, ns WHERE k * 2 <= n)
         SELECT w.thr AS threshold_cents,
           CAST(coalesce(k.k, 0) AS BIGINT) AS n_kept, ns.n AS n_total
-        FROM win w JOIN kept k ON k.thr = w.thr, ns""",
+        FROM win w JOIN kept k ON k.thr = w.thr, ns"""),
     // the classical spelling of the pipe query (same rows — the pipe
     // front end is pure syntax); mean chain mirrors the lateral alias
-    "sql_pipe" ->
+    "sql_pipe" -> QueryDef(sqlPipe _,
       """WITH agg AS (
           SELECT event_type, count(*) AS n,
             CAST(sum(CAST(floor(value * 100) AS BIGINT)) AS BIGINT) AS cents
@@ -3383,31 +3251,31 @@ object Relational {
         SELECT event_type, n, cents,
           CAST(cents AS DOUBLE) / n AS mean_cents,
           CAST(cents AS DOUBLE) / n / 100.0 AS mean_dollars
-        FROM agg""",
+        FROM agg"""),
     // generate_series is DuckDB's native spine; LEFT JOIN keeps empty
     // hours exactly like the table-function spelling
-    "sql_udtf" ->
+    "sql_udtf" -> QueryDef(sqlUdtf _,
       """SELECT g.h, count(e.hod) AS n_events
         FROM (SELECT unnest(generate_series(0, 23)) AS h) g
         LEFT JOIN (SELECT hour(ts) AS hod FROM events) e ON e.hod = g.h
-        GROUP BY g.h""",
+        GROUP BY g.h"""),
     // the oracle inlines the bound parameters as literals
-    "sql_params" ->
+    "sql_params" -> QueryDef(sqlParams _,
       """SELECT o_orderpriority, count(*) AS cnt,
           CAST(sum(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) AS total
         FROM orders
         WHERE o_orderdate >= TIMESTAMP '1997-01-01'
           AND o_orderdate < TIMESTAMP '1998-01-01'
           AND o_orderstatus = 'F'
-        GROUP BY o_orderpriority""",
+        GROUP BY o_orderpriority"""),
     // lossless codec ⇒ the oracle aggregates the source columns
-    "xml_scalar" ->
+    "xml_scalar" -> QueryDef(xmlScalar _,
       """SELECT o_orderstatus, count(*) AS cnt,
           CAST(sum(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) AS total,
           1 AS key_intact
-        FROM orders GROUP BY 1""",
-    "join_lateral" -> lateralShared,
-    "agg_pivot_multi" ->
+        FROM orders GROUP BY 1"""),
+    "join_lateral" -> QueryDef(joinLateral _, lateralShared),
+    "agg_pivot_multi" -> QueryDef(aggPivotMulti _,
       """SELECT user_id,
           CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT)
             AS click_cnt,
@@ -3417,8 +3285,8 @@ object Relational {
             AS purchase_cnt,
           CAST(sum(CASE WHEN event_type = 'purchase'
             THEN CAST(value AS DECIMAL(18,2)) END) AS DOUBLE) AS purchase_val
-        FROM events GROUP BY user_id""",
-    "events_bounce" ->
+        FROM events GROUP BY user_id"""),
+    "events_bounce" -> QueryDef(eventsBounce _,
       """WITH x AS (
           SELECT user_id, event_id, epoch_ns(ts) AS tns FROM events),
         l AS (
@@ -3443,8 +3311,8 @@ object Relational {
             AS n_bounce,
           CAST(sum(CASE WHEN n_events = 1 THEN 1 ELSE 0 END) AS DOUBLE)
             / CAST(count(*) AS DOUBLE) AS bounce_rate
-        FROM agg GROUP BY user_id""",
-    "q14_promo" ->
+        FROM agg GROUP BY user_id"""),
+    "q14_promo" -> QueryDef(q14Promo _,
       """WITH j AS (
           SELECT p_type,
             CAST(l_extendedprice AS DECIMAL(12,2))
@@ -3459,8 +3327,8 @@ object Relational {
           CAST(sum(rev) AS DOUBLE) AS total_rev,
           100.0 * CAST(sum(CASE WHEN p_type = 'PROMO' THEN rev END) AS DOUBLE)
             / CAST(sum(rev) AS DOUBLE) AS promo_share_pct
-        FROM j""",
-    "events_rolling_dau" ->
+        FROM j"""),
+    "events_rolling_dau" -> QueryDef(eventsRollingDau _,
       """WITH daily AS (
           SELECT DISTINCT CAST(ts AS DATE) AS uday, user_id FROM events),
         days AS (SELECT DISTINCT uday AS day FROM daily),
@@ -3471,20 +3339,20 @@ object Relational {
           FROM daily)
         SELECT c.day, count(DISTINCT user_id) AS dau7
         FROM contrib c JOIN days d ON c.day = d.day
-        GROUP BY c.day""",
-    "hash_funcs" ->
+        GROUP BY c.day"""),
+    "hash_funcs" -> QueryDef(hashFuncs _,
       """SELECT doc_id, md5(text) AS h_md5, sha256(text) AS h_sha256,
           md5(source || '|' || lang) AS h_composite
-        FROM documents""",
-    "bit_scalar" ->
+        FROM documents"""),
+    "bit_scalar" -> QueryDef(bitScalar _,
       """SELECT event_id,
           event_id << 2 AS shl2,
           event_id >> 1 AS shr1,
           event_id & 255 AS band,
           event_id | 4096 AS bor,
           xor(event_id, user_id) AS bxor
-        FROM events""",
-    "math_funcs" ->
+        FROM events"""),
+    "math_funcs" -> QueryDef(mathFuncs _,
       """SELECT event_id,
           abs(value - 10.0) AS abs_shift,
           CAST(sign(value - 10.0) AS DOUBLE) AS sgn,
@@ -3494,12 +3362,12 @@ object Relational {
           sqrt(CAST(event_id AS DOUBLE)) AS rt,
           greatest(value, CAST(user_id AS DOUBLE)) AS gr,
           least(value, CAST(user_id AS DOUBLE)) AS ls
-        FROM events""",
-    "set_union_distinct" ->
+        FROM events"""),
+    "set_union_distinct" -> QueryDef(setUnionDistinct _,
       """SELECT CAST(c_nationkey AS INT) AS nationkey FROM customer
         UNION
-        SELECT CAST(s_nationkey AS INT) AS nationkey FROM supplier""",
-    "win_null_order" ->
+        SELECT CAST(s_nationkey AS INT) AS nationkey FROM supplier"""),
+    "win_null_order" -> QueryDef(winNullOrder _,
       """SELECT event_id, user_id,
           row_number() OVER (PARTITION BY user_id
             ORDER BY nullif(event_type, 'click') ASC NULLS LAST, event_id)
@@ -3507,16 +3375,16 @@ object Relational {
           row_number() OVER (PARTITION BY user_id
             ORDER BY nullif(event_type, 'click') DESC NULLS FIRST, event_id)
             AS rn_nulls_first
-        FROM events""",
-    "set_intersect_all" ->
+        FROM events"""),
+    "set_intersect_all" -> QueryDef(setIntersectAll _,
       """SELECT o_custkey AS custkey FROM orders
         INTERSECT ALL
-        SELECT c_custkey AS custkey FROM customer WHERE c_acctbal > 0""",
-    "set_except_all" ->
+        SELECT c_custkey AS custkey FROM customer WHERE c_acctbal > 0"""),
+    "set_except_all" -> QueryDef(setExceptAll _,
       """SELECT o_custkey AS custkey FROM orders
         EXCEPT ALL
-        SELECT c_custkey AS custkey FROM customer WHERE c_acctbal > 0""",
-    "agg_ols" ->
+        SELECT c_custkey AS custkey FROM customer WHERE c_acctbal > 0"""),
+    "agg_ols" -> QueryDef(aggOls _,
       """WITH m AS (
           SELECT l_returnflag, count(*) AS n,
             sum(CAST(l_quantity AS DECIMAL(18,2))) AS sx,
@@ -3534,8 +3402,8 @@ object Relational {
             - ((n * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE)) /
                (n * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)))
               * CAST(sx AS DOUBLE)) / n AS intercept
-        FROM m""",
-    "agg_corr" ->
+        FROM m"""),
+    "agg_corr" -> QueryDef(aggCorr _,
       """WITH m AS (
           SELECT l_returnflag, count(*) AS n,
             sum(CAST(l_quantity AS DECIMAL(18,2))) AS sx,
@@ -3552,8 +3420,8 @@ object Relational {
           (sqrt(n * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
            * sqrt(n * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)))
             AS pearson_r
-        FROM m""",
-    "ts_resample" ->
+        FROM m"""),
+    "ts_resample" -> QueryDef(tsResample _,
       """WITH x AS (
           SELECT user_id, event_id, value, epoch_ns(ts) // 1000 AS tus
           FROM events WHERE value IS NOT NULL AND NOT isnan(value)),
@@ -3569,10 +3437,10 @@ object Relational {
           max(value) AS high, min(value) AS low,
           max(CASE WHEN rnd = 1 THEN value END) AS close,
           count(*) AS n_events
-        FROM b GROUP BY 1, 2""",
+        FROM b GROUP BY 1, 2"""),
     // same bounded hourly rollup + two window passes; the windowed
     // HUGEINT sums stay intermediate (exact), projections cast back
-    "ts_seasonal" ->
+    "ts_seasonal" -> QueryDef(tsSeasonal _,
       """WITH hourly AS (
           SELECT epoch_ns(ts) // 3600000000000 AS bucket,
             CAST(sum(CAST(floor(abs(value) * 100) AS BIGINT)) AS BIGINT)
@@ -3593,9 +3461,9 @@ object Relational {
           CAST(t_sum AS DOUBLE) / CAST(t_n AS DOUBLE) AS trend,
           CAST(cents * n_hod - s_hod AS DOUBLE)
             / CAST(n_hod AS DOUBLE) AS resid
-        FROM w""",
+        FROM w"""),
     // same gap-proof bucket-arithmetic lags over the hourly rollup
-    "events_forecast" ->
+    "events_forecast" -> QueryDef(eventsForecast _,
       """WITH h AS (
           SELECT epoch_ns(ts) // 3600000000000 AS bucket,
             CAST(sum(CAST(floor(abs(value) * 100) AS BIGINT)) AS BIGINT)
@@ -3614,10 +3482,10 @@ object Relational {
         SELECT n, mae24_num, mae1_num,
           CAST(mae24_num AS DOUBLE) / CAST(n AS DOUBLE) AS mae24,
           CAST(mae24_num AS DOUBLE) / CAST(mae1_num AS DOUBLE) AS mase
-        FROM agg""",
+        FROM agg"""),
     // string-based first digit of the integer dollar floor; shared ppm
     // literals (no query-time log10); // == div on nonnegative operands
-    "agg_benford" -> {
+    "agg_benford" -> QueryDef(aggBenford _, {
       val expCase = Seq(301030L, 176091L, 124939L, 96910L, 79181L,
         66947L, 57992L, 51153L, 45757L).zipWithIndex
         .map { case (p, i) => s"WHEN digit = ${i + 1} THEN $p" }
@@ -3634,10 +3502,10 @@ object Relational {
           abs(CAST((n * 1000000) // total AS BIGINT)
             - CAST($expCase AS BIGINT)) AS dev_ppm
         FROM w"""
-    },
+    }),
     // same exact trailing moment sums + per-row double tree + NULL
     // guards on the exact-integer variance numerators
-    "win_rolling_corr" ->
+    "win_rolling_corr" -> QueryDef(winRollingCorr _,
       """WITH h AS (
           SELECT epoch_ns(ts) // 3600000000000 AS bucket,
             CAST(sum(CASE WHEN event_type = 'click'
@@ -3664,9 +3532,9 @@ object Relational {
               / (sqrt(CAST(n * sxx - sx * sx AS DOUBLE))
                 * sqrt(CAST(n * syy - sy * sy AS DOUBLE)))
           END AS r24
-        FROM m""",
+        FROM m"""),
     // one profiling pass, unpivoted to the catalog shape
-    "analyze_stats" ->
+    "analyze_stats" -> QueryDef(analyzeStats _,
       """WITH a AS (
           SELECT count(*) AS n, count(l_quantity) AS cnt_l_quantity, count(DISTINCT l_quantity) AS ndv_l_quantity, min(l_quantity) AS min_l_quantity, max(l_quantity) AS max_l_quantity, count(l_extendedprice) AS cnt_l_extendedprice, count(DISTINCT l_extendedprice) AS ndv_l_extendedprice, min(l_extendedprice) AS min_l_extendedprice, max(l_extendedprice) AS max_l_extendedprice, count(l_discount) AS cnt_l_discount, count(DISTINCT l_discount) AS ndv_l_discount, min(l_discount) AS min_l_discount, max(l_discount) AS max_l_discount, count(l_tax) AS cnt_l_tax, count(DISTINCT l_tax) AS ndv_l_tax, min(l_tax) AS min_l_tax, max(l_tax) AS max_l_tax
           FROM lineitem)
@@ -3676,9 +3544,9 @@ object Relational {
           UNION ALL
           SELECT 'l_discount' AS col_name, n, n - cnt_l_discount AS n_null, ndv_l_discount AS ndv, min_l_discount AS min_v, max_l_discount AS max_v FROM a
           UNION ALL
-          SELECT 'l_tax' AS col_name, n, n - cnt_l_tax AS n_null, ndv_l_tax AS ndv, min_l_tax AS min_v, max_l_tax AS max_v FROM a""",
+          SELECT 'l_tax' AS col_name, n, n - cnt_l_tax AS n_null, ndv_l_tax AS ndv, min_l_tax AS min_v, max_l_tax AS max_v FROM a"""),
     // same +24 pairing; HUGEINT is the exact lane mirroring DECIMAL(38,0)
-    "ts_autocorr" ->
+    "ts_autocorr" -> QueryDef(tsAutocorr _,
       """WITH h AS (
           SELECT epoch_ns(ts) // 3600000000000 AS bucket,
             CAST(sum(CAST(floor(abs(value) * 100) AS BIGINT)) AS BIGINT)
@@ -3701,9 +3569,9 @@ object Relational {
               - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
             * sqrt(CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
               - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))) AS r24
-        FROM m""",
+        FROM m"""),
     // same three-pass window chain; HUGEINT cumulative sums cast back
-    "win_drawdown" ->
+    "win_drawdown" -> QueryDef(winDrawdown _,
       """WITH f AS (
           SELECT user_id, event_id, epoch_ns(ts) // 1000 AS tus,
             CASE WHEN event_type = 'purchase'
@@ -3726,9 +3594,9 @@ object Relational {
         SELECT user_id, count(*) AS n,
           CAST(max(peak - bal) AS BIGINT) AS max_drawdown,
           CAST(max(bal) AS BIGINT) AS final_peak
-        FROM p GROUP BY 1""",
+        FROM p GROUP BY 1"""),
     // exact-decimal multiply-through class gates over the part dim
-    "orders_abc" ->
+    "orders_abc" -> QueryDef(ordersAbc _,
       """WITH rev AS (
           SELECT l_partkey, sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS rev
           FROM lineitem GROUP BY 1),
@@ -3742,9 +3610,9 @@ object Relational {
             WHEN cum * 100 <= total * 95 THEN 'B' ELSE 'C' END AS cls,
           count(*) AS n_parts,
           CAST(sum(rev) AS DOUBLE) AS revenue
-        FROM c GROUP BY 1""",
+        FROM c GROUP BY 1"""),
     // same bounded-histogram expansion; identical double tree
-    "agg_gini" ->
+    "agg_gini" -> QueryDef(aggGini _,
       """WITH hist AS (
           SELECT CAST(floor(abs(value) * 100) AS BIGINT) AS v, count(*) AS c
           FROM events GROUP BY 1),
@@ -3762,9 +3630,9 @@ object Relational {
         SELECT n, s, sum_ix,
           CAST(2 * sum_ix AS DOUBLE) / n / s
             - CAST(n + 1 AS DOUBLE) / n AS gini
-        FROM agg""",
+        FROM agg"""),
     // integer month index both sides; decimal revenue, one double cast
-    "orders_cohort" ->
+    "orders_cohort" -> QueryDef(ordersCohort _,
       """WITH o AS (
           SELECT o_custkey,
             year(o_orderdate) * 12 + month(o_orderdate) AS midx,
@@ -3777,6 +3645,6 @@ object Relational {
           count(DISTINCT o.o_custkey) AS n_customers,
           CAST(sum(rev) AS DOUBLE) AS revenue
         FROM o JOIN f ON o.o_custkey = f.o_custkey
-        GROUP BY 1, 2""",
+        GROUP BY 1, 2"""),
   )
 }

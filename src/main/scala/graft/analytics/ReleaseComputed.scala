@@ -112,8 +112,6 @@ object ReleaseComputed {
   def corpusBuildComputed(s: SparkSession, d: String): DataFrame =
     CorpusBuild.ledgerOf(build(s, d)._2, StageNamesC)
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "corpus_build_computed" -> corpusBuildComputed _)
 
   // ---------------------------------------------------------------
   // DuckDB oracle: the pinned weight table, every sign cell, the
@@ -151,7 +149,9 @@ object ReleaseComputed {
         FROM ($rows) u"""
   }
 
-  val oracle: Map[String, String] = Map(
-    "corpus_build_computed" -> s"""$chainC
-        ${ledgerSql(StageNamesC)}""")
+  val registry: Map[String, QueryDef] = Map(
+    "corpus_build_computed" -> QueryDef(corpusBuildComputed _,
+      s"""$chainC
+        ${ledgerSql(StageNamesC)}"""),
+  )
 }

@@ -1043,31 +1043,6 @@ object Similarity {
         expr("n_found * 1000000 div n_exact").as("recall_ppm"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "contamination_semantic" -> contaminationSemantic _,
-    "contamination_semantic_recall" -> contaminationSemanticRecall _,
-    "emb_pca" -> embPca _,
-    "emb_pca_scores" -> embPcaScores _,
-    "emb_pca_var" -> embPcaVar _,
-    "emb_norm_hist" -> embNormHist _,
-    "knn_classify" -> knnClassify _,
-    "emb_confusion" -> embConfusion _,
-    "emb_outliers" -> embOutliers _,
-    "emb_dim_stats" -> embDimStats _,
-    "sim_knn" -> simKnn _,
-    "sim_ann_ivf" -> ((s: SparkSession, d: String) => simAnnIvf(s, d)),
-    "sim_ann_ivfpq" -> ((s: SparkSession, d: String) => simAnnIvfPq(s, d)),
-    "sim_ann_lsh" -> ((s: SparkSession, d: String) => simAnnLsh(s, d)),
-    "sim_range" -> ((s: SparkSession, d: String) => simRange(s, d)),
-    "emb_quantize" -> embQuantize _,
-    "emb_rproj" -> embRproj _,
-    "emb_matryoshka" -> embMatryoshka _,
-    "emb_pq" -> ((s: SparkSession, d: String) => embPq(s, d)),
-    "emb_centroid" -> embCentroid _,
-    "dedup_semantic" -> ((s: SparkSession, d: String) => dedupSemantic(s, d)),
-    "ann_negatives" -> ((s: SparkSession, d: String) => annNegatives(s, d)),
-    "ann_recall" -> annRecall _,
-  )
 
   /** Coarse-quantizer CTE chain (seed 16 cells + 2 fixed-point Lloyd
     * rounds + final assignment `af`) — the DuckDB spelling of
@@ -1171,11 +1146,11 @@ object Similarity {
       $rounds"""
   }
 
-  val oracle: Map[String, String] = Map(
+  val registry: Map[String, QueryDef] = Map(
     // the same planted corpus (Dedup.embProdPairsCte's e/pv/corpus/n2
     // chain — unused banding CTEs prune away), exact broadcast-shaped
     // scan, argmax by (cos desc, eval_id), 0.95 gate
-    "contamination_semantic" ->
+    "contamination_semantic" -> QueryDef(contaminationSemantic _,
       s"""WITH ${Dedup.embProdPairsCte},
         ev AS (SELECT vec_id AS eval_id, v, nrm FROM n2
                WHERE vec_id < $EvalVecMax),
@@ -1190,9 +1165,9 @@ object Similarity {
               ORDER BY cos DESC, eval_id) AS rn
           FROM scored)
         SELECT vec_id, eval_id, cos FROM rk
-        WHERE rn = 1 AND cos >= ${Dedup.EmbProdThreshold}""",
+        WHERE rn = 1 AND cos >= ${Dedup.EmbProdThreshold}"""),
     // exact spanning pair set vs the production banding's prod_pairs
-    "contamination_semantic_recall" ->
+    "contamination_semantic_recall" -> QueryDef(contaminationSemanticRecall _,
       s"""WITH ${Dedup.embProdPairsCte},
         ev AS (SELECT vec_id AS eval_id, v, nrm FROM n2
                WHERE vec_id < $EvalVecMax),
@@ -1210,20 +1185,20 @@ object Similarity {
           CAST(sum(coalesce(f.hit, 0)) AS BIGINT) AS n_found,
           CAST(sum(coalesce(f.hit, 0)) * 1000000 // count(*) AS BIGINT)
             AS recall_ppm
-        FROM exact e LEFT JOIN found f USING (vec_id, eval_id)""",
-    "emb_pca" ->
+        FROM exact e LEFT JOIN found f USING (vec_id, eval_id)"""),
+    "emb_pca" -> QueryDef(embPca _,
       s"""$pcaCtes
         SELECT CAST(i AS BIGINT) AS i, CAST(v AS BIGINT) AS pc1_mu
-        FROM v5""",
-    "emb_pca_scores" ->
+        FROM v5"""),
+    "emb_pca_scores" -> QueryDef(embPcaScores _,
       s"""$pcaCtes,
         sc AS (
           SELECT e.vec_id, sum(CAST(e.q AS HUGEINT) * v.v) AS s
           FROM e JOIN v5 v ON e.i = v.i GROUP BY e.vec_id)
         SELECT sc.vec_id, emb.label, CAST(sc.s AS BIGINT) AS pc1_score
-        FROM sc JOIN embeddings emb ON emb.vec_id = sc.vec_id""",
+        FROM sc JOIN embeddings emb ON emb.vec_id = sc.vec_id"""),
     // Rayleigh quotient + trace in HUGEINT; // truncation == BigInt /
-    "emb_pca_var" ->
+    "emb_pca_var" -> QueryDef(embPcaVar _,
       s"""$pcaCtes,
         vgv AS (
           SELECT sum(g.g * a.v * b.v) AS vgv
@@ -1233,18 +1208,18 @@ object Similarity {
         SELECT CAST(vgv // vv AS BIGINT) AS lambda1,
           CAST(tr AS BIGINT) AS trace_g,
           CAST(vgv // vv AS DOUBLE) / CAST(tr AS DOUBLE) AS var_explained
-        FROM vgv, vv, tr""",
-    "emb_norm_hist" ->
+        FROM vgv, vv, tr"""),
+    "emb_norm_hist" -> QueryDef(embNormHist _,
       """SELECT CAST(floor(sqrt(list_dot_product(v, v)) * 10) AS BIGINT)
             AS bucket,
           count(*) AS n_vecs
         FROM (SELECT list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
               FROM embeddings)
-        GROUP BY 1""",
+        GROUP BY 1"""),
     // HUGEINT = DuckDB's 128-bit exact lane, mirroring Spark's
     // DECIMAL(38,0); // on the nonnegative variance numerator is the
     // same floor division as Spark's `div`
-    "emb_dim_stats" ->
+    "emb_dim_stats" -> QueryDef(embDimStats _,
       """WITH q AS (
           SELECT CAST(p.dim AS BIGINT) AS dim,
             CAST(floor(CAST(p.x AS DOUBLE) * 1000000) AS BIGINT) AS q
@@ -1260,8 +1235,8 @@ object Similarity {
           CAST(s1 AS DOUBLE) / CAST(n AS DOUBLE) AS mean_q,
           CAST((CAST(n AS HUGEINT) * s2 - CAST(s1 AS HUGEINT) * s1)
             // (CAST(n AS HUGEINT) * n) AS BIGINT) AS var_q2
-        FROM a""",
-    "sim_knn" ->
+        FROM a"""),
+    "sim_knn" -> QueryDef(simKnn _,
       """WITH e AS (
           SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
           FROM embeddings),
@@ -1274,21 +1249,21 @@ object Similarity {
           SELECT qid, nid,
             row_number() OVER (PARTITION BY qid ORDER BY cos DESC, nid) AS rn
           FROM scored)
-        WHERE rn <= 10""",
+        WHERE rn <= 10"""),
     // sim_ann_ivf is approximate vs the exhaustive scan, but fully
     // DETERMINISTIC: fixed-point Lloyd means make the trained quantizer
     // independent of summation order, so the whole pipeline — seed,
     // 2 Lloyd rounds, probe, rerank — unrolls as DuckDB CTEs and the
     // approximate result set itself is hash-checked. Recall vs sim_knn
     // is additionally asserted in AnalyticsSpec.
-    "sim_ann_ivf" ->
+    "sim_ann_ivf" -> QueryDef(simAnnIvf(_, _),
       s"""$ivfCoarseCtes,
         $ivfTopCtes
-        SELECT qid, nid, rn FROM ivf""",
+        SELECT qid, nid, rn FROM ivf"""),
     // both rankings replayed over the same fixed-point integer lane:
     // exact HUGEINT dots, one double division for the cosine, the
     // vec_id tie-break — then the same top-10 overlap count
-    "emb_matryoshka" ->
+    "emb_matryoshka" -> QueryDef(embMatryoshka _,
       """WITH e AS (
           SELECT vec_id,
             list_transform(embedding,
@@ -1333,11 +1308,11 @@ object Similarity {
           CAST(sum(CASE WHEN t16.nid IS NOT NULL THEN 1 ELSE 0 END) * 10
             AS BIGINT) AS recall_pct
         FROM t64 LEFT JOIN t16 USING (qid, nid)
-        GROUP BY t64.qid""",
+        GROUP BY t64.qid"""),
     // signs re-derived per cell from the md5 rule (not pasted), dots
     // summed as per-index HUGEINT products (exact past 2^53), same
     // fixed double tree for the cosines
-    "emb_rproj" ->
+    "emb_rproj" -> QueryDef(embRproj _,
       """WITH e AS (
           SELECT vec_id,
             list_transform(embedding,
@@ -1389,11 +1364,11 @@ object Similarity {
           FROM dots)
         SELECT vid_a, vid_b, dot64, dot16, cos64, cos16,
           abs(cos64 - cos16) AS distortion
-        FROM cs""",
+        FROM cs"""),
     // the index audit: exact top-10 (the sim_knn spelling over the
     // shared e/n) left-joined with the index's top-10, counted per
     // query in exact integers
-    "ann_recall" ->
+    "ann_recall" -> QueryDef(annRecall _,
       s"""$ivfCoarseCtes,
         $ivfTopCtes,
         kscored AS (
@@ -1411,12 +1386,12 @@ object Similarity {
           CAST(sum(CASE WHEN i.nid IS NOT NULL THEN 1 ELSE 0 END) * 100000
             AS BIGINT) AS recall_ppm
         FROM knn k LEFT JOIN ivf i ON i.qid = k.qid AND i.nid = k.nid
-        GROUP BY k.qid""",
+        GROUP BY k.qid"""),
     // same trained quantizer as sim_ann_ivf (shared CTE chain), then
     // within-cell pairs only; the cosine is the same left-to-right
     // list_dot_product spelling the dedup_embedding oracle proved
     // cross-engine exact
-    "dedup_semantic" ->
+    "dedup_semantic" -> QueryDef(dedupSemantic(_, _),
       s"""$ivfCoarseCtes,
         cand AS (
           SELECT fa.vec_id AS va, fb.vec_id AS vb
@@ -1432,10 +1407,10 @@ object Similarity {
         SELECT f.vec_id, CAST(f.cell AS INT) AS cell,
           coalesce(w.dup_of, -1) AS dup_of,
           CAST(w.dup_of IS NULL AS INT) AS kept
-        FROM af f LEFT JOIN wit w USING (vec_id)""",
+        FROM af f LEFT JOIN wit w USING (vec_id)"""),
     // the shared quantizer chain + a label join; rerank restricted to
     // different-label candidates inside the probed cells
-    "ann_negatives" ->
+    "ann_negatives" -> QueryDef(annNegatives(_, _),
       s"""$ivfCoarseCtes,
         lab AS (SELECT vec_id, label FROM embeddings),
         probes AS (
@@ -1458,12 +1433,12 @@ object Similarity {
           SELECT qid, neg_id, neg_label,
             row_number() OVER (PARTITION BY qid
               ORDER BY cos DESC, neg_id) AS rn
-          FROM scored) WHERE rn <= 5""",
+          FROM scored) WHERE rn <= 5"""),
     // IVF-PQ/ADC composed as CTEs: the coarse pipeline is sim_ann_ivf's
     // verbatim (seed + 2 fixed-point Lloyd rounds), the codebook
     // pipeline emb_pq's verbatim (seed + 1 round); ADC sums the same
     // fixed-point (floor(d·10⁶)) subspace distances as exact BIGINTs
-    "sim_ann_ivfpq" -> {
+    "sim_ann_ivfpq" -> QueryDef(simAnnIvfPq(_, _), {
       // coarse-quantizer builders (sim_ann_ivf's, dims64-based)
       def cn(cd: String): String =
         s"""SELECT cell, list_transform(c, x ->
@@ -1567,11 +1542,11 @@ object Similarity {
           SELECT qid, nid,
             row_number() OVER (PARTITION BY qid ORDER BY adcv ASC, nid) AS rn
           FROM adc) WHERE rn <= 10"""
-    },
+    }),
     // the same sign-bit/banding pipeline as CTEs: bit weights are exact
     // small integers (CASE, not power()) and the sign comparison is of
     // the identical left-to-right double dot product both engines run
-    "sim_ann_lsh" ->
+    "sim_ann_lsh" -> QueryDef(simAnnLsh(_, _),
       """WITH e AS (
           SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
           FROM embeddings),
@@ -1599,8 +1574,8 @@ object Similarity {
         SELECT qid, nid, rn FROM (
           SELECT qid, nid,
             row_number() OVER (PARTITION BY qid ORDER BY cos DESC, nid) AS rn
-          FROM scored) WHERE rn <= 10""",
-    "sim_range" ->
+          FROM scored) WHERE rn <= 10"""),
+    "sim_range" -> QueryDef(simRange(_, _),
       """WITH e AS (
           SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
           FROM embeddings),
@@ -1608,8 +1583,8 @@ object Similarity {
         SELECT q.vec_id AS qid, c.vec_id AS nid,
           list_dot_product(q.v, c.v) / (q.nrm * c.nrm) AS cos
         FROM n q JOIN n c ON q.vec_id < 20 AND q.vec_id <> c.vec_id
-        WHERE list_dot_product(q.v, c.v) / (q.nrm * c.nrm) >= 0.3""",
-    "emb_quantize" ->
+        WHERE list_dot_product(q.v, c.v) / (q.nrm * c.nrm) >= 0.3"""),
+    "emb_quantize" -> QueryDef(embQuantize _,
       """WITH e AS (
           SELECT vec_id,
             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v,
@@ -1619,12 +1594,12 @@ object Similarity {
           array_to_string(list_transform(v, x ->
             CASE WHEN mx = 0 THEN 0
                  ELSE CAST(floor(x / mx * 127 + 0.5) AS BIGINT) END), ',') AS codes
-        FROM e""",
+        FROM e"""),
     // the PQ pipeline as CTEs: seed books → argmin assign → fixed-point
     // Lloyd means (lost codes keep their seed) → re-assign → rollup.
     // Distances use the identical x·x − 2x·y + y·y double spelling; the
     // distortion sum is exact BIGINT (CAST away DuckDB's HUGEINT).
-    "emb_pq" -> {
+    "emb_pq" -> QueryDef(embPq(_, _), {
       val distS = "list_dot_product(s.sv, s.sv) " +
         "- 2 * list_dot_product(s.sv, c.cv) + list_dot_product(c.cv, c.cv)"
       s"""WITH e AS (
@@ -1672,10 +1647,10 @@ object Similarity {
           string_agg(CAST(code AS VARCHAR), ',' ORDER BY sub) AS codes,
           CAST(sum(CAST(floor(dist * 1000000) AS BIGINT)) AS BIGINT) AS err_q
         FROM af GROUP BY vec_id"""
-    },
+    }),
     // brute-force recompute: top-10 labeled neighbors per query, then
     // the same (votes DESC, label) majority tie-break
-    "knn_classify" ->
+    "knn_classify" -> QueryDef(knnClassify _,
       """WITH e AS (
           SELECT vec_id, label,
             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
@@ -1695,12 +1670,12 @@ object Similarity {
           SELECT qid, label, votes,
             row_number() OVER (PARTITION BY qid
               ORDER BY votes DESC, label) AS vr
-          FROM votes) WHERE vr = 1""",
+          FROM votes) WHERE vr = 1"""),
     // the same fixed-point centroid means (train half), unit-normalized
     // with the shared zero guard; argmax ties to the smaller label =
     // Spark's array_position-first semantics over ascending-label
     // centroids
-    "emb_confusion" ->
+    "emb_confusion" -> QueryDef(embConfusion _,
       """WITH qd AS (
           SELECT label, p.dim AS dim, p.q AS q FROM (
             SELECT e.label, unnest(list_transform(e.embedding,
@@ -1727,10 +1702,10 @@ object Similarity {
               row_number() OVER (PARTITION BY e.vec_id
                 ORDER BY list_dot_product(e.v, cn.c) DESC, cn.clabel) AS rn
             FROM e CROSS JOIN cn) WHERE rn = 1)
-        SELECT label, pred_label, count(*) AS n FROM pred GROUP BY 1, 2""",
+        SELECT label, pred_label, count(*) AS n FROM pred GROUP BY 1, 2"""),
     // UN-normalized own-label centroid + the shared x·x − 2x·c + c·c
     // distance spelling; rank-only output
-    "emb_outliers" ->
+    "emb_outliers" -> QueryDef(embOutliers _,
       """WITH qd AS (
           SELECT label, p.dim AS dim, p.q AS q FROM (
             SELECT e.label, unnest(list_transform(e.embedding,
@@ -1752,10 +1727,10 @@ object Similarity {
               ORDER BY (list_dot_product(e.v, e.v)
                 - 2 * list_dot_product(e.v, c.c)
                 + list_dot_product(c.c, c.c)) DESC, e.vec_id) AS rnk
-          FROM e JOIN c USING (label)) WHERE rnk <= 5""",
-    "emb_centroid" ->
+          FROM e JOIN c USING (label)) WHERE rnk <= 5"""),
+    "emb_centroid" -> QueryDef(embCentroid _,
       s"""WITH lang AS (
-          SELECT doc_id, pred_lang FROM (${TextAnalysis.oracle("lang_id")})),
+          SELECT doc_id, pred_lang FROM (${TextAnalysis.registry("lang_id").oracle})),
         q AS (
           SELECT l.pred_lang, CAST(p.dim AS INT) AS dim, p.q FROM (
             SELECT e.vec_id, unnest(list_transform(e.embedding,
@@ -1765,6 +1740,6 @@ object Similarity {
           JOIN lang l ON e2.vec_id = l.doc_id)
         SELECT pred_lang, dim, count(*) AS n,
           CAST(sum(q) AS DOUBLE) / count(*) / 1000000 AS mean_q
-        FROM q GROUP BY pred_lang, dim""",
+        FROM q GROUP BY pred_lang, dim"""),
   )
 }

@@ -544,26 +544,9 @@ object Stats {
           END AS z""")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "agg_winsorize" -> aggWinsorize _,
-    "stats_anova"  -> statsAnova _,
-    "stats_levene" -> statsLevene _,
-    "stats_runs"   -> statsRuns _,
-    "stats_abtest" -> statsAbTest _,
-    "win_ewma"     -> winEwma _,
-    "anomaly_cusum" -> anomalyCusum _,
-    "anomaly_mad"  -> anomalyMad _,
-    "stats_ks"     -> statsKs _,
-    "stats_mannwhitney" -> statsMannWhitney _,
-    "stats_kruskal" -> statsKruskal _,
-    "stats_chi2"   -> statsChi2 _,
-    "stats_ttest"  -> statsTtest _,
-    "agg_spearman" -> aggSpearman _,
-  )
-
-  val oracle: Map[String, String] = Map(
+  val registry: Map[String, QueryDef] = Map(
     // same gaps-and-islands run count + fixed double tree
-    "stats_runs" ->
+    "stats_runs" -> QueryDef(statsRuns _,
       """WITH h AS (
           SELECT epoch_ns(ts) // 3600000000000 AS bucket,
             CAST(sum(CAST(floor(abs(value) * 100) AS BIGINT)) AS BIGINT)
@@ -591,9 +574,9 @@ object Stats {
           / sqrt(2.0 * CAST(n1 * n2 AS DOUBLE)
               * (2.0 * CAST(n1 * n2 AS DOUBLE) - n)
             / (CAST(n AS DOUBLE) * n * (n - 1))) AS z
-        FROM agg""",
+        FROM agg"""),
     // same md5-arm assignment and pooled-proportion tree
-    "stats_abtest" ->
+    "stats_abtest" -> QueryDef(statsAbTest _,
       """WITH u AS (
           SELECT user_id,
             CASE WHEN sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
@@ -623,10 +606,10 @@ object Stats {
             THEN (p_a - p_b) / sqrt(p_pool * (1.0 - p_pool)
               * (CAST(1 AS DOUBLE) / n_a + CAST(1 AS DOUBLE) / n_b))
           END AS z
-        FROM p""",
+        FROM p"""),
     // Brown–Forsythe: |x − group median| fed through the same ANOVA
     // chain (quantile_cont == Spark percentile on identical doubles)
-    "stats_levene" ->
+    "stats_levene" -> QueryDef(statsLevene _,
       """WITH e AS (
           SELECT event_type, value FROM events
           WHERE value IS NOT NULL AND NOT isnan(value)),
@@ -666,9 +649,9 @@ object Stats {
           FROM last_)
         SELECT k, n, s, ssb, ssw,
           (ssb / (k - 1)) / (ssw / (n - k)) AS f_stat
-        FROM ss""",
+        FROM ss"""),
     // same ordered-window-forced summation over the sorted type domain
-    "stats_anova" ->
+    "stats_anova" -> QueryDef(statsAnova _,
       """WITH g AS (
           SELECT event_type, count(*) AS ni,
             CAST(sum(CAST(floor(value * 100) AS BIGINT)) AS BIGINT) AS si,
@@ -699,10 +682,10 @@ object Stats {
           FROM last_)
         SELECT k, n, s, ssb, ssw,
           (ssb / (k - 1)) / (ssw / (n - k)) AS f_stat
-        FROM ss""",
+        FROM ss"""),
     // same two-pass clamp; quantile_cont == Spark's interpolated
     // percentile on identical doubles (anomaly_mad precedent)
-    "agg_winsorize" ->
+    "agg_winsorize" -> QueryDef(aggWinsorize _,
       """WITH e AS (
           SELECT event_type, value FROM events
           WHERE value IS NOT NULL AND NOT isnan(value)),
@@ -716,11 +699,11 @@ object Stats {
             AS DECIMAL(18,2))) AS DOUBLE) / count(*) AS win_mean,
           CAST(sum(CAST(e.value AS DECIMAL(18,2))) AS DOUBLE) / count(*)
             AS raw_mean
-        FROM e JOIN b USING (event_type) GROUP BY 1""",
+        FROM e JOIN b USING (event_type) GROUP BY 1"""),
     // same bounded-cell spelling: one contingency count, window-sum
     // marginals, centi-unit integer expected counts, exact BIGINT χ²
     // accumulation; `//` == Spark's `div` (all operands nonnegative)
-    "stats_chi2" ->
+    "stats_chi2" -> QueryDef(statsChi2 _,
       """WITH cells AS (
           SELECT event_type,
             (epoch_ns(ts) // 86400000000000) % 7 AS dow,
@@ -754,9 +737,9 @@ object Stats {
           FROM (SELECT 1))
         SELECT n, n_cells, dof, chi2_centi,
           CAST(chi2_centi AS DOUBLE) / 100.0 AS chi2
-        FROM stat, d""",
+        FROM stat, d"""),
     // identical double-op tree on identical exact integers (see scaladoc)
-    "stats_ttest" ->
+    "stats_ttest" -> QueryDef(statsTtest _,
       """WITH cents AS (
           SELECT event_type, CAST(floor(value * 100) AS BIGINT) AS cents
           FROM events WHERE event_type IN ('click', 'view')),
@@ -784,10 +767,10 @@ object Stats {
           (mean1 - mean2) / sqrt(se2) AS t_stat,
           (se2 * se2) / ((v1 / n1) * (v1 / n1) / (n1 - 1)
             + (v2 / n2) * (v2 / n2) / (n2 - 1)) AS dof_welch
-        FROM se""",
+        FROM se"""),
     // same 3-pass shape; quantile_cont == Spark's interpolated
     // percentile on identical doubles; threshold arithmetic mirrored
-    "anomaly_mad" ->
+    "anomaly_mad" -> QueryDef(anomalyMad _,
       """WITH e AS (
           SELECT event_type, value FROM events
           WHERE value IS NOT NULL AND NOT isnan(value)),
@@ -801,11 +784,11 @@ object Stats {
         SELECT e.event_type, count(*) AS n,
           CAST(sum(CASE WHEN abs(e.value - md.med) > md.mad * 3.0 * 1.4826
             THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers
-        FROM e JOIN md USING (event_type) GROUP BY 1""",
+        FROM e JOIN md USING (event_type) GROUP BY 1"""),
     // the recurrence re-derived sequentially: recursive CTE over
     // per-user row_numbers; `//` (floor div) == the >> 1 shift because
     // the accumulator never goes negative
-    "win_ewma" ->
+    "win_ewma" -> QueryDef(winEwma _,
       """WITH RECURSIVE base AS (
           SELECT event_id, user_id,
             CAST(floor(abs(value) * 100) AS BIGINT) AS cents,
@@ -819,8 +802,8 @@ object Stats {
             b.cents + (r.ewma // 2) AS ewma
           FROM base b JOIN rec r
             ON b.user_id = r.user_id AND b.rn = r.rn + 1)
-        SELECT event_id, user_id, cents, ewma FROM rec""",
-    "anomaly_cusum" ->
+        SELECT event_id, user_id, cents, ewma FROM rec"""),
+    "anomaly_cusum" -> QueryDef(anomalyCusum _,
       """WITH RECURSIVE base AS (
           SELECT event_id, user_id,
             CAST(floor(abs(value) * 100) AS BIGINT) AS cents,
@@ -836,11 +819,11 @@ object Stats {
           FROM base b JOIN rec r
             ON b.user_id = r.user_id AND b.rn = r.rn + 1)
         SELECT event_id, user_id, cents, cusum, (cusum > 200000)::INT AS alarm
-        FROM rec""",
+        FROM rec"""),
     // pooled midranks + per-group HUGEINT rank sums; the Σ-over-groups
     // float fold rides the same sorted-type running window as
     // stats_anova, so the double summation order is pinned
-    "stats_kruskal" ->
+    "stats_kruskal" -> QueryDef(statsKruskal _,
       """WITH binned AS (
           SELECT event_type, CAST(floor(value) AS BIGINT) AS bin,
             CAST(count(*) AS BIGINT) AS ng
@@ -888,10 +871,10 @@ object Stats {
             / (1.0 - CAST(ties3 AS DOUBLE)
                 / (CAST(n AS DOUBLE) * n * n - n))
           END AS h
-        FROM last_, ties""",
+        FROM last_, ties"""),
     // same binned midrank algebra: doubled midranks stay integers, the
     // big sums ride HUGEINT, one fixed double tree for z
-    "stats_mannwhitney" ->
+    "stats_mannwhitney" -> QueryDef(statsMannWhitney _,
       """WITH binned AS (
           SELECT CAST(floor(value) AS BIGINT) AS bin,
             CAST(count(CASE WHEN event_type = 'click' THEN 1 END)
@@ -931,8 +914,8 @@ object Stats {
                  - CAST(ties3 AS DOUBLE)
                    / (CAST(n1 + n2 AS DOUBLE) * (n1 + n2 - 1))))
           END AS z
-        FROM fin""",
-    "stats_ks" ->
+        FROM fin"""),
+    "stats_ks" -> QueryDef(statsKs _,
       """WITH binned AS (
           SELECT CAST(floor(value) AS BIGINT) AS bin,
             count(CASE WHEN event_type = 'click' THEN 1 END) AS n1b,
@@ -951,8 +934,8 @@ object Stats {
           CAST(max(abs(n2 * cum1 - n1 * cum2)) AS BIGINT) AS d_num,
           CAST(max(abs(n2 * cum1 - n1 * cum2)) AS BIGINT)
             / CAST(n1 * n2 AS DOUBLE) AS d_stat
-        FROM cum, totals GROUP BY n1, n2""",
-    "agg_spearman" ->
+        FROM cum, totals GROUP BY n1, n2"""),
+    "agg_spearman" -> QueryDef(aggSpearman _,
       """WITH per AS (
           SELECT l_suppkey,
             sum(CAST(l_quantity AS DECIMAL(18,2))) AS qty,
@@ -966,6 +949,6 @@ object Stats {
           CAST(sum((rq - rp) * (rq - rp)) AS BIGINT) AS sum_d2,
           1.0 - (6.0 * CAST(sum((rq - rp) * (rq - rp)) AS DOUBLE))
             / CAST(count(*) * (count(*) * count(*) - 1) AS DOUBLE) AS rho
-        FROM ranked""",
+        FROM ranked"""),
   )
 }

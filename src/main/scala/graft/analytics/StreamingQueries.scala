@@ -1,5 +1,6 @@
 package graft.analytics
 
+import graft.GraftSession
 import graft.streaming.StreamingPipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -261,18 +262,17 @@ object StreamingQueries {
     // commit was the measured batch bottleneck (0.45 s of a 0.7 s
     // batch), exactly the "size to state volume" rule this comment
     // always promised.
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions",
-      Sizing.statePartitions(stateKeys,
-        s.sparkContext.defaultParallelism).toString)
-    val q =
-      try df.writeStream
+    val statePartitions =
+      Sizing.statePartitions(stateKeys, s.sparkContext.defaultParallelism)
+    val q = GraftSession.withConf(s,
+        "spark.sql.shuffle.partitions" -> statePartitions.toString) {
+      df.writeStream
         .format("memory")
         .queryName(name)
         .outputMode(mode)
         .trigger(Trigger.AvailableNow())
         .start()
-      finally s.conf.set("spark.sql.shuffle.partitions", prev)
+    }
     // the finally block must run even when the query FAILS — otherwise
     // the sink's temp view (and its retained rows) leak for the session
     // lifetime and the stopped-query check below never happens
@@ -651,6 +651,11 @@ object StreamingQueries {
       OutputMode.Append())
   }
 
+  /** transformWithState's required state backend, set for the length of
+    * each such query. */
+  private val RocksDbStateStore = "spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
   /** Spark 4's transformWithState — the successor arbitrary-state API
     * (typed ValueState handles, TimeMode, RocksDB-backed state store):
     * per-event-type running count + EXACT cent sum accumulated in a
@@ -660,11 +665,7 @@ object StreamingQueries {
     * provider); the oracle is the plain grouped aggregate. */
   def streamTws(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val key  = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    GraftSession.withConf(s, RocksDbStateStore) {
       val src = eventsStream(s, d)
         .select(col("event_type"),
           floor(col("value") * 100 + 0.5).cast("long").as("cents"))
@@ -675,9 +676,6 @@ object StreamingQueries {
           OutputMode.Append())
       runToMemory(s, out.toDF("event_type", "n_events", "sum_cents"),
         OutputMode.Append())
-    } finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None    => s.conf.unset(key)
     }
   }
 
@@ -693,11 +691,7 @@ object StreamingQueries {
   def streamTimers(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val gapUs = 30L * 60 * 1000000
-    val key  = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    GraftSession.withConf(s, RocksDbStateStore) {
       val src = eventsStream(s, d)
         .filter(col("user_id").isNotNull)
         .withWatermark("ts", "10 minutes")
@@ -709,9 +703,6 @@ object StreamingQueries {
           OutputMode.Append())
       runToMemory(s, out.toDF("user_id", "start_us", "end_us", "n_events"),
         OutputMode.Append())
-    } finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None    => s.conf.unset(key)
     }
   }
 
@@ -722,11 +713,7 @@ object StreamingQueries {
     * the spec exercises the cross-batch accumulation path. */
   def streamMapState(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val key  = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    GraftSession.withConf(s, RocksDbStateStore) {
       val src = eventsStream(s, d)
         .filter(col("user_id").isNotNull && col("value").isNotNull &&
           !isnan(col("value")))
@@ -739,9 +726,6 @@ object StreamingQueries {
           OutputMode.Append())
       runToMemory(s, out.toDF("user_id", "event_type", "n_events", "sum_cents"),
         OutputMode.Append())
-    } finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None    => s.conf.unset(key)
     }
   }
 
@@ -754,11 +738,7 @@ object StreamingQueries {
     * gap). Oracle = the whole-table grouped aggregate. */
   def streamInitState(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val key  = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    GraftSession.withConf(s, RocksDbStateStore) {
       val initState = graft.Tables.events(s, d)
         .filter(col("event_id") % 2 === 0)
         .groupBy(col("event_type"))
@@ -778,9 +758,6 @@ object StreamingQueries {
           OutputMode.Append(), initState)
       runToMemory(s, out.toDF("event_type", "n_events", "sum_cents"),
         OutputMode.Append())
-    } finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None    => s.conf.unset(key)
     }
   }
 
@@ -790,11 +767,7 @@ object StreamingQueries {
     * buffer, so the oracle is a per-user top-5-by-time rollup. */
   def streamListState(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val key  = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    GraftSession.withConf(s, RocksDbStateStore) {
       val src = eventsStream(s, d)
         .filter(col("user_id").isNotNull && col("value").isNotNull &&
           !isnan(col("value")))
@@ -806,9 +779,6 @@ object StreamingQueries {
           org.apache.spark.sql.streaming.TimeMode.None(),
           OutputMode.Append())
       runToMemory(s, out.toDF("user_id", "recent"), OutputMode.Append())
-    } finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None    => s.conf.unset(key)
     }
   }
 
@@ -1194,37 +1164,11 @@ object StreamingQueries {
     runToMemory(s, windowed, OutputMode.Append())
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "stream_quality_gate" -> streamQualityGate _,
-    "stream_quality_windowed" -> streamQualityWindowed _,
-    "stream_fp_dedup" -> streamFpDedup _,
-    "stream_dsv2"    -> streamDsv2 _,
-    "stream_stateful" -> streamStateful _,
-    "stream_tws"     -> streamTws _,
-    "stream_timers"  -> streamTimers _,
-    "stream_mapstate" -> streamMapState _,
-    "stream_init_state" -> streamInitState _,
-    "stream_list_state" -> streamListState _,
-    "stream_static_join" -> streamStaticJoin _,
-    "stream_stream_join" -> streamStreamJoin _,
-    "stream_join_left" -> streamJoinLeft _,
-    "stream_join_full" -> streamJoinFull _,
-    "stream_hourly"  -> streamHourly _,
-    "stream_avro"    -> streamAvro _,
-    "stream_observe" -> streamObserve _,
-    "stream_union"   -> streamUnion _,
-    "stream_session" -> streamSession _,
-    "stream_session_multibatch" -> streamSessionMultiBatch _,
-    "stream_append"  -> streamAppend _,
-    "stream_session_append" -> streamSessionAppend _,
-    "stream_dedup"   -> streamDedup _,
-  )
-
-  val oracle: Map[String, String] = Map(
+  val registry: Map[String, QueryDef] = Map(
     // the gates replayed in batch SQL: the full classifier training
     // chain + scoring and the Gopher metric chain, rolled to source —
     // a hash match pins the STREAMING execution path's results
-    "stream_quality_gate" -> {
+    "stream_quality_gate" -> QueryDef(streamQualityGate _, {
       val cls = Curation.classifierScoreSqlFrom("documents")
         .trim.stripPrefix(",")
       s"""WITH ${Curation.qualityTrainCtes},
@@ -1239,12 +1183,12 @@ object StreamingQueries {
         JOIN gm ON gm.doc_id = d.doc_id
         JOIN cm ON cm.doc_id = d.doc_id
         GROUP BY d.source"""
-    },
+    }, streaming = true),
     // the same gates bucketed on the synthetic ingest clock's hour
     // windows, with the append-mode cutoff applied in SQL: a window is
     // in the result iff its END ≤ the final watermark (max event time
     // − 10 min) — the trailing open window is withheld on both sides
-    "stream_quality_windowed" -> {
+    "stream_quality_windowed" -> QueryDef(streamQualityWindowed _, {
       val cls = Curation.classifierScoreSqlFrom("documents")
         .trim.stripPrefix(",")
       s"""WITH ${Curation.qualityTrainCtes},
@@ -1267,28 +1211,28 @@ object StreamingQueries {
         FROM b CROSS JOIN wm
         WHERE win_us + 3600000000 <= wm.wm_us
         GROUP BY win_us, source"""
-    },
+    }, streaming = true),
     // the same 16-bit simhash spelling as dedup_simhash, bucketed on
     // the synthetic 10-s/doc clock's hour windows; the sentinel row is
     // not in `documents`, and its window is withheld by the final
     // watermark on the engine side — both sides see only real docs
-    "stream_fp_dedup" ->
+    "stream_fp_dedup" -> QueryDef(streamFpDedup _,
       s"""WITH f AS (${Dedup.simhashSql})
         SELECT CAST((((doc_id + 1) * 10) // 3600) * 3600000000 AS BIGINT)
             AS win_us,
           simhash AS fp,
           min(doc_id) AS canon, max(doc_id) AS latest,
           count(*) AS n_members
-        FROM f GROUP BY 1, 2""",
-    "stream_dsv2" ->
+        FROM f GROUP BY 1, 2""", streaming = true),
+    "stream_dsv2" -> QueryDef(streamDsv2 _,
       """SELECT CAST(id % 97 AS INT) AS bucket, count(*) AS cnt,
           CAST(sum((id * 2654435761) % 4294967296) AS BIGINT) AS sum_mval
         FROM range(0, 50000) t(id)
-        GROUP BY 1""",
+        GROUP BY 1""", streaming = true),
     // manual sessionization (gap >= 30 min starts a new session, the
     // native session_window boundary) + the append-mode cutoff: emit
     // iff session end (last event + gap) <= final watermark
-    "stream_session_append" ->
+    "stream_session_append" -> QueryDef(streamSessionAppend _,
       """WITH x AS (
           SELECT user_id, event_id, epoch_ns(ts) // 1000 AS tus FROM events),
         l AS (
@@ -1312,21 +1256,22 @@ object StreamingQueries {
         wm AS (SELECT max(tus) - 600000000 AS cutoff FROM x)
         SELECT user_id, start_us, n_events
         FROM agg, wm
-        WHERE end_tus + 1800000000 <= cutoff""",
-    "stream_hourly" ->
+        WHERE end_tus + 1800000000 <= cutoff""", streaming = true),
+    "stream_hourly" -> QueryDef(streamHourly _,
       """SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS window_start,
           event_type, count(*) AS cnt,
           CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-        FROM events GROUP BY 1, 2""",
+        FROM events GROUP BY 1, 2""", streaming = true),
     // the streamed Avro datum layout — the SAME shared oracle as
     // avro_functions (EventsPipeline.avroBytesOracle), so a streaming-
     // plan encoding difference would shift the byte sum while the two
     // spellings' oracles cannot drift apart
-    "stream_avro" -> EventsPipeline.avroBytesOracle,
+    "stream_avro" -> QueryDef(streamAvro _,
+      EventsPipeline.avroBytesOracle, streaming = true),
     // the across-batch fold of per-batch observed metrics must equal
     // the corpus-total aggregate over the SAME validation predicate;
     // n_batches pins that the fold genuinely spanned 4 data batches
-    "stream_observe" ->
+    "stream_observe" -> QueryDef(streamObserve _,
       """WITH v AS (
           SELECT *, json_extract(props, '$.k')::INT AS k FROM events),
         g AS (
@@ -1340,21 +1285,23 @@ object StreamingQueries {
           max(value) AS max_value,
           CAST(min(k) AS INT) AS min_k,
           CAST(max(k) AS INT) AS max_k
-        FROM g""",
+        FROM g""", streaming = true),
     // the two parity sources must merge into the identical result
-    "stream_union" ->
+    "stream_union" -> QueryDef(streamUnion _,
       """SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS window_start,
           event_type, count(*) AS cnt,
           CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-        FROM events GROUP BY 1, 2""",
+        FROM events GROUP BY 1, 2""", streaming = true),
     // same sessionization CTE as win_session, but keyed by the session
     // start time (µs) like session_window's output; the multibatch
     // variant only adds the input filter
-    "stream_session"            -> sessionOracle(""),
-    "stream_session_multibatch" -> sessionOracle(" WHERE user_id % 4 = 0"),
+    "stream_session" -> QueryDef(streamSession _,
+      sessionOracle(""), streaming = true),
+    "stream_session_multibatch" -> QueryDef(streamSessionMultiBatch _,
+      sessionOracle(" WHERE user_id % 4 = 0"), streaming = true),
     // append mode = Complete-mode result MINUS windows still open at the
     // final watermark (max event time − 10 min); window end is start+1h
-    "stream_append" ->
+    "stream_append" -> QueryDef(streamAppend _,
       """WITH m AS (SELECT max(epoch_ns(ts) // 1000) AS mx FROM events),
         h AS (
           SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS window_start,
@@ -1362,14 +1309,14 @@ object StreamingQueries {
             CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
           FROM events GROUP BY 1, 2)
         SELECT h.* FROM h, m
-        WHERE epoch_us(h.window_start) + 3600000000 <= m.mx - 600000000""",
+        WHERE epoch_us(h.window_start) + 3600000000 <= m.mx - 600000000""", streaming = true),
     // a full replay deduped on the unique event_id = the table itself
-    "stream_dedup" ->
-      "SELECT event_id, event_type, value FROM events",
+    "stream_dedup" -> QueryDef(streamDedup _,
+      "SELECT event_id, event_type, value FROM events", streaming = true),
     // the state function's sorted-timeline facts, spelled with lag():
     // consecutive-difference aggregates are identical for any stable
     // sort of tied timestamps
-    "stream_stateful" ->
+    "stream_stateful" -> QueryDef(streamStateful _,
       """WITH x AS (SELECT user_id, epoch_ns(ts) // 1000 AS tus FROM events),
         l AS (
           SELECT user_id, tus,
@@ -1379,9 +1326,9 @@ object StreamingQueries {
           CAST(coalesce(max(tus - prev), 0) AS BIGINT) AS max_gap_us,
           CAST(1 + count(CASE WHEN tus - prev > 1800000000 THEN 1 END) AS BIGINT)
             AS n_sessions
-        FROM l GROUP BY user_id""",
+        FROM l GROUP BY user_id""", streaming = true),
     // last-5 by (time, cents): asc takeRight(5) == desc-rank take 5
-    "stream_list_state" ->
+    "stream_list_state" -> QueryDef(streamListState _,
       """WITH e AS (
           SELECT user_id, epoch_ns(ts) // 1000 AS tus,
             CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
@@ -1395,25 +1342,25 @@ object StreamingQueries {
           FROM e)
         SELECT user_id,
           string_agg(CAST(cents AS VARCHAR), ',' ORDER BY tus, cents) AS recent
-        FROM r WHERE rn <= 5 GROUP BY user_id""",
+        FROM r WHERE rn <= 5 GROUP BY user_id""", streaming = true),
     // backfill(even ids) + stream(odd ids) must equal the full table
-    "stream_init_state" ->
+    "stream_init_state" -> QueryDef(streamInitState _,
       """SELECT event_type, count(*) AS n_events,
           CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
             AS sum_cents
-        FROM events GROUP BY event_type""",
-    "stream_mapstate" ->
+        FROM events GROUP BY event_type""", streaming = true),
+    "stream_mapstate" -> QueryDef(streamMapState _,
       """SELECT user_id, event_type,
           count(*) AS n_events,
           CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
             AS sum_cents
         FROM events
         WHERE user_id IS NOT NULL AND value IS NOT NULL AND NOT isnan(value)
-        GROUP BY user_id, event_type""",
+        GROUP BY user_id, event_type""", streaming = true),
     // sessions (gap > 30 min) whose timer horizon (end+gap, in ms) the
     // final watermark (max event ms - 10 min) has passed; the boundary
     // comparison is pinned empirically like stream_append's
-    "stream_timers" ->
+    "stream_timers" -> QueryDef(streamTimers _,
       """WITH e AS (
           SELECT user_id, epoch_ns(ts) // 1000 AS tus
           FROM events WHERE user_id IS NOT NULL),
@@ -1438,19 +1385,19 @@ object StreamingQueries {
         wm AS (SELECT max(tus) // 1000 - 600000 AS wm_ms FROM e)
         SELECT user_id, start_us, end_us, CAST(n_events AS BIGINT) AS n_events
         FROM agg, wm
-        WHERE (end_us + 1800000000) // 1000 < wm_ms""",
-    "stream_tws" ->
+        WHERE (end_us + 1800000000) // 1000 < wm_ms""", streaming = true),
+    "stream_tws" -> QueryDef(streamTws _,
       """SELECT event_type, count(*) AS n_events,
           CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS sum_cents
-        FROM events GROUP BY event_type""",
-    "stream_static_join" ->
+        FROM events GROUP BY event_type""", streaming = true),
+    "stream_static_join" -> QueryDef(streamStaticJoin _,
       """SELECT e.event_id, e.user_id, e.event_type,
           CAST(e.user_id % 8 AS BIGINT) AS cohort
         FROM events e
-        JOIN (SELECT DISTINCT user_id FROM events) d ON e.user_id = d.user_id""",
+        JOIN (SELECT DISTINCT user_id FROM events) d ON e.user_id = d.user_id""", streaming = true),
     // 30-minute attribution window in exact µs arithmetic; bounds
     // (p > c, p <= c + 30 min] mirror the streaming join condition
-    "stream_stream_join" ->
+    "stream_stream_join" -> QueryDef(streamStreamJoin _,
       """WITH c AS (
           SELECT event_id AS click_id, user_id, epoch_ns(ts) // 1000 AS c_us
           FROM events WHERE event_type = 'click'),
@@ -1459,12 +1406,12 @@ object StreamingQueries {
           FROM events WHERE event_type = 'purchase')
         SELECT c.click_id, p.purchase_id, p.p_us - c.c_us AS lag_us
         FROM c JOIN p ON c.user_id = p.user_id
-          AND p.p_us > c.c_us AND p.p_us <= c.c_us + 1800000000""",
+          AND p.p_us > c.c_us AND p.p_us <= c.c_us + 1800000000""", streaming = true),
     // the outer variant adds null-extended clicks whose 30-minute match
     // window closed strictly below the final global watermark
     // (min of the two sides' max event time − 1 h) — Spark evicts left
     // state when c_ts < valueWatermark = wm − 30 min, hence the strict <
-    "stream_join_left" ->
+    "stream_join_left" -> QueryDef(streamJoinLeft _,
       """WITH c AS (
           SELECT event_id AS click_id, user_id, epoch_ns(ts) // 1000 AS c_us
           FROM events WHERE event_type = 'click'),
@@ -1482,11 +1429,11 @@ object StreamingQueries {
         FROM c, wm
         WHERE NOT EXISTS (SELECT 1 FROM p WHERE p.user_id = c.user_id
             AND p.p_us > c.c_us AND p.p_us <= c.c_us + 1800000000)
-          AND c.c_us + 1800000000 < wm.wus""",
+          AND c.c_us + 1800000000 < wm.wus""", streaming = true),
     // full outer: left side expires at wm − 30 min on click time (as
     // above); right side expires at wm on purchase time (every click
     // that could still match it has already arrived by then)
-    "stream_join_full" ->
+    "stream_join_full" -> QueryDef(streamJoinFull _,
       """WITH c AS (
           SELECT event_id AS click_id, user_id, epoch_ns(ts) // 1000 AS c_us
           FROM events WHERE event_type = 'click'),
@@ -1511,7 +1458,7 @@ object StreamingQueries {
         FROM p, wm
         WHERE NOT EXISTS (SELECT 1 FROM c WHERE c.user_id = p.user_id
             AND p.p_us > c.c_us AND p.p_us <= c.c_us + 1800000000)
-          AND p.p_us < wm.wus""",
+          AND p.p_us < wm.wus""", streaming = true),
   )
 
   /** Batch (lag + running-sum) spelling of the 30-minute sessionization

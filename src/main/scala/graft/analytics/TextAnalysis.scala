@@ -1141,51 +1141,10 @@ object TextAnalysis {
         col("n_occ"), col("score"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "text_rake"         -> textRake _,
-    "text_stem"         -> textStem _,
-    "text_heaps"        -> textHeaps _,
-    "text_hapax"        -> textHapax _,
-    "text_feature_hash" -> textFeatureHash _,
-    "text_pair_lift"    -> textPairLift _,
-    "url_parse"         -> urlParse _,
-    "text_blocklist"    -> textBlocklist _,
-    "curriculum_buckets" -> curriculumBuckets _,
-    "source_divergence" -> sourceDivergence _,
-    "source_quality"   -> sourceQuality _,
-    "source_top_terms" -> sourceTopTerms _,
-    "sample_weighted"  -> sampleWeighted _,
-    "text_oov"         -> textOov _,
-    "text_ttr"         -> textTtr _,
-    "mixture_weights"  -> mixtureWeights _,
-    "text_entropy"     -> textEntropy _,
-    "text_top_term"    -> topTerm _,
-    "text_tokens"      -> textTokens _,
-    "text_quality"     -> textQuality _,
-    "text_token_regex" -> textTokenRegex _,
-    "lang_id"          -> langId _,
-    "lang_id_margin"   -> langIdMargin _,
-    "lang_confusion"   -> langConfusion _,
-    "text_fingerprint" -> fingerprint _,
-    "text_rolling_hash" -> rollingHashPortable _,
-    "text_bigrams"     -> bigrams _,
-    "gen_ngrams"       -> genNgrams _,
-    "text_histogram"   -> textHistogram _,
-    "text_repetition"  -> textRepetition _,
-    "text_normalize"   -> textNormalize _,
-    "text_unicode_fix" -> textUnicodeFix _,
-    "quality_gopher"   -> qualityGopher _,
-    "text_lm_score"    -> textLmScore _,
-    "text_tfidf"       -> ((s: SparkSession, d: String) => textTfidf(s, d)),
-    "text_bm25"        -> ((s: SparkSession, d: String) => textBm25(s, d)),
-    "vocab_topk"       -> ((s: SparkSession, d: String) => vocabBuild(s, d)),
-    "text_inverted"    -> ((s: SparkSession, d: String) => textInverted(s, d)),
-    "sample_stratified" -> ((s: SparkSession, d: String) => sampleStratified(s, d)),
-  )
 
   /** lang_id's full oracle SQL (shared: the lang_id board row and the
     * lang_confusion derived subquery — also consumed by
-    * Curation.oracle("training_select")). */
+    * Curation.registry("training_select").oracle). */
   private[analytics] val langIdSql: String =
     """WITH s AS (SELECT doc_id,
           CAST(len(list_filter(string_split(text,' '), t -> t='the' OR t='a' OR t='of')) AS DOUBLE)
@@ -1263,11 +1222,11 @@ object TextAnalysis {
             AND n_stop_distinct BETWEEN 2 AND 6 AS INT) AS gopher_keep
         FROM m"""
 
-  val oracle: Map[String, String] = Map(
+  val registry: Map[String, QueryDef] = Map(
     // same stopword-boundary phrase rebuild (running stop count BEFORE
     // each token, stop rows dropped), the same (deg·10⁶) div freq word
     // quantization and total // n_occ instance-score recovery
-    "text_rake" ->
+    "text_rake" -> QueryDef(textRake _,
       """WITH t AS (
           SELECT doc_id, source, string_split(text, ' ') AS tk
           FROM documents),
@@ -1311,10 +1270,10 @@ object TextAnalysis {
               ORDER BY total // n_occ DESC, phrase) AS rn
           FROM pp)
         SELECT source, CAST(rn AS BIGINT) AS rn, phrase, n_occ, score
-        FROM ranked WHERE rn <= 5""",
+        FROM ranked WHERE rn <= 5"""),
     // same deterministic plant (1-based series → (i-1) % 8) and the
     // same three-rule CASE chain
-    "text_stem" ->
+    "text_stem" -> QueryDef(textStem _,
       """WITH tk AS (
           SELECT source, string_split(text, ' ') AS a FROM documents),
         inflected AS (
@@ -1354,9 +1313,9 @@ object TextAnalysis {
             AS n_es,
           CAST(sum(CASE WHEN rule = 's' THEN 1 ELSE 0 END) AS BIGINT)
             AS n_s
-        FROM stemmed GROUP BY source""",
+        FROM stemmed GROUP BY source"""),
     // same one-pass conditional distincts, unpivoted
-    "text_heaps" ->
+    "text_heaps" -> QueryDef(textHeaps _,
       """WITH tok AS (
           SELECT doc_id, unnest(string_split(text, ' ')) AS token
           FROM documents),
@@ -1384,17 +1343,17 @@ object TextAnalysis {
           SELECT CAST(500 AS BIGINT) AS docs, n5 AS n_tokens, v5 AS vocab FROM agg)
         SELECT docs, n_tokens, vocab,
           (vocab * 1000000) // n_tokens AS ttr_ppm
-        FROM rows_""",
+        FROM rows_"""),
     // same md5-prefix bucket arithmetic via the ('0x'||hex)::BIGINT lane
-    "text_feature_hash" ->
+    "text_feature_hash" -> QueryDef(textFeatureHash _,
       """SELECT doc_id,
           ('0x' || substr(md5(tok), 1, 6))::BIGINT % 32 AS bucket,
           count(*) AS cnt
         FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS tok
               FROM documents)
-        GROUP BY 1, 2""",
+        GROUP BY 1, 2"""),
     // same top-50 cap, distinct incidences, and multiply-through lift
-    "text_pair_lift" ->
+    "text_pair_lift" -> QueryDef(textPairLift _,
       """WITH tf AS (
           SELECT tok AS token, count(*) AS cnt FROM (
             SELECT unnest(string_split(text, ' ')) AS tok FROM documents)
@@ -1419,8 +1378,8 @@ object TextAnalysis {
         FROM pairs
         JOIN marg ma ON ma.token = tok_a
         JOIN marg mb ON mb.token = tok_b
-        CROSS JOIN nd""",
-    "text_hapax" ->
+        CROSS JOIN nd"""),
+    "text_hapax" -> QueryDef(textHapax _,
       """WITH tf AS (
           SELECT source, tok, count(*) AS tf FROM (
             SELECT source, unnest(string_split(text, ' ')) AS tok
@@ -1432,15 +1391,15 @@ object TextAnalysis {
           FROM tf GROUP BY 1)
         SELECT source, vocab, hapax,
           CAST(hapax AS DOUBLE) / CAST(vocab AS DOUBLE) AS hapax_rate
-        FROM v""",
+        FROM v"""),
     // the construction rule replayed component-wise
-    "url_parse" ->
+    "url_parse" -> QueryDef(urlParse _,
       """SELECT source || '.example.com' AS host, lang AS q_lang,
           count(*) AS n_docs,
           count(DISTINCT '/docs/' || doc_id) AS n_paths,
           min(doc_id) AS min_doc
-        FROM documents GROUP BY 1, 2""",
-    "text_blocklist" ->
+        FROM documents GROUP BY 1, 2"""),
+    "text_blocklist" -> QueryDef(textBlocklist _,
       """WITH h AS (
           SELECT source,
             len(list_filter(string_split(text, ' '),
@@ -1451,10 +1410,10 @@ object TextAnalysis {
           CAST(sum(hits) AS BIGINT) AS total_hits,
           CAST(count(CASE WHEN hits > 0 THEN 1 END) AS DOUBLE)
             / count(*) AS flag_rate
-        FROM h GROUP BY source""",
+        FROM h GROUP BY source"""),
     // same histogram-cumulative algebra: rows_before over the distinct
     // score domain, integer floor-division bucket boundaries
-    "curriculum_buckets" ->
+    "curriculum_buckets" -> QueryDef(curriculumBuckets _,
       """WITH h AS (
           SELECT n_chars AS score, count(*) AS c FROM documents GROUP BY 1),
         b AS (
@@ -1464,10 +1423,10 @@ object TextAnalysis {
               // (SELECT sum(c) FROM h) AS INT) AS bucket
           FROM h)
         SELECT doc_id, n_chars, bucket
-        FROM documents JOIN b ON n_chars = score""",
+        FROM documents JOIN b ON n_chars = score"""),
     // same algebra: per-token quantized shares, missing mass as the
     // scalar Q_g − Σcovered; all integer arithmetic (HUGEINT // )
-    "source_divergence" ->
+    "source_divergence" -> QueryDef(sourceDivergence _,
       """WITH toks AS (
           SELECT source, unnest(string_split(text, ' ')) AS tok
           FROM documents),
@@ -1493,8 +1452,8 @@ object TextAnalysis {
           CAST(sum(abs(qs.q_s - gq.q_g))
             + (max(qg_total.qg) - sum(gq.q_g)) AS BIGINT) AS l1_q
         FROM qs JOIN gq USING (tok), qg_total
-        GROUP BY qs.source""",
-    "sample_weighted" ->
+        GROUP BY qs.source"""),
+    "sample_weighted" -> QueryDef(sampleWeighted _,
       """WITH per_lang AS (
           SELECT lang, count(*) AS n_docs,
             CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS lang_tokens
@@ -1513,8 +1472,8 @@ object TextAnalysis {
         WHERE substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 6) <
           CASE WHEN keep_prob >= 1.0 THEN 'g'
             ELSE printf('%06x', CAST(floor(keep_prob * 16777216.0) AS INT))
-          END""",
-    "source_top_terms" ->
+          END"""),
+    "source_top_terms" -> QueryDef(sourceTopTerms _,
       """WITH c AS (
           SELECT source, token, count(*) AS cnt FROM (
             SELECT source, unnest(string_split(text, ' ')) AS token
@@ -1526,8 +1485,8 @@ object TextAnalysis {
             row_number() OVER (PARTITION BY source
               ORDER BY cnt DESC, token) AS rn
           FROM c)
-        WHERE rn <= 3""",
-    "mixture_weights" ->
+        WHERE rn <= 3"""),
+    "mixture_weights" -> QueryDef(mixtureWeights _,
       """WITH per_lang AS (
           SELECT lang, count(*) AS n_docs,
             CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS lang_tokens
@@ -1540,8 +1499,8 @@ object TextAnalysis {
           CAST(total_tokens AS DOUBLE) / n_langs AS target_tokens,
           least(1.0, (CAST(total_tokens AS DOUBLE) / n_langs)
             / CAST(lang_tokens AS DOUBLE)) AS keep_prob
-        FROM per_lang, t""",
-    "text_oov" ->
+        FROM per_lang, t"""),
+    "text_oov" -> QueryDef(textOov _,
       """WITH v AS (
           SELECT token FROM (
             SELECT token, count(*) AS cnt FROM (
@@ -1556,16 +1515,16 @@ object TextAnalysis {
           CAST(sum(CASE WHEN v.token IS NULL THEN 1 ELSE 0 END) AS DOUBLE)
             / CAST(count(*) AS DOUBLE) AS oov_rate
         FROM t LEFT JOIN v ON t.token = v.token
-        GROUP BY doc_id""",
-    "text_ttr" ->
+        GROUP BY doc_id"""),
+    "text_ttr" -> QueryDef(textTtr _,
       """SELECT doc_id, count(*) AS n_tokens,
           count(DISTINCT token) AS n_types,
           CAST(count(DISTINCT token) AS DOUBLE) / CAST(count(*) AS DOUBLE)
             AS ttr
         FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS token
               FROM documents)
-        GROUP BY doc_id""",
-    "source_quality" ->
+        GROUP BY doc_id"""),
+    "source_quality" -> QueryDef(sourceQuality _,
       """WITH q AS (
           SELECT source,
             len(string_split(text, ' ')) AS nt,
@@ -1581,8 +1540,8 @@ object TextAnalysis {
           count(DISTINCT fp) AS n_unique,
           CAST(count(DISTINCT fp) AS DOUBLE) / CAST(count(*) AS DOUBLE)
             AS uniq_ratio
-        FROM q GROUP BY source""",
-    "text_entropy" ->
+        FROM q GROUP BY source"""),
+    "text_entropy" -> QueryDef(textEntropy _,
       """WITH t AS (
           SELECT doc_id, unnest(string_split(text, ' ')) AS token
           FROM documents),
@@ -1591,12 +1550,12 @@ object TextAnalysis {
           CAST(sum(c * c) AS BIGINT) AS sum_sq,
           CAST(sum(c * c) AS DOUBLE)
             / CAST(sum(c) * sum(c) AS DOUBLE) AS simpson
-        FROM c GROUP BY doc_id""",
-    "text_tokens" ->
+        FROM c GROUP BY doc_id"""),
+    "text_tokens" -> QueryDef(textTokens _,
       """SELECT doc_id, len(string_split(text, ' ')) AS n_tokens,
           len(list_distinct(string_split(text, ' '))) AS n_distinct
-        FROM documents""",
-    "text_quality" ->
+        FROM documents"""),
+    "text_quality" -> QueryDef(textQuality _,
       """SELECT doc_id, n_chars,
           len(string_split(text, ' ')) AS n_tokens,
           CAST(len(list_filter(string_split(text, ' '), t -> t = 'a' OR t = 'the')) AS DOUBLE)
@@ -1606,13 +1565,13 @@ object TextAnalysis {
           ((len(string_split(text, ' ')) BETWEEN 20 AND 400)
             AND (CAST(len(list_filter(string_split(text, ' '), t -> t = 'a' OR t = 'the')) AS DOUBLE)
               / CAST(len(string_split(text, ' ')) AS DOUBLE) < 0.3))::INT AS quality_ok
-        FROM documents""",
-    "text_token_regex" ->
+        FROM documents"""),
+    "text_token_regex" -> QueryDef(textTokenRegex _,
       """SELECT doc_id,
           len(regexp_extract_all(text, '[a-zA-Z]+|[0-9]+')) AS n_word_tokens,
           len(regexp_extract_all(text, '[^a-zA-Z0-9 ]')) AS n_punct
-        FROM documents""",
-    "lang_id_margin" ->
+        FROM documents"""),
+    "lang_id_margin" -> QueryDef(langIdMargin _,
       """WITH h AS (SELECT doc_id,
           len(list_filter(string_split(text,' '), t -> t='the' OR t='a' OR t='of')) AS h_en,
           len(list_filter(string_split(text,' '), t -> t='der' OR t='die' OR t='das' OR t='und')) AS h_de,
@@ -1629,22 +1588,22 @@ object TextAnalysis {
           CAST(list_sort([h_en, h_de, h_fr, h_es])[4]
              - list_sort([h_en, h_de, h_fr, h_es])[3] AS BIGINT) AS margin_hits,
           CAST(n AS BIGINT) AS n_tokens
-        FROM h""",
-    "lang_id" -> langIdSql,
+        FROM h"""),
+    "lang_id" -> QueryDef(langId _, langIdSql),
     // the lang_id prediction joined back to the declared label (the
     // engine computes both on one scan; the oracle's doc_id join is
     // plan-shape-free)
-    "lang_confusion" ->
+    "lang_confusion" -> QueryDef(langConfusion _,
       s"""SELECT d.lang, p.pred_lang, count(*) AS n_docs,
           CAST(d.lang = p.pred_lang AS INT) AS is_match
         FROM documents d
         JOIN ($langIdSql) p USING (doc_id)
-        GROUP BY d.lang, p.pred_lang""",
-    "text_fingerprint" ->
-      "SELECT doc_id, md5(lower(text)) AS fp FROM documents",
+        GROUP BY d.lang, p.pred_lang"""),
+    "text_fingerprint" -> QueryDef(fingerprint _,
+      "SELECT doc_id, md5(lower(text)) AS fp FROM documents"),
     // token hash = ('0x' || low 15 md5 hex digits)::BIGINT; polynomial
     // fold seeded with 0 via list_reduce over [0] ++ hashes
-    "text_rolling_hash" ->
+    "text_rolling_hash" -> QueryDef(rollingHashPortable _,
       """WITH t AS (
           SELECT doc_id,
             list_transform(string_split(text, ' '),
@@ -1659,8 +1618,8 @@ object TextAnalysis {
           list_reduce(list_concat([CAST(0 AS BIGINT)], hs),
             (acc, h) -> (acc * 31 + h % 2147483647) % 2147483647) AS poly_hash,
           list_min(shs) AS winnow_fp
-        FROM t""",
-    "text_top_term" ->
+        FROM t"""),
+    "text_top_term" -> QueryDef(topTerm _,
       """WITH tok AS (
           SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents),
         tf AS (SELECT doc_id, token, count(*) AS tf FROM tok GROUP BY doc_id, token),
@@ -1671,15 +1630,15 @@ object TextAnalysis {
             row_number() OVER (PARTITION BY tf.doc_id
               ORDER BY tf.tf DESC, df.df ASC, tf.token) AS rn
           FROM tf JOIN df USING (token))
-        WHERE rn = 1""",
-    "text_bigrams" ->
+        WHERE rn = 1"""),
+    "text_bigrams" -> QueryDef(bigrams _,
       """SELECT bigram, count(*) AS cnt FROM (
           SELECT unnest(list_transform(
             generate_series(1, len(string_split(text, ' ')) - 1),
             i -> array_to_string(string_split(text, ' ')[i:i+1], ' '))) AS bigram
           FROM documents)
-        GROUP BY bigram""",
-    "gen_ngrams" ->
+        GROUP BY bigram"""),
+    "gen_ngrams" -> QueryDef(genNgrams _,
       """WITH g AS (
           SELECT doc_id, unnest(list_transform(
             generate_series(1, len(string_split(text, ' ')) - 2),
@@ -1690,13 +1649,13 @@ object TextAnalysis {
         SELECT r.gram AS gram, count(*) AS cnt,
           CAST(min(r.pos) AS INT) AS min_pos,
           count(DISTINCT doc_id) AS df
-        FROM g GROUP BY 1""",
-    "text_histogram" ->
+        FROM g GROUP BY 1"""),
+    "text_histogram" -> QueryDef(textHistogram _,
       """SELECT CAST(len(string_split(text, ' '))
             - len(string_split(text, ' ')) % 25 AS BIGINT) AS bucket,
           count(*) AS n_docs
-        FROM documents GROUP BY 1""",
-    "text_repetition" ->
+        FROM documents GROUP BY 1"""),
+    "text_repetition" -> QueryDef(textRepetition _,
       """WITH bg AS (
           SELECT doc_id, unnest(list_transform(
             generate_series(1, len(string_split(text, ' ')) - 1),
@@ -1707,8 +1666,8 @@ object TextAnalysis {
           count(*) AS n_distinct_bigrams,
           CAST(max(c) AS BIGINT) AS top_cnt,
           CAST(max(c) AS DOUBLE) / CAST(sum(c) AS DOUBLE) AS rep_ratio
-        FROM cnts GROUP BY doc_id""",
-    "text_lm_score" ->
+        FROM cnts GROUP BY doc_id"""),
+    "text_lm_score" -> QueryDef(textLmScore _,
       """WITH bg AS (
           SELECT doc_id, unnest(list_transform(
             generate_series(1, len(string_split(text, ' ')) - 1),
@@ -1719,10 +1678,10 @@ object TextAnalysis {
           CAST(sum(cnt) AS BIGINT) AS sum_freq,
           CAST(sum(cnt) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS mean_freq
         FROM bg JOIN lm USING (bigram)
-        GROUP BY doc_id""",
+        GROUP BY doc_id"""),
     // same parenthesization as the Spark expression tree: each IEEE op
     // rounds identically, so score (and rank) match bit-for-bit
-    "text_tfidf" ->
+    "text_tfidf" -> QueryDef(textTfidf(_, _),
       """WITH tok AS (
           SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents),
         tf AS (SELECT doc_id, token, count(*) AS tf FROM tok GROUP BY doc_id, token),
@@ -1736,8 +1695,8 @@ object TextAnalysis {
               ORDER BY CAST(tf.tf AS DOUBLE) * ((n.n_docs - df.df + 0.5) / (df.df + 0.5)) DESC,
                 tf.token) AS rn
           FROM tf JOIN df USING (token) CROSS JOIN n)
-        WHERE rn <= 5""",
-    "text_bm25" ->
+        WHERE rn <= 5"""),
+    "text_bm25" -> QueryDef(textBm25(_, _),
       """WITH docs AS (
           SELECT doc_id, len(string_split(text, ' ')) AS dl FROM documents),
         stats AS (SELECT count(*) AS n_docs,
@@ -1760,16 +1719,16 @@ object TextAnalysis {
           FROM tf JOIN df USING (token) CROSS JOIN stats s)
         SELECT doc_id, count(*) AS n_terms,
           CAST(sum(c) AS DOUBLE) / 1000000000.0 AS bm25
-        FROM c GROUP BY doc_id""",
-    "vocab_topk" ->
+        FROM c GROUP BY doc_id"""),
+    "vocab_topk" -> QueryDef(vocabBuild(_, _),
       """WITH c AS (
           SELECT token, count(*) AS cnt FROM (
             SELECT unnest(string_split(text, ' ')) AS token FROM documents)
           GROUP BY token ORDER BY cnt DESC, token LIMIT 100)
         SELECT CAST(row_number() OVER (ORDER BY cnt DESC, token) - 1 AS INT)
             AS token_id, token, cnt
-        FROM c""",
-    "text_inverted" ->
+        FROM c"""),
+    "text_inverted" -> QueryDef(textInverted(_, _),
       """WITH dt AS (
           SELECT DISTINCT doc_id, token FROM (
             SELECT doc_id, unnest(string_split(text, ' ')) AS token
@@ -1778,15 +1737,15 @@ object TextAnalysis {
           string_agg(CAST(doc_id AS VARCHAR), ',' ORDER BY doc_id) AS postings
         FROM dt GROUP BY token
         HAVING count(*) >= 2
-          AND count(*) * 10 <= 8 * (SELECT count(*) FROM documents)""",
+          AND count(*) * 10 <= 8 * (SELECT count(*) FROM documents)"""),
     // the identical line synthesis, integer-scaled metrics, and the
     // SAME thresholds the JSON suite declares (between is inclusive
     // on both ends, matching Expectations.between)
-    "quality_gopher" -> gopherSqlFrom("documents"),
+    "quality_gopher" -> QueryDef(qualityGopher _, gopherSqlFrom("documents")),
     // the IDENTICAL fold table (rendered 7-bit clean via chr()), the
     // same per-entry occurrence arithmetic, the same FFFD-rate gate;
     // sha256 pins the repaired text bit-exactly
-    "text_unicode_fix" -> {
+    "text_unicode_fix" -> QueryDef(textUnicodeFix _, {
       val decSql =
         s"""SELECT doc_id, ${unicodeDecSqlExpr("text", "doc_id")} AS s
         FROM documents"""
@@ -1810,21 +1769,21 @@ object TextAnalysis {
           n_bad * 1000 // n_chars_fixed AS bad_per_kchar,
           CAST(n_bad * 1000 <= n_chars_fixed AS INT) AS keep
         FROM o"""
-    },
+    }),
     // DuckDB regexp_replace is first-match-only without the 'g' flag
     // (Spark's replaces all occurrences)
-    "text_normalize" ->
+    "text_normalize" -> QueryDef(textNormalize _,
       """SELECT doc_id,
           md5(trim(regexp_replace(regexp_replace(lower(text),
             '[^a-z0-9 ]', '', 'g'), ' +', ' ', 'g'))) AS norm_fp,
           length(trim(regexp_replace(regexp_replace(lower(text),
             '[^a-z0-9 ]', '', 'g'), ' +', ' ', 'g'))) AS n_chars_norm
-        FROM documents""",
-    "sample_stratified" ->
+        FROM documents"""),
+    "sample_stratified" -> QueryDef(sampleStratified(_, _),
       """SELECT doc_id, lang, rn FROM (
           SELECT doc_id, lang, row_number() OVER (PARTITION BY lang
             ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rn
           FROM documents)
-        WHERE rn <= 40""",
+        WHERE rn <= 40"""),
   )
 }

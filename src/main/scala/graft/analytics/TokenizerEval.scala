@@ -56,14 +56,12 @@ object TokenizerEval {
         "(n_chars * 1000000) div uni_toks AS uni_cpt_ppm")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "tokenizer_fertility" -> tokenizerFertility _)
-
-  val oracle: Map[String, String] = Map(
+  val registry: Map[String, QueryDef] = Map(
     // both trainings composed: Bpe's unrolled merge rounds (words/
     // t0..t5) + pricing join (wtc/dw), and Unigram's seed + EM chain
     // + a full-vocab segmentation under the final cost map
-    "tokenizer_fertility" -> s"""${Unigram.trainSql},
+    "tokenizer_fertility" -> QueryDef(tokenizerFertility _,
+      s"""${Unigram.trainSql},
       ${Unigram.dpCtes("segall", "vocab", s"cm${Unigram.Rounds}")},
       up AS (SELECT w, len(seg) AS np FROM segall),
       ${Bpe.oracleTraining.replaceFirst("WITH ", "")}
@@ -81,5 +79,6 @@ object TokenizerEval {
         (uni_toks * 1000000) // n_words AS uni_fert_ppm,
         (n_chars * 1000000) // bpe_toks AS bpe_cpt_ppm,
         (n_chars * 1000000) // uni_toks AS uni_cpt_ppm
-      FROM bpe JOIN uni USING (source)""")
+      FROM bpe JOIN uni USING (source)"""),
+  )
 }

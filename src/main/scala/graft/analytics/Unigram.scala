@@ -241,10 +241,6 @@ object Unigram {
         col("wbits"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "bpe_unigram"     -> bpeUnigram _,
-    "unigram_rounds"  -> unigramRounds _,
-    "unigram_segment" -> unigramSegment _)
 
   // ---------------------------------------------------------------
   // DuckDB oracle: the ENTIRE training re-derived — seed inventory,
@@ -358,8 +354,9 @@ object Unigram {
         $roundCtes"""
   }
 
-  val oracle: Map[String, String] = Map(
-    "bpe_unigram" -> s"""$trainSql
+  val registry: Map[String, QueryDef] = Map(
+    "bpe_unigram" -> QueryDef(bpeUnigram _,
+      s"""$trainSql
       SELECT piece, cnt,
         CAST(length(bin(
           (SELECT sum(cnt) FROM cnt$Rounds) // greatest(cnt, 1))) AS INT)
@@ -368,20 +365,23 @@ object Unigram {
         SELECT c0.piece, coalesce(n.cnt, 0) AS cnt
         FROM chars0 c0 LEFT JOIN cnt$Rounds n USING (piece)
         UNION ALL
-        SELECT piece, cnt FROM cnt$Rounds WHERE length(piece) >= 2) u""",
-    "unigram_rounds" -> s"""$trainSql
+        SELECT piece, cnt FROM cnt$Rounds WHERE length(piece) >= 2) u"""),
+    "unigram_rounds" -> QueryDef(unigramRounds _,
+      s"""$trainSql
       ${(1 to Rounds).map { r =>
         s"""SELECT $r AS round,
           (SELECT count(DISTINCT piece) FROM
             (SELECT unnest(seg) AS piece FROM seg$r) x) AS n_pieces,
           (SELECT CAST(sum(wcnt * wbits) AS BIGINT) FROM seg$r)
             AS total_bits"""
-      }.mkString(" UNION ALL ")}""",
-    "unigram_segment" -> s"""$trainSql,
+      }.mkString(" UNION ALL ")}"""),
+    "unigram_segment" -> QueryDef(unigramSegment _,
+      s"""$trainSql,
       top AS MATERIALIZED (
         SELECT w, wcnt FROM vocab ORDER BY wcnt DESC, w LIMIT 100),
       ${dpCtes("segf", "top", s"cm$Rounds")}
       SELECT w, wcnt, array_to_string(seg, '|') AS toks_str,
         CAST(len(seg) AS INT) AS n_toks, wbits
-      FROM segf""")
+      FROM segf"""),
+  )
 }

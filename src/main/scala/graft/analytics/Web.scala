@@ -795,23 +795,12 @@ object Web {
           .otherwise(expr("verdict_key div 2")).as("match_len"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "warc_parse"        -> warcParse _,
-    "warc_gzip"         -> warcGzip _,
-    "warc_wet"          -> warcWet _,
-    "text_html_extract" -> htmlExtract _,
-    "html_metadata"     -> htmlMetadata _,
-    "url_canon_dedup"   -> urlCanonDedup _,
-    "url_robots_filter" -> urlRobotsFilter _,
-    "url_domain_cap"    -> ((s: SparkSession, d: String) => urlDomainCap(s, d)),
-  )
-
-  val oracle: Map[String, String] = Map(
+  val registry: Map[String, QueryDef] = Map(
     // the WARC construction replayed arithmetically: record counts
     // from the fetch rule, response payload sums/bytes from the size/
     // byte rules, URI lengths from the string rule, and a (fetch,
     // position)-weighted checksum a one-byte framing slip shifts
-    "warc_parse" ->
+    "warc_parse" -> QueryDef(warcParse _,
       """WITH a AS (
           SELECT doc_id, 1 + doc_id % 3 AS nf FROM documents),
         f AS (
@@ -837,12 +826,12 @@ object Web {
           CAST(ff.sp AS BIGINT) AS sum_payload,
           CAST(ff.su AS BIGINT) AS sum_uri_len,
           CAST(bb.ck AS BIGINT) AS checksum
-        FROM ff JOIN bb ON bb.doc_id = ff.doc_id""",
+        FROM ff JOIN bb ON bb.doc_id = ff.doc_id"""),
     // the gzip'd layout replays the SAME arithmetic as warc_parse —
     // compression must change nothing about the recovered records —
     // plus n_members == n_records (one gzip member per record, the
     // random-access contract the parser `require`s)
-    "warc_gzip" ->
+    "warc_gzip" -> QueryDef(warcGzip _,
       """WITH a AS (
           SELECT doc_id, 1 + doc_id % 3 AS nf FROM documents),
         f AS (
@@ -869,16 +858,16 @@ object Web {
           CAST(ff.sp AS BIGINT) AS sum_payload,
           CAST(ff.su AS BIGINT) AS sum_uri_len,
           CAST(bb.ck AS BIGINT) AS checksum
-        FROM ff JOIN bb ON bb.doc_id = ff.doc_id""",
+        FROM ff JOIN bb ON bb.doc_id = ff.doc_id"""),
     // the WET pipeline end-to-end: framing pinned by n_records,
     // extraction pinned by bit-exact recovery of the document text
     // through synth -> WARC framing -> re-frame -> extraction
-    "warc_wet" ->
+    "warc_wet" -> QueryDef(warcWet _,
       """SELECT doc_id,
           CAST(2 AS BIGINT) AS n_records,
           CAST(length(text) AS BIGINT) AS n_chars,
           sha256(text) AS wet_sha
-        FROM documents""",
+        FROM documents"""),
     // bit-exact recovery: the extractor must hand back EXACTLY the
     // original document text (sha + length), and the paragraph count
     // replays the 12-words-per-<p> synthesis rule. CORPUS
@@ -895,7 +884,7 @@ object Web {
     // 2-level suffix folds two host classes into one registrant;
     // blogspot subdomains stay separate registrants); last_kept pins
     // the kept set is the cap lowest doc_ids, not just the count
-    "url_domain_cap" ->
+    "url_domain_cap" -> QueryDef(urlDomainCap(_, _),
       """WITH u AS (
           SELECT doc_id,
             CASE CAST(doc_id % 6 AS INT)
@@ -917,12 +906,12 @@ object Web {
           CAST(min(doc_id) AS BIGINT) AS keeper,
           CAST(max(CASE WHEN rn <= 5 THEN doc_id END) AS BIGINT)
             AS last_kept
-        FROM r GROUP BY rd""",
+        FROM r GROUP BY rd"""),
     // every path class's verdict and matched-rule length stated
     // literally: override (class 2: Allow /private/ok beats Disallow
     // /private), equal-length tie (5: Allow wins), wildcard (6),
     // end-anchor hit (7) and miss (8), default-allow (0, 4)
-    "url_robots_filter" ->
+    "url_robots_filter" -> QueryDef(urlRobotsFilter _,
       """SELECT doc_id,
           CASE CAST(doc_id % 9 AS INT)
             WHEN 0 THEN '/public/a' || (doc_id % 10)
@@ -941,33 +930,33 @@ object Web {
             WHEN 1 THEN 8 WHEN 2 THEN 11 WHEN 3 THEN 4 WHEN 5 THEN 6
             WHEN 6 THEN 10 WHEN 7 THEN 7 ELSE 0 END AS BIGINT)
             AS match_len
-        FROM documents""",
-    "url_canon_dedup" ->
+        FROM documents"""),
+    "url_canon_dedup" -> QueryDef(urlCanonDedup _,
       """SELECT 'https://example.com/dAta/' || (doc_id % 50)
             || '/x%2Fy/~'
             || CASE WHEN doc_id % 13 = 0 THEN '' ELSE '?a=1&b=2' END
             AS canon_url,
           CAST(count(*) AS BIGINT) AS n_dups,
           CAST(min(doc_id) AS BIGINT) AS keeper
-        FROM documents GROUP BY doc_id % 50, doc_id % 13 = 0""",
-    "text_html_extract" ->
+        FROM documents GROUP BY doc_id % 50, doc_id % 13 = 0"""),
+    "text_html_extract" -> QueryDef(htmlExtract _,
       """SELECT doc_id,
           CAST((array_length(string_split(text, ' ')) + 11) // 12
             AS BIGINT) AS n_paras,
           CAST(length(text) AS BIGINT) AS n_chars,
           sha256(text) AS extracted_sha
-        FROM documents""",
+        FROM documents"""),
     // all four head fields stated from the construction rules —
     // including the description (first five words), which the decoy
     // comment forces the extractor to recover via real comment
     // removal, not first-regex-match luck
-    "html_metadata" ->
+    "html_metadata" -> QueryDef(htmlMetadata _,
       """SELECT doc_id,
           lang AS meta_lang,
           'Doc ' || doc_id AS title,
           array_to_string(string_split(text, ' ')[1:5], ' ')
             AS description,
           'doc ' || doc_id || ' @ ' || source AS og_title
-        FROM documents""",
+        FROM documents"""),
   )
 }

@@ -105,16 +105,9 @@ object ScaleUp {
     val srcDir  = args(0)
     val destDir = args(1)
     val factor  = args(2).toInt
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.buffer.pageSize", "4m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.ts is parquet TIMESTAMP(NANOS)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(32)
+    // events.ts is parquet TIMESTAMP(NANOS)
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
     def rd(t: String) = spark.read.parquet(s"$srcDir/$t.parquet")
     // EVERY table is written as a single flat FILE like the driver's

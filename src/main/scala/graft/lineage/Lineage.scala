@@ -28,11 +28,25 @@ object Lineage {
         "stack(3, 'raw', raw, 'curated', curated, 'rejected', rejected) " +
           "AS (layer, record_count)")
 
-  /** Full governance record with run metadata (Glue_job.py:138-140).
-    * Zone is a parameter (reference hardcodes Asia/Kolkata; default UTC
-    * for determinism — SURVEY.md §7.4). */
-  def record(validated: DataFrame, zone: String = "UTC"): DataFrame =
-    layerCounts(validated)
+  /** The pipeline's governance record with run metadata
+    * (Glue_job.py:131-140): the reference's four layer names, counted
+    * in one pass over `validated` and adjusted for the all-or-nothing
+    * gate — a FAILED `geStatus` sends every record to rejected. Zone is
+    * a parameter (reference hardcodes Asia/Kolkata; default UTC for
+    * determinism — SURVEY.md §7.4). */
+  def record(validated: DataFrame, geStatus: String = "PASSED",
+      zone: String = "UTC"): DataFrame = {
+    val failed = geStatus == "FAILED"
+    validated
+      .agg(
+        count(lit(1)).as("raw"),
+        sum(when(col("is_valid") === true, 1L).otherwise(0L)).as("ok"))
+      .selectExpr(
+        "stack(4, 'raw', raw, 'validated_total', raw, " +
+          s"'curated', ${if (failed) "0L" else "ok"}, " +
+          s"'rejected', ${if (failed) "raw" else "raw - ok"}) " +
+          "AS (layer, record_count)")
       .withColumn("pipeline_name", lit(pipelineName))
       .withColumn("run_timestamp", from_utc_timestamp(current_timestamp(), zone))
+  }
 }

@@ -54,8 +54,7 @@ object LogisticsPipeline {
       .withColumn("processed_at", from_utc_timestamp(current_timestamp(), zone))
   }
 
-  /** Full run from a raw directory. `geSample`: Some(n) reproduces the
-    * reference's n-row sampled gate; None (default) gates on all rows.
+  /** Full run from a raw directory; the gate runs on all rows.
     * `suitePath`: Some(file) loads the quality gate DECLARATIVELY from
     * a Great Expectations JSON document (the reference's
     * Validation_checks.json format, parsed by
@@ -65,8 +64,7 @@ object LogisticsPipeline {
     * semantics, spec-pinned). A malformed or unknown-typed suite file
     * fails the RUN loudly rather than gating on nothing. */
   def run(spark: SparkSession, rawPath: String, outRoot: String,
-      geSample: Option[Int] = None, zone: String = "UTC",
-      suitePath: Option[String] = None): Result = {
+      zone: String = "UTC", suitePath: Option[String] = None): Result = {
     val loaded = suitePath.fold(
       graft.expect.SuiteLoader.LoadedSuite(Expectations.referenceSuite, Nil))(
       graft.expect.SuiteLoader.loadFile)
@@ -76,24 +74,9 @@ object LogisticsPipeline {
       val curated  = Splitter.curated(validated)
       val rejected = Splitter.rejected(validated, coreCols)
 
-      val gated = geSample.fold(curated)(n => curated.limit(n))
-      val ge    = Expectations.verdictFull(gated, loaded.rowWise, loaded.agg)
+      val ge       = Expectations.verdictFull(curated, loaded.rowWise, loaded.agg)
       val (curatedF, rejectedF) = Expectations.applyVerdict(curated, rejected, ge)
-
-      // Reference layer names (Glue_job.py:131-136); counts in one pass,
-      // adjusted for the all-or-nothing gate outcome.
-      val failed = ge == "FAILED"
-      val lineage = validated
-        .agg(
-          count(lit(1)).as("raw"),
-          sum(when(col("is_valid") === true, 1L).otherwise(0L)).as("ok"))
-        .selectExpr(
-          "stack(4, 'raw', raw, 'validated_total', raw, " +
-            s"'curated', ${if (failed) "0L" else "ok"}, " +
-            s"'rejected', ${if (failed) "raw" else "raw - ok"}) " +
-            "AS (layer, record_count)")
-        .withColumn("pipeline_name", lit(Lineage.pipelineName))
-        .withColumn("run_timestamp", from_utc_timestamp(current_timestamp(), zone))
+      val lineage  = Lineage.record(validated, ge, zone)
 
       Sinks.writeCurated(curatedF, s"$outRoot/curated")
       Sinks.writeAppend(rejectedF, s"$outRoot/rejected")

@@ -14,12 +14,11 @@ import org.apache.spark.sql.functions._
 object Splitter {
 
   /** Valid records: drop bookkeeping, stamp quality flags
-    * (Glue_job.py:84-88). `flagCols` are the rule-flag columns to drop
-    * (none when Validator composed flags inline). */
-  def curated(validated: DataFrame, flagCols: Seq[String] = Nil): DataFrame =
+    * (Glue_job.py:84-88). */
+  def curated(validated: DataFrame): DataFrame =
     validated
       .filter(col("is_valid") === true)
-      .drop(flagCols :+ "is_valid" :+ "rejection_reasons": _*)
+      .drop("is_valid", "rejection_reasons")
       .withColumn("data_quality_flag", lit("VALID"))
       .withColumn("ge_validation_status", lit("PENDING"))
 

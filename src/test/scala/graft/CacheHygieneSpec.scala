@@ -4,9 +4,7 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Machine-check for the cache-lifecycle contract (r8 judge item 6):
   * builders may persist multi-consumer intermediates ONLY through
@@ -17,7 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * bound. Grep-based on purpose: a reviewer rationalizing "this one's
   * fine" still has to come here and say why.
   */
-class CacheHygieneSpec extends AnyFunSuite {
+class CacheHygieneSpec extends SparkSpec {
 
   private def mainSources: Seq[Path] =
     Files.walk(Paths.get("src/main/scala")).iterator().asScala
@@ -39,9 +37,6 @@ class CacheHygieneSpec extends AnyFunSuite {
   }
 
   test("release() unpersists and drains every tracked frame") {
-    val spark = SparkSession.builder()
-      .master("local[2]").appName("cache-hygiene")
-      .config("spark.ui.enabled", "false").getOrCreate()
     import graft.analytics.Caches
     import graft.analytics.Caches.TrackedPersist
     Caches.release() // start clean regardless of suite order

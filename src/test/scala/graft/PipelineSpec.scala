@@ -29,6 +29,29 @@ class PipelineSpec extends SparkSpec {
     LogisticsPipeline.run(spark, rawDir, outDir)
   }
 
+  /** Structural twin of the reference's Validation_checks.json, kept
+    * inline so the suite-file specs still run where the reference
+    * checkout is absent. */
+  private val twinSuiteJson =
+    """{"expectations": [
+      {"expectation_type": "expect_column_values_to_not_be_null",
+       "kwargs": {"column": "truck_id"}},
+      {"expectation_type": "expect_column_values_to_be_between",
+       "kwargs": {"column": "fuel_level", "min_value": 0, "max_value": 100}},
+      {"expectation_type": "expect_column_values_to_be_between",
+       "kwargs": {"column": "temperature", "min_value": -10, "max_value": 60}},
+      {"expectation_type": "expect_column_values_to_be_in_set",
+       "kwargs": {"column": "delivery_status",
+                  "value_set": ["in_transit", "delivered", "delayed"]}}]}"""
+
+  /** Writes a suite document to a temp file for `run(suitePath = …)`. */
+  private def suiteFile(json: String): String = {
+    val f = java.io.File.createTempFile("graft-suite", ".json")
+    f.deleteOnExit()
+    java.nio.file.Files.writeString(f.toPath, json)
+    f.getPath
+  }
+
   private val reasonsVocab = Set(
     "missing_truck_id", "fuel_level_out_of_range", "temperature_out_of_range",
     "invalid_delivery_status", "missing_lat", "missing_lon", "ge_failed")
@@ -259,19 +282,7 @@ class PipelineSpec extends SparkSpec {
       "/root/reference/great_expectations/Expectations/Validation_checks.json"
     val loaded =
       if (new java.io.File(path).exists) graft.expect.SuiteLoader.fromFile(path)
-      else graft.expect.SuiteLoader.fromJson(
-        // structural twin kept inline so the spec still runs where the
-        // reference checkout is absent
-        """{"expectations": [
-          {"expectation_type": "expect_column_values_to_not_be_null",
-           "kwargs": {"column": "truck_id"}},
-          {"expectation_type": "expect_column_values_to_be_between",
-           "kwargs": {"column": "fuel_level", "min_value": 0, "max_value": 100}},
-          {"expectation_type": "expect_column_values_to_be_between",
-           "kwargs": {"column": "temperature", "min_value": -10, "max_value": 60}},
-          {"expectation_type": "expect_column_values_to_be_in_set",
-           "kwargs": {"column": "delivery_status",
-                      "value_set": ["in_transit", "delivered", "delayed"]}}]}""")
+      else graft.expect.SuiteLoader.fromJson(twinSuiteJson)
     val expected = Expectations.referenceSuite
     assert(loaded.map(_.name) === expected.map(_.name))
     loaded.zip(expected).foreach { case (l, e) =>
@@ -294,9 +305,9 @@ class PipelineSpec extends SparkSpec {
     // the full declarative workflow: editing Validation_checks.json is
     // the reference's way of changing the gate — a run driven by the
     // actual file must be indistinguishable from the built-in suite
-    val path =
+    val ref =
       "/root/reference/great_expectations/Expectations/Validation_checks.json"
-    assume(new java.io.File(path).exists)
+    val path = if (new java.io.File(ref).exists) ref else suiteFile(twinSuiteJson)
     fixture
     val declared = LogisticsPipeline.run(spark, rawDir,
       new java.io.File("target/fixtures/out_json_suite").getAbsolutePath,
@@ -304,6 +315,30 @@ class PipelineSpec extends SparkSpec {
     assert(declared.geStatus === result.geStatus)
     assert(declared.curated.count() === result.curated.count())
     assert(declared.rejected.count() === result.rejected.count())
+  }
+
+  test("a failing suite file rejects every record and lineage follows the gate") {
+    fixture
+    val failing = suiteFile(
+      """{"expectations": [
+        {"expectation_type": "expect_column_values_to_be_between",
+         "kwargs": {"column": "fuel_level", "min_value": 0, "max_value": 1}}]}""")
+    val failed = LogisticsPipeline.run(spark, rawDir,
+      new java.io.File("target/fixtures/out_failing_suite").getAbsolutePath,
+      suitePath = Some(failing))
+    assert(failed.geStatus === "FAILED")
+    val m = failed.lineage.collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(m("curated") === 0L)
+    assert(m("raw") === n && m("validated_total") === n && m("rejected") === n)
+    assert(failed.curated.count() === 0)
+    assert(failed.rejected.count() === n)
+    // the gate moves every rule-valid record, stamped ge_failed alone;
+    // records the rules rejected keep their own reasons
+    val moved = failed.rejected
+      .filter(array_contains(col("rejection_reasons"), "ge_failed"))
+    assert(moved.count() === result.curated.count())
+    assert(moved.filter(size(col("rejection_reasons")) =!= 1).count() === 0)
   }
 
   test("SuiteLoader rejects unknown expectation types loudly") {

@@ -155,16 +155,6 @@ class PlanSpec extends SparkSpec {
       // corpus scan
       "dedup_semantic_computed", "dedup_semantic_computed_recall")
 
-  private val streaming =
-    Set("stream_hourly", "stream_session", "stream_session_multibatch",
-      "stream_append", "stream_dedup", "stream_stateful", "stream_tws",
-      "stream_static_join", "stream_stream_join", "stream_dsv2",
-      "stream_session_append", "stream_timers", "stream_mapstate",
-      "stream_init_state", "stream_list_state", "stream_join_left",
-      "stream_join_full", "stream_union", "stream_fp_dedup",
-      "stream_avro", "stream_observe", "stream_quality_gate",
-      "stream_quality_windowed", "stream_incremental_ingest")
-
   /** Audited max Exchange-hashpartitioning count per query. */
   private val exchangeBudget: Map[String, Int] = Map(
     // round-7 wave 2 —
@@ -877,9 +867,9 @@ class PlanSpec extends SparkSpec {
     * audit + partition-less-window audit, built ONCE for all tests
     * (the round-trip queries execute a file write when constructed). */
   private lazy val built: Seq[(String, String, Seq[String], Seq[String])] =
-    SparkEntry.queries.toSeq.sortBy(_._1).collect {
-      case (name, fn) if !streaming(name) =>
-        val qe = fn(spark, sfDir).queryExecution
+    SparkEntry.registry.toSeq.sortBy(_._1).collect {
+      case (name, q) if !q.streaming =>
+        val qe = q.build(spark, sfDir).queryExecution
         val hints = unboundedBroadcastHints(qe.analyzed)
         val gw = globalWindows(qe.executedPlan)
         val p = qe.executedPlan.toString
@@ -1100,14 +1090,15 @@ class PlanSpec extends SparkSpec {
     * synth-parse query must carry the explicit full-width round-robin
     * fan-out or its codec work serializes (multimodal_mjpeg measured
     * 4.5 s → 0.46 s at sf0.1 from this alone). */
+  private val mustFan = Set(
+    "multimodal_jpeg", "multimodal_gif", "multimodal_mjpeg",
+    "multimodal_bmp", "multimodal_png", "multimodal_tar",
+    "multimodal_mp4", "multimodal_wav", "multimodal_audio_gate",
+    "warc_parse", "warc_gzip", "warc_wet", "binary_codecs",
+    "multimodal_sniff", "dedup_phash", "multimodal_exif",
+    "multimodal_exif_strip", "multimodal_align")
+
   test("codec-bound synth-parse queries fan to full width before the loop") {
-    val mustFan = Set(
-      "multimodal_jpeg", "multimodal_gif", "multimodal_mjpeg",
-      "multimodal_bmp", "multimodal_png", "multimodal_tar",
-      "multimodal_mp4", "multimodal_wav", "multimodal_audio_gate",
-      "warc_parse", "warc_gzip", "warc_wet", "binary_codecs",
-      "multimodal_sniff", "dedup_phash", "multimodal_exif",
-      "multimodal_exif_strip", "multimodal_align")
     val missing = plans.collect {
       case (name, p) if mustFan(name) &&
         !p.contains("RoundRobinPartitioning") => name
@@ -1130,6 +1121,15 @@ class PlanSpec extends SparkSpec {
     val plan = observed.queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), plan)
     assert(plan.contains("CollectMetrics"), plan)
+  }
+
+  test("every budget and whitelist entry names a registered batch query") {
+    // a renamed or streaming-flagged query must not leave a stale entry
+    // behind, silently auditing nothing
+    val batch = SparkEntry.registry.collect { case (n, q) if !q.streaming => n }.toSet
+    val stale = (exchangeBudget.keySet ++ nljWhitelist ++
+      boundedHintWhitelist ++ globalWindowWhitelist ++ mustFan) -- batch
+    assert(stale.isEmpty, s"entries naming no registered batch query: $stale")
   }
 
   test("every query stays within its audited shuffle budget") {
