@@ -96,15 +96,35 @@ import org.apache.spark.sql.functions._
   * stages 1–2 are scan-side predicates; stage 3 shuffles a 32-byte
   * fingerprint + id; stage 4 is the banded MinHash candidate join
   * (ids only); stage 5 shuffles paragraph hashes + bounded index
-  * lists; stages 6–8 are scan-side predicate stacks / folds (the
-  * license rules compile to contains/regex, the classifier's 34
-  * learned longs ride in as literals); stage 9 broadcast-joins the
-  * small-by-construction eval shingle set; stage 10 broadcasts the
-  * bounded eval VECTORS and streams only the survivors' embeddings
-  * against them. Stage membership flows as ID-ONLY cached sets
+  * lists; stages 6–8 are ONE fused scan-side pass (the Gopher
+  * predicate stack, the license rules compiled to contains/regex, the
+  * classifier's 34 learned longs riding in as literals); stage 9
+  * broadcast-joins the small-by-construction eval shingle set; stage
+  * 10 broadcasts the bounded eval VECTORS and streams only the
+  * survivors' embeddings against them. Stage membership flows as ID-ONLY cached sets
   * semi-joined back to the one cached repaired corpus — document text
   * never shuffles in any stage, which is what makes the composed
   * pipeline the same 100 TB contract as its parts.
+  *
+  * One stack, five callers: [[stageSets]] is the only spelling of the
+  * ten stages. `corpus_build` and [[ReleaseComputed]] run it with the
+  * keep-best stage 4 ([[releaseBuild]]); [[IncrementalBuild]]'s
+  * old-snapshot and from-scratch runs pass the first-arrival band
+  * rule, and its delta path puts store-relative stages 3–5 between the
+  * shared [[headIds]] and [[tailIds]].
+  *
+  * Sever rule — the one checkpoint policy of every stack: a stage set
+  * is localCheckpoint'd EAGERLY when its plan holds a join, an
+  * aggregate or a text pass (ids2–ids5, the fused `flags` frame, ids9,
+  * ids10); pure filters or projections over a checkpointed leaf stay
+  * lazy (ids0, ids1, ids6–ids8). Without the severs each stage embeds
+  * its predecessors, and Catalyst re-compiles the WHOLE accumulated
+  * plan (cluster loop + Gopher/classifier expression trees) once per
+  * ledger aggregate — measured 20+ s of driver-side plan compilation
+  * at sf0.1 against ~3 s of executor work. The sets are id-only
+  * (bounded width), so the checkpoint is the cheap side of that trade
+  * at any scale. PlanSpec pins the rule on every set of the three
+  * builds.
   */
 object CorpusBuild {
 
@@ -225,14 +245,6 @@ object CorpusBuild {
           TextAnalysis.unicodeDecoratedOf(col("text"), ck)).as("ftext"))
   }
 
-  /** The U+FFFD byte-damage keep predicate over `ftext` (stage 2) —
-    * shared with the incremental build's unicode stage. */
-  private[analytics] def unicodeKeepCol: Column = {
-    val nBad = length(col("ftext")) -
-      length(regexp_replace(col("ftext"), TextAnalysis.Replacement, ""))
-    nBad * 1000 <= length(col("ftext"))
-  }
-
   /** The supplied-vector semantic screen's GLOBAL verdict set (the
     * [[vecsOf]] plant rotation vs the broadcast eval slice) — the
     * per-doc rule is population-independent, so one spelling serves
@@ -266,30 +278,18 @@ object CorpusBuild {
   private[graft] def baseOf(docs: DataFrame): DataFrame =
     decorate(v2Planted(docs))
 
-  /** One run of the pipeline: the cached base, the per-stage survivor
-    * id-sets (index 0 = all input ids), and the stage names.
-    *
-    * Every id-set is localCheckpoint'd EAGERLY (the dedup_clusters /
-    * graph-loop precedent, here for a different reason): the ledger
-    * declares 16 aggregates over these sets and each downstream stage
-    * embeds its predecessors, so without severing, Catalyst re-compiles
-    * the WHOLE accumulated plan (cluster loop + Gopher/classifier
-    * expression trees) once per aggregate — measured 20+ s of pure
-    * driver-side plan compilation at sf0.1 against ~3 s of actual
-    * executor work. The sets are id-only (bounded width), so the
-    * checkpoint is the cheap side of that trade at any scale. */
+  /** One run of the v2 pipeline per (session, corpus directory): the
+    * checkpointed base and the 11 stage sets (index 0 = all input ids).
+    * The report queries (ledger / released docs / mixture / datasheet)
+    * read the same materialized sets — a user's workflow: one pipeline
+    * job, then cheap reporting. Keyed by the OWNING SparkSession too
+    * (r13): checkpointed DataFrames are bound to the session that
+    * materialized them, so a later session in the same JVM must rebuild
+    * rather than receive dead plans. */
   private[graft] def build(s: SparkSession, d: String): (DataFrame, Seq[DataFrame]) =
-    buildMemo.getOrElseUpdate((s, d), buildOnce(s, d))
+    buildMemo.getOrElseUpdate((s, d),
+      releaseBuild(s, d, baseOf(documents(s, d)), v2SemOf(s, d)))
 
-  /** The pipeline materializes ONCE per (session, corpus directory) and
-    * the report queries (ledger / released docs / mixture / datasheet)
-    * read the same materialized stage sets — a user's workflow: one
-    * pipeline job, then cheap reporting (the trainQualityWeights memo
-    * precedent). The held state is the id-only checkpointed sets —
-    * bounded width, one long per surviving document. Keyed by the
-    * OWNING SparkSession too (r13 advice): checkpointed DataFrames are
-    * bound to the session that materialized them, so a later session
-    * in the same JVM must rebuild rather than receive dead plans. */
   private val buildMemo =
     new Caches.SessionMemo[(DataFrame, Seq[DataFrame])]
 
@@ -308,63 +308,77 @@ object CorpusBuild {
       .select(col("vec_id").as("doc_id")).distinct()
   }
 
-  private def buildOnce(s: SparkSession, d: String): (DataFrame, Seq[DataFrame]) =
-    stagedBuild(s, d, baseOf(documents(s, d)), v2SemOf(s, d))
-
-  /** The ten-stage stack over an arbitrary planted+decorated corpus,
-    * parameterized by the stage-10 screen `semOf(base, ids9) → drop
-    * ids` — ONE spelling shared by the v2 pipeline (supplied-vector
-    * screen) and [[ReleaseComputed]] (computed embeddings under the
-    * pinned IDF artifact). Stages 1–9 are byte-identical between the
-    * two. */
-  private[analytics] def stagedBuild(s: SparkSession, d: String,
+  /** The release-tier run over an arbitrary planted+decorated corpus:
+    * the checkpointed base and [[stageSets]] under the keep-best
+    * neardup rule, parameterized by the stage-10 screen — shared by the
+    * v2 pipeline (supplied vectors) and [[ReleaseComputed]] (computed
+    * embeddings under the pinned IDF artifact). */
+  private[analytics] def releaseBuild(s: SparkSession, d: String,
       base0: DataFrame,
       semOf: (DataFrame, DataFrame) => DataFrame): (DataFrame, Seq[DataFrame]) = {
-    def sever(df: DataFrame): DataFrame = df.localCheckpoint(true)
     // the repaired corpus is checkpointed too — it is what a real
     // pipeline writes back to storage after the repair pass, and every
     // stage (and the release projections) reads it
-    val base = sever(base0)
-    val ids0 = sever(base.select(col("doc_id")))
+    val base = base0.localCheckpoint(true)
+    (base, stageSets(base, base, keepBestLosers,
+      Curation.trainQualityWeights(s, d)._2, evalShinglesOf(base), semOf))
+  }
 
-    // 1. eval holdout — scan predicate
-    val ids1 = sever(base.filter(col("doc_id") >= EvalMax)
-      .select(col("doc_id")))
-
-    // 2. unicode damage gate — scan predicate on the repaired text
-    val ids2 = sever(base.join(ids1, Seq("doc_id"), "left_semi")
-      .filter(unicodeKeepCol)
-      .select(col("doc_id")))
-    val s2 = base.join(ids2, Seq("doc_id"), "left_semi")
-
-    // 3. exact dedup on the REPAIRED text — 32-byte fp shuffle
-    val ids3 = sever(s2.select(col("doc_id"), md5(col("ftext")).as("fp"))
-      .groupBy(col("fp")).agg(min(col("doc_id")).as("doc_id"))
-      .select(col("doc_id")))
-    val s3 = base.join(ids3, Seq("doc_id"), "left_semi")
-
-    // 4. near dedup: MinHash-LSH clusters, keep-best representative
-    val sh3 = s3.filter(size(toksF) >= 5)
-      .select(col("doc_id"),
-        explode(graft.functions.text.shingles(toksF, 5)).as("shingle"))
-      .distinct()
-    val clusters = Dedup.clustersOf(Dedup.minhashPairsOf(sh3))
+  /** The v2 stage-4 rule over the post-exact slice: MinHash-LSH
+    * clusters, keep the BEST member (most tokens, ties min id —
+    * dedup_keep_best); returns the losers' ids. */
+  private def keepBestLosers(s3: DataFrame): DataFrame = {
+    val clusters = Dedup.clustersOf(Dedup.minhashPairsOf(shinglesOf(s3)))
     val wBest = Window.partitionBy(col("cluster_id"))
       .orderBy(col("n_tokens").desc, col("doc_id"))
-    val losers = clusters
+    clusters
       .join(s3.select(col("doc_id"), size(toksF).cast("long").as("n_tokens")),
         Seq("doc_id"))
       .withColumn("rk", row_number().over(wBest))
       .filter(col("rk") =!= 1).select(col("doc_id"))
-    val ids4 = sever(ids3.join(losers, Seq("doc_id"), "left_anti"))
-    val s4 = base.join(ids4, Seq("doc_id"), "left_semi")
+  }
 
-    // 5. boilerplate-share gate: ≥ half already-seen paragraphs drops
-    val pa = s4.select(col("doc_id"),
-      Chunking.paraArrayOf(col("ftext"), col("ck")).as("pa")).persistTracked()
-    val ph = pa
-      .select(col("doc_id"), posexplode(col("pa")).as(Seq("idx", "para")))
-      .select(col("doc_id"), col("idx"), md5(col("para")).as("h"))
+  private def slice(base: DataFrame, ids: DataFrame): DataFrame =
+    base.join(ids, Seq("doc_id"), "left_semi")
+
+  /** Distinct per-doc 5-gram shingles over the repaired text. */
+  private[analytics] def shinglesOf(docs: DataFrame): DataFrame =
+    docs.filter(size(toksF) >= 5)
+      .select(col("doc_id"),
+        explode(graft.functions.text.shingles(toksF, 5)).as("shingle"))
+      .distinct()
+
+  /** The raw eval slice's 5-gram set — stage 9's screen (small by
+    * construction, so the stage broadcasts it). */
+  private[analytics] def evalShinglesOf(base: DataFrame): DataFrame = {
+    val rawToks = split(col("raw"), " ")
+    base.filter(col("doc_id") < EvalMax)
+      .filter(size(rawToks) >= 5)
+      .select(explode(graft.functions.text.shingles(rawToks, 5)).as("shingle"))
+      .distinct()
+  }
+
+  /** The ten-stage stack over population `pop` of the checkpointed
+    * `base`: 11 id-sets (input + one per stage). The caller supplies
+    * the stage-4 rule as `neardupLosers(s3) → ids`, the trained
+    * classifier weights, the eval shingle set and the stage-10 screen
+    * `semOf(base, ids9) → drop ids`. */
+  private[analytics] def stageSets(base: DataFrame, pop: DataFrame,
+      neardupLosers: DataFrame => DataFrame, wsum: Array[Long],
+      evsh: DataFrame,
+      semOf: (DataFrame, DataFrame) => DataFrame): Seq[DataFrame] = {
+    val head = headIds(base, pop)
+    // 3. exact dedup on the REPAIRED text — 32-byte fp shuffle
+    val ids3 = slice(base, head(2))
+      .select(col("doc_id"), md5(col("ftext")).as("fp"))
+      .groupBy(col("fp")).agg(min(col("doc_id")).as("doc_id"))
+      .select(col("doc_id")).localCheckpoint(true)
+    // 4. near dedup — the caller's rule
+    val ids4 = ids3.join(neardupLosers(slice(base, ids3)), Seq("doc_id"),
+      "left_anti").localCheckpoint(true)
+    // 5. boilerplate-share gate: an instance is removed iff a smaller
+    // (doc·1000+idx) key owns its paragraph hash
+    val (pa, ph) = paragraphsOf(base, ids4)
     val g = ph.groupBy(col("h"))
       .agg(count(lit(1)).as("n_occ"),
         min(col("doc_id") * 1000 + col("idx")).as("first_key"))
@@ -372,64 +386,80 @@ object CorpusBuild {
       .filter(col("n_occ") > 1 &&
         col("doc_id") * 1000 + col("idx") =!= col("first_key"))
       .groupBy(col("doc_id")).agg(count(lit(1)).as("n_removed"))
-    val ids5 = sever(pa.select(col("doc_id"), size(col("pa")).cast("long").as("n_paras"))
+    val ids5 = paraKeepIds(pa, removed)
+    head ++ Seq(ids3, ids4, ids5) ++ tailIds(base, ids5, wsum, evsh, semOf)
+  }
+
+  /** Stages 1–2 over population `pop`: ids0 (input), ids1 (eval
+    * holdout — a scan predicate), ids2 (the U+FFFD byte-damage gate on
+    * the repaired text). */
+  private[analytics] def headIds(base: DataFrame, pop: DataFrame): Seq[DataFrame] = {
+    val ids1 = pop.filter(col("doc_id") >= EvalMax).select(col("doc_id"))
+    val ids2 = slice(base, ids1).filter(unicodeKeepCol)
+      .select(col("doc_id")).localCheckpoint(true)
+    Seq(pop.select(col("doc_id")), ids1, ids2)
+  }
+
+  /** The U+FFFD byte-damage keep predicate over `ftext` (stage 2). */
+  private def unicodeKeepCol: Column = {
+    val nBad = length(col("ftext")) -
+      length(regexp_replace(col("ftext"), TextAnalysis.Replacement, ""))
+    nBad * 1000 <= length(col("ftext"))
+  }
+
+  /** Stage 5's inputs over the post-neardup set: the per-doc paragraph
+    * arrays `pa` (read twice, so persisted) and the (doc_id, idx, h)
+    * paragraph-instance hashes. */
+  private[analytics] def paragraphsOf(base: DataFrame,
+      ids4: DataFrame): (DataFrame, DataFrame) = {
+    val pa = slice(base, ids4).select(col("doc_id"),
+      Chunking.paraArrayOf(col("ftext"), col("ck")).as("pa")).persistTracked()
+    (pa, pa.select(col("doc_id"), posexplode(col("pa")).as(Seq("idx", "para")))
+      .select(col("doc_id"), col("idx"), md5(col("para")).as("h")))
+  }
+
+  /** Stage 5's keep rule: a doc with ≥ half its paragraph instances in
+    * `removed(doc_id, n_removed)` drops. */
+  private[analytics] def paraKeepIds(pa: DataFrame, removed: DataFrame): DataFrame =
+    pa.select(col("doc_id"), size(col("pa")).cast("long").as("n_paras"))
       .join(removed, Seq("doc_id"), "left")
       .filter(coalesce(col("n_removed"), lit(0L)) * 2 < col("n_paras"))
-      .select(col("doc_id")))
-    val s5 = base.join(ids5, Seq("doc_id"), "left_semi")
+      .select(col("doc_id")).localCheckpoint(true)
 
-    // 6. Gopher rule bundle over the repaired text
-    val ids6 = sever(TextAnalysis.qualityGopherOf(
-        s5.select(col("doc_id"), col("ftext").as("text")))
-      .filter(col("gopher_keep") === 1)
-      .select(col("doc_id")))
-    val s6 = base.join(ids6, Seq("doc_id"), "left_semi")
-
-    // 7. license gate — the markers decorate the RAW page virtually
-    // inside the predicate (ck-keyed: dup families match identically);
-    // any restrictive-rank rule match drops (≡ primary rank ≥ 3, the
-    // max-rank-primary identity). Scan-side contains/regex stack —
-    // a map pass at any scale.
-    val ids7 = sever(s6
-      .filter(!License.restrictiveCol(licDecor(col("raw"), col("ck"))))
-      .select(col("doc_id")))
-    val s7 = base.join(ids7, Seq("doc_id"), "left_semi")
-
-    // 8. trained quality classifier (averaged-perceptron vote)
-    val (_, wsum) = Curation.trainQualityWeights(s, d)
-    val ids8 = sever(Curation.classifierScored(
-        s7.select(col("doc_id"), col("ftext").as("text")), wsum)
-      .filter(col("margin") > 0)
-      .select(col("doc_id")))
-    val s8 = base.join(ids8, Seq("doc_id"), "left_semi")
-
-    // 9. eval decontamination: any shared 5-gram with the raw eval
-    // slice drops (the eval side is small by construction → broadcast)
-    val rawToks = split(col("raw"), " ")
-    val evsh = base.filter(col("doc_id") < EvalMax)
-      .filter(size(rawToks) >= 5)
-      .select(explode(graft.functions.text.shingles(rawToks, 5)).as("shingle"))
-      .distinct()
-    val sh8 = s8.filter(size(toksF) >= 5)
-      .select(col("doc_id"),
-        explode(graft.functions.text.shingles(toksF, 5)).as("shingle"))
-      .distinct()
-    val contam = sh8.join(broadcast(evsh), Seq("shingle"), "left_semi")
+  /** Stages 6–10 over the post-paragraph set (r16 fusion): gopher,
+    * license and the classifier are per-document predicates, so ONE
+    * text pass over s5 scores all three flags and yields the same
+    * stage sets as scoring each stage's slice — one scan over an
+    * id+flags frame instead of three text scans and two slice
+    * semi-joins. Stage 9 drops any doc sharing a 5-gram with `evsh`;
+    * stage 10 drops `semOf(base, ids9)`. */
+  private[analytics] def tailIds(base: DataFrame, ids5: DataFrame,
+      wsum: Array[Long], evsh: DataFrame,
+      semOf: (DataFrame, DataFrame) => DataFrame): Seq[DataFrame] = {
+    // the license markers decorate the RAW page virtually inside the
+    // predicate (ck-keyed: dup families match identically); any
+    // restrictive-rank rule match drops
+    val flags = Curation.classifierScored(
+        TextAnalysis.qualityGopherOf(
+          slice(base, ids5).select(col("doc_id"), col("ftext").as("text"),
+            (!License.restrictiveCol(licDecor(col("raw"), col("ck"))))
+              .cast("int").as("lic_ok")),
+          carry = Seq("lic_ok", "text")),
+        wsum, carry = Seq("gopher_keep", "lic_ok"))
+      .select(col("doc_id"), col("gopher_keep"), col("lic_ok"), col("accept"))
+      .localCheckpoint(true)
+    val gopher = col("gopher_keep") === 1
+    val license = gopher && col("lic_ok") === 1
+    val ids6 = flags.filter(gopher).select(col("doc_id"))
+    val ids7 = flags.filter(license).select(col("doc_id"))
+    val ids8 = flags.filter(license && col("accept") === 1).select(col("doc_id"))
+    val contam = shinglesOf(slice(base, ids8))
+      .join(broadcast(evsh), Seq("shingle"), "left_semi")
       .select(col("doc_id")).distinct()
-    val ids9 = sever(ids8.join(contam, Seq("doc_id"), "left_anti"))
-
-    // 10. semantic decontamination — the paraphrase leak: any survivor
-    // whose embedding sits at cos ≥ τ to an eval item drops. The
-    // screen itself is the injected `semOf`: the v2 instance streams
-    // survivors' SUPPLIED vectors against the broadcast eval slice
-    // (docs past the natural id range carry no embedding row and pass
-    // un-scored — embedding coverage is its own expectation); the
-    // computed instance embeds the repaired text under the pinned IDF
-    // artifact and screens that.
-    val ids10 = sever(ids9.join(semOf(base, ids9), Seq("doc_id"), "left_anti"))
-
-    (base, Seq(ids0, ids1, ids2, ids3, ids4, ids5, ids6, ids7, ids8,
-      ids9, ids10))
+    val ids9 = ids8.join(contam, Seq("doc_id"), "left_anti").localCheckpoint(true)
+    val ids10 = ids9.join(semOf(base, ids9), Seq("doc_id"), "left_anti")
+      .localCheckpoint(true)
+    Seq(ids6, ids7, ids8, ids9, ids10)
   }
 
   private[analytics] val StageNames = Seq("eval_holdout", "unicode", "exact",

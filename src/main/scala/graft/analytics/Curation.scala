@@ -569,16 +569,10 @@ object Curation {
     * each corpus directory ONCE and the classifier reuses the result
     * (a user's workflow: one training job, then scan-speed gating;
     * without the memo a board run pays the 16 rounds twice). */
-  // Deliberately keyed by DIRECTORY ONLY — exempt from the
-  // (SparkSession, dir) session-key rule the DataFrame memos follow
-  // (r13 advice / Caches.SessionMemo): the held value is plain driver
-  // Array[Long]s, not session-bound checkpointed plans, so it stays
-  // valid (and cheap) across sessions in one JVM.
-  private val weightMemo =
-    scala.collection.concurrent.TrieMap.empty[String, (Array[Long], Array[Long])]
+  private val weightMemo = new Caches.SessionMemo[(Array[Long], Array[Long])]
 
   private[graft] def trainQualityWeights(s: SparkSession, d: String): (Array[Long], Array[Long]) =
-    weightMemo.getOrElseUpdate(d, trainQualityWeightsOf(documents(s, d)))
+    weightMemo.getOrElseUpdate((s, d), trainQualityWeightsOf(documents(s, d)))
 
   /** Board query: the learned weight table — final weights and the
     * averaged-perceptron vote sums per bucket, both integer-exact and

@@ -107,9 +107,10 @@ import org.apache.spark.sql.streaming.Trigger
   * semantic screen here scores all corpus vectors once because three
   * stack replays share it; a production delta run would screen only
   * delta survivors (the per-doc rule is population-independent either
-  * way). Stage sets are id-only eager checkpoints (the corpus_build
-  * compile-severing rule); the three materialized runs memoize per
-  * (session, corpus).
+  * way). All three runs are [[CorpusBuild]]'s one stage stack: the
+  * old and from-scratch runs pass the first-arrival stage 4, the delta
+  * run its store-relative stages 3–5; every stage set follows that
+  * stack's sever rule, and the runs memoize per (session, corpus).
   */
 object IncrementalBuild {
 
@@ -148,9 +149,6 @@ object IncrementalBuild {
     * shared, far too few to light a MinHash band. */
   private[graft] val SnipTok = 20
 
-  private def toksF = split(col("ftext"), " ")
-  private def rawToks = split(col("raw"), " ")
-
   /** The planted corpus (pre-decoration): naturals + the four
     * delta-side plant arms. Decoration/repair is
     * [[CorpusBuild.decorate]] — one definition, so both builds see
@@ -180,136 +178,30 @@ object IncrementalBuild {
             ReleaseComputed.ParaRes).as("text")))
   }
 
-  /** Distinct per-doc 5-gram shingles over the repaired text. */
-  private def shinglesF(docs: DataFrame): DataFrame =
-    docs.filter(size(toksF) >= 5)
-      .select(col("doc_id"),
-        explode(graft.functions.text.shingles(toksF, 5)).as("shingle"))
-      .distinct()
-
-  private def sever(df: DataFrame): DataFrame = df.localCheckpoint(true)
-
   /** Per-doc screens shared by all three stack replays: the pinned
     * classifier weights, the eval 5-gram set, and the global semantic
     * screen's verdict set. */
   private[graft] final case class Gates(wsum: Array[Long], evsh: DataFrame,
-    semDrop: DataFrame)
-
-  /** Stages 1–2 over a population slice: holdout + unicode.
-    *
-    * `lean` (r17): the streamed ingest's PER-MICRO-BATCH replay does
-    * not return these sets to any consumer — ids0/ids1 are pure
-    * filters of the already-checkpointed batch that NOTHING downstream
-    * evaluates (only sets 2–4 feed the store slices and sets.last the
-    * ledger), so severing them spent an eager job per stage per batch
-    * materializing frames no one reads. ids2 stays severed in both
-    * modes: it is re-read as a semi-join slice key by the exact gate
-    * AND the fp store update, and a checkpointed id set broadcasts
-    * where the unsevered self-join of the batch would shuffle. The
-    * memoized one-shot paths keep full severs: their sets ARE the
-    * shared artifact many queries re-read. */
-  private def headIds(base: DataFrame, pop: DataFrame,
-      lean: Boolean = false): Seq[DataFrame] = {
-    def sv(df: DataFrame) = if (lean) df else sever(df)
-    val ids0 = sv(pop.select(col("doc_id")))
-    val ids1 = sv(pop.filter(col("doc_id") >= HoldMax)
-      .select(col("doc_id")))
-    val ids2 = sever(base.join(ids1, Seq("doc_id"), "left_semi")
-      .filter(CorpusBuild.unicodeKeepCol).select(col("doc_id")))
-    Seq(ids0, ids1, ids2)
+      semDrop: DataFrame) {
+    /** The stage-10 screen: the global verdict set, whatever the slice. */
+    def semOf: (DataFrame, DataFrame) => DataFrame = (_, _) => semDrop
   }
 
-  /** The ≥-half-removed paragraph keep rule shared by both paths. */
-  private def paraKeepIds(pa: DataFrame, removed: DataFrame): DataFrame =
-    pa.select(col("doc_id"), size(col("pa")).cast("long").as("n_paras"))
-      .join(removed, Seq("doc_id"), "left")
-      .filter(coalesce(col("n_removed"), lit(0L)) * 2 < col("n_paras"))
-      .select(col("doc_id"))
-
-  /** Stages 6–10 (all per-document) over the post-paragraph set.
-    *
-    * r16 fusion: gopher, license and the pinned-weight classifier are
-    * all PER-DOCUMENT predicates, so their flag values do not depend
-    * on which stage slice they are computed over — scoring all three
-    * in ONE text pass over s5 yields stage sets identical to the
-    * three-sliced spelling (oracle re-verified) while replacing three
-    * full text scans + two slice semi-joins with one scan over an
-    * id+flags frame. On the streamed ingest path this runs once per
-    * MICRO-BATCH, where the per-stage job overhead dominated. */
-  private def tailIds(base: DataFrame, ids5: DataFrame, g: Gates,
-      lean: Boolean = false): Seq[DataFrame] = {
-    def slice(ids: DataFrame) = base.join(ids, Seq("doc_id"), "left_semi")
-    // lean (r17): ids6–ids9 are filters/anti-joins hanging off the
-    // severed flags frame — per-micro-batch they are read at most once
-    // more (by the next stage's plan), so their eager checkpoints were
-    // four pure-overhead jobs per batch. flags (the one heavy text
-    // pass) and ids10 (the set the stream accumulates and folds) stay
-    // severed in both modes.
-    def sv(df: DataFrame) = if (lean) df else sever(df)
-    val s5 = slice(ids5)
-    val flags = sever(Curation.classifierScored(
-        TextAnalysis.qualityGopherOf(
-          s5.select(col("doc_id"), col("ftext").as("text"),
-            (!License.restrictiveCol(
-              CorpusBuild.licDecor(col("raw"), col("ck"))))
-              .cast("int").as("lic_ok")),
-          carry = Seq("lic_ok", "text")),
-        g.wsum, carry = Seq("gopher_keep", "lic_ok"))
-      .select(col("doc_id"), col("gopher_keep"), col("lic_ok"),
-        col("accept")))
-    val ids6 = sv(flags.filter(col("gopher_keep") === 1)
-      .select(col("doc_id")))
-    val ids7 = sv(flags
-      .filter(col("gopher_keep") === 1 && col("lic_ok") === 1)
-      .select(col("doc_id")))
-    val ids8 = sv(flags
-      .filter(col("gopher_keep") === 1 && col("lic_ok") === 1 &&
-        col("accept") === 1)
-      .select(col("doc_id")))
-    val s8 = slice(ids8)
-    val contam = shinglesF(s8)
-      .join(broadcast(g.evsh), Seq("shingle"), "left_semi")
-      .select(col("doc_id")).distinct()
-    val ids9 = sv(ids8.join(contam, Seq("doc_id"), "left_anti"))
-    val ids10 = sever(ids9.join(g.semDrop, Seq("doc_id"), "left_anti"))
-    Seq(ids6, ids7, ids8, ids9, ids10)
+  /** The first-arrival stage-4 rule over the post-exact slice: a doc
+    * drops iff any of its MinHash band buckets is occupied by a smaller
+    * id. */
+  private def firstArrivalLosers(s3: DataFrame): DataFrame = {
+    val bands = Dedup.minhashBandsOf(CorpusBuild.shinglesOf(s3)).persistTracked()
+    val bmin = bands.groupBy(col("band"), col("bucket"))
+      .agg(min(col("doc_id")).as("mn"))
+    bands.join(bmin, Seq("band", "bucket"))
+      .filter(col("mn") < col("doc_id")).select(col("doc_id")).distinct()
   }
 
   /** The FROM-SCRATCH first-arrival stack over an arbitrary slice:
-    * 11 id-sets (input + one per stage), each eagerly checkpointed. */
-  private def batchStack(base: DataFrame, pop: DataFrame, g: Gates): Seq[DataFrame] = {
-    def slice(ids: DataFrame) = base.join(ids, Seq("doc_id"), "left_semi")
-    val head = headIds(base, pop)
-    val s2 = slice(head(2))
-    val ids3 = sever(s2.select(col("doc_id"), md5(col("ftext")).as("fp"))
-      .groupBy(col("fp")).agg(min(col("doc_id")).as("doc_id"))
-      .select(col("doc_id")))
-    val s3 = slice(ids3)
-    // first-arrival neardup: drop iff any band bucket is occupied by
-    // a smaller id
-    val bands = Dedup.minhashBandsOf(shinglesF(s3)).persistTracked()
-    val bmin = bands.groupBy(col("band"), col("bucket"))
-      .agg(min(col("doc_id")).as("mn"))
-    val losers = bands.join(bmin, Seq("band", "bucket"))
-      .filter(col("mn") < col("doc_id")).select(col("doc_id")).distinct()
-    val ids4 = sever(ids3.join(losers, Seq("doc_id"), "left_anti"))
-    val s4 = slice(ids4)
-    // paragraph boilerplate-share (first-arrival at instance level)
-    val pa = s4.select(col("doc_id"),
-      Chunking.paraArrayOf(col("ftext"), col("ck")).as("pa")).persistTracked()
-    val ph = pa
-      .select(col("doc_id"), posexplode(col("pa")).as(Seq("idx", "para")))
-      .select(col("doc_id"), col("idx"), md5(col("para")).as("h"))
-    val pg = ph.groupBy(col("h"))
-      .agg(count(lit(1)).as("n_occ"),
-        min(col("doc_id") * 1000 + col("idx")).as("first_key"))
-    val removed = ph.join(pg, Seq("h"))
-      .filter(col("n_occ") > 1 &&
-        col("doc_id") * 1000 + col("idx") =!= col("first_key"))
-      .groupBy(col("doc_id")).agg(count(lit(1)).as("n_removed"))
-    val ids5 = sever(paraKeepIds(pa, removed))
-    head ++ Seq(ids3, ids4, ids5) ++ tailIds(base, ids5, g)
-  }
+    * [[CorpusBuild.stageSets]] with the first-arrival stage 4. */
+  private def scratchStack(base: DataFrame, pop: DataFrame, g: Gates): Seq[DataFrame] =
+    CorpusBuild.stageSets(base, pop, firstArrivalLosers, g.wsum, g.evsh, g.semOf)
 
   /** The lake's three persisted stage indexes — hashed keys only,
     * never text. fp: 16-byte repaired-text fingerprints (post-unicode
@@ -325,7 +217,7 @@ object IncrementalBuild {
     def slice(ids: DataFrame) = base.join(ids, Seq("doc_id"), "left_semi")
     Stores(
       slice(sets(2)).select(md5(col("ftext")).as("fp")).distinct(),
-      Dedup.minhashBandsOf(shinglesF(slice(sets(3))))
+      Dedup.minhashBandsOf(CorpusBuild.shinglesOf(slice(sets(3))))
         .select(col("band"), col("bucket")).distinct(),
       slice(sets(4))
         .select(explode(Chunking.paraArrayOf(col("ftext"), col("ck"))).as("para"))
@@ -342,7 +234,8 @@ object IncrementalBuild {
       oldSets: Seq[DataFrame]): Stores =
     storesMemo.getOrElseUpdate((s, d), {
       val raw = storesFrom(base, oldSets)
-      Stores(sever(raw.fp), sever(raw.band), sever(raw.para))
+      Stores(raw.fp.localCheckpoint(true), raw.band.localCheckpoint(true),
+        raw.para.localCheckpoint(true))
     })
 
   private val storesMemo = new Caches.SessionMemo[Stores]
@@ -363,38 +256,28 @@ object IncrementalBuild {
     * because crawl ids increase monotonically across batches (see
     * [[streamIncrementalIngest]]'s induction note). */
   private def deltaStackAgainst(base: DataFrame, stores: Stores,
-      pop: DataFrame, g: Gates, lean: Boolean = false): Seq[DataFrame] = {
+      pop: DataFrame, g: Gates): Seq[DataFrame] = {
     def slice(ids: DataFrame) = base.join(ids, Seq("doc_id"), "left_semi")
-    val fpStore = stores.fp
-    val bandStore = stores.band
-    val paraStore = stores.para
-
-    val head = headIds(base, pop, lean)
-    val s2 = slice(head(2))
+    val head = CorpusBuild.headIds(base, pop)
     // exact vs store, then keep-first among genuinely new fps
-    val ids3 = sever(s2.select(col("doc_id"), md5(col("ftext")).as("fp"))
-      .join(fpStore, Seq("fp"), "left_anti")
+    val ids3 = slice(head(2)).select(col("doc_id"), md5(col("ftext")).as("fp"))
+      .join(stores.fp, Seq("fp"), "left_anti")
       .groupBy(col("fp")).agg(min(col("doc_id")).as("doc_id"))
-      .select(col("doc_id")))
-    val s3 = slice(ids3)
+      .select(col("doc_id")).localCheckpoint(true)
     // neardup vs the band store, then first-arrival within the batch
-    val dB = Dedup.minhashBandsOf(shinglesF(s3)).persistTracked()
+    val dB = Dedup.minhashBandsOf(CorpusBuild.shinglesOf(slice(ids3)))
+      .persistTracked()
     val dMin = dB.groupBy(col("band"), col("bucket"))
       .agg(min(col("doc_id")).as("mn"))
-    val storeHit = dB.join(bandStore, Seq("band", "bucket"), "left_semi")
+    val storeHit = dB.join(stores.band, Seq("band", "bucket"), "left_semi")
       .select(col("doc_id"))
     val localHit = dB.join(dMin, Seq("band", "bucket"))
       .filter(col("mn") < col("doc_id")).select(col("doc_id"))
-    val ids4 = sever(ids3.join(
-      storeHit.unionByName(localHit).distinct(), Seq("doc_id"), "left_anti"))
-    val s4 = slice(ids4)
+    val ids4 = ids3.join(storeHit.unionByName(localHit).distinct(),
+      Seq("doc_id"), "left_anti").localCheckpoint(true)
     // paragraph vs the hash store (old keys are always smaller), then
     // first-arrival within the batch
-    val pa = s4.select(col("doc_id"),
-      Chunking.paraArrayOf(col("ftext"), col("ck")).as("pa")).persistTracked()
-    val ph = pa
-      .select(col("doc_id"), posexplode(col("pa")).as(Seq("idx", "para")))
-      .select(col("doc_id"), col("idx"), md5(col("para")).as("h"))
+    val (pa, ph) = CorpusBuild.paragraphsOf(base, ids4)
     val dg = ph.groupBy(col("h"))
       .agg(min(col("doc_id") * 1000 + col("idx")).as("dmin"))
     // an instance is removed iff its hash is in the store OR a smaller
@@ -405,15 +288,16 @@ object IncrementalBuild {
     // re-distinct-ing (one full store shuffle) every micro-batch.
     // (doc_id, idx) is unique in ph, so the distinct union of the two
     // condition sets counts exactly the rows the left-join counted.
-    val inStore = ph.join(paraStore, Seq("h"), "left_semi")
+    val inStore = ph.join(stores.para, Seq("h"), "left_semi")
       .select(col("doc_id"), col("idx"))
     val lateLocal = ph.join(dg, Seq("h"))
       .filter(col("doc_id") * 1000 + col("idx") > col("dmin"))
       .select(col("doc_id"), col("idx"))
     val removed = inStore.unionByName(lateLocal).distinct()
       .groupBy(col("doc_id")).agg(count(lit(1)).as("n_removed"))
-    val ids5 = sever(paraKeepIds(pa, removed))
-    head ++ Seq(ids3, ids4, ids5) ++ tailIds(base, ids5, g, lean)
+    val ids5 = CorpusBuild.paraKeepIds(pa, removed)
+    head ++ Seq(ids3, ids4, ids5) ++
+      CorpusBuild.tailIds(base, ids5, g.wsum, g.evsh, g.semOf)
   }
 
   private[graft] final case class IncrState(base: DataFrame,
@@ -439,13 +323,11 @@ object IncrementalBuild {
     * artifacts). */
   private[graft] def baseGates(s: SparkSession, d: String): (DataFrame, Gates) =
     baseMemo.getOrElseUpdate((s, d), {
-      val base = sever(CorpusBuild.decorate(planted(documents(s, d))))
+      val base = CorpusBuild.decorate(planted(documents(s, d)))
+        .localCheckpoint(true)
       val wsum = Curation.trainQualityWeights(s, d)._2
-      val evsh = sever(base.filter(col("doc_id") < HoldMax)
-        .filter(size(rawToks) >= 5)
-        .select(explode(graft.functions.text.shingles(rawToks, 5)).as("shingle"))
-        .distinct())
-      val semDrop = sever(CorpusBuild.semDropOf(s, d))
+      val evsh = CorpusBuild.evalShinglesOf(base).localCheckpoint(true)
+      val semDrop = CorpusBuild.semDropOf(s, d).localCheckpoint(true)
       (base, Gates(wsum, evsh, semDrop))
     })
 
@@ -454,7 +336,7 @@ object IncrementalBuild {
   private[graft] def oldSetsOf(s: SparkSession, d: String): Seq[DataFrame] =
     oldMemo.getOrElseUpdate((s, d), {
       val (base, g) = baseGates(s, d)
-      batchStack(base, base.filter(col("doc_id") < SnapMax), g)
+      scratchStack(base, base.filter(col("doc_id") < SnapMax), g)
     })
 
   /** The incremental delta gating against the lake's stores. */
@@ -469,7 +351,7 @@ object IncrementalBuild {
   private[graft] def scratchSetsOf(s: SparkSession, d: String): Seq[DataFrame] =
     scratchMemo.getOrElseUpdate((s, d), {
       val (base, g) = baseGates(s, d)
-      batchStack(base, base, g)
+      scratchStack(base, base, g)
     })
 
   /** Three materialized runs per (session, corpus): the old snapshot's
@@ -487,16 +369,8 @@ object IncrementalBuild {
     "gopher", "license", "classifier", "contamination", "semantic")
 
   /** The monthly batch report: the delta-only 10-row drop ledger. */
-  def corpusBuildIncremental(s: SparkSession, d: String): DataFrame = {
-    val ids = deltaSetsOf(s, d)
-    StageNames.zipWithIndex.map { case (name, i) =>
-      ids(i).agg(count(lit(1)).as("n_in"))
-        .crossJoin(ids(i + 1).agg(count(lit(1)).as("n_out")))
-        .select(lit(i + 1).as("stage_rank"), lit(name).as("stage"),
-          col("n_in"), (col("n_in") - col("n_out")).as("n_dropped"),
-          col("n_out"))
-    }.reduce(_ unionByName _)
-  }
+  def corpusBuildIncremental(s: SparkSession, d: String): DataFrame =
+    CorpusBuild.ledgerOf(deltaSetsOf(s, d), StageNames)
 
   /** The equivalence receipt: incremental(old, delta) vs
     * from-scratch(old ∪ delta), with both set differences as data —
@@ -568,10 +442,12 @@ object IncrementalBuild {
     // in-plan planned as a SortMergeJoin (2 corpus-keyed exchanges
     // each) instead of the broadcast anti-join the data warrants.
     val (old10, delta10, scratch10) = m10Memo.getOrElseUpdate((s, d), {
-      val cDrop = sever(DocEmbed.semDropComputedOf(
+      val cDrop = DocEmbed.semDropComputedOf(
         st.base.select(col("doc_id"), col("ftext").as("text")),
-        DocEmbed.pinnedIdf(s, d), HoldMax, ReleaseComputed.TauRelease))
-      def m10(ids: DataFrame) = sever(ids.join(cDrop, Seq("doc_id"), "left_anti"))
+        DocEmbed.pinnedIdf(s, d), HoldMax, ReleaseComputed.TauRelease)
+        .localCheckpoint(true)
+      def m10(ids: DataFrame) =
+        ids.join(cDrop, Seq("doc_id"), "left_anti").localCheckpoint(true)
       (m10(st.oldSets(9)), m10(st.deltaSets(9)), m10(st.scratchSets(9)))
     })
     val incr = old10.unionByName(delta10)
@@ -721,7 +597,7 @@ object IncrementalBuild {
     var fpS = st0.fp
     var bandS = st0.band
     var paraS = st0.para
-    var appended = sever(s.range(0).select(col("id").as("doc_id")))
+    var appended = s.range(0).select(col("id").as("doc_id")).localCheckpoint(true)
     val ledger = scala.collection.mutable.ListBuffer[(Long, Long, Long, String)]()
 
     val q = src.writeStream
@@ -749,9 +625,8 @@ object IncrementalBuild {
             // defaultParallelism pin made every per-batch job 32
             // near-empty tasks at test SF, the dominant share of the
             // ~20-short-jobs-per-batch chain the r16 verdict flagged
-            val b = sever(CorpusBuild.decorateAt(batch, bp))
-            val sets = deltaStackAgainst(b, Stores(fpS, bandS, paraS), b,
-              stGates, lean = true)
+            val b = CorpusBuild.decorateAt(batch, bp).localCheckpoint(true)
+            val sets = deltaStackAgainst(b, Stores(fpS, bandS, paraS), b, stGates)
             val appendedB = sets.last
             // store accumulation (r16): sever the batch-sized INCREMENTS
             // and accumulate by plain union of the severed leaves — the
@@ -767,7 +642,7 @@ object IncrementalBuild {
             // sever them concurrently so the batch's tail fills the
             // cores one job's stragglers leave idle (guide §2.6)
             val Seq(fpU, bandU, paraU) = Seq(upd.fp, upd.band, upd.para)
-              .map(df => scala.concurrent.Future(sever(df))(
+              .map(df => scala.concurrent.Future(df.localCheckpoint(true))(
                 scala.concurrent.ExecutionContext.global))
               .map(f => scala.concurrent.Await.result(f,
                 scala.concurrent.duration.Duration.Inf))

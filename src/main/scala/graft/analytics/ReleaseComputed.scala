@@ -94,11 +94,11 @@ object ReleaseComputed {
   /** One materialized run per (session, corpus) — the corpus_build
     * memo discipline: v2 plants + the paraphrase arm, stages 1–9
     * byte-identical to v2, stage 10 the computed screen. */
-  private[analytics] def build(s: SparkSession, d: String): (DataFrame, Seq[DataFrame]) =
+  private[graft] def build(s: SparkSession, d: String): (DataFrame, Seq[DataFrame]) =
     memo.getOrElseUpdate((s, d), {
       val planted = CorpusBuild.v2Planted(documents(s, d))
         .unionByName(paraPlants(s, d))
-      CorpusBuild.stagedBuild(s, d, CorpusBuild.decorate(planted),
+      CorpusBuild.releaseBuild(s, d, CorpusBuild.decorate(planted),
         computedSemOf(s, d))
     })
 

@@ -252,16 +252,7 @@ object StreamingQueries {
   private def runToMemory(s: SparkSession, df: DataFrame,
       mode: OutputMode, stateKeys: Long = 0L): DataFrame = {
     val name = "graft_stream_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    // state-store parallelism is pinned per-checkpoint at query start:
-    // at test SF, 32 shuffle partitions mean 32 state-store tasks per
-    // stateful operator PER MICRO-BATCH (task overhead dominates the
-    // multi-batch queries). 8 is right-sized for the bounded-key
-    // aggregations; queries whose keyed state is INPUT-sized (replay
-    // dedup holds one key per event) pass their key estimate and get
-    // Sizing-derived parallelism — at 100k keys the 8-partition state
-    // commit was the measured batch bottleneck (0.45 s of a 0.7 s
-    // batch), exactly the "size to state volume" rule this comment
-    // always promised.
+    // state-store parallelism: the r17 volume rule, see Sizing.statePartitions
     val statePartitions =
       Sizing.statePartitions(stateKeys, s.sparkContext.defaultParallelism)
     val q = GraftSession.withConf(s,
@@ -281,18 +272,6 @@ object StreamingQueries {
       // fails loudly instead of hanging the whole bench/test harness
       require(q.awaitTermination(StreamTimeoutMs),
         s"streaming query $name still running after ${StreamTimeoutMs} ms")
-      if (sys.env.contains("SPARK_GRAFT_STREAM_PROF"))
-        q.recentProgress.foreach { pr =>
-          System.err.println(s"[stream-prof] batch=${pr.batchId} " +
-            s"rows=${pr.numInputRows} total=${pr.batchDuration}ms " +
-            s"addBatch=${pr.durationMs.get("addBatch")} " +
-            s"getBatch=${pr.durationMs.get("getBatch")} " +
-            s"latestOffset=${pr.durationMs.get("latestOffset")} " +
-            s"queryPlanning=${pr.durationMs.get("queryPlanning")} " +
-            s"commitOffsets=${pr.durationMs.get("commitOffsets")} " +
-            s"walCommit=${pr.durationMs.get("walCommit")} " +
-            s"stateCommit=${Option(pr.stateOperators).map(_.map(o => o.commitTimeMs).sum)}")
-        }
       val sink = s.table(name)
       s.createDataFrame(sink.collectAsList(), sink.schema)
     } finally {

@@ -13,7 +13,9 @@ import org.apache.spark.sql.functions._
   * lot. A raw `.persist(` in main source is a frame nothing tracks —
   * exactly the long-lived-session accumulation the contract exists to
   * bound. Grep-based on purpose: a reviewer rationalizing "this one's
-  * fine" still has to come here and say why.
+  * fine" still has to come here and say why. The same holds for the
+  * memo table: a `TrieMap` outside Caches is a memo that neither
+  * `releaseMemos()` nor session-end eviction can reach.
   */
 class CacheHygieneSpec extends SparkSpec {
 
@@ -34,6 +36,53 @@ class CacheHygieneSpec extends SparkSpec {
     assert(offenders.isEmpty,
       s"untracked .persist( calls (use Caches.persistTracked):\n" +
         offenders.mkString("\n"))
+  }
+
+  test("no TrieMap in main source outside Caches.scala") {
+    // a hand-rolled memo map escapes releaseMemos() and the session-end
+    // eviction: every per-session artifact goes through Caches.SessionMemo
+    val offenders = mainSources.flatMap { p =>
+      val name = p.getFileName.toString
+      Files.readAllLines(p).asScala.zipWithIndex.collect {
+        case (line, i) if line.contains("TrieMap") && name != "Caches.scala" =>
+          s"$name:${i + 1}: $line"
+      }
+    }
+    assert(offenders.isEmpty,
+      s"TrieMap outside Caches (use Caches.SessionMemo):\n" +
+        offenders.mkString("\n"))
+  }
+
+  test("two memo handles never share an entry for one (session, dir)") {
+    import graft.analytics.Caches
+    val a = new Caches.SessionMemo[String]
+    val b = new Caches.SessionMemo[String]
+    assert(a.getOrElseUpdate((spark, "memo-dir"), "a") == "a")
+    assert(b.getOrElseUpdate((spark, "memo-dir"), "b") == "b")
+    assert(a.getOrElseUpdate((spark, "memo-dir"), "x") == "a")
+    assert(b.getOrElseUpdate((spark, "memo-dir"), "x") == "b")
+  }
+
+  test("releaseMemos() empties the memo table") {
+    import graft.analytics.Caches
+    val a = new Caches.SessionMemo[String]
+    a.getOrElseUpdate((spark, "memo-dir"), "a")
+    assert(Caches.memoCount > 0)
+    Caches.releaseMemos()
+    assert(Caches.memoCount == 0)
+    var evals = 0
+    assert(a.getOrElseUpdate((spark, "memo-dir"), { evals += 1; "b" }) == "b")
+    assert(evals == 1, "a released entry must be recomputed")
+  }
+
+  test("the trained classifier weights do not outlive releaseMemos()") {
+    import graft.analytics.{Caches, Curation}
+    val w1 = Curation.trainQualityWeights(spark, sfDir)
+    assert(Curation.trainQualityWeights(spark, sfDir) eq w1)
+    Caches.releaseMemos()
+    val w2 = Curation.trainQualityWeights(spark, sfDir)
+    assert(!(w2 eq w1), "a timed query must not ride weights trained earlier")
+    assert(w2._2.sameElements(w1._2), "training is deterministic")
   }
 
   test("release() unpersists and drains every tracked frame") {

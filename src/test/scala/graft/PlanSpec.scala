@@ -1132,6 +1132,40 @@ class PlanSpec extends SparkSpec {
     assert(stale.isEmpty, s"entries naming no registered batch query: $stale")
   }
 
+  test("corpus stage sets follow the sever rule") {
+    // CorpusBuild's sever rule: a set whose plan holds a join, an
+    // aggregate or a text pass is checkpointed (a LogicalRDD); every
+    // other set is Filter/Project over checkpointed leaves. A join,
+    // aggregate or generator behind an unsevered set is re-compiled by
+    // every ledger aggregate that reads it (the 20 s ledger trap).
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
+    import org.apache.spark.sql.execution.LogicalRDD
+    import graft.analytics.{CorpusBuild, IncrementalBuild, ReleaseComputed}
+    def overLeaves(p: LogicalPlan): Boolean = p match {
+      case _: LogicalRDD => true
+      case f: Filter => overLeaves(f.child)
+      case pr: Project => overLeaves(pr.child)
+      case _ => false
+    }
+    val severed = Set(2, 3, 4, 5, 9, 10)
+    val st = IncrementalBuild.build(spark, sfDir)
+    val stacks = Seq(
+      "corpus_build" -> CorpusBuild.build(spark, sfDir)._2,
+      "corpus_build_computed" -> ReleaseComputed.build(spark, sfDir)._2,
+      "incremental old" -> st.oldSets,
+      "incremental delta" -> st.deltaSets,
+      "incremental scratch" -> st.scratchSets)
+    val bad = for {
+      (name, sets) <- stacks
+      (ids, i) <- sets.zipWithIndex
+      plan = ids.queryExecution.analyzed
+      ok = if (severed(i)) plan.isInstanceOf[LogicalRDD] else overLeaves(plan)
+      if !ok
+    } yield s"$name ids$i:\n${plan.treeString.take(600)}"
+    assert(stacks.forall(_._2.size == 11))
+    assert(bad.isEmpty, bad.mkString("\n"))
+  }
+
   test("every query stays within its audited shuffle budget") {
     val over = plans.flatMap { case (name, p) =>
       val ex = "Exchange hashpartitioning".r.findAllIn(p).size
