@@ -25,6 +25,11 @@ object GraftSession {
       // "Shingle-family A/B"). Scale-safe: AQE still falls back to the
       // shuffle join when the build side is genuinely big
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
+      // events.ts has shipped as parquet TIMESTAMP(NANOS), which Spark
+      // reads only as an int64 under this flag (Tables.withEventTime
+      // normalizes either encoding); harmless for timestamp[us] files.
+      // Set once here, so no load path mutates a caller's session
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -31,6 +31,8 @@ object PlanAudit {
               (msg, msg)
           }
         val dt = (System.nanoTime() - t0) / 1e9
+        // release() also drains the tracked-frame registry (as Verify)
+        graft.analytics.Caches.release()
         spark.catalog.clearCache()
         val ex = "Exchange hashpartitioning".r.findAllIn(p).size
         if (only.forall(_.contains(name))) {

@@ -25,9 +25,10 @@ import org.apache.spark.sql.{Column, functions => F}
   * Cache-lifetime convention (advisor note, r7): queries persist()
   * multi-consumer intermediates (capped shingle universes, chi2 cells,
   * incidence tables, …) WITHOUT a paired unpersist — by design. Both
-  * harness mains (Verify.scala:39, Bench.scala:81) run
-  * `spark.catalog.clearCache()` after every query's final action, so
-  * cached blocks never accumulate across the sweep; an in-query
+  * harness mains (Verify.main and Bench's per-query loop) run
+  * `Caches.release()` and `spark.catalog.clearCache()` after every
+  * query's final action, so cached blocks never accumulate across the
+  * sweep; an in-query
   * unpersist would have to be placed AFTER the caller's action and
   * queries return un-executed DataFrames. Library users embedding these
   * plans long-lived should clear the cache at their own query
@@ -46,7 +47,8 @@ object Tables {
   def lineitem(s: SparkSession, d: String): DataFrame  = table(s, d, "lineitem")
   /** `events.ts` has shipped in two physical encodings across testdata
     * generations: parquet TIMESTAMP(NANOS) (which Spark only reads as
-    * an int64 via `nanosAsLong`) and parquet `timestamp[us]` (which
+    * an int64, under the legacy flag `GraftSession.local` sets) and
+    * parquet `timestamp[us]` (which
     * arrives as TIMESTAMP_NTZ). Branch on the type that actually loaded
     * and normalize to the same two columns either way:
     *  - `ts`    TIMESTAMP (µs precision; session tz is UTC everywhere,
@@ -79,11 +81,8 @@ object Tables {
     }
   }
 
-  def events(s: SparkSession, d: String): DataFrame = {
-    // harmless for timestamp[us] files; required to read the NANOS encoding
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  def events(s: SparkSession, d: String): DataFrame =
     withEventTime(table(s, d, "events"))
-  }
   def documents(s: SparkSession, d: String): DataFrame = table(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
 

@@ -3,6 +3,7 @@ package graft.analytics
 import graft.analytics.Caches.TrackedPersist
 import graft.GraftSession
 import graft.Tables._
+import graft.streaming.{Drain, Landing}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -543,50 +544,18 @@ object IncrementalBuild {
     // (r17 split-memo point)
     val (stBase, stGates) = baseGates(s, d)
     val stOldSets = oldSetsOf(s, d)
-    // land the monthly batches as TIME-ORDERED files (the
-    // stream_quality_windowed mtime-pin discipline: FileStreamSource
-    // orders by (modTime, path) and a failed pin degrades ordering to
-    // tie-break luck — re-stat and fail loudly)
-    // land all four monthly files in ONE write job (r16): the old
-    // spelling ran four sequential coalesce(1) write jobs, each
-    // re-deriving the plant union. Here the delta is written once,
-    // partitioned by batch number (the replay batch is a unioned
-    // duplicate of batch 0), and the per-batch files are MOVED into
-    // the source directory with explicitly pinned mtimes — the move
-    // keeps the one-file-per-batch / time-ordered contract the
-    // FileStreamSource relies on.
+    // land the three monthly batches and the replay of the first
+    // (a unioned duplicate) as four time-ordered files, one per
+    // micro-batch, in ONE write job (r16). coalesce(1): one task writes
+    // exactly one file per batch (a few thousand rows).
     val raw = planted(documents(s, d)).filter(col("doc_id") >= SnapMax)
     val batchCol = when(col("doc_id") < CopyBase, 0)
       .when(col("doc_id") < FrankenBase, 1).otherwise(2)
-    val staged = raw.withColumn("b", batchCol).unionByName(
-      raw.filter(col("doc_id") < CopyBase).withColumn("b", lit(3)))
-    val parts = graft.Tables.tempOutDir("stream_incr_parts")
-    // coalesce(1): one task writes exactly one file per partition
-    // value (a few thousand rows — the same single-task write the old
-    // per-batch coalesce(1) jobs did, minus three of the jobs)
-    staged.coalesce(1).write.partitionBy("b").parquet(parts)
-    val tmp = graft.Tables.tempOutDir("stream_incr_src")
-    val tmpDir = new java.io.File(tmp)
-    require(tmpDir.mkdirs() || tmpDir.isDirectory, s"cannot create $tmp")
-    (0 until 4).foreach { i =>
-      val fs = Option(new java.io.File(s"$parts/b=$i").listFiles())
-        .getOrElse(Array.empty).filter(_.getName.endsWith(".parquet"))
-      require(fs.length == 1,
-        s"expected exactly one parquet file for batch $i, got ${fs.length}")
-      val dst = new java.io.File(tmpDir, s"batch-$i.parquet")
-      java.nio.file.Files.move(fs(0).toPath, dst.toPath)
-      val want = 1000000000000L + i * 60000L
-      dst.setLastModified(want)
-      // a silently rejected mtime pin would degrade FileStreamSource
-      // ordering to tie-break luck — re-stat and fail loudly
-      require(dst.lastModified == want,
-        s"could not pin ${dst.getName} to batch-$i mtime $want " +
-          s"(got ${dst.lastModified}); the FileStreamSource " +
-          "time-ordering invariant would be tie-break luck")
-    }
-    val schema = s.read.parquet(tmp).schema
-    val src = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(tmp)
+    val src = Landing.land(
+      raw.withColumn("b", batchCol).unionByName(
+        raw.filter(col("doc_id") < CopyBase).withColumn("b", lit(3)))
+        .coalesce(1),
+      "b", filesPerBatch = 1, "stream_incr")
 
     // the lake's mutable state: the three stores + the appended id
     // set, re-severed per batch. The INITIAL stores are the memoized
@@ -666,9 +635,7 @@ object IncrementalBuild {
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", graft.Tables.tempOutDir("stream_incr_ckpt"))
       .start()
-    try require(q.awaitTermination(600000L),
-      "stream_incremental_ingest still running after 600 s")
-    finally if (q.isActive) q.stop()
+    Drain(q, "stream_incremental_ingest")
 
     val ledgerDf = s.createDataFrame(ledger.toSeq)
       .toDF("batch_id", "n_arrived", "n_appended", "append_fp")

@@ -1,10 +1,11 @@
 package graft.analytics
 
 import graft.GraftSession
-import graft.streaming.StreamingPipeline
+import graft.streaming.{Drain, Landing, StreamingPipeline}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
+import org.apache.spark.sql.types.StructType
 
 /** Declared queries whose results are produced by an ACTUAL
   * StreamingQuery — file source over the events parquet, AvailableNow
@@ -232,17 +233,19 @@ object StreamingQueries {
 
   /** Streamed clone of Tables.events: same schema-adaptive `ts`/`ts_ns`
     * normalization (nanos-long or timestamp[us] encodings), but through
-    * the file STREAM source. */
-  private def eventsStream(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = s.read.parquet(s"$d/events.parquet").schema
-    // the source path must be a DIRECTORY; the glob filter narrows the
-    // listing to the events table inside the shared sf dir
+    * the file STREAM source — over `dir`, which holds events files of
+    * `schema`. */
+  private def eventsStream(s: SparkSession, schema: StructType, dir: String,
+      opts: (String, String)*): DataFrame =
     graft.Tables.withEventTime(
-      s.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(d))
-  }
+      s.readStream.schema(schema).options(opts.toMap).parquet(dir))
+
+  /** The events table itself as a stream. The source path must be a
+    * DIRECTORY; the glob filter narrows the listing to the events table
+    * inside the shared sf dir. */
+  private def eventsStream(s: SparkSession, d: String): DataFrame =
+    eventsStream(s, s.read.parquet(s"$d/events.parquet").schema, d,
+      "pathGlobFilter" -> "events.parquet")
 
   /** Run a streaming aggregation to completion via a uniquely-named
     * memory sink, COPY the final result out, and drop the sink's temp
@@ -266,24 +269,13 @@ object StreamingQueries {
     }
     // the finally block must run even when the query FAILS — otherwise
     // the sink's temp view (and its retained rows) leak for the session
-    // lifetime and the stopped-query check below never happens
+    // lifetime
     try {
-      // bounded wait: a wedged micro-batch (hung executor, sink fault)
-      // fails loudly instead of hanging the whole bench/test harness
-      require(q.awaitTermination(StreamTimeoutMs),
-        s"streaming query $name still running after ${StreamTimeoutMs} ms")
+      Drain(q, name)
       val sink = s.table(name)
       s.createDataFrame(sink.collectAsList(), sink.schema)
-    } finally {
-      if (q.isActive) q.stop()
-      s.catalog.dropTempView(name)
-    }
+    } finally s.catalog.dropTempView(name)
   }
-
-  /** Generous bound for AvailableNow queries that finish in seconds at
-    * any test SF — awaitTermination without a timeout turns any wedged
-    * batch into a harness hang (ADVICE r10). */
-  private val StreamTimeoutMs = 600000L
 
   /** The 30-minute-gap session aggregation both session queries share. */
   private def sessionAgg(src: DataFrame): DataFrame =
@@ -361,7 +353,7 @@ object StreamingQueries {
     * 4-batch corpus. */
   def streamObserve(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val src = multiFileEventsStream(s, d, 4, "stream_observe_src", lit(true))
+    val src = multiFileEventsStream(s, d, "stream_observe_src", lit(true))
     val valid = graft.rules.Validator
       .validate(EventsPipeline.withKOf(src), EventsPipeline.rules)
       .filter(col("is_valid") === true)
@@ -408,16 +400,11 @@ object StreamingQueries {
           .outputMode(OutputMode.Append())
           .trigger(Trigger.AvailableNow())
           .start()
-        try {
-          // bounded wait: a wedged batch fails loudly instead of
-          // hanging the whole bench/test harness (ADVICE r10)
-          require(q.awaitTermination(StreamTimeoutMs),
-            s"stream_observe: query still running after ${StreamTimeoutMs} ms")
-        } finally if (q.isActive) q.stop()
+        Drain(q, "stream_observe")
         // listener delivery is async but IN ORDER per query — the
         // terminated event lands after every progress event, so waiting
         // for it (not a sleep) makes the accumulator read race-free
-        require(done.await(StreamTimeoutMs,
+        require(done.await(Drain.TimeoutMs,
           java.util.concurrent.TimeUnit.MILLISECONDS),
           "stream_observe: listener bus did not drain")
         acc.synchronized { acc.toSeq }
@@ -448,6 +435,19 @@ object StreamingQueries {
   def streamSession(s: SparkSession, d: String): DataFrame =
     runToMemory(s, sessionAgg(eventsStream(s, d)), OutputMode.Complete())
 
+  /** The (filtered) events table landed as 4 files, one per
+    * micro-batch, batch = pmod(event_id, 4) — the multi-micro-batch
+    * source shared by streamSessionMultiBatch and streamObserve, whose
+    * results do not depend on which rows share a batch. Hash-partitioned
+    * on the batch so each batch is one task's one file. */
+  private def multiFileEventsStream(s: SparkSession, d: String,
+      prefix: String, rowFilter: org.apache.spark.sql.Column): DataFrame =
+    Landing.land(
+      s.read.parquet(s"$d/events.parquet").filter(rowFilter)
+        .withColumn("b", pmod(col("event_id"), lit(4)))
+        .repartition(4, col("b")),
+      "b", filesPerBatch = 1, prefix)
+
   /** Cross-micro-batch stateful merging: the events table is re-written
     * as 4 parquet files into a per-invocation temp dir and streamed with
     * maxFilesPerTrigger=1, so the session aggregation runs over FOUR
@@ -455,27 +455,9 @@ object StreamingQueries {
     * store — the part of streaming sessionization a single-batch run
     * never exercises. Input is quartered (user_id % 4 = 0) to keep the
     * 4-epoch run cheap; the oracle applies the same filter. */
-  /** Rewrite the (filtered) events table as `nFiles` parquet files in
-    * a temp dir and stream them with maxFilesPerTrigger=1 — the
-    * multi-micro-batch source construction shared by
-    * streamSessionMultiBatch and streamObserve. The schema comes from
-    * the pre-write frame (identical to what is written), avoiding a
-    * redundant post-write listing + footer read. */
-  private def multiFileEventsStream(s: SparkSession, d: String,
-      nFiles: Int, prefix: String,
-      rowFilter: org.apache.spark.sql.Column): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val tmp = graft.Tables.tempOutDir(prefix)
-    val base = s.read.parquet(s"$d/events.parquet").filter(rowFilter)
-    base.repartition(nFiles).write.mode("overwrite").parquet(tmp)
-    s.readStream.schema(base.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(tmp)
-  }
-
   def streamSessionMultiBatch(s: SparkSession, d: String): DataFrame = {
     val src = graft.Tables.withEventTime(
-      multiFileEventsStream(s, d, 4, "stream_src", col("user_id") % 4 === 0))
+      multiFileEventsStream(s, d, "stream_src", col("user_id") % 4 === 0))
     runToMemory(s, sessionAgg(src), OutputMode.Complete())
   }
 
@@ -499,7 +481,6 @@ object StreamingQueries {
     * unioned result must equal the single-source aggregation, which is
     * what the oracle (same SQL as stream_hourly) checks. */
   def streamUnion(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val ev = s.read.parquet(s"$d/events.parquet")
     val dirs = Seq(0, 1).map { par =>
       val tmp = graft.Tables.tempOutDir(s"stream_union_$par")
@@ -507,9 +488,7 @@ object StreamingQueries {
         .write.mode("overwrite").parquet(tmp)
       tmp
     }
-    val schema = s.read.parquet(dirs.head).schema
-    def src(p: String): DataFrame = graft.Tables.withEventTime(
-      s.readStream.schema(schema).parquet(p))
+    def src(p: String): DataFrame = eventsStream(s, ev.schema, p)
     runToMemory(s,
       StreamingPipeline.windowedCounts(src(dirs(0)).unionByName(src(dirs(1)))),
       OutputMode.Complete())
@@ -549,37 +528,13 @@ object StreamingQueries {
     * what makes this runnable forever at 100 TB/day, unlike plain
     * dropDuplicates whose state only grows. */
   def streamDedup(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val ev = s.read.parquet(s"$d/events.parquet")
-    // ONE write job for both copies (r16): the replay copy is a
-    // unioned duplicate written under a partition column, and the two
-    // files are MOVED into the source dir with explicitly pinned
-    // mtimes — strictly stronger than the old two-sequential-jobs
-    // spelling, which relied on job-commit order for file ordering
-    val parts = graft.Tables.tempOutDir("stream_dup_parts")
-    ev.withColumn("c", lit(0)).unionByName(ev.withColumn("c", lit(1)))
-      .coalesce(1).write.partitionBy("c").parquet(parts)
-    val tmp = graft.Tables.tempOutDir("stream_dup_src")
-    val tmpDir = new java.io.File(tmp)
-    require(tmpDir.mkdirs() || tmpDir.isDirectory, s"cannot create $tmp")
-    (0 until 2).foreach { i =>
-      val fs = Option(new java.io.File(s"$parts/c=$i").listFiles())
-        .getOrElse(Array.empty).filter(_.getName.endsWith(".parquet"))
-      require(fs.length == 1,
-        s"expected one parquet file for copy $i, got ${fs.length}")
-      val dst = new java.io.File(tmpDir, s"copy-$i.parquet")
-      java.nio.file.Files.move(fs(0).toPath, dst.toPath)
-      val want = 1000000000000L + i * 60000L
-      dst.setLastModified(want)
-      require(dst.lastModified == want,
-        s"could not pin ${dst.getName} to mtime $want; the " +
-          "FileStreamSource ordering invariant would be tie-break luck")
-    }
-    val schema = s.read.parquet(tmp).schema
-    val src = graft.Tables.withEventTime(
-      s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(tmp))
+    // the replay copy is a unioned duplicate: batch 0 is the original
+    // file, batch 1 its replay, landed in order by one write job
+    val src = graft.Tables.withEventTime(Landing.land(
+      ev.withColumn("c", lit(0)).unionByName(ev.withColumn("c", lit(1)))
+        .coalesce(1),
+      "c", filesPerBatch = 1, "stream_dup"))
     val deduped = src
       .withWatermark("ts", "1 hour")
       .dropDuplicatesWithinWatermark("event_id")
@@ -913,12 +868,10 @@ object StreamingQueries {
     * (sentinel) pushes the watermark past every real window so
     * append mode flushes them all, while the sentinel's own window
     * stays open and is withheld. The only ordering the construction
-    * relies on is write-job order (each job commits before the next
-    * starts, so file mtimes put A before B before the sentinel —
-    * the sentinel must be LAST or not-yet-seen rows would be
-    * late-dropped and undercounted). */
+    * relies on is the landed batch order ([[graft.streaming.Landing]]
+    * pins A before B before the sentinel — the sentinel must be LAST
+    * or not-yet-seen rows would be late-dropped and undercounted). */
   def streamFpDedup(s: SparkSession, d: String): DataFrame = {
-    val tmp = graft.Tables.tempOutDir("stream_fp_src")
     val filesPerBatch = 8
     val docs = s.read.parquet(s"$d/documents.parquet")
     // the sentinel must postdate EVERY real arrival or the watermark
@@ -942,61 +895,22 @@ object StreamingQueries {
     val sentinel = s.sql(
       s"""SELECT CAST(-1 AS BIGINT) AS doc_id, 'zz' AS text,
            timestamp_seconds(CAST($sentinelSec AS BIGINT)) AS ts""")
-    // ONE write job for both data copies (r16): the replay copy is a
-    // unioned duplicate under a partition column; repartition(8) on
-    // the union makes each task write one file per copy, so each copy
-    // dir holds exactly filesPerBatch files (the same K-way fan-out
-    // the two sequential jobs produced). Files are MOVED into the
-    // source dir with explicitly pinned mtimes: copy A strictly before
-    // copy B strictly before the sentinel — stronger than the old
-    // job-commit-order + sentinel-only pin (sentinel-LAST is
+    // ONE write job lands copy A, copy B (the replay, a unioned
+    // duplicate) and the sentinel as batches 0, 1, 2. Sentinel-LAST is
     // load-bearing: a not-yet-seen row behind the sentinel's watermark
-    // would be late-dropped and undercounted; a silently failed pin
-    // degrades ordering to path tie-break luck — re-stat, fail loudly).
-    val parts = graft.Tables.tempOutDir("stream_fp_parts")
-    // hash-partition on doc_id, not round-robin (r17, r16 advice):
-    // both copies of a doc land in the SAME task, so every task holds
-    // rows of both copies and each copy dir gets exactly filesPerBatch
-    // files — round-robin only guaranteed that when every task drew
-    // rows of both copies by luck, and it pays a local sort
-    // (sortBeforeRepartition) this spelling skips
-    stamped.withColumn("c", lit(0))
-      .unionByName(stamped.withColumn("c", lit(1)))
-      .repartition(filesPerBatch, col("doc_id"))
-      .write.partitionBy("c").parquet(parts)
-    val tmpDir = new java.io.File(tmp)
-    require(tmpDir.mkdirs() || tmpDir.isDirectory, s"cannot create $tmp")
-    (0 until 2).foreach { c =>
-      val fs = Option(new java.io.File(s"$parts/c=$c").listFiles())
-        .getOrElse(Array.empty)
-        .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-      require(fs.length == filesPerBatch,
-        s"expected $filesPerBatch parquet files for copy $c, got ${fs.length}")
-      fs.zipWithIndex.foreach { case (f, k) =>
-        val dst = new java.io.File(tmpDir, f"copy-$c-part-$k%03d.parquet")
-        java.nio.file.Files.move(f.toPath, dst.toPath)
-        val want = 1000000000000L + c * 60000L
-        dst.setLastModified(want)
-        require(dst.lastModified == want,
-          s"could not pin ${dst.getName} to mtime $want; the " +
-            "FileStreamSource ordering invariant would be tie-break luck")
-      }
-    }
-    sentinel.coalesce(1).write.mode("append").parquet(tmp)
-    val sentinelWant = 1000000000000L + 2 * 60000L
-    Option(new java.io.File(tmp).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.getName.endsWith(".parquet") &&
-        !f.getName.startsWith("copy-"))
-      .foreach { f =>
-        f.setLastModified(sentinelWant)
-        require(f.lastModified == sentinelWant,
-          s"could not pin sentinel file ${f.getName} to $sentinelWant; " +
-            "the FileStreamSource ordering invariant would be tie-break luck")
-      }
-    val schema = s.read.parquet(tmp).schema
-    val src = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", filesPerBatch)
-      .parquet(tmp)
+    // would be late-dropped and undercounted. Hash-partitioned on doc_id,
+    // not round-robin (r17): both copies of a doc land in the SAME task,
+    // so every task holds rows of both copies and each copy gets exactly
+    // filesPerBatch files — round-robin only guaranteed that when every
+    // task drew rows of both copies by luck, and it pays a local sort
+    // (sortBeforeRepartition) this spelling skips. The one-row sentinel
+    // lands as one file.
+    val src = Landing.land(
+      stamped.withColumn("c", lit(0))
+        .unionByName(stamped.withColumn("c", lit(1)))
+        .unionByName(sentinel.withColumn("c", lit(2)))
+        .repartition(filesPerBatch, col("doc_id")),
+      "c", filesPerBatch, "stream_fp")
     val agg = src
       // digest once per token in its own projection (CollapseProject
       // keeps it un-inlined) — simhash16Col expands its argument 16×,
@@ -1088,41 +1002,15 @@ object StreamingQueries {
       .option("pathGlobFilter", "documents.parquet").parquet(d)
       .select(col("doc_id"), col("source"), col("text"))
     val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
+    // one file per doc_id range, landed in range order: a random split
+    // would race rows against a watermark advanced by later-time rows in
+    // earlier batches and drop them as late
     val nFiles = 4
-    // ONE write job for the four time-ordered files (r16): the old
-    // spelling ran four sequential filtered coalesce(1) writes, each
-    // scanning the documents table. The range predicate becomes a
-    // partition column (b = doc_id·4 div (maxId+1) — identical row
-    // assignment), one single-task job writes one file per range, and
-    // the files are MOVED into the source dir with pinned mtimes.
-    // Arrival order stays explicit: the file source replays files by
-    // (modTime, path), and a silently rejected mtime pin would degrade
-    // ordering to sub-second tie-break luck — later-time rows could
-    // race into earlier batches and be late-dropped. Re-stat and fail
-    // loudly (the sentinel-pinning rule, r9/r15 advisors).
-    val parts = graft.Tables.tempOutDir("stream_qwin_parts")
-    docs.withColumn("b",
-        expr(s"CAST((doc_id * $nFiles) div ${maxId + 1} AS INT)"))
-      .coalesce(1).write.partitionBy("b").parquet(parts)
-    val tmp = graft.Tables.tempOutDir("stream_qwin")
-    val tmpDir = new java.io.File(tmp)
-    require(tmpDir.mkdirs() || tmpDir.isDirectory, s"cannot create $tmp")
-    (0 until nFiles).foreach { i =>
-      val fs = Option(new java.io.File(s"$parts/b=$i").listFiles())
-        .getOrElse(Array.empty).filter(_.getName.endsWith(".parquet"))
-      require(fs.length == 1,
-        s"expected one parquet file for batch $i, got ${fs.length}")
-      val dst = new java.io.File(tmpDir, s"batch-$i.parquet")
-      java.nio.file.Files.move(fs(0).toPath, dst.toPath)
-      val want = 1000000000000L + i * 60000L
-      dst.setLastModified(want)
-      require(dst.lastModified == want,
-        s"could not pin ${dst.getName} to batch-$i mtime $want " +
-          s"(got ${dst.lastModified}); the FileStreamSource " +
-          "time-ordering invariant would be tie-break luck")
-    }
-    val src = s.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", 1).parquet(tmp)
+    val src = Landing.land(
+      docs.withColumn("b",
+          expr(s"CAST((doc_id * $nFiles) div ${maxId + 1} AS INT)"))
+        .coalesce(1),
+      "b", filesPerBatch = 1, "stream_qwin")
     val (_, wsum) = Curation.trainQualityWeights(s, d)
     val fanned = src.repartition(s.sparkContext.defaultParallelism)
     val scored = Curation.classifierScored(fanned, wsum,

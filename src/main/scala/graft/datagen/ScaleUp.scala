@@ -106,8 +106,6 @@ object ScaleUp {
     val destDir = args(1)
     val factor  = args(2).toInt
     val spark = graft.GraftSession.local(32)
-    // events.ts is parquet TIMESTAMP(NANOS)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
     def rd(t: String) = spark.read.parquet(s"$srcDir/$t.parquet")
     // EVERY table is written as a single flat FILE like the driver's

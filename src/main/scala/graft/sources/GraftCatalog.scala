@@ -17,7 +17,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** A DataSource V2 `TableCatalog` over a directory of parquet tables —
   * the catalog tier of the connector family (SeqSource = batch read,
-  * MemTable = two-phase-commit write, SeqMicroBatchStream = streaming;
+  * MemTable = two-phase-commit write, RangeMicroBatchStream = streaming;
   * this is the name-resolution face that lets plain SQL reach them:
   * `SELECT ... FROM graft.data.orders`).
   *

@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxRows, SupportsAdmissionControl, SupportsTriggerAvailableNow}
+import org.apache.spark.sql.connector.read.streaming.MicroBatchStream
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -111,13 +111,6 @@ private[sources] class KafkaShapedTable(messages: Long, parts: Int,
     () => new KafkaShapedScan(messages, parts, topic, maxPer)
 }
 
-private[sources] final case class KafkaShapedOffset(n: Long) extends Offset {
-  override def json(): String = n.toString
-}
-
-private[sources] case class KafkaShapedSlice(lo: Long, hi: Long)
-    extends InputPartition
-
 private[sources] class KafkaShapedScan(messages: Long, parts: Int,
     topic: String, maxPer: Long) extends Scan with Batch {
   override def readSchema(): StructType = KafkaShapedSource.schema
@@ -126,72 +119,20 @@ private[sources] class KafkaShapedScan(messages: Long, parts: Int,
   override def toBatch: Batch = this
 
   override def planInputPartitions(): Array[InputPartition] =
-    KafkaShapedScan.slices(0L, messages, parts)
+    RangeSlice.slices(0L, messages, parts)
   override def createReaderFactory(): PartitionReaderFactory =
     new KafkaShapedReaderFactory(topic, parts)
 
+  /** Bounded drain: offsets are global admitted-message counts; each
+    * batch's end = min(messages, start + maxPer). */
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-    new KafkaShapedMicroBatchStream(messages, parts, topic, maxPer)
-}
-
-private[sources] object KafkaShapedScan {
-  def slices(lo: Long, hi: Long, parts: Int): Array[InputPartition] = {
-    val n = math.max(0L, hi - lo)
-    val chunk = math.max(1L, (n + parts - 1) / parts)
-    (0 until parts).iterator
-      .map(i => KafkaShapedSlice(lo + i * chunk, math.min(hi, lo + (i + 1) * chunk)))
-      .filter(p => p.lo < p.hi)
-      .toArray
-  }
-}
-
-/** Bounded-drain micro-batch stream: offsets are global admitted-message
-  * counts; each batch's end = min(pinned target, start + maxPer). */
-private[sources] class KafkaShapedMicroBatchStream(messages: Long, parts: Int,
-    topic: String, maxPer: Long) extends MicroBatchStream
-    with SupportsAdmissionControl with SupportsTriggerAvailableNow {
-
-  private var target: Long = messages
-
-  override def prepareForTriggerAvailableNow(): Unit = target = messages
-
-  override def getDefaultReadLimit: ReadLimit = ReadLimit.maxRows(maxPer)
-
-  override def initialOffset(): Offset = KafkaShapedOffset(0L)
-
-  override def latestOffset(): Offset =
-    throw new UnsupportedOperationException(
-      "latestOffset(Offset, ReadLimit) should be called instead")
-
-  override def latestOffset(startOffset: Offset, limit: ReadLimit): Offset = {
-    val start = startOffset.asInstanceOf[KafkaShapedOffset].n
-    val cap = limit match {
-      case m: ReadMaxRows => math.min(target, start + m.maxRows())
-      case _              => target
-    }
-    KafkaShapedOffset(math.max(start, cap))
-  }
-
-  override def reportLatestOffset(): Offset = KafkaShapedOffset(target)
-
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] =
-    KafkaShapedScan.slices(
-      start.asInstanceOf[KafkaShapedOffset].n,
-      end.asInstanceOf[KafkaShapedOffset].n, parts)
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new KafkaShapedReaderFactory(topic, parts)
-
-  override def deserializeOffset(json: String): Offset =
-    KafkaShapedOffset(json.toLong)
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
+    new RangeMicroBatchStream(0L, messages, parts, maxPer, createReaderFactory())
 }
 
 private[sources] class KafkaShapedReaderFactory(topic: String, parts: Int)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[KafkaShapedSlice]
+    val p = partition.asInstanceOf[RangeSlice]
     val topicUtf = UTF8String.fromString(topic)
     new PartitionReader[InternalRow] {
       private var i = p.lo - 1

@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxRows, SupportsAdmissionControl, SupportsTriggerAvailableNow}
+import org.apache.spark.sql.connector.read.streaming.MicroBatchStream
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -129,86 +129,13 @@ private[sources] class SeqScan(lo: Long, hi: Long, parts: Int,
   override def toBatch: Batch = this
 
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-    new SeqMicroBatchStream(lo, hi, parts, schema, batchRows)
+    new RangeMicroBatchStream(lo, hi, parts, batchRows, createReaderFactory())
 
-  override def planInputPartitions(): Array[InputPartition] = {
-    val n = math.max(0L, hi - lo)
-    val chunk = math.max(1L, (n + parts - 1) / parts)
-    (0 until parts).iterator
-      .map(i => SeqPartition(lo + i * chunk, math.min(hi, lo + (i + 1) * chunk)))
-      .filter(p => p.lo < p.hi)
-      .toArray
-  }
+  override def planInputPartitions(): Array[InputPartition] =
+    RangeSlice.slices(lo, hi, parts)
 
   override def createReaderFactory(): PartitionReaderFactory =
     new SeqReaderFactory(schema.fieldNames)
-}
-
-private[sources] case class SeqPartition(lo: Long, hi: Long) extends InputPartition
-
-private[sources] final case class SeqOffset(n: Long) extends Offset {
-  override def json(): String = n.toString
-}
-
-/** The streaming face of the connector: the same deterministic range,
-  * admitted in bounded micro-batches. Implements the two interfaces a
-  * production rate-limited source needs:
-  *
-  *  - `SupportsAdmissionControl`: each batch's end offset is
-  *    min(target, start + batchRows) — backpressure as the SOURCE's
-  *    contract (the reference caps its poll loop the same way,
-  *    /root/reference/Kafka/Consumer/consumer_etl.py:30-53).
-  *  - `SupportsTriggerAvailableNow`: pins the target offset at query
-  *    start, so AvailableNow drains exactly the rows that existed then,
-  *    across as many micro-batches as the admission limit implies, and
-  *    terminates.
-  *
-  * Offsets are plain row counts — restart-safe by construction (the
-  * generator is pure, so replaying [start, end) is idempotent). */
-private[sources] class SeqMicroBatchStream(lo: Long, hi: Long, parts: Int,
-    schema: StructType, batchRows: Long) extends MicroBatchStream
-    with SupportsAdmissionControl with SupportsTriggerAvailableNow {
-
-  private var target: Long = hi
-
-  override def prepareForTriggerAvailableNow(): Unit = target = hi
-
-  override def getDefaultReadLimit: ReadLimit = ReadLimit.maxRows(batchRows)
-
-  override def initialOffset(): Offset = SeqOffset(lo)
-
-  override def latestOffset(): Offset =
-    throw new UnsupportedOperationException(
-      "latestOffset(Offset, ReadLimit) should be called instead")
-
-  override def latestOffset(startOffset: Offset, limit: ReadLimit): Offset = {
-    val start = startOffset.asInstanceOf[SeqOffset].n
-    val cap = limit match {
-      case m: ReadMaxRows => math.min(target, start + m.maxRows())
-      case _              => target
-    }
-    SeqOffset(math.max(start, cap))
-  }
-
-  override def reportLatestOffset(): Offset = SeqOffset(target)
-
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[SeqOffset].n
-    val e = end.asInstanceOf[SeqOffset].n
-    val n = math.max(0L, e - s)
-    val chunk = math.max(1L, (n + parts - 1) / parts)
-    (0 until parts).iterator
-      .map(i => SeqPartition(s + i * chunk, math.min(e, s + (i + 1) * chunk)))
-      .filter(p => p.lo < p.hi)
-      .toArray
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new SeqReaderFactory(schema.fieldNames)
-
-  override def deserializeOffset(json: String): Offset = SeqOffset(json.toLong)
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
 }
 
 /** Ships only the pruned column list to executors; each reader computes
@@ -216,7 +143,7 @@ private[sources] class SeqMicroBatchStream(lo: Long, hi: Long, parts: Int,
 private[sources] class SeqReaderFactory(cols: Array[String])
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[SeqPartition]
+    val p = partition.asInstanceOf[RangeSlice]
     new PartitionReader[InternalRow] {
       private var id   = p.lo - 1
       private val row  = new GenericInternalRow(cols.length)

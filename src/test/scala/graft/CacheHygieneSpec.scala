@@ -53,6 +53,23 @@ class CacheHygieneSpec extends SparkSpec {
         offenders.mkString("\n"))
   }
 
+  test("each streaming harness decision is spelled in one main file") {
+    // the ordered landing (mtime pins), the range micro-batch stream, the
+    // bounded drain and the events-encoding conf each live behind one
+    // module; a second spelling is a fix that must be re-applied site by
+    // site
+    val tokens = Seq("setLastModified", "extends MicroBatchStream",
+      "awaitTermination(", "nanosAsLong")
+    val spread = tokens.map { tok =>
+      tok -> mainSources.filter(p =>
+        Files.readAllLines(p).asScala.exists(_.contains(tok)))
+        .map(_.getFileName.toString).sorted
+    }.filter(_._2.size != 1)
+    assert(spread.isEmpty, "expected each in exactly one file under " +
+      "src/main/scala:\n" + spread.map { case (tok, fs) =>
+        s"`$tok`: ${fs.size} files ${fs.mkString(", ")}" }.mkString("\n"))
+  }
+
   test("two memo handles never share an entry for one (session, dir)") {
     import graft.analytics.Caches
     val a = new Caches.SessionMemo[String]

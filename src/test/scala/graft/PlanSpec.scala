@@ -865,17 +865,24 @@ class PlanSpec extends SparkSpec {
 
   /** Each query's physical-plan string + analyzed-plan broadcast-hint
     * audit + partition-less-window audit, built ONCE for all tests
-    * (the round-trip queries execute a file write when constructed). */
-  private lazy val built: Seq[(String, String, Seq[String], Seq[String])] =
-    SparkEntry.registry.toSeq.sortBy(_._1).collect {
+    * (the round-trip queries execute a file write when constructed).
+    * Each query's frames are released at its boundary, as Verify does,
+    * so the tracked-frame registry holds none of them afterwards. */
+  private lazy val built: Seq[(String, String, Seq[String], Seq[String])] = {
+    val b = SparkEntry.registry.toSeq.sortBy(_._1).collect {
       case (name, q) if !q.streaming =>
         val qe = q.build(spark, sfDir).queryExecution
         val hints = unboundedBroadcastHints(qe.analyzed)
         val gw = globalWindows(qe.executedPlan)
         val p = qe.executedPlan.toString
+        graft.analytics.Caches.release()
         spark.catalog.clearCache()
         (name, p, hints, gw)
     }
+    assert(graft.analytics.Caches.trackedCount == 0,
+      "the audit loop must drain the tracked-frame registry")
+    b
+  }
 
   private lazy val plans: Seq[(String, String)] =
     built.map(t => (t._1, t._2))

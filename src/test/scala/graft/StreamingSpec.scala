@@ -601,6 +601,32 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
+  test("streaming queries leave the session as they found it") {
+    // the spec session sets the events-encoding flag at build; unset it
+    // so a query that sets it on load shows up as a conf change
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val prev = spark.conf.getAll.get(key)
+    spark.conf.unset(key)
+    try {
+      val conf0 = spark.conf.getAll
+      val listeners0 = spark.streams.listListeners().toSeq
+      Seq("stream_dedup", "stream_fp_dedup", "stream_quality_windowed",
+        "stream_observe", "stream_session_multibatch", "stream_union")
+        .foreach { name =>
+          SparkEntry.registry(name).build(spark, sfDir).collect()
+          val conf = spark.conf.getAll.toSet
+          val changed = (conf diff conf0.toSet) ++ (conf0.toSet diff conf)
+          assert(changed.isEmpty, s"$name changed the session conf: $changed")
+          assert(spark.streams.active.isEmpty, s"$name left a query running")
+          val views = spark.catalog.listTables().collect().map(_.name)
+            .filter(_.startsWith("graft_stream_"))
+          assert(views.isEmpty, s"$name left sink views ${views.mkString(",")}")
+          assert(spark.streams.listListeners().toSeq == listeners0,
+            s"$name left a streaming listener registered")
+        }
+    } finally prev.foreach(spark.conf.set(key, _))
+  }
+
   test("stateful refuel detector finds fuel jumps per truck in seq order") {
     import spark.implicits._
     val readings = Seq(
