@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.{Failure, Success, Try}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.analytics._
@@ -44,4 +46,35 @@ object SparkEntry {
     * the same parquet tables. */
   def oracleSql: Map[String, String] =
     registry.map { case (n, q) => n -> q.oracle }
+
+  /** The default name list of every harness walk: the registry's names,
+    * sorted, narrowed to the comma-separated `SPARK_GRAFT_ONLY` list
+    * when that is set, else minus `skip`. An explicit selection
+    * overrides the skip list, so a stale skip list in the environment
+    * cannot silently empty a single-query profiling run. */
+  def selected(skip: Set[String] = Set.empty): Seq[String] = {
+    val all = registry.keys.toSeq.sorted
+    sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
+      .fold(all.filterNot(skip))(sel => all.filter(sel))
+  }
+
+  /** The one registry walk every harness runs (Bench, Verify, PlanSpec):
+    * for each of `names` in order, `act` gets the name and the query's
+    * builder bound to (`spark`, `sfDir`); a failure is logged and
+    * captured, never thrown, so one bad query cannot end the walk; and
+    * `Caches.endQuery(spark, standalone)` runs after every query. */
+  def walk[A](spark: SparkSession, sfDir: String, names: Seq[String],
+      standalone: Boolean)(act: (String, () => DataFrame) => A): Seq[(String, Try[A])] =
+    names.map { name =>
+      val q = registry(name)
+      val r =
+        try Success(act(name, () => q.build(spark, sfDir)))
+        catch { case e: Throwable =>
+          System.err.println(s"[walk] $name FAILED: ${e.getMessage}")
+          e.printStackTrace()
+          Failure(e)
+        }
+      Caches.endQuery(spark, standalone)
+      name -> r
+    }
 }

@@ -24,14 +24,13 @@ import org.apache.spark.sql.{Column, functions => F}
   *
   * Cache-lifetime convention (advisor note, r7): queries persist()
   * multi-consumer intermediates (capped shingle universes, chi2 cells,
-  * incidence tables, …) WITHOUT a paired unpersist — by design. Both
-  * harness mains (Verify.main and Bench's per-query loop) run
-  * `Caches.release()` and `spark.catalog.clearCache()` after every
-  * query's final action, so cached blocks never accumulate across the
-  * sweep; an in-query
-  * unpersist would have to be placed AFTER the caller's action and
-  * queries return un-executed DataFrames. Library users embedding these
-  * plans long-lived should clear the cache at their own query
+  * incidence tables, …) WITHOUT a paired unpersist — by design. Every
+  * harness walk (`SparkEntry.walk`) runs the query boundary
+  * `Caches.endQuery` after each query's final action, so cached blocks
+  * never accumulate across the sweep; an in-query unpersist would have
+  * to be placed AFTER the caller's action and queries return
+  * un-executed DataFrames. Library users embedding these plans
+  * long-lived should call `Caches.endQuery` at their own query
   * boundaries the same way.
   */
 object Tables {

@@ -7,27 +7,14 @@ object Verify {
     val Array(sfDir, outDir) = args
     val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     new java.io.File(outDir).mkdirs()
-    // optional comma-separated filter for debugging single queries
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    SparkEntry.queries
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        e.printStackTrace()
-        // remove any STALE dump from a previous run so the checker sees
-        // a missing output, not yesterday's rows
-        org.apache.commons.io.FileUtils.deleteQuietly(
-          new java.io.File(s"$outDir/$name"))
-      }
-      // queries persist() intermediates for their own multi-consumer
-      // plans; drop them so caches don't accumulate across the run
-      // (release() also drains the tracked-frame registry — see
-      // graft.analytics.Caches for the lifecycle contract)
-      graft.analytics.Caches.release()
-      spark.catalog.clearCache()
+    SparkEntry.walk(spark, sfDir, SparkEntry.selected(), standalone = false) {
+      (name, build) =>
+        build().coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+    }.foreach { case (name, r) =>
+      // remove any STALE dump from a previous run so the checker sees
+      // a missing output, not yesterday's rows
+      if (r.isFailure)
+        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(s"$outDir/$name"))
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

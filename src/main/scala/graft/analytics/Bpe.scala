@@ -88,14 +88,8 @@ object Bpe {
       .select(col("w"), col("wcnt"), col("pos2").as("pos"), col("tok2").as("tok"))
   }
 
-  /** Run `rounds` merge rounds. Returns the per-round symbol tables
-    * (index 0 = untrained chars) — each localCheckpoint'd, both to
-    * sever the join/window lineage between rounds (the dedup_clusters
-    * precedent) and because round r+1's plan would otherwise recompute
-    * round r three times. The collected winner rows are tokenizer
-    * metadata, not data. */
   private def train(s: SparkSession, d: String): (Seq[DataFrame], Seq[(String, String)]) =
-    trainMemo.getOrElseUpdate((s, d), trainOnce(s, d))
+    trainMemo.getOrElseUpdate((s, d), trainOnce(initToks(s, d), rounds))
 
   /** Training is deterministic per corpus and the per-round symbol
     * tables are already localCheckpoint'd — so a session trains each
@@ -109,8 +103,16 @@ object Bpe {
   private val trainMemo =
     new Caches.SessionMemo[(Seq[DataFrame], Seq[(String, String)])]
 
-  private def trainOnce(s: SparkSession, d: String): (Seq[DataFrame], Seq[(String, String)]) = {
-    var toks = initToks(s, d).localCheckpoint(true)
+  /** Run `rounds` merge rounds over the initial symbol table `init`
+    * (chars here, hex bytes in [[BpeBytes]]). Returns the per-round
+    * symbol tables (index 0 = `init`) — each localCheckpoint'd, both to
+    * sever the join/window lineage between rounds (the dedup_clusters
+    * precedent) and because round r+1's plan would otherwise recompute
+    * round r three times — and the merged pairs. The collected winner
+    * rows are tokenizer metadata, not data. */
+  private[analytics] def trainOnce(init: DataFrame,
+      rounds: Int): (Seq[DataFrame], Seq[(String, String)]) = {
+    var toks = init.localCheckpoint(true)
     val tables = Seq.newBuilder[DataFrame]
     val pairs = Seq.newBuilder[(String, String)]
     tables += toks

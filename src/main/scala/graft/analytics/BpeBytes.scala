@@ -81,32 +81,12 @@ object BpeBytes {
       .select(col("w"), col("wcnt"), col("pos"), col("tok"))
 
   private def train(s: SparkSession, d: String): (Seq[DataFrame], Seq[(String, String)]) =
-    trainMemo.getOrElseUpdate((s, d), trainOnce(s, d))
+    trainMemo.getOrElseUpdate((s, d), Bpe.trainOnce(initToks(s, d), rounds))
 
   /** One training job per (session, corpus) — the [[Bpe]] memo
     * contract, session-keyed for the same checkpoint-lifetime reason. */
   private val trainMemo =
     new Caches.SessionMemo[(Seq[DataFrame], Seq[(String, String)])]
-
-  private def trainOnce(s: SparkSession, d: String): (Seq[DataFrame], Seq[(String, String)]) = {
-    var toks = initToks(s, d).localCheckpoint(true)
-    val tables = Seq.newBuilder[DataFrame]
-    val pairs = Seq.newBuilder[(String, String)]
-    tables += toks
-    var exhausted = false
-    for (_ <- 1 to rounds) {
-      val t = if (exhausted) Array.empty[org.apache.spark.sql.Row]
-              else Bpe.topPair(toks).collect()
-      if (t.isEmpty) exhausted = true
-      else {
-        val (a, b) = (t(0).getString(0), t(0).getString(1))
-        toks = Bpe.applyMerge(toks, a, b).localCheckpoint(true)
-        pairs += ((a, b))
-      }
-      tables += toks
-    }
-    (tables.result(), pairs.result())
-  }
 
   /** The learned byte-merge table (the bpe_merges shape: each round's
     * winner re-derived as a one-row plan over that round's

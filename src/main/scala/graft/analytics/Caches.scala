@@ -26,11 +26,11 @@ import org.apache.spark.storage.StorageLevel
   * So the lifecycle contract is explicit instead:
   *   - builders persist through [[TrackedPersist.persistTracked]],
   *     which registers the frame here;
-  *   - the harnesses (Verify / Bench / PlanSpec) call [[release]] (or
-  *     `spark.catalog.clearCache()`) after each query, so no run ever
-  *     accumulates more than one query's caches;
-  *   - a long-lived interactive session calls [[release]] between
-  *     queries for the same bound.
+  *   - every harness walk (`SparkEntry.walk`: Verify, Bench, PlanSpec)
+  *     ends each query with [[endQuery]], so no run ever accumulates
+  *     more than one query's caches;
+  *   - a long-lived interactive session calls [[endQuery]] (or at least
+  *     [[release]]) between queries for the same bound.
   * CacheHygieneSpec greps the main source tree: every `.persist(` call
   * outside this file must be the tracked spelling, so an untracked
   * cache cannot be added silently.
@@ -38,9 +38,9 @@ import org.apache.spark.storage.StorageLevel
   * The per-session artifacts (stage sets, stores, trained weights) live
   * in ONE memo table keyed by (handle, session, corpus dir), behind
   * stateless typed [[SessionMemo]] handles. One lifetime policy covers
-  * them all: [[releaseMemos]] clears the table, and at most one
-  * session-end listener per SparkContext evicts a stopped context's
-  * entries. CacheHygieneSpec also greps for `TrieMap`: a memo kept
+  * them all: [[releaseMemos]] (run by a standalone [[endQuery]])
+  * clears the table, and at most one session-end listener per
+  * SparkContext evicts a stopped context's entries. CacheHygieneSpec also greps for `TrieMap`: a memo kept
   * outside this file would escape both.
   */
 object Caches {
@@ -57,6 +57,21 @@ object Caches {
     while (ds != null) { ds.unpersist(blocking = false); ds = live.poll() }
   }
 
+  /** The one query boundary every harness runs after each query:
+    * unpersist the tracked frames and clear the session's cache, and,
+    * when `standalone`, also drop every [[SessionMemo]] entry so the
+    * next query pays for its own artifacts. Bench is standalone (r17:
+    * per-query times are standalone costs); Verify, PlanSpec and
+    * AnnScaleBench keep the memos, where they play the "lake's
+    * persisted artifact" role and PlanSpec's budgets were audited
+    * memo-warm. CacheHygieneSpec greps that `releaseMemos()` and
+    * `clearCache()` are called in this file only. */
+  def endQuery(spark: SparkSession, standalone: Boolean): Unit = {
+    release()
+    if (standalone) releaseMemos()
+    spark.catalog.clearCache()
+  }
+
   /** Number of currently tracked (not yet released) frames — spec
     * hook for the bounded-accumulation contract. */
   def trackedCount: Int = live.size()
@@ -68,14 +83,12 @@ object Caches {
   private val hooked = TrieMap.empty[SparkContext, Unit]
 
   /** Drop every [[SessionMemo]] entry (r17, the bench-honesty rule):
-    * Bench calls this at the per-query boundary so a timed query cannot
-    * ride a shared artifact (the corpus-stack sets, the pinned-IDF
-    * frame, the old-snapshot stores, the trained classifier weights)
-    * that an EARLIER timed query derived — per-query times are
-    * standalone costs. Entries are recomputed on next access, exactly
-    * like a fresh session; the context listeners stay registered.
-    * Verify does NOT call this: the oracle dump is not timed per query,
-    * and there the memos play their "lake's persisted artifact" role. */
+    * a standalone [[endQuery]] runs this so a timed query cannot ride a
+    * shared artifact (the corpus-stack sets, the pinned-IDF frame, the
+    * old-snapshot stores, the trained classifier weights) that an
+    * EARLIER timed query derived. Entries are recomputed on next
+    * access, exactly like a fresh session; the context listeners stay
+    * registered. */
   def releaseMemos(): Unit = memoTable.clear()
 
   /** Number of live memo entries across all handles — spec hook. */

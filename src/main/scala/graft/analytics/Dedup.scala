@@ -105,9 +105,8 @@ object Dedup {
   def dedupNgram(s: SparkSession, d: String): DataFrame =
     dedupNgramOf(documents(s, d))
 
-  def dedupNgramOf(docs: DataFrame, dfCapOverride: Int = -1): DataFrame = {
-    val dfCap =
-      if (dfCapOverride > 0) dfCapOverride else Sizing.dfCap(docs.count())
+  def dedupNgramOf(docs: DataFrame): DataFrame = {
+    val dfCap = Sizing.dfCap(docs.count())
     // the capped shingle universe feeds three consumers (both self-join
     // sides + set sizes); persist it once instead of re-deriving per branch
     val kept  = cappedShingles(shinglesOf(docs), dfCap).persistTracked()
@@ -135,11 +134,10 @@ object Dedup {
   def dedupContainment(s: SparkSession, d: String): DataFrame =
     dedupContainmentOf(documents(s, d))
 
-  def dedupContainmentOf(docs: DataFrame, dfCapOverride: Int = -1): DataFrame = {
+  def dedupContainmentOf(docs: DataFrame): DataFrame = {
     // same corpus-derived cap as dedup_ngram (Sizing.dfCap) — the two
     // statistics must share one shingle universe to stay comparable
-    val dfCap =
-      if (dfCapOverride > 0) dfCapOverride else Sizing.dfCap(docs.count())
+    val dfCap = Sizing.dfCap(docs.count())
     val kept  = cappedShingles(shinglesOf(docs), dfCap).persistTracked()
     val sizes = kept.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
     shinglePairs(kept)
@@ -733,7 +731,10 @@ object Dedup {
   /** Corpus-derived hyperplanes vec_id 100..100+nBands·bandBits (the
     * emb_prune_stats trick: deterministic "random" directions BOTH
     * engines read straight from the table — a seeded JVM RNG could not
-    * be respelled in SQL). Bounded driver-side index metadata. */
+    * be respelled in SQL). Bounded driver-side index metadata. A
+    * short or gapped id range fails loudly: packing the planes densely
+    * here while the oracle assigns them BY vec_id would band the two
+    * sides differently. */
   private def corpusPlanes(e: DataFrame, bandBits: Int,
       nBands: Int): Seq[Seq[Double]] = {
     val planes: Seq[Seq[Double]] = e
@@ -926,27 +927,15 @@ object Dedup {
   def embPruneStats(s: SparkSession, d: String): DataFrame =
     embPruneStatsOf(embeddings(s, d))
 
-  private[graft] def embPruneStatsOf(emb: DataFrame, bandBitsOverride: Int = -1,
-      nBands: Int = 3, dim: Int = 64, seed: Long = 42L): DataFrame = {
+  private[graft] def embPruneStatsOf(emb: DataFrame): DataFrame = {
+    val nBands = 3
     val e = vectors(emb).persistTracked()
     val n = e.count()
     // band width derived from corpus size (Sizing.cosineBandBits:
     // log2(N) keeps random-pair candidates ~linear; floor 16 = the
     // test/production-doc value, so driver corpora are unchanged)
-    val bandBits =
-      if (bandBitsOverride > 0) bandBitsOverride else Sizing.cosineBandBits(n)
-    // corpus-derived hyperplanes (vec_id 100..100+3·bits): bounded
-    // driver-side index metadata (≤ 3·64 vectors), oracle-replicable
-    val planes: Seq[Seq[Double]] = e
-      .filter(col("vec_id") >= 100 && col("vec_id") < 100 + nBands.toLong * bandBits)
-      .select(col("vec_id"), col("v")).collect()
-      .sortBy(_.getLong(0)).map(_.getSeq[Double](1)).toSeq
-    // a short/gapped id range would densely pack the planes here while
-    // the oracle assigns positions BY vec_id — the two sides would
-    // silently band differently, so fail loudly instead (r8 review)
-    require(planes.size == nBands * bandBits,
-      s"emb_prune_stats needs contiguous embeddings vec_id 100..${100 + nBands * bandBits} " +
-        s"as hyperplanes; found ${planes.size} of ${nBands * bandBits}")
+    val bandBits = Sizing.cosineBandBits(n)
+    val planes = corpusPlanes(e, bandBits, nBands)
     val occ = bandedWith(e, planes, bandBits, nBands)
       .groupBy(col("band"), col("bucket")).agg(count(lit(1)).as("c"))
     occ.groupBy(col("band"))

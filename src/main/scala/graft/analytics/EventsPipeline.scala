@@ -551,8 +551,7 @@ object EventsPipeline {
     * Output goes to a per-invocation temp dir so concurrent
     * Verify/Bench runs can't race. */
   def partPrune(s: SparkSession, d: String): DataFrame = {
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_part_prune_").toString
+    val tmp = graft.Tables.tempOutDir("graft_part_prune_")
     val ev = events(s, d).withColumn("event_date",
       to_date(timestamp_micros(expr("ts_ns div 1000"))))
     graft.warehouse.WarehouseLoad.writePartitionedByDate(ev, "event_date", tmp)

@@ -44,7 +44,7 @@ import org.apache.spark.sql.functions._
   * silently mismatching the collected offsets. Unpersisting right
   * after the offsets collect would therefore trade a leak for a
   * wrong answer. Callers own cleanup at the query boundary
-  * (`Caches.release()` / `clearCache()` — the harnesses already do).
+  * (`Caches.endQuery` — the harness walk already runs it).
   *
   * NULL CONTRACT ([[prefixSum]]): `valueCol` must be DECIMAL-typed
   * (checked loudly) and null-free. `sum` ignores nulls, so with nulls

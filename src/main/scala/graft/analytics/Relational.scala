@@ -2321,23 +2321,30 @@ object Relational {
         sum(unix_micros(col("timestamp"))).as("sum_tus"))
 
   /** Name-resolved SQL through the `TableCatalog` plugin
-    * (`sources.GraftCatalog`): register the catalog lazily on the
-    * session conf, point its `dir` at this dataset, and run plain SQL
-    * against `graft.data.*` identifiers. The resolved scans are the
+    * (`sources.GraftCatalog`): register the catalog on the session
+    * conf, point its `dir` at this dataset for the query's analysis
+    * only, and run plain SQL against `graft.data.*` identifiers. The resolved scans are the
     * same pushdown-capable parquet tables every path-based query uses —
     * catalog resolution costs one analysis-time lookup, nothing at
     * runtime. The aggregate follows house determinism rules (decimal
     * sum + one double cast). */
-  def catalogSql(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft.dir", d)
-    s.sql("""SELECT c.c_mktsegment, count(*) AS n_orders,
+  def catalogSql(s: SparkSession, d: String): DataFrame =
+    viaCatalog(s, d, """SELECT c.c_mktsegment, count(*) AS n_orders,
           CAST(sum(CAST(o.o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
         FROM graft.data.orders o
         JOIN graft.data.customer c ON o.o_custkey = c.c_custkey
         WHERE o.o_orderstatus = 'F'
         GROUP BY c.c_mktsegment""")
-  }
+
+  /** Runs `sql` with the `graft` catalog registered and pointed at `d`,
+    * then puts both confs back: `GraftCatalog.loadTable` fixes each
+    * table's path during `s.sql`'s eager analysis, so the returned
+    * frame no longer reads the conf. */
+  private def viaCatalog(s: SparkSession, d: String, sql: String): DataFrame =
+    GraftSession.withConf(s,
+        "spark.sql.catalog.graft" -> classOf[graft.sources.GraftCatalog].getName) {
+      GraftSession.withConf(s, "spark.sql.catalog.graft.dir" -> d)(s.sql(sql))
+    }
 
   /** Catalog-resolved V2 scalar function — the function tier of the
     * connector family: `graft.data.vec_dot` binds at analysis time and
@@ -2345,15 +2352,12 @@ object Relational {
     * dispatch, no UDF serialization). Its fold order matches the native
     * `DotProduct` expression and DuckDB's `list_dot_product`, so raw
     * double outputs stay oracle-able. */
-  def catalogFunction(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft.dir", d)
-    s.sql("""SELECT vec_id,
+  def catalogFunction(s: SparkSession, d: String): DataFrame =
+    viaCatalog(s, d, """SELECT vec_id,
           graft.data.vec_dot(
             transform(embedding, x -> CAST(x AS DOUBLE)),
             transform(embedding, x -> CAST(x AS DOUBLE))) AS sq
         FROM graft.data.embeddings""")
-  }
 
 
   private val sumQty  = "CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE)"

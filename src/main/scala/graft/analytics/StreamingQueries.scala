@@ -738,8 +738,10 @@ object StreamingQueries {
     * state buffer in a live run: a click older than max event time −
     * 1 h can never match a new purchase and is evicted); the interval
     * condition turns the state lookup into a per-user time-range scan.
-    * Exact µs timestamps make the pair set deterministic. */
-  def streamStreamJoin(s: SparkSession, d: String): DataFrame = {
+    * Exact µs timestamps make the pair set deterministic. The three
+    * board variants differ only in `joinType`. */
+  private def clickPurchaseJoin(s: SparkSession, d: String,
+      joinType: String): DataFrame = {
     val clicks = eventsStream(s, d)
       .filter(col("event_type") === "click")
       .select(col("event_id").as("click_id"), col("user_id").as("c_user"),
@@ -752,7 +754,8 @@ object StreamingQueries {
       .withWatermark("p_ts", "1 hour")
     val joined = clicks.join(purchases,
       expr("""c_user = p_user AND
-              p_ts > c_ts AND p_ts <= c_ts + INTERVAL 30 MINUTES"""))
+              p_ts > c_ts AND p_ts <= c_ts + INTERVAL 30 MINUTES"""),
+      joinType)
       .select(col("click_id"), col("purchase_id"),
         (unix_micros(col("p_ts")) - unix_micros(col("c_ts"))).as("lag_us"))
     // dual-side join state is input-sized (every in-horizon row of
@@ -760,6 +763,10 @@ object StreamingQueries {
     runToMemory(s, joined, OutputMode.Append(),
       stateKeys = s.read.parquet(s"$d/events.parquet").count())
   }
+
+  /** The inner click → purchase attribution join. */
+  def streamStreamJoin(s: SparkSession, d: String): DataFrame =
+    clickPurchaseJoin(s, d, "inner")
 
   /** LEFT-OUTER stream-stream join — the append-mode semantics the
     * inner variant above cannot show: matches emit as they arrive, but
@@ -772,27 +779,8 @@ object StreamingQueries {
     * exactly the expired unmatched clicks; younger unmatched clicks
     * stay withheld. The oracle applies the identical cutoff, so the
     * emit-once boundary itself is hash-checked. */
-  def streamJoinLeft(s: SparkSession, d: String): DataFrame = {
-    val clicks = eventsStream(s, d)
-      .filter(col("event_type") === "click")
-      .select(col("event_id").as("click_id"), col("user_id").as("c_user"),
-        col("ts").as("c_ts"))
-      .withWatermark("c_ts", "1 hour")
-    val purchases = eventsStream(s, d)
-      .filter(col("event_type") === "purchase")
-      .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"),
-        col("ts").as("p_ts"))
-      .withWatermark("p_ts", "1 hour")
-    val joined = clicks.join(purchases,
-      expr("""c_user = p_user AND
-              p_ts > c_ts AND p_ts <= c_ts + INTERVAL 30 MINUTES"""),
-      "left_outer")
-      .select(col("click_id"), col("purchase_id"),
-        (unix_micros(col("p_ts")) - unix_micros(col("c_ts"))).as("lag_us"))
-    // dual-side join state is input-sized — see streamStreamJoin
-    runToMemory(s, joined, OutputMode.Append(),
-      stateKeys = s.read.parquet(s"$d/events.parquet").count())
-  }
+  def streamJoinLeft(s: SparkSession, d: String): DataFrame =
+    clickPurchaseJoin(s, d, "left_outer")
 
   /** FULL-OUTER stream-stream join — the asymmetric-expiry case: the
     * two sides evict on DIFFERENT bounds derived from the same time
@@ -803,27 +791,8 @@ object StreamingQueries {
     * watermark reaches p_ts, so its state closes at wm ON PURCHASE
     * TIME. The oracle spells both bounds; a hash match pins the
     * per-side eviction math, not just the join condition. */
-  def streamJoinFull(s: SparkSession, d: String): DataFrame = {
-    val clicks = eventsStream(s, d)
-      .filter(col("event_type") === "click")
-      .select(col("event_id").as("click_id"), col("user_id").as("c_user"),
-        col("ts").as("c_ts"))
-      .withWatermark("c_ts", "1 hour")
-    val purchases = eventsStream(s, d)
-      .filter(col("event_type") === "purchase")
-      .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"),
-        col("ts").as("p_ts"))
-      .withWatermark("p_ts", "1 hour")
-    val joined = clicks.join(purchases,
-      expr("""c_user = p_user AND
-              p_ts > c_ts AND p_ts <= c_ts + INTERVAL 30 MINUTES"""),
-      "full_outer")
-      .select(col("click_id"), col("purchase_id"),
-        (unix_micros(col("p_ts")) - unix_micros(col("c_ts"))).as("lag_us"))
-    // dual-side join state is input-sized — see streamStreamJoin
-    runToMemory(s, joined, OutputMode.Append(),
-      stateKeys = s.read.parquet(s"$d/events.parquet").count())
-  }
+  def streamJoinFull(s: SparkSession, d: String): DataFrame =
+    clickPurchaseJoin(s, d, "full_outer")
 
   /** The custom DSv2 connector's STREAMING face (graft.sources
     * .SeqSource as a MicroBatchStream): 50k deterministic rows admitted

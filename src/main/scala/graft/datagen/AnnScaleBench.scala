@@ -39,8 +39,7 @@ object AnnScaleBench {
           val t0 = System.nanoTime()
           build().count()
           val dt = (System.nanoTime() - t0) / 1e9
-          graft.analytics.Caches.release()
-          spark.catalog.clearCache()
+          graft.analytics.Caches.endQuery(spark, standalone = false)
           dt
         }.min
       val only = sys.env.get("SPARK_GRAFT_ANN_ONLY")

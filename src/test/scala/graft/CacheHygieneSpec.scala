@@ -8,9 +8,8 @@ import org.apache.spark.sql.functions._
 
 /** Machine-check for the cache-lifecycle contract (r8 judge item 6):
   * builders may persist multi-consumer intermediates ONLY through
-  * `Caches.persistTracked`, so every cache is registered and a query
-  * boundary (`Caches.release()` / `clearCache()`) provably frees the
-  * lot. A raw `.persist(` in main source is a frame nothing tracks —
+  * `Caches.persistTracked`, so every cache is registered and the query
+  * boundary (`Caches.endQuery`) provably frees the lot. A raw `.persist(` in main source is a frame nothing tracks —
   * exactly the long-lived-session accumulation the contract exists to
   * bound. Grep-based on purpose: a reviewer rationalizing "this one's
   * fine" still has to come here and say why. The same holds for the
@@ -68,6 +67,30 @@ class CacheHygieneSpec extends SparkSpec {
     assert(spread.isEmpty, "expected each in exactly one file under " +
       "src/main/scala:\n" + spread.map { case (tok, fs) =>
         s"`$tok`: ${fs.size} files ${fs.mkString(", ")}" }.mkString("\n"))
+  }
+
+  test("the query boundary and temp dirs are each spelled in one main file") {
+    // one query boundary (Caches.endQuery) decides what a harness drops
+    // after each query, and one temp-dir helper (Tables.tempOutDir)
+    // registers every temp dir for the shutdown drain; comment lines
+    // and trailing comments do not count as calls
+    def code(line: String): String = {
+      val t = line.trim
+      if (t.startsWith("*") || t.startsWith("/*") || t.startsWith("//")) ""
+      else line.split("//", 2)(0)
+    }
+    val tokens = Seq("releaseMemos()" -> "Caches.scala",
+      "clearCache()" -> "Caches.scala",
+      "createTempDirectory" -> "Tables.scala")
+    val spread = tokens.map { case (tok, home) =>
+      (tok, home, mainSources.filter(p =>
+        Files.readAllLines(p).asScala.exists(l => code(l).contains(tok)))
+        .map(_.getFileName.toString).sorted)
+    }.filter { case (_, home, fs) => fs != Seq(home) }
+    assert(spread.isEmpty, "expected each only in its home file under " +
+      "src/main/scala:\n" + spread.map { case (tok, home, fs) =>
+        s"`$tok` (home $home): ${fs.size} files ${fs.mkString(", ")}"
+      }.mkString("\n"))
   }
 
   test("two memo handles never share an entry for one (session, dir)") {

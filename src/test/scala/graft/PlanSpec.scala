@@ -1,5 +1,9 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.execution.ExplainMode
+
 /** Plan-shape regression guard: the scale contract, machine-checked.
   *
   * Two blanket rules over every declared batch query's physical plan,
@@ -865,23 +869,41 @@ class PlanSpec extends SparkSpec {
 
   /** Each query's physical-plan string + analyzed-plan broadcast-hint
     * audit + partition-less-window audit, built ONCE for all tests
-    * (the round-trip queries execute a file write when constructed).
-    * Each query's frames are released at its boundary, as Verify does,
-    * so the tracked-frame registry holds none of them afterwards. */
+    * (the round-trip queries execute a file write when constructed)
+    * through the harness walk, which releases each query's frames at
+    * its boundary, as Verify does — memos kept, the budgets were
+    * audited memo-warm — so the tracked-frame registry holds none of
+    * them afterwards. The walk also leaves the plan dump for offline
+    * diffs in `target/plan-audit/`: per query `<name>.txt` (EXPLAIN
+    * FORMATTED, then the executedPlan string the exchange count runs
+    * over) and `_exchanges.tsv` (name, `Exchange hashpartitioning`
+    * count, construction seconds). */
   private lazy val built: Seq[(String, String, Seq[String], Seq[String])] = {
-    val b = SparkEntry.registry.toSeq.sortBy(_._1).collect {
-      case (name, q) if !q.streaming =>
-        val qe = q.build(spark, sfDir).queryExecution
+    val out = Paths.get("target/plan-audit")
+    Files.createDirectories(out)
+    val names = SparkEntry.registry.collect { case (n, q) if !q.streaming => n }
+      .toSeq.sorted
+    val walked = SparkEntry.walk(spark, sfDir, names, standalone = false) {
+      (name, build) =>
+        val t0 = System.nanoTime()
+        val qe = build().queryExecution
         val hints = unboundedBroadcastHints(qe.analyzed)
         val gw = globalWindows(qe.executedPlan)
         val p = qe.executedPlan.toString
-        graft.analytics.Caches.release()
-        spark.catalog.clearCache()
-        (name, p, hints, gw)
-    }
+        val formatted = qe.explainString(ExplainMode.fromString("formatted"))
+        val secs = (System.nanoTime() - t0) / 1e9
+        Files.writeString(out.resolve(s"$name.txt"),
+          s"$formatted\n\n== executedPlan (exchange-count source) ==\n$p\n")
+        (p, hints, gw, secs)
+    }.map { case (name, r) => name -> r.get }
     assert(graft.analytics.Caches.trackedCount == 0,
       "the audit loop must drain the tracked-frame registry")
-    b
+    Files.writeString(out.resolve("_exchanges.tsv"),
+      walked.map { case (name, (p, _, _, secs)) =>
+        val ex = "Exchange hashpartitioning".r.findAllIn(p).size
+        f"$name\t$ex\t$secs%.2f\n"
+      }.mkString)
+    walked.map { case (name, (p, hints, gw, _)) => (name, p, hints, gw) }
   }
 
   private lazy val plans: Seq[(String, String)] =

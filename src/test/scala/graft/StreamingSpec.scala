@@ -603,15 +603,21 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming queries leave the session as they found it") {
     // the spec session sets the events-encoding flag at build; unset it
-    // so a query that sets it on load shows up as a conf change
-    val key = "spark.sql.legacy.parquet.nanosAsLong"
-    val prev = spark.conf.getAll.get(key)
-    spark.conf.unset(key)
+    // so a query that sets it on load shows up as a conf change; unset
+    // the catalog keys too, so a value an earlier suite left cannot
+    // hide a catalog query's leak
+    val keys = Seq("spark.sql.legacy.parquet.nanosAsLong",
+      "spark.sql.catalog.graft", "spark.sql.catalog.graft.dir")
+    val prev = keys.map(k => k -> spark.conf.getAll.get(k))
+    keys.foreach(spark.conf.unset)
     try {
       val conf0 = spark.conf.getAll
       val listeners0 = spark.streams.listListeners().toSeq
+      // the two catalog queries register and point the `graft` catalog
+      // for their own analysis only
       Seq("stream_dedup", "stream_fp_dedup", "stream_quality_windowed",
-        "stream_observe", "stream_session_multibatch", "stream_union")
+        "stream_observe", "stream_session_multibatch", "stream_union",
+        "catalog_sql", "catalog_function")
         .foreach { name =>
           SparkEntry.registry(name).build(spark, sfDir).collect()
           val conf = spark.conf.getAll.toSet
@@ -624,7 +630,7 @@ class StreamingSpec extends SparkSpec {
           assert(spark.streams.listListeners().toSeq == listeners0,
             s"$name left a streaming listener registered")
         }
-    } finally prev.foreach(spark.conf.set(key, _))
+    } finally prev.foreach { case (k, v) => v.foreach(spark.conf.set(k, _)) }
   }
 
   test("stateful refuel detector finds fuel jumps per truck in seq order") {
