@@ -35,6 +35,15 @@ object Bench {
   private def sec(v: Double): String =
     if (v < 0) "-1" else if (v >= 100) fmt(v, 1) else fmt(v, 2)
 
+  /** A query's spread over its WARM passes, max − min over all passes
+    * but the first: pass 1 runs every query cold (JVM, codegen, first
+    * file listing), so a spread over all passes mostly measures warm-up.
+    * -1 when a warm pass failed (time < 0) or there is none. */
+  def warmSpread(passTimes: Seq[Double]): Double = {
+    val warm = passTimes.drop(1)
+    if (warm.isEmpty || warm.exists(_ < 0)) -1.0 else warm.max - warm.min
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
@@ -115,14 +124,15 @@ object Bench {
 
     // full per-pass forensics → a repo file (no length limit there)
     val fullJson = {
-      val perQuery = names.map { name =>
-        s""""$name":[${passes.map(p => sec(p.times(name))).mkString(",")}]"""
-      }.mkString("{", ",", "}")
+      def perQuery(v: String => String) =
+        names.map(name => s""""$name":${v(name)}""").mkString("{", ",", "}")
       s"""{"sf":"$sfDir","total_min":${fmt(total, 3)},"failed":$failed,""" +
         s""""wall":[${passes.map(p => fmt(p.wall, 1)).mkString(",")}],""" +
         s""""steal_pct":[${passes.map(p => fmt(p.steal, 2)).mkString(",")}],""" +
         s""""cpu_share":[${passes.map(p => fmt(p.cpuShare, 2)).mkString(",")}],""" +
-        s""""passes":$perQuery}"""
+        s""""passes":${perQuery(n => passes.map(p => sec(p.times(n))).mkString("[", ",", "]"))},""" +
+        s""""min":${perQuery(n => sec(results(n)))},""" +
+        s""""warm_spread":${perQuery(n => sec(warmSpread(passes.map(_.times(n)))))}}"""
     }
     val fullPath = "BENCH_FULL.json"
     try {

@@ -131,20 +131,27 @@ object Expectations {
     * as 1-row scalar crossJoins; all-or-nothing verdict over both
     * tiers. */
   def reportFull(df: DataFrame, suite: Seq[Expectation],
-      aggSuite: Seq[AggExpectation]): DataFrame = {
+      aggSuite: Seq[AggExpectation]): DataFrame =
+    gateReport(df, lit(true), suite, aggSuite, Nil)
+
+  /** The combined gate over the rows of `df` where `gated` holds, fused
+    * with `extra` aggregates over ALL rows of `df` into the row-wise
+    * tier's single pass (they ride through to the report row). The
+    * aggregate tier runs over the gated rows only. With every row gated
+    * and no extras this is [[reportFull]]. */
+  def gateReport(df: DataFrame, gated: Column, suite: Seq[Expectation],
+      aggSuite: Seq[AggExpectation], extra: Seq[Column]): DataFrame = {
     require(suite.nonEmpty || aggSuite.nonEmpty,
       "empty expectation suite — an empty gate always passes")
     // `mostly` gates need the row count in the SAME single-pass agg
     // (viol·10⁶ ≤ (10⁶ − ppm)·n — exact integers, engine-portable)
     val anyMostly = suite.exists(_.mostlyPpm.nonEmpty)
-    val base =
-      if (suite.isEmpty) null
-      else {
-        val counts = suite.map(e => sum(e.violation).as(s"viol_${e.name}")) ++
-          (if (anyMostly) Seq(count(lit(1)).as("_n_rows")) else Nil)
-        df.agg(counts.head, counts.tail: _*)
-      }
-    val scalars = aggSuite.map(a => broadcast(a.violations(df)))
+    val counts =
+      suite.map(e => sum(when(gated, e.violation)).as(s"viol_${e.name}")) ++
+        (if (anyMostly) Seq(count(when(gated, lit(1))).as("_n_rows")) else Nil) ++
+        extra
+    val base = if (counts.isEmpty) null else df.agg(counts.head, counts.tail: _*)
+    val scalars = aggSuite.map(a => broadcast(a.violations(df.filter(gated))))
     val joined =
       if (base == null) scalars.reduce(_.crossJoin(_))
       else scalars.foldLeft(base)(_.crossJoin(_))

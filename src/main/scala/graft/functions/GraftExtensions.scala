@@ -118,10 +118,15 @@ object GraftExtensions {
           es(0), es(1))),
   )
 
-  /** Register into a live session's function registry (temp functions). */
-  def registerAll(spark: SparkSession): Unit =
+  /** Register into a live session's function registry (temp functions).
+    * Idempotent: a name the registry already maps to the same function
+    * object is left as it is, so the queries that call this each time
+    * they are built do not replace the functions each time. */
+  def registerAll(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
     functions.foreach { case (name, _, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, builder, "built-in")
+      if (!registry.lookupFunctionBuilder(FunctionIdentifier(name)).exists(_ eq builder))
+        registry.createOrReplaceTempFunction(name, builder, "built-in")
     }
+  }
 }

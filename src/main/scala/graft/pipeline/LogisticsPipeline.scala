@@ -8,7 +8,7 @@ import graft.rules._
 import graft.schemas.Schemas
 import graft.sinks.Sinks
 import graft.split.Splitter
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -16,12 +16,16 @@ import org.apache.spark.storage.StorageLevel
   * split → expectation gate → curated/rejected/lineage layers. Same
   * stages as /root/reference/Glue/Glue_job.py, re-planned for scale:
   *
-  *  - ONE persist of the post-validation plan instead of the reference's
-  *    ~8-10 full raw re-parses (one per count()/write action —
+  *  - ONE parse per record (see [[RawJsonReader]]) and ONE persist of
+  *    the post-validation plan instead of the reference's ~8-10 full raw
+  *    re-parses (one per count()/write action —
   *    Glue_job.py:95,102,124-135).
-  *  - The expectation gate is a distributed single-pass aggregate, not a
-  *    500-row driver-side pandas sample (Glue_job.py:102).
-  *  - Lineage layer counts come from the same single pass.
+  *  - ONE Spark action over that persisted set ([[tally]]): the
+  *    expectation gate as a distributed aggregate over the rule-valid
+  *    rows (not the reference's 500-row pandas sample, Glue_job.py:102),
+  *    the raw and valid counts, and each rule's rejection count. The
+  *    lineage record is built from those counts, and the sinks skip an
+  *    empty layer on them, so no write needs a guard job.
   *
   * Every stage is a pure DataFrame→DataFrame function, so the batch
   * entry point, streaming foreachBatch, and tests all share this code.
@@ -41,11 +45,18 @@ object LogisticsPipeline {
   val coreCols: Seq[String] = Seq("truck_id", "timestamp", "location",
     "fuel_level", "temperature", "delivery_status", "processed_at")
 
+  /** `ruleRejections`: records each rule rejected, keyed by the rule's
+    * reason (a record failing two rules counts under both). */
   final case class Result(
       curated: DataFrame,
       rejected: DataFrame,
       lineage: DataFrame,
-      geStatus: String)
+      geStatus: String,
+      ruleRejections: Map[String, Long])
+
+  /** What the one pass over the validated set tells a run. */
+  final case class Tally(raw: Long, valid: Long, geStatus: String,
+      ruleRejections: Map[String, Long])
 
   /** Clean + validate + stamp: the narrow-transform core. */
   def validateStage(parsed: DataFrame, zone: String = "UTC"): DataFrame = {
@@ -71,19 +82,35 @@ object LogisticsPipeline {
     val parsed    = RawJsonReader.read(spark, rawPath, Schemas.telemetry)
     val validated = validateStage(parsed, zone).persistTracked(StorageLevel.MEMORY_AND_DISK)
     try {
-      val curated  = Splitter.curated(validated)
-      val rejected = Splitter.rejected(validated, coreCols)
+      val t = tally(validated, loaded)
+      val (curatedF, rejectedF) = Expectations.applyVerdict(
+        Splitter.curated(validated), Splitter.rejected(validated, coreCols), t.geStatus)
+      val lineage = Lineage.fromCounts(spark, t.raw, t.valid, t.geStatus, zone)
+      val (curatedN, rejectedN) = Lineage.written(t.raw, t.valid, t.geStatus)
 
-      val ge       = Expectations.verdictFull(curated, loaded.rowWise, loaded.agg)
-      val (curatedF, rejectedF) = Expectations.applyVerdict(curated, rejected, ge)
-      val lineage  = Lineage.record(validated, ge, zone)
-
-      Sinks.writeCurated(curatedF, s"$outRoot/curated")
-      Sinks.writeAppend(rejectedF, s"$outRoot/rejected")
-      Sinks.writeAppend(lineage, s"$outRoot/validated")
-      Result(curatedF, rejectedF, lineage, ge)
+      if (curatedN > 0) Sinks.save(curatedF, s"$outRoot/curated", SaveMode.Overwrite)
+      if (rejectedN > 0) Sinks.save(rejectedF, s"$outRoot/rejected", SaveMode.Append)
+      Sinks.save(lineage, s"$outRoot/validated", SaveMode.Append)
+      Result(curatedF, rejectedF, lineage, t.geStatus, t.ruleRejections)
     } finally {
       validated.unpersist()
     }
+  }
+
+  /** The run's one Spark action over `validated` (which must carry
+    * `is_valid`): the gate over the rule-valid rows as they read in the
+    * curated layer (the same verdict as `Expectations.verdictFull` on
+    * [[Splitter.curated]]; aggregate-tier expectations scan those rows
+    * in their own passes), the raw and valid counts, and one `count_if`
+    * per rule over its null-strict flag. */
+  def tally(validated: DataFrame,
+      suite: graft.expect.SuiteLoader.LoadedSuite): Tally = {
+    val isValid = col("is_valid") === true
+    val perRule = rules.map(r => count_if(!Validator.flag(r)).as(s"_rule_${r.reason}"))
+    val row = Expectations.gateReport(Splitter.stamped(validated), isValid,
+      suite.rowWise, suite.agg,
+      Seq(count(lit(1)).as("_raw"), count_if(isValid).as("_valid")) ++ perRule).first()
+    Tally(row.getAs[Long]("_raw"), row.getAs[Long]("_valid"), row.getAs[String]("verdict"),
+      rules.map(r => r.reason -> row.getAs[Long](s"_rule_${r.reason}")).toMap)
   }
 }

@@ -59,9 +59,12 @@ object Validator {
       d.withColumn(c, when(isnan(col(c)) || col(c).isNull, lit(null)).otherwise(col(c)))
     }
 
+  /** One rule's validity flag; `nullStrict` turns NULL into false. */
+  def flag(rule: ValidationRule, nullStrict: Boolean = true): Column =
+    if (nullStrict) coalesce(rule.flag, lit(false)) else rule.flag
+
   private def flags(rules: Seq[ValidationRule], nullStrict: Boolean): Seq[Column] =
-    if (nullStrict) rules.map(r => coalesce(r.flag, lit(false)))
-    else rules.map(_.flag)
+    rules.map(flag(_, nullStrict))
 
   /** Conjunction of all rule flags.
     *

@@ -1,6 +1,6 @@
 package graft.sinks
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col}
 import scala.util.Try
 
@@ -11,9 +11,11 @@ import scala.util.Try
   * (identical columnar bytes — the reference's own warehouse tail reads
   * the parquet inside Delta, Snowflake/Curated_pipe.sql:16-17).
   *
-  * Empty-write guards use `isEmpty` (one-partition short-circuit), not
-  * the reference's `count() > 0` (a full scan per guard,
-  * Glue_job.py:124,127).
+  * The two layer writers guard against an empty write with `isEmpty`
+  * (one job that stops at the first row), not the reference's
+  * `count() > 0` (a full scan per guard, Glue_job.py:124,127). A caller
+  * that already knows the row count (LogisticsPipeline) calls the
+  * unguarded [[save]] and pays no guard job at all.
   */
 object Sinks {
 
@@ -25,13 +27,15 @@ object Sinks {
   /** Curated layer: overwrite world (the reference reprocesses the whole
     * raw prefix every run — Glue_job.py:25,31,125). */
   def writeCurated(df: DataFrame, path: String): Unit =
-    if (!df.isEmpty)
-      df.write.format(fmt).option("mergeSchema", "true").mode("overwrite").save(path)
+    if (!df.isEmpty) save(df, path, SaveMode.Overwrite)
 
   /** Rejected + lineage layers: append-only (Glue_job.py:128,142). */
   def writeAppend(df: DataFrame, path: String): Unit =
-    if (!df.isEmpty)
-      df.write.format(fmt).option("mergeSchema", "true").mode("append").save(path)
+    if (!df.isEmpty) save(df, path, SaveMode.Append)
+
+  /** One layer write, unguarded: an empty `df` still writes. */
+  def save(df: DataFrame, path: String, mode: SaveMode): Unit =
+    df.write.format(fmt).option("mergeSchema", "true").mode(mode).save(path)
 
   /** Keyed MERGE (upsert) into a partitioned parquet table — the
     * Delta-MERGE equivalent this image's jar set can't run natively.

@@ -16,9 +16,14 @@ object Splitter {
   /** Valid records: drop bookkeeping, stamp quality flags
     * (Glue_job.py:84-88). */
   def curated(validated: DataFrame): DataFrame =
-    validated
-      .filter(col("is_valid") === true)
+    stamped(validated.filter(col("is_valid") === true))
       .drop("is_valid", "rejection_reasons")
+
+  /** Curated's quality stamps on every validated row, bookkeeping kept:
+    * the frame an aggregate gating on `is_valid` itself reads as the
+    * curated layer (see LogisticsPipeline.tally). */
+  def stamped(validated: DataFrame): DataFrame =
+    validated
       .withColumn("data_quality_flag", lit("VALID"))
       .withColumn("ge_validation_status", lit("PENDING"))
 

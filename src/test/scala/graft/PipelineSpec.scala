@@ -10,7 +10,7 @@ import graft.warehouse.WarehouseLoad
 import org.apache.spark.sql.functions._
 
 /** End-to-end telemetry pipeline over a generated raw fixture — the
-  * reference-faithful path (raw JSON array files → double parse →
+  * reference-faithful path (raw JSON array files → one-pass parse →
   * validate → split → GE gate → layered writes) that the DuckDB oracle
   * cannot cover. Asserts the reference's own invariants: row-count
   * conservation (Glue_job.py:131-135), reasons vocabulary
@@ -98,6 +98,91 @@ class PipelineSpec extends SparkSpec {
     assert(m("raw") === n)
     assert(m("validated_total") === n)
     assert(m("curated") + m("rejected") === n)
+  }
+
+  /** A pipeline run into a fresh output root (the rejected and lineage
+    * sinks append). */
+  private def freshRun(name: String,
+      suitePath: Option[String] = None): (LogisticsPipeline.Result, String) = {
+    fixture
+    val out = new java.io.File(s"target/fixtures/$name").getAbsolutePath
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
+    (LogisticsPipeline.run(spark, rawDir, out, suitePath = suitePath), out)
+  }
+
+  test("the fused pass's verdict and counts equal verdictFull plus Lineage.record") {
+    import graft.expect.SuiteLoader.LoadedSuite
+    import graft.lineage.Lineage
+    import graft.split.Splitter
+    fixture
+    val validated = LogisticsPipeline.validateStage(
+      RawJsonReader.read(spark, rawDir, Schemas.telemetry)).cache()
+    try {
+      val curated = Splitter.curated(validated)
+      val suites = Seq(
+        "reference" -> LoadedSuite(Expectations.referenceSuite, Nil),
+        // about half the fuel levels lie in [50, 75]: mostly 0.4
+        // passes and 0.6 fails; the flag check reads curated's stamps
+        "mostly" -> LoadedSuite(Seq(
+          Expectations.mostly(Expectations.between("fuel_level", 50, 75), 0.4),
+          Expectations.inSet("data_quality_flag", Seq("VALID"))), Nil),
+        "mostly-failing" -> LoadedSuite(Seq(
+          Expectations.mostly(Expectations.between("fuel_level", 50, 75), 0.6)), Nil),
+        // timestamps are unique per record, truck ids repeat
+        "unique" -> LoadedSuite(Expectations.referenceSuite,
+          Seq(Expectations.unique("timestamp"))),
+        "unique-failing" -> LoadedSuite(Nil, Seq(Expectations.unique("truck_id"))),
+        "failing" -> LoadedSuite(Seq(Expectations.between("fuel_level", 0, 1)), Nil))
+      def layers(lineage: org.apache.spark.sql.DataFrame) =
+        lineage.drop("run_timestamp").collect().map(_.toSeq).toSet
+      val verdicts = suites.map { case (name, suite) =>
+        val t = LogisticsPipeline.tally(validated, suite)
+        val ge = Expectations.verdictFull(curated, suite.rowWise, suite.agg)
+        assert(t.geStatus === ge, name)
+        assert(t.raw === validated.count() && t.valid === curated.count(), name)
+        assert(layers(Lineage.fromCounts(spark, t.raw, t.valid, t.geStatus)) ===
+          layers(Lineage.record(validated, ge)), name)
+        name -> ge
+      }.toMap
+      assert(verdicts === Map("reference" -> "PASSED", "mostly" -> "PASSED",
+        "mostly-failing" -> "FAILED", "unique" -> "PASSED",
+        "unique-failing" -> "FAILED", "failing" -> "FAILED"))
+    } finally validated.unpersist()
+  }
+
+  test("per-rule rejection counts equal the reasons in the written rejected layer") {
+    val (r, out) = freshRun("out_rule_counts")
+    assert(r.ruleRejections.keySet === LogisticsPipeline.rules.map(_.reason).toSet)
+    val written = spark.read.parquet(s"$out/rejected")
+      .select(explode(col("rejection_reasons")).as("reason"))
+      .groupBy("reason").count().collect()
+      .map(row => row.getString(0) -> row.getLong(1)).toMap
+    assert(r.ruleRejections.filter(_._2 > 0) === written)
+    assert(written.size >= 3, s"the fixture trips too few rules: $written")
+  }
+
+  test("one run fires at most 6 jobs and appends exactly one lineage file") {
+    import org.apache.spark.ListenerDrain
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    fixture
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    ListenerDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    val out =
+      try {
+        val (r, out) = freshRun("out_job_count")
+        assert(r.geStatus === "PASSED")
+        ListenerDrain(spark.sparkContext)
+        out
+      } finally spark.sparkContext.removeSparkListener(l)
+    assert(jobs.get <= 6, s"${jobs.get} jobs for one run")
+    val files = new java.io.File(s"$out/validated").listFiles()
+      .filter(_.getName.endsWith(".parquet"))
+    assert(files.length === 1, files.map(_.getName).mkString(", "))
+    assert(spark.read.parquet(s"$out/validated").count() === 4)
   }
 
   test("curated layer written and round-trips through the warehouse projection") {

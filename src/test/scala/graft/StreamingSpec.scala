@@ -610,16 +610,35 @@ class StreamingSpec extends SparkSpec {
       "spark.sql.catalog.graft", "spark.sql.catalog.graft.dir")
     val prev = keys.map(k => k -> spark.conf.getAll.get(k))
     keys.foreach(spark.conf.unset)
+    // the function registry by name, with the info and builder each name
+    // maps to: re-registering a function replaces both objects
+    val functions = spark.sessionState.functionRegistry
+    def registered() = functions.listFunction().map(id =>
+      id -> (functions.lookupFunction(id).orNull, functions.lookupFunctionBuilder(id).orNull)).toMap
     try {
+      // win_ewma registers the graft functions for its own SQL; its first
+      // run may add them, a second run (in the loop below) must not
+      // replace them
+      SparkEntry.registry("win_ewma").build(spark, sfDir).collect()
       val conf0 = spark.conf.getAll
       val listeners0 = spark.streams.listListeners().toSeq
+      val functions0 = registered()
       // the two catalog queries register and point the `graft` catalog
       // for their own analysis only
       Seq("stream_dedup", "stream_fp_dedup", "stream_quality_windowed",
         "stream_observe", "stream_session_multibatch", "stream_union",
-        "catalog_sql", "catalog_function")
+        "catalog_sql", "catalog_function", "win_ewma")
         .foreach { name =>
           SparkEntry.registry(name).build(spark, sfDir).collect()
+          val now = registered()
+          val replaced = (now.keySet ++ functions0.keySet).filter { id =>
+            (now.get(id), functions0.get(id)) match {
+              case (Some((i, b)), Some((i0, b0))) => !(i eq i0) || !(b eq b0)
+              case _ => true
+            }
+          }
+          assert(replaced.isEmpty,
+            s"$name changed the function registry: ${replaced.map(_.funcName).toSeq.sorted}")
           val conf = spark.conf.getAll.toSet
           val changed = (conf diff conf0.toSet) ++ (conf0.toSet diff conf)
           assert(changed.isEmpty, s"$name changed the session conf: $changed")
