@@ -3,7 +3,7 @@ package graft.analytics
 import graft.analytics.Caches.TrackedPersist
 import graft.GraftSession
 import graft.Tables._
-import graft.streaming.{Drain, Landing}
+import graft.streaming.{Drain, Landing, StreamingPipeline}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -570,7 +570,7 @@ object IncrementalBuild {
     val ledger = scala.collection.mutable.ListBuffer[(Long, Long, Long, String)]()
 
     val q = src.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      .foreachBatch(StreamingPipeline.onSession(s) { (batch, batchId) =>
         // ONE action answers both "is it empty" and "how many rows"
         // (the fan-out input) — isEmpty was its own job
         val nArrived = batch.count()
@@ -630,8 +630,7 @@ object IncrementalBuild {
               row.getString(1)))
           }
         }
-        ()
-      }
+      })
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", graft.Tables.tempOutDir("stream_incr_ckpt"))
       .start()

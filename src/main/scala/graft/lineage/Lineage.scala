@@ -1,5 +1,6 @@
 package graft.lineage
 
+import graft.functions.perRun
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -13,6 +14,11 @@ import org.apache.spark.sql.functions._
   * conservation invariant), pivoted to rows with `stack`. The pipeline
   * takes the two counts in its one fused pass instead and builds the
   * same rows from them ([[fromCounts]]).
+  *
+  * `run_timestamp` is fixed when the record's plan is built and held as
+  * a [[graft.functions.RunConstant]]: it is not inlined into generated
+  * code, so a warm run writes its record with the classes the last run
+  * compiled.
   */
 object Lineage {
 
@@ -64,6 +70,6 @@ object Lineage {
           s"'rejected', ${if (failed) "raw" else "raw - ok"}) " +
           "AS (layer, record_count)")
       .withColumn("pipeline_name", lit(pipelineName))
-      .withColumn("run_timestamp", from_utc_timestamp(current_timestamp(), zone))
+      .withColumn("run_timestamp", perRun.now(zone))
   }
 }

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import graft.analytics.Caches.TrackedPersist
 import graft.expect.Expectations
+import graft.functions.perRun
 import graft.ingest.RawJsonReader
 import graft.lineage.Lineage
 import graft.rules._
@@ -58,11 +59,15 @@ object LogisticsPipeline {
   final case class Tally(raw: Long, valid: Long, geStatus: String,
       ruleRejections: Map[String, Long])
 
-  /** Clean + validate + stamp: the narrow-transform core. */
+  /** Clean + validate + stamp: the narrow-transform core.
+    * `processed_at` is fixed when this plan is built (one value for every
+    * row and every action on it, so one micro-batch's curated and
+    * rejected rows carry the same stamp), and it is held as a
+    * [[graft.functions.RunConstant]], not inlined into generated code, so
+    * the next run's plan compiles to the same classes. */
   def validateStage(parsed: DataFrame, zone: String = "UTC"): DataFrame = {
     val clean = Validator.cleanNanNull(parsed, Seq("fuel_level", "temperature"))
-    Validator.validate(clean, rules)
-      .withColumn("processed_at", from_utc_timestamp(current_timestamp(), zone))
+    Validator.validate(clean, rules).withColumn("processed_at", perRun.now(zone))
   }
 
   /** Full run from a raw directory; the gate runs on all rows.

@@ -1,11 +1,13 @@
 package graft.streaming
 
+import graft.functions.perRun
 import graft.pipeline.LogisticsPipeline
 import graft.schemas.Schemas
 import graft.ingest.RawJsonReader
 import graft.split.Splitter
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
 /** Structured Streaming surface.
@@ -24,6 +26,13 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * appends each micro-batch exactly once per checkpoint, so curated no
   * longer resets and rejected no longer accumulates cross-run
   * duplicates (SURVEY.md §2.8 T3).
+  *
+  * A trigger is cheap to repeat: its micro-batch runs on the caller's
+  * session ([[onSession]]), and the values that change from run to run
+  * (`processed_at`, `batch_id`) are fixed when the batch's plan is built
+  * and held as [[graft.functions.RunConstant]]s, not inlined into
+  * generated code. So a warm trigger reuses every class the first one
+  * compiled: code generation is paid once per JVM, not once per trigger.
   */
 object StreamingPipeline {
 
@@ -69,22 +78,36 @@ object StreamingPipeline {
       .writeStream
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      .foreachBatch(onSession(spark) { (batch, batchId) =>
         val parsed    = RawJsonReader.parse(batch, Schemas.telemetry)
         val validated = LogisticsPipeline.validateStage(parsed)
         val curated   = Splitter.curated(validated)
         val rejected  = Splitter.rejected(validated, LogisticsPipeline.coreCols)
+        // batch_id is not foldable, so the writer sorts each task's rows
+        // on it: one key, one batch's rows
         def write(df: DataFrame, layer: String): Unit = df
-          .withColumn("batch_id", lit(batchId))
+          .withColumn("batch_id", perRun(batchId))
           .write.mode("overwrite")
           .option("partitionOverwriteMode", "dynamic")
           .partitionBy("batch_id")
           .parquet(s"$outRoot/$layer")
         write(curated, "curated")
         write(rejected, "rejected")
-        ()
-      }
+      })
       .start()
+
+  /** `body` as a `foreachBatch` function that sees each micro-batch as a
+    * frame of `spark`, the session that starts the stream. Spark hands
+    * `foreachBatch` a frame of the stream's own clone of that session,
+    * and each `start()` clones anew: the clone's jobs carry a new
+    * artifact state, so every task-side class is compiled again in a new
+    * executor classloader (the codegen cache is keyed on the classloader
+    * and the source). Re-rooting the batch's plan on `spark` keeps every
+    * stream's jobs on one artifact state, and lets the body join the
+    * batch with frames of `spark` without mixing sessions. */
+  def onSession(spark: SparkSession)(body: (DataFrame, Long) => Unit)
+      : (DataFrame, Long) => Unit =
+    (batch, batchId) => body(Bridge.ofRows(spark, batch.queryExecution.logical), batchId)
 
   /** Event-time windowed aggregation with a watermark (T6 EXT surface):
     * per (1-hour window, event_type) counts/sums, 10-minute lateness. */

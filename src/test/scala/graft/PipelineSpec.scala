@@ -185,6 +185,14 @@ class PipelineSpec extends SparkSpec {
     assert(spark.read.parquet(s"$out/validated").count() === 4)
   }
 
+  test("a warm LogisticsPipeline.run compiles no generated code") {
+    freshRun("out_warm_1")
+    val c0 = compiles()
+    val (r, _) = freshRun("out_warm_2")
+    assert(r.geStatus === "PASSED")
+    assert(compiles() - c0 === 0L)
+  }
+
   test("curated layer written and round-trips through the warehouse projection") {
     result // force the run (writes happen in run())
     val wh = WarehouseLoad.curated(spark, s"$outDir/curated")

@@ -10,4 +10,9 @@ trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = GraftSession.local(4)
 
   val sfDir = "/root/testdata/sf0.001"
+
+  /** Classes Janino has compiled in this JVM so far; generated code
+    * that hits Spark's codegen cache adds none. */
+  def compiles(): Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 }

@@ -46,6 +46,41 @@ class StreamingSpec extends SparkSpec {
     assert(spark.read.parquet(s"$out/curated").count() === n2c)
   }
 
+  private val warm = s"$base/warm"
+
+  /** Three triggers of one stream, each over one freshly landed file;
+    * the classes each trigger compiled. */
+  private lazy val warmTriggers: Seq[Long] = {
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(warm))
+    (1 to 3).map { i =>
+      TelemetryGen.rawJsonLines(spark, 500, seed = 10 + i).coalesce(1)
+        .write.text(s"$warm/raw/b$i")
+      val c0 = compiles()
+      StreamingPipeline.run(spark, s"$warm/raw/*/", s"$warm/out", s"$warm/chk")
+        .awaitTermination()
+      compiles() - c0
+    }
+  }
+
+  test("a warm StreamingPipeline.run trigger compiles no generated code") {
+    val Seq(first, second, third) = warmTriggers
+    assert(third === 0L, s"classes compiled per trigger: $first, $second, $third")
+    val rows = Seq("curated", "rejected")
+      .map(l => spark.read.parquet(s"$warm/out/$l").count()).sum
+    assert(rows === 3 * 500L)
+  }
+
+  test("each micro-batch stamps one processed_at on its curated and rejected rows") {
+    warmTriggers
+    def stamps(layer: String) =
+      spark.read.parquet(s"$warm/out/$layer")
+        .select(col("batch_id").cast("long"), col("processed_at"))
+    val perBatch = stamps("curated").unionByName(stamps("rejected"))
+      .groupBy("batch_id").agg(countDistinct("processed_at"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(perBatch === Map(0L -> 1L, 1L -> 1L, 2L -> 1L))
+  }
+
   test("windowed counts with watermark match the plain batch aggregation") {
     val ev = graft.Tables.events(spark, sfDir)
     val streamed = StreamingPipeline.windowedCounts(ev)
@@ -620,16 +655,22 @@ class StreamingSpec extends SparkSpec {
       // run may add them, a second run (in the loop below) must not
       // replace them
       SparkEntry.registry("win_ewma").build(spark, sfDir).collect()
+      val hyg = s"$base/hygiene"
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(hyg))
+      TelemetryGen.rawJsonLines(spark, 200, seed = 5).coalesce(1).write.text(s"$hyg/raw")
       val conf0 = spark.conf.getAll
       val listeners0 = spark.streams.listListeners().toSeq
       val functions0 = registered()
       // the two catalog queries register and point the `graft` catalog
-      // for their own analysis only
+      // for their own analysis only; the last entry is one pipeline
+      // trigger, whose micro-batch runs on this session
       Seq("stream_dedup", "stream_fp_dedup", "stream_quality_windowed",
         "stream_observe", "stream_session_multibatch", "stream_union",
-        "catalog_sql", "catalog_function", "win_ewma")
+        "catalog_sql", "catalog_function", "win_ewma", "StreamingPipeline.run")
         .foreach { name =>
-          SparkEntry.registry(name).build(spark, sfDir).collect()
+          if (name == "StreamingPipeline.run")
+            StreamingPipeline.run(spark, s"$hyg/raw", s"$hyg/out", s"$hyg/chk").awaitTermination()
+          else SparkEntry.registry(name).build(spark, sfDir).collect()
           val now = registered()
           val replaced = (now.keySet ++ functions0.keySet).filter { id =>
             (now.get(id), functions0.get(id)) match {
