@@ -8,11 +8,11 @@ import org.apache.spark.sql.catalyst.expressions.LeafExpression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, JavaCode}
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{DataType, LongType, TimestampType}
+import org.apache.spark.sql.types.{DataType, TimestampType}
 
-/** A value fixed once per run (a run's timestamp, a micro-batch id): a
-  * non-null constant of a `long`-backed `dataType` (a timestamp is its
-  * epoch microseconds).
+/** A value fixed once per run (a run's timestamp): a non-null constant
+  * of a `long`-backed `dataType` (a timestamp is its epoch
+  * microseconds).
   *
   * `lit(v)` would serve, except that `Literal`'s generated code inlines
   * a long or timestamp into the Java source, and the codegen cache is
@@ -36,8 +36,6 @@ case class RunConstant(value: Long, dataType: DataType) extends LeafExpression {
 }
 
 object perRun {
-  def apply(v: Long): Column = Bridge.column(RunConstant(v, LongType))
-
   /** `from_utc_timestamp(current_timestamp(), zone)` as it reads now. */
   def now(zone: String): Column = Bridge.column(RunConstant(
     DateTimeUtils.fromUTCTime(DateTimeUtils.instantToMicros(Instant.now()), zone), TimestampType))

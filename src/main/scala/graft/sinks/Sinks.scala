@@ -1,5 +1,6 @@
 package graft.sinks
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col}
 import scala.util.Try
@@ -76,9 +77,8 @@ object Sinks {
       s"upsert: updates contain duplicate keys $keyCols (e.g. " +
         s"${dupKeys.limit(3).collect().mkString(", ")}) — a MERGE with " +
         "ambiguous matches is an error, not a double-insert")
-    val exists = Try(spark.read.parquet(path).schema).isSuccess
     val merged =
-      if (!exists) updates
+      if (!hasParquetData(spark, path)) updates
       else {
         val touched = updates.select(partitionCol).distinct()
         val kept = spark.read.parquet(path)
@@ -96,14 +96,35 @@ object Sinks {
       .parquet(path)
   }
 
+  /** Whether `path` holds a parquet data file at any depth, outside
+    * hidden (`_`/`.`) files and directories such as a write's
+    * `_temporary`: a missing target and an empty directory are both a new
+    * table. The listing stops at the first data file and reads none, so
+    * a new target logs nothing (reading it would log Spark's
+    * `FileNotFoundException` at WARN). */
+  private def hasParquetData(spark: SparkSession, path: String): Boolean = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val top = fs.makeQualified(root)
+    def visible(f: Path): Boolean =
+      Iterator.iterate(f)(_.getParent).takeWhile(p => p != null && p != top)
+        .forall(p => !p.getName.startsWith("_") && !p.getName.startsWith("."))
+    fs.exists(root) && {
+      val files = fs.listFiles(root, true)
+      Iterator.continually(files).takeWhile(_.hasNext).map(_.next().getPath)
+        .exists(f => f.getName.endsWith(".parquet") && visible(f))
+    }
+  }
+
   /** Small-file compaction — the lakehouse OPTIMIZE primitive. A
-    * streaming/CDC ingest path (one file per micro-batch, see
-    * StreamingPipeline's batch_id partitions) accretes thousands of
-    * small files per partition; at 100 TB the scan-side cost is
-    * dominated by file-open overhead and footer reads long before
-    * bytes matter. Rewrites the directory into `targetFiles` files of
-    * roughly equal size via a round-robin repartition (no shuffle key
-    * needed — compaction preserves content, not order).
+    * streaming/CDC ingest path accretes thousands of small files
+    * (StreamingPipeline writes one file per layer for each poll-sized
+    * micro-batch, and one per ~4 MB of raw input for a larger one, each
+    * batch in its own `batch_id=<id>` directory); at 100 TB the
+    * scan-side cost is dominated by file-open overhead and footer reads
+    * long before bytes matter. Rewrites the directory into `targetFiles`
+    * files of roughly equal size via a round-robin repartition (no
+    * shuffle key needed — compaction preserves content, not order).
     *
     * Same durability caveat as `upsert`: plain parquet has no commit
     * log, so the overwrite window is non-atomic; re-running repairs.

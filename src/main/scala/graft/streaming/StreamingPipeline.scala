@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.functions.perRun
+import graft.analytics.Sizing
 import graft.pipeline.LogisticsPipeline
 import graft.schemas.Schemas
 import graft.ingest.RawJsonReader
@@ -28,11 +28,14 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * duplicates (SURVEY.md §2.8 T3).
   *
   * A trigger is cheap to repeat: its micro-batch runs on the caller's
-  * session ([[onSession]]), and the values that change from run to run
-  * (`processed_at`, `batch_id`) are fixed when the batch's plan is built
-  * and held as [[graft.functions.RunConstant]]s, not inlined into
-  * generated code. So a warm trigger reuses every class the first one
+  * session ([[onSession]]), and `processed_at`, the one value that
+  * changes from run to run inside the plan, is fixed when the batch's
+  * plan is built and held as a [[graft.functions.RunConstant]], not
+  * inlined into generated code (`batch_id` is in the output path, not
+  * the plan). So a warm trigger reuses every class the first one
   * compiled: code generation is paid once per JVM, not once per trigger.
+  * Its task count follows the batch's bytes, so a poll-sized batch pays
+  * one task's fixed cost per layer, not one per input file.
   */
 object StreamingPipeline {
 
@@ -68,10 +71,18 @@ object StreamingPipeline {
 
   /** The streaming pipeline: same pure core (parse → clean → validate →
     * split) inside foreachBatch. Writes are IDEMPOTENT on replay: each
-    * micro-batch lands in its own `batch_id=<id>` partition with dynamic
-    * partition overwrite, so a crash between the writes and the
-    * checkpoint commit replays the batch into the same partition instead
-    * of duplicating rows — effectively-exactly-once end to end. */
+    * micro-batch overwrites its own `<layer>/batch_id=<id>` directory,
+    * so a crash between the writes and the checkpoint commit replays the
+    * batch into the same directory instead of duplicating rows —
+    * effectively-exactly-once end to end. Readers of `<layer>` see
+    * `batch_id` as a partition column.
+    *
+    * A batch runs [[graft.analytics.Sizing.rawBatchPartitions]] tasks
+    * per layer, sized from its input bytes: one for the reference's
+    * poll-sized batches, full fan-out for a backlog or a source of
+    * unknown size. An empty layer still leaves its batch directory,
+    * holding one zero-row part file with the layer's schema, so both
+    * layers stay readable after any batch. */
   def run(spark: SparkSession, rawPath: String, outRoot: String,
       checkpoint: String): StreamingQuery =
     rawFileSource(spark, rawPath)
@@ -79,18 +90,15 @@ object StreamingPipeline {
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpoint)
       .foreachBatch(onSession(spark) { (batch, batchId) =>
-        val parsed    = RawJsonReader.parse(batch, Schemas.telemetry)
+        val tasks = Sizing.rawBatchPartitions(
+          batch.queryExecution.optimizedPlan.stats.sizeInBytes,
+          spark.sparkContext.defaultParallelism)
+        val parsed    = RawJsonReader.parse(batch.coalesce(tasks), Schemas.telemetry)
         val validated = LogisticsPipeline.validateStage(parsed)
         val curated   = Splitter.curated(validated)
         val rejected  = Splitter.rejected(validated, LogisticsPipeline.coreCols)
-        // batch_id is not foldable, so the writer sorts each task's rows
-        // on it: one key, one batch's rows
-        def write(df: DataFrame, layer: String): Unit = df
-          .withColumn("batch_id", perRun(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(s"$outRoot/$layer")
+        def write(df: DataFrame, layer: String): Unit =
+          df.write.mode("overwrite").parquet(s"$outRoot/$layer/batch_id=$batchId")
         write(curated, "curated")
         write(rejected, "rejected")
       })

@@ -639,6 +639,18 @@ class PipelineSpec extends SparkSpec {
     assert(dup.getMessage.contains("duplicate keys"))
   }
 
+  test("keyed upsert into an existing empty directory starts a new table") {
+    import spark.implicits._
+    val path = new java.io.File("target/fixtures/upsert_empty").getAbsolutePath
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(path))
+    new java.io.File(path).mkdirs()
+    graft.sinks.Sinks.upsert(spark, path,
+      Seq(("a", 1, 1), ("b", 2, 2)).toDF("k", "v", "p"),
+      keyCols = Seq("k", "p"), partitionCol = "p")
+    val rows = spark.read.parquet(path).select("k", "v", "p").as[(String, Int, Int)].collect()
+    assert(rows.toSet === Set(("a", 1, 1), ("b", 2, 2)))
+  }
+
   test("generator is deterministic across invocations") {
     val a = TelemetryGen.recordJson(spark, 100).collect().map(_.getString(1))
     val b = TelemetryGen.recordJson(spark, 100).collect().map(_.getString(1))

@@ -81,6 +81,115 @@ class StreamingSpec extends SparkSpec {
     assert(perBatch === Map(0L -> 1L, 1L -> 1L, 2L -> 1L))
   }
 
+  /** Land records [from, from + files × perFile) of one seeded stream in
+    * `dir`, `perFile` to a file, one JSON array per file; record i's
+    * timestamp is 1700000000 + i seconds, so every record landed is
+    * distinct. */
+  private def land(dir: String, from: Int, files: Int, perFile: Int): Unit = {
+    val recs = TelemetryGen.recordJson(spark, (from + files * perFile).toLong, seed = 7)
+      .filter(col("id") >= from).orderBy("id").select("json").collect().map(_.getString(0))
+    new java.io.File(dir).mkdirs()
+    recs.grouped(perFile).zipWithIndex.foreach { case (r, i) =>
+      java.nio.file.Files.write(java.nio.file.Paths.get(f"$dir/f_${from + i * perFile}%08d.json"),
+        r.mkString("[", ",", "]\n").getBytes("UTF-8"))
+    }
+  }
+
+  /** Rows per `batch_id` across both layers of an output root. */
+  private def rowsPerBatch(outRoot: String): Map[Long, Long] =
+    Seq("curated", "rejected").map(l => spark.read.parquet(s"$outRoot/$l").select("batch_id"))
+      .reduce(_ unionByName _).groupBy(col("batch_id").cast("long")).count()
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  test("a batch replayed after a crash before its commit rewrites only its own directory") {
+    val dir = s"$base/replay"
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    def trigger() = StreamingPipeline.run(spark, s"$dir/landing", s"$dir/out", s"$dir/chk")
+      .awaitTermination()
+    (0 until 3).foreach { b => land(s"$dir/landing", b * 600, 2, 300); trigger() }
+    // the layers of batch 2 are written, its commit is not: the restart
+    // runs batch 2 again over the same files
+    Seq("2", ".2.crc").foreach(f => new java.io.File(s"$dir/chk/commits/$f").delete())
+    trigger()
+    assert(new java.io.File(s"$dir/chk/commits/2").exists(), "batch 2 was not replayed")
+    val ts = Seq("curated", "rejected")
+      .map(l => spark.read.parquet(s"$dir/out/$l").select("timestamp")).reduce(_ unionByName _)
+    val r = ts.agg(count(lit(1)), countDistinct(col("timestamp"))).first()
+    assert((r.getLong(0), r.getLong(1)) === ((1800L, 1800L)))
+    assert(rowsPerBatch(s"$dir/out") === Map(0L -> 600L, 1L -> 600L, 2L -> 600L))
+  }
+
+  test("an all-rejected and an all-curated micro-batch leave both layers readable") {
+    val dir = s"$base/degenerate"
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    def record(i: Int, fuel: Double) =
+      s"""{"truck_id":"TRUCK_001","timestamp":"2023-11-14T22:13:${"%02d".format(i)}",""" +
+        s""""location":{"lat":17.38,"lon":78.48},"fuel_level":$fuel,"temperature":20.0,""" +
+        s""""delivery_status":"in_transit"}"""
+    def landBatch(name: String, fuel: Double): Unit = {
+      new java.io.File(s"$dir/landing").mkdirs()
+      java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/landing/$name.json"),
+        (0 until 50).map(record(_, fuel)).mkString("[", ",", "]\n").getBytes("UTF-8"))
+      StreamingPipeline.run(spark, s"$dir/landing", s"$dir/out", s"$dir/chk").awaitTermination()
+    }
+    def layerRows() = Seq("curated", "rejected").map(l =>
+      spark.read.parquet(s"$dir/out/$l").groupBy(col("batch_id").cast("long")).count()
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
+    landBatch("b0", 9999.0) // fuel out of range: every record rejected
+    assert(layerRows() === Seq(Map.empty, Map(0L -> 50L)))
+    landBatch("b1", 60.5)   // every record valid
+    assert(layerRows() === Seq(Map(1L -> 50L), Map(0L -> 50L)))
+    // an empty layer leaves its batch directory with one zero-row file
+    for ((layer, b) <- Seq("curated" -> 0, "rejected" -> 1)) {
+      val parts = Option(new java.io.File(s"$dir/out/$layer/batch_id=$b").listFiles())
+        .toSeq.flatten.filter(_.getName.endsWith(".parquet"))
+      assert(parts.size === 1, s"$layer/batch_id=$b: ${parts.map(_.getName)}")
+      assert(spark.read.parquet(parts.head.getPath).count() === 0L)
+    }
+  }
+
+  test("Sizing.rawBatchPartitions: one task per 4 MB of raw input, floor 1, capped") {
+    val mb = 1L << 20
+    val table = Seq( // (raw bytes, maxPar) -> tasks
+      (BigInt(0), 4) -> 1,
+      (BigInt(340 * 1024), 4) -> 1,   // 4 files of 500 records
+      (BigInt(8 * mb - 1), 4) -> 1,
+      (BigInt(8 * mb), 4) -> 2,
+      (BigInt(12 * mb), 4) -> 3,
+      (BigInt(16 * mb), 4) -> 4,
+      (BigInt(1L << 40), 4) -> 4,     // capped at the machine
+      (BigInt(1L << 40), 32) -> 32,
+      (BigInt(8 * mb), 1) -> 1,
+      // a source of unknown size reports defaultSizeInBytes: full fan-out
+      (BigInt(spark.sessionState.conf.defaultSizeInBytes), 8) -> 8)
+    for (((bytes, maxPar), tasks) <- table)
+      assert(graft.analytics.Sizing.rawBatchPartitions(bytes, maxPar) === tasks, s"($bytes, $maxPar)")
+  }
+
+  test("a warm trigger over a 4-file, 2000-record batch runs 2 tasks, one per layer") {
+    import org.apache.spark.ListenerDrain
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+    val dir = s"$base/fanout"
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    def trigger(): Unit =
+      StreamingPipeline.run(spark, s"$dir/landing", s"$dir/out", s"$dir/chk").awaitTermination()
+    land(s"$dir/landing", 0, 4, 500)
+    trigger()
+    land(s"$dir/landing", 2000, 4, 500)
+    val tasks = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = tasks.incrementAndGet()
+    }
+    ListenerDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    try {
+      trigger()
+      ListenerDrain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(l)
+    assert(tasks.get === 2)
+    assert(rowsPerBatch(s"$dir/out") === Map(0L -> 2000L, 1L -> 2000L))
+  }
+
   test("windowed counts with watermark match the plain batch aggregation") {
     val ev = graft.Tables.events(spark, sfDir)
     val streamed = StreamingPipeline.windowedCounts(ev)
