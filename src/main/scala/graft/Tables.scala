@@ -93,11 +93,6 @@ object Tables {
   def dec12(c: Column): Column = c.cast(DecimalType(12, 2))
   def dec4(c: Column): Column  = c.cast(DecimalType(4, 2))
 
-  /** Deterministic cross-engine average: exact decimal sum, one double
-    * division. Bit-identical in Spark and DuckDB. */
-  def avgExact(c: Column): Column =
-    F.sum(dec2(c)).cast("double") / F.count(F.lit(1))
-
   /** Per-invocation temp output dir for queries that materialize
     * intermediate files (round-trips, stream sources): unique per call
     * so concurrent harness runs can't collide, and removed at JVM exit

@@ -439,9 +439,12 @@ object EventsPipeline {
         col("ts_us"), col("last_click_id"))
   }
 
-  /** Single-pass layer counts (S7 + the conservation invariant). */
+  /** Single-pass layer counts (S7 + the conservation invariant): the
+    * raw, curated and rejected rows of the pipeline's lineage record. */
   def lineageCounts(s: SparkSession, d: String): DataFrame =
-    Lineage.layerCounts(validated(s, d))
+    Lineage.record(validated(s, d))
+      .filter(col("layer").isin("raw", "curated", "rejected"))
+      .select(col("layer"), col("record_count"))
 
   /** NaN→null normalization (P8/P12/F13): taint one enum value with NaN,
     * clean it back to null, aggregate the survivors. */

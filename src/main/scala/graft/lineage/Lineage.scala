@@ -13,7 +13,9 @@ import org.apache.spark.sql.functions._
   * validated plan (raw = curated + rejected is the reference's own
   * conservation invariant), pivoted to rows with `stack`. The pipeline
   * takes the two counts in its one fused pass instead and builds the
-  * same rows from them ([[fromCounts]]).
+  * same rows from them ([[fromCounts]]). This object alone counts the
+  * layers; the sinks write every layer on every run, so the record
+  * always equals the layers' rows.
   *
   * `run_timestamp` is fixed when the record's plan is built and held as
   * a [[graft.functions.RunConstant]]: it is not inlined into generated
@@ -23,18 +25,6 @@ import org.apache.spark.sql.functions._
 object Lineage {
 
   val pipelineName = "green_tech_raw_to_curated_job"
-
-  /** Single-pass layer counts as (layer, record_count) rows.
-    * `validated` must carry `is_valid`. */
-  def layerCounts(validated: DataFrame): DataFrame =
-    validated
-      .agg(
-        count(lit(1)).as("raw"),
-        sum(when(col("is_valid") === true, 1L).otherwise(0L)).as("curated"),
-        sum(when(!(col("is_valid") === true), 1L).otherwise(0L)).as("rejected"))
-      .selectExpr(
-        "stack(3, 'raw', raw, 'curated', curated, 'rejected', rejected) " +
-          "AS (layer, record_count)")
 
   /** The pipeline's governance record with run metadata
     * (Glue_job.py:131-140): the reference's four layer names, counted
@@ -46,7 +36,7 @@ object Lineage {
       zone: String = "UTC"): DataFrame =
     layers(validated.agg(
       count(lit(1)).as("raw"),
-      sum(when(col("is_valid") === true, 1L).otherwise(0L)).as("ok")), geStatus, zone)
+      count_if(col("is_valid")).as("ok")), geStatus, zone)
 
   /** The same record from counts a caller already holds (`raw` records,
     * `ok` of them rule-valid): a one-row local frame, so writing it is
@@ -54,11 +44,6 @@ object Lineage {
   def fromCounts(spark: SparkSession, raw: Long, ok: Long,
       geStatus: String = "PASSED", zone: String = "UTC"): DataFrame =
     layers(spark.createDataFrame(Seq((raw, ok))).toDF("raw", "ok"), geStatus, zone)
-
-  /** Records per written layer under the all-or-nothing gate:
-    * (curated, rejected). */
-  def written(raw: Long, ok: Long, geStatus: String): (Long, Long) =
-    if (geStatus == "FAILED") (0L, raw) else (ok, raw - ok)
 
   /** One (raw, ok) row → the four layer rows with run metadata. */
   private def layers(counts: DataFrame, geStatus: String, zone: String): DataFrame = {

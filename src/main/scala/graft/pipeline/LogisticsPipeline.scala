@@ -25,8 +25,9 @@ import org.apache.spark.storage.StorageLevel
   *    expectation gate as a distributed aggregate over the rule-valid
   *    rows (not the reference's 500-row pandas sample, Glue_job.py:102),
   *    the raw and valid counts, and each rule's rejection count. The
-  *    lineage record is built from those counts, and the sinks skip an
-  *    empty layer on them, so no write needs a guard job.
+  *    lineage record is built from those counts. Every layer is written
+  *    on every run, an empty one as a zero-row file, so no write needs a
+  *    guard job and the record always equals what the layers hold.
   *
   * Every stage is a pure DataFrame→DataFrame function, so the batch
   * entry point, streaming foreachBatch, and tests all share this code.
@@ -78,7 +79,10 @@ object LogisticsPipeline {
     * with no code change, exactly the reference's workflow; None keeps
     * the code-defined [[Expectations.referenceSuite]] (identical
     * semantics, spec-pinned). A malformed or unknown-typed suite file
-    * fails the RUN loudly rather than gating on nothing. */
+    * fails the RUN loudly rather than gating on nothing.
+    *
+    * A FAILED gate empties curated: the run overwrites it with zero rows
+    * and appends every record to rejected, as its lineage record says. */
   def run(spark: SparkSession, rawPath: String, outRoot: String,
       zone: String = "UTC", suitePath: Option[String] = None): Result = {
     val loaded = suitePath.fold(
@@ -91,10 +95,8 @@ object LogisticsPipeline {
       val (curatedF, rejectedF) = Expectations.applyVerdict(
         Splitter.curated(validated), Splitter.rejected(validated, coreCols), t.geStatus)
       val lineage = Lineage.fromCounts(spark, t.raw, t.valid, t.geStatus, zone)
-      val (curatedN, rejectedN) = Lineage.written(t.raw, t.valid, t.geStatus)
-
-      if (curatedN > 0) Sinks.save(curatedF, s"$outRoot/curated", SaveMode.Overwrite)
-      if (rejectedN > 0) Sinks.save(rejectedF, s"$outRoot/rejected", SaveMode.Append)
+      Sinks.save(curatedF, s"$outRoot/curated", SaveMode.Overwrite)
+      Sinks.save(rejectedF, s"$outRoot/rejected", SaveMode.Append)
       Sinks.save(lineage, s"$outRoot/validated", SaveMode.Append)
       Result(curatedF, rejectedF, lineage, t.geStatus, t.ruleRejections)
     } finally {

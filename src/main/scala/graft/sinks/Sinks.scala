@@ -2,41 +2,36 @@ package graft.sinks
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions.{broadcast, col}
-import scala.util.Try
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions.{broadcast, col, count, lit, raise_error}
 
 /** Layered-lake sinks (/root/reference/Glue/Glue_job.py:124-128,142).
   *
-  * The reference writes Delta with mergeSchema; this environment may not
-  * ship delta jars, so we feature-detect and fall back to plain parquet
-  * (identical columnar bytes — the reference's own warehouse tail reads
-  * the parquet inside Delta, Snowflake/Curated_pipe.sql:16-17).
+  * Every lake layer is written here, as plain parquet through [[save]].
+  * The reference writes Delta; `delta-spark` is in neither this image
+  * nor its offline mirror, and parquet is the same columnar bytes that
+  * the reference's own warehouse tail reads inside Delta
+  * (Snowflake/Curated_pipe.sql:16-17). Every reader of the lake
+  * (`WarehouseLoad`, the specs, perfbench) reads those files in place.
   *
-  * The two layer writers guard against an empty write with `isEmpty`
-  * (one job that stops at the first row), not the reference's
-  * `count() > 0` (a full scan per guard, Glue_job.py:124,127). A caller
-  * that already knows the row count (LogisticsPipeline) calls the
-  * unguarded [[save]] and pays no guard job at all.
+  * An empty layer is still written: a zero-row file with the layer's
+  * schema. So every run rewrites every layer it owns, and what a run
+  * records in its lineage is what its layers hold (the reference skips a
+  * layer whose `count()` is 0, Glue_job.py:124,127, which leaves an older
+  * run's rows standing as the current curated layer).
   */
 object Sinks {
 
-  lazy val deltaAvailable: Boolean =
-    Try(Class.forName("io.delta.sql.DeltaSparkSessionExtension")).isSuccess
-
-  private def fmt: String = if (deltaAvailable) "delta" else "parquet"
-
   /** Curated layer: overwrite world (the reference reprocesses the whole
     * raw prefix every run — Glue_job.py:25,31,125). */
-  def writeCurated(df: DataFrame, path: String): Unit =
-    if (!df.isEmpty) save(df, path, SaveMode.Overwrite)
+  def writeCurated(df: DataFrame, path: String): Unit = save(df, path, SaveMode.Overwrite)
 
   /** Rejected + lineage layers: append-only (Glue_job.py:128,142). */
-  def writeAppend(df: DataFrame, path: String): Unit =
-    if (!df.isEmpty) save(df, path, SaveMode.Append)
+  def writeAppend(df: DataFrame, path: String): Unit = save(df, path, SaveMode.Append)
 
-  /** One layer write, unguarded: an empty `df` still writes. */
+  /** One layer write; an empty `df` writes a zero-row file. */
   def save(df: DataFrame, path: String, mode: SaveMode): Unit =
-    df.write.format(fmt).option("mergeSchema", "true").mode(mode).save(path)
+    df.write.mode(mode).parquet(path)
 
   /** Keyed MERGE (upsert) into a partitioned parquet table — the
     * Delta-MERGE equivalent this image's jar set can't run natively.
@@ -57,8 +52,11 @@ object Sinks {
     *
     * `updates` must be unique per key: a Delta-style MERGE errors on
     * ambiguous matches, and silently keeping both copies would corrupt
-    * the table — enforced with one cheap agg over the (small) update
-    * batch before anything is written.
+    * the table. The check is a `raise_error` inside the merged plan: a
+    * filter on each update row's per-key count, which the optimizer
+    * cannot prune, and which the checkpoint that precedes the write
+    * evaluates. A duplicate key fails that checkpoint, before any file
+    * is written, and a clean update pays no job of its own for it.
     *
     * Durability caveat: the dynamic overwrite is NOT atomic (plain
     * parquet has no transaction log) — a crash mid-write can leave a
@@ -71,14 +69,14 @@ object Sinks {
       s"upsert: partition column '$partitionCol' must be part of the key " +
         s"$keyCols — otherwise a key moving partitions leaves a stale copy " +
         "in a partition this upsert never rewrites")
-    val dupKeys = updates.groupBy(keyCols.map(col): _*)
-      .count().filter(col("count") > 1)
-    require(dupKeys.isEmpty,
-      s"upsert: updates contain duplicate keys $keyCols (e.g. " +
-        s"${dupKeys.limit(3).collect().mkString(", ")}) — a MERGE with " +
-        "ambiguous matches is an error, not a double-insert")
+    val checked = updates
+      .withColumn("_n", count(lit(1)).over(Window.partitionBy(keyCols.map(col): _*)))
+      .filter(col("_n") === 1 || raise_error(lit(
+        s"upsert: updates contain duplicate keys $keyCols; a MERGE with " +
+          "ambiguous matches is an error, not a double-insert")).isNull)
+      .drop("_n")
     val merged =
-      if (!hasParquetData(spark, path)) updates
+      if (parquetFiles(spark, path).isEmpty) checked
       else {
         val touched = updates.select(partitionCol).distinct()
         val kept = spark.read.parquet(path)
@@ -86,7 +84,7 @@ object Sinks {
           // the skipping; broadcast keeps the probe small)
           .join(broadcast(touched), Seq(partitionCol), "left_semi")
           .join(updates.select(keyCols.map(col): _*), keyCols, "left_anti")
-        kept.unionByName(updates.select(kept.columns.map(col): _*))
+        kept.unionByName(checked.select(kept.columns.map(col): _*))
       }
     merged
       .localCheckpoint(true) // sever lineage: the write overwrites its own input
@@ -96,23 +94,24 @@ object Sinks {
       .parquet(path)
   }
 
-  /** Whether `path` holds a parquet data file at any depth, outside
-    * hidden (`_`/`.`) files and directories such as a write's
-    * `_temporary`: a missing target and an empty directory are both a new
-    * table. The listing stops at the first data file and reads none, so
-    * a new target logs nothing (reading it would log Spark's
+  /** The parquet data files under `path` at any depth, outside hidden
+    * (`_`/`.`) files and directories such as a write's `_temporary`; a
+    * missing target has none. The Hadoop listing is lazy: asking whether
+    * there is one stops at the first data file and reads none, so a new
+    * target logs nothing (reading it would log Spark's
     * `FileNotFoundException` at WARN). */
-  private def hasParquetData(spark: SparkSession, path: String): Boolean = {
+  private def parquetFiles(spark: SparkSession, path: String): Iterator[Path] = {
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val top = fs.makeQualified(root)
     def visible(f: Path): Boolean =
       Iterator.iterate(f)(_.getParent).takeWhile(p => p != null && p != top)
         .forall(p => !p.getName.startsWith("_") && !p.getName.startsWith("."))
-    fs.exists(root) && {
+    if (!fs.exists(root)) Iterator.empty
+    else {
       val files = fs.listFiles(root, true)
       Iterator.continually(files).takeWhile(_.hasNext).map(_.next().getPath)
-        .exists(f => f.getName.endsWith(".parquet") && visible(f))
+        .filter(f => f.getName.endsWith(".parquet") && visible(f))
     }
   }
 
@@ -128,18 +127,14 @@ object Sinks {
     *
     * Same durability caveat as `upsert`: plain parquet has no commit
     * log, so the overwrite window is non-atomic; re-running repairs.
-    * Returns (filesBefore, filesAfter) for ops telemetry. */
+    * Returns (filesBefore, filesAfter) for ops telemetry; `path` may be a
+    * local path or any Hadoop URI. */
   def compact(spark: SparkSession, path: String, targetFiles: Int): (Int, Int) = {
-    def parquetFiles(p: String): Int = {
-      val d = new java.io.File(p)
-      Option(d.listFiles()).map(_.count(f =>
-        f.getName.endsWith(".parquet") && !f.getName.startsWith("_"))).getOrElse(0)
-    }
-    val before = parquetFiles(path)
+    val before = parquetFiles(spark, path).size
     spark.read.parquet(path)
       .repartition(targetFiles)
       .localCheckpoint(true) // sever lineage: the write overwrites its own input
       .write.mode("overwrite").parquet(path)
-    (before, parquetFiles(path))
+    (before, parquetFiles(spark, path).size)
   }
 }

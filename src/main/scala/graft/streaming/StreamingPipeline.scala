@@ -4,8 +4,9 @@ import graft.analytics.Sizing
 import graft.pipeline.LogisticsPipeline
 import graft.schemas.Schemas
 import graft.ingest.RawJsonReader
+import graft.sinks.Sinks
 import graft.split.Splitter
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
@@ -65,7 +66,11 @@ object StreamingPipeline {
       .load())
 
   /** File-source equivalent of the consumer's raw layer: each line is
-    * one batch's JSON array (consumer_etl.py:63-67). */
+    * one batch's JSON array (consumer_etl.py:63-67). Land each batch's
+    * files in one directory: over a glob that matches more than 32
+    * directories (`spark.sql.sources.parallelPartitionDiscovery.threshold`),
+    * every trigger runs parallel listing jobs with one task per
+    * directory, on top of the micro-batch's own tasks. */
   def rawFileSource(spark: SparkSession, rawPath: String): DataFrame =
     spark.readStream.text(rawPath)
 
@@ -97,10 +102,8 @@ object StreamingPipeline {
         val validated = LogisticsPipeline.validateStage(parsed)
         val curated   = Splitter.curated(validated)
         val rejected  = Splitter.rejected(validated, LogisticsPipeline.coreCols)
-        def write(df: DataFrame, layer: String): Unit =
-          df.write.mode("overwrite").parquet(s"$outRoot/$layer/batch_id=$batchId")
-        write(curated, "curated")
-        write(rejected, "rejected")
+        Sinks.save(curated, s"$outRoot/curated/batch_id=$batchId", SaveMode.Overwrite)
+        Sinks.save(rejected, s"$outRoot/rejected/batch_id=$batchId", SaveMode.Overwrite)
       })
       .start()
 

@@ -69,16 +69,18 @@ class CacheHygieneSpec extends SparkSpec {
         s"`$tok`: ${fs.size} files ${fs.mkString(", ")}" }.mkString("\n"))
   }
 
+  /** A source line without its comment: comment lines and trailing
+    * comments do not count as calls. */
+  private def code(line: String): String = {
+    val t = line.trim
+    if (t.startsWith("*") || t.startsWith("/*") || t.startsWith("//")) ""
+    else line.split("//", 2)(0)
+  }
+
   test("the query boundary and temp dirs are each spelled in one main file") {
     // one query boundary (Caches.endQuery) decides what a harness drops
     // after each query, and one temp-dir helper (Tables.tempOutDir)
-    // registers every temp dir for the shutdown drain; comment lines
-    // and trailing comments do not count as calls
-    def code(line: String): String = {
-      val t = line.trim
-      if (t.startsWith("*") || t.startsWith("/*") || t.startsWith("//")) ""
-      else line.split("//", 2)(0)
-    }
+    // registers every temp dir for the shutdown drain
     val tokens = Seq("releaseMemos()" -> "Caches.scala",
       "clearCache()" -> "Caches.scala",
       "createTempDirectory" -> "Tables.scala")
@@ -91,6 +93,28 @@ class CacheHygieneSpec extends SparkSpec {
       "src/main/scala:\n" + spread.map { case (tok, home, fs) =>
         s"`$tok` (home $home): ${fs.size} files ${fs.mkString(", ")}"
       }.mkString("\n"))
+  }
+
+  test("every lake layer is written one way: parquet through Sinks") {
+    // no Delta switch, no writer-side mergeSchema (the parquet writer
+    // ignores it; the read-side use in Relational.schemaEvolution stays),
+    // and no `.write` in the pipeline and stream bodies, so every layer
+    // write is Sinks'. Landing.scala lands a streaming query's INPUT files,
+    // not a lake layer.
+    val layerDirs = Seq("/pipeline/", "/streaming/")
+    val offenders = mainSources.flatMap { p =>
+      val inLayerDir = layerDirs.exists(p.toString.contains) &&
+        p.getFileName.toString != "Landing.scala"
+      Files.readAllLines(p).asScala.map(code).zipWithIndex.collect {
+        case (line, i) if line.contains("format(\"delta\")") ||
+            line.contains("deltaAvailable") ||
+            (line.contains("\"mergeSchema\"") && !line.contains("read.")) ||
+            (inLayerDir && raw"\.write\b".r.findFirstIn(line).nonEmpty) =>
+          s"${p.getFileName}:${i + 1}: ${line.trim}"
+      }
+    }
+    assert(offenders.isEmpty, "a second layer-write spelling (use Sinks.save):\n" +
+      offenders.mkString("\n"))
   }
 
   test("two memo handles never share an entry for one (session, dir)") {

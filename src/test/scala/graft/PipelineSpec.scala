@@ -161,24 +161,28 @@ class PipelineSpec extends SparkSpec {
     assert(written.size >= 3, s"the fixture trips too few rules: $written")
   }
 
-  test("one run fires at most 6 jobs and appends exactly one lineage file") {
+  /** `body`'s result and the number of Spark jobs it started. */
+  private def jobsOf[T](body: => T): (T, Int) = {
     import org.apache.spark.ListenerDrain
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    fixture
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     val l = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
     }
     ListenerDrain(spark.sparkContext)
     spark.sparkContext.addSparkListener(l)
-    val out =
-      try {
-        val (r, out) = freshRun("out_job_count")
-        assert(r.geStatus === "PASSED")
-        ListenerDrain(spark.sparkContext)
-        out
-      } finally spark.sparkContext.removeSparkListener(l)
-    assert(jobs.get <= 6, s"${jobs.get} jobs for one run")
+    try {
+      val r = body
+      ListenerDrain(spark.sparkContext)
+      (r, jobs.get)
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  test("one run fires at most 6 jobs and appends exactly one lineage file") {
+    fixture
+    val ((r, out), jobs) = jobsOf(freshRun("out_job_count"))
+    assert(r.geStatus === "PASSED")
+    assert(jobs <= 6, s"$jobs jobs for one run")
     val files = new java.io.File(s"$out/validated").listFiles()
       .filter(_.getName.endsWith(".parquet"))
     assert(files.length === 1, files.map(_.getName).mkString(", "))
@@ -434,6 +438,29 @@ class PipelineSpec extends SparkSpec {
     assert(moved.filter(size(col("rejection_reasons")) =!= 1).count() === 0)
   }
 
+  test("a failed run after a passed one leaves layers that equal its lineage record") {
+    // every run writes every layer: a FAILED gate overwrites curated
+    // with zero rows instead of leaving the last PASSED run's rows
+    val (passed, out) = freshRun("out_reconcile")
+    assert(passed.geStatus === "PASSED")
+    val failed = LogisticsPipeline.run(spark, rawDir, out, suitePath = Some(suiteFile(
+      """{"expectations": [
+        {"expectation_type": "expect_column_values_to_be_between",
+         "kwargs": {"column": "fuel_level", "min_value": 0, "max_value": 1}}]}""")))
+    assert(failed.geStatus === "FAILED")
+    val curated = spark.read.parquet(s"$out/curated").count()
+    assert(curated === 0L)
+    val stamp = failed.rejected.select("processed_at").head().get(0)
+    val rejected = spark.read.parquet(s"$out/rejected")
+      .filter(col("processed_at") === lit(stamp)).count()
+    val runAt = failed.lineage.select("run_timestamp").head().get(0)
+    val recorded = spark.read.parquet(s"$out/validated")
+      .filter(col("run_timestamp") === lit(runAt)).collect()
+      .map(r => r.getAs[String]("layer") -> r.getAs[Long]("record_count")).toMap
+    assert(recorded === Map("raw" -> n, "validated_total" -> n,
+      "curated" -> curated, "rejected" -> rejected))
+  }
+
   test("SuiteLoader rejects unknown expectation types loudly") {
     val bad = """{"expectations": [
       {"expectation_type": "expect_column_median_to_be_between",
@@ -619,10 +646,12 @@ class PipelineSpec extends SparkSpec {
     val p2Before = mtimes(2)
     // update key b, insert key e — both land in partition 1
     // the partition column is part of the key (enforced): a key cannot
-    // move partitions, which is what makes partition-scoped rewrite sound
-    Sinks.upsert(spark, path,
+    // move partitions, which is what makes partition-scoped rewrite sound;
+    // the duplicate-key check rides the checkpoint's jobs, not its own
+    val (_, jobs) = jobsOf(Sinks.upsert(spark, path,
       Seq(("b", 20, 1), ("e", 50, 1)).toDF("k", "v", "p"),
-      keyCols = Seq("k", "p"), partitionCol = "p")
+      keyCols = Seq("k", "p"), partitionCol = "p"))
+    assert(jobs === 7, s"$jobs jobs for a clean upsert")
     val after = spark.read.parquet(path)
     assert(after.count() === 5)
     assert(after.filter($"k" === "b").select("v").first().getInt(0) === 20)
@@ -630,13 +659,17 @@ class PipelineSpec extends SparkSpec {
     // the untouched partition's files were not rewritten
     assert(mtimes(2) === p2Before, "partition p=2 was rewritten")
     // ambiguous MERGE input (duplicate keys in updates) is an error,
-    // not a silent double-insert
-    val dup = intercept[IllegalArgumentException] {
+    // not a silent double-insert, and it fails before any file is written
+    val rows = after.collect().toSet
+    val files = (mtimes(1), mtimes(2))
+    val dup = intercept[Exception] {
       Sinks.upsert(spark, path,
         Seq(("b", 20, 1), ("b", 21, 1)).toDF("k", "v", "p"),
         keyCols = Seq("k", "p"), partitionCol = "p")
     }
     assert(dup.getMessage.contains("duplicate keys"))
+    assert(spark.read.parquet(path).collect().toSet === rows)
+    assert((mtimes(1), mtimes(2)) === files)
   }
 
   test("keyed upsert into an existing empty directory starts a new table") {

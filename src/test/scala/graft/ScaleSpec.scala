@@ -376,6 +376,12 @@ class ScaleSpec extends SparkSpec {
     val checksumAfter = spark.read.parquet(dir)
       .agg(sum(col("o_orderkey")), count(lit(1))).first()
     assert(checksumAfter === checksumBefore)
+    // a Hadoop URI lists and counts the same files as a local path
+    val uriDir = Tables.tempOutDir("compact_uri_spec")
+    src.repartition(6).write.parquet(uriDir)
+    assert(graft.sinks.Sinks.compact(spark, "file://" + uriDir, 2) === ((6, 2)))
+    assert(spark.read.parquet(uriDir).agg(sum(col("o_orderkey")), count(lit(1)))
+      .first() === checksumBefore)
   }
 
   test("range-partitioned sorted write: files carry disjoint, ordered key ranges") {
