@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.analytics.Caches
 import graft.analytics.Caches.TrackedPersist
 import graft.expect.Expectations
 import graft.functions.perRun
@@ -9,7 +10,7 @@ import graft.rules._
 import graft.schemas.Schemas
 import graft.sinks.Sinks
 import graft.split.Splitter
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -17,11 +18,15 @@ import org.apache.spark.storage.StorageLevel
   * split → expectation gate → curated/rejected/lineage layers. Same
   * stages as /root/reference/Glue/Glue_job.py, re-planned for scale:
   *
-  *  - ONE parse per record (see [[RawJsonReader]]) and ONE persist of
-  *    the post-validation plan instead of the reference's ~8-10 full raw
+  *  - ONE parse per record (see [[RawJsonReader]]) and ONE hold of the
+  *    checked records ([[checkStage]]: parsed, NaN-cleaned, `is_valid`)
+  *    as deserialized rows, instead of the reference's ~8-10 full raw
   *    re-parses (one per count()/write action —
-  *    Glue_job.py:95,102,124-135).
-  *  - ONE Spark action over that persisted set ([[tally]]): the
+  *    Glue_job.py:95,102,124-135). `rejection_reasons` and
+  *    `processed_at` are added above the hold ([[stampStage]]), so the
+  *    rejected write builds reasons only for the rows its pushed-down
+  *    `is_valid = false` filter keeps.
+  *  - ONE Spark action over that held set ([[tally]]): the
   *    expectation gate as a distributed aggregate over the rule-valid
   *    rows (not the reference's 500-row pandas sample, Glue_job.py:102),
   *    the raw and valid counts, and each rule's rejection count. The
@@ -60,16 +65,25 @@ object LogisticsPipeline {
   final case class Tally(raw: Long, valid: Long, geStatus: String,
       ruleRejections: Map[String, Long])
 
-  /** Clean + validate + stamp: the narrow-transform core.
-    * `processed_at` is fixed when this plan is built (one value for every
-    * row and every action on it, so one micro-batch's curated and
-    * rejected rows carry the same stamp), and it is held as a
+  /** Clean + validate + stamp: the narrow-transform core,
+    * [[stampStage]] over [[checkStage]]. */
+  def validateStage(parsed: DataFrame, zone: String = "UTC"): DataFrame =
+    stampStage(checkStage(parsed), perRun.now(zone))
+
+  /** The parsed records with NaN→null numerics and `is_valid`. */
+  def checkStage(parsed: DataFrame): DataFrame =
+    Validator.cleanNanNull(parsed, Seq("fuel_level", "temperature"))
+      .withColumn("is_valid", Validator.isValid(rules))
+
+  /** `checked` plus `rejection_reasons` and `processed_at`. `stamp` is a
+    * [[graft.functions.perRun]] value fixed when it was made (one value
+    * for every row and every action on it, so one micro-batch's curated
+    * and rejected rows carry the same stamp) and held as a
     * [[graft.functions.RunConstant]], not inlined into generated code, so
     * the next run's plan compiles to the same classes. */
-  def validateStage(parsed: DataFrame, zone: String = "UTC"): DataFrame = {
-    val clean = Validator.cleanNanNull(parsed, Seq("fuel_level", "temperature"))
-    Validator.validate(clean, rules).withColumn("processed_at", perRun.now(zone))
-  }
+  def stampStage(checked: DataFrame, stamp: Column): DataFrame =
+    checked.withColumn("rejection_reasons", Validator.rejectionReasons(rules))
+      .withColumn("processed_at", stamp)
 
   /** Full run from a raw directory; the gate runs on all rows.
     * `suitePath`: Some(file) loads the quality gate DECLARATIVELY from
@@ -82,25 +96,33 @@ object LogisticsPipeline {
     * fails the RUN loudly rather than gating on nothing.
     *
     * A FAILED gate empties curated: the run overwrites it with zero rows
-    * and appends every record to rejected, as its lineage record says. */
+    * and appends every record to rejected, as its lineage record says.
+    *
+    * The run frees its held records when it returns, so the returned
+    * curated and rejected frames are planned over the raw input: an
+    * action on them parses it again. */
   def run(spark: SparkSession, rawPath: String, outRoot: String,
       zone: String = "UTC", suitePath: Option[String] = None): Result = {
     val loaded = suitePath.fold(
       graft.expect.SuiteLoader.LoadedSuite(Expectations.referenceSuite, Nil))(
       graft.expect.SuiteLoader.loadFile)
-    val parsed    = RawJsonReader.read(spark, rawPath, Schemas.telemetry)
-    val validated = validateStage(parsed, zone).persistTracked(StorageLevel.MEMORY_AND_DISK)
+    val checked = checkStage(RawJsonReader.read(spark, rawPath, Schemas.telemetry))
+    val stamp   = perRun.now(zone)
+    def split(validated: DataFrame, geStatus: String) = Expectations.applyVerdict(
+      Splitter.curated(validated), Splitter.rejected(validated, coreCols), geStatus)
+    val held = checked.holdTracked(StorageLevel.MEMORY_AND_DISK)
     try {
+      val validated = stampStage(held, stamp)
       val t = tally(validated, loaded)
-      val (curatedF, rejectedF) = Expectations.applyVerdict(
-        Splitter.curated(validated), Splitter.rejected(validated, coreCols), t.geStatus)
+      val (curatedH, rejectedH) = split(validated, t.geStatus)
       val lineage = Lineage.fromCounts(spark, t.raw, t.valid, t.geStatus, zone)
-      Sinks.save(curatedF, s"$outRoot/curated", SaveMode.Overwrite)
-      Sinks.save(rejectedF, s"$outRoot/rejected", SaveMode.Append)
+      Sinks.save(curatedH, s"$outRoot/curated", SaveMode.Overwrite)
+      Sinks.save(rejectedH, s"$outRoot/rejected", SaveMode.Append)
       Sinks.save(lineage, s"$outRoot/validated", SaveMode.Append)
+      val (curatedF, rejectedF) = split(stampStage(checked, stamp), t.geStatus)
       Result(curatedF, rejectedF, lineage, t.geStatus, t.ruleRejections)
     } finally {
-      validated.unpersist()
+      Caches.free(held)
     }
   }
 

@@ -2,6 +2,7 @@ package graft.rules
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StringType}
 
 /** Declarative validation-rule engine.
   *
@@ -82,17 +83,27 @@ object Validator {
   def isValid(rules: Seq[ValidationRule], nullStrict: Boolean = true): Column =
     flags(rules, nullStrict).reduce(_ && _)
 
-  /** Compacted reasons array. The reference uses
+  /** Compacted reasons array: each failed rule's reason, in rule order,
+    * duplicates kept. The reference uses
     * `array_remove(array(case..end, ...), null)` (Glue_job.py:71-80);
     * Spark's array_remove(a, NULL) returns NULL (null-unsafe equality),
-    * so we produce the *intended* output — the non-null reasons — with
-    * the `filter` higher-order function instead. */
+    * so we produce the *intended* output — the non-null reasons. Each
+    * rule contributes a one-element or an empty array and `concat` joins
+    * them, so the whole array is built in generated code: a `filter`
+    * lambda (or `array_compact`, which rewrites to one) is interpreted
+    * row by row, and `array_except` drops a reason two rules share. The
+    * type stays `array<string>` with nullable elements, the `filter`
+    * spelling's type, so the layers' parquet schema does not move. */
   def rejectionReasons(rules: Seq[ValidationRule],
       nullStrict: Boolean = true): Column = {
-    val cases = flags(rules, nullStrict).zip(rules)
-      .map { case (f, r) => when(!f, lit(r.reason)).otherwise(lit(null)) }
-    filter(array(cases: _*), x => x.isNotNull)
+    val none = array().cast(ReasonsType)
+    val parts = flags(rules, nullStrict).zip(rules)
+      .map { case (f, r) => when(!f, array(lit(r.reason))).otherwise(none) }
+    concat(parts: _*)
   }
+
+  /** `rejection_reasons`' type. */
+  private val ReasonsType: ArrayType = ArrayType(StringType, containsNull = true)
 
   /** Adds `is_valid` and `rejection_reasons` in one narrow projection. */
   def validate(df: DataFrame, rules: Seq[ValidationRule],

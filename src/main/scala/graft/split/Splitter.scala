@@ -6,10 +6,11 @@ import org.apache.spark.sql.functions._
 /** Curated/rejected split off one validated plan
   * (/root/reference/Glue/Glue_job.py:84-93).
   *
-  * Both sides are filters over the same parent — at scale the parent
-  * should be persisted once by the caller (the reference recomputes the
-  * full parse per action; we do not copy that, see
-  * pipeline.LogisticsPipeline).
+  * Both sides are filters over the same parent. A caller that runs both
+  * should hold the parent's rows once (the reference recomputes the full
+  * parse per action; `pipeline.LogisticsPipeline.run` holds the checked
+  * records and adds the reasons above the hold, so they are built only
+  * for the rows [[rejected]]'s filter keeps).
   */
 object Splitter {
 

@@ -23,18 +23,24 @@ class CacheHygieneSpec extends SparkSpec {
       .filter(_.toString.endsWith(".scala")).toSeq
 
   test("every persist in main source is the tracked spelling") {
+    // a Dataset or RDD `.persist(`, and a `localCheckpoint(` other than the
+    // eager `localCheckpoint(true)` that severs a plan's lineage: a lazy
+    // or storage-level checkpoint holds rows until someone frees them
+    val eagerCheckpoint = "localCheckpoint(true)"
     val offenders = mainSources.flatMap { p =>
       val name = p.getFileName.toString
       Files.readAllLines(p).asScala.zipWithIndex.collect {
-        // Caches.scala itself wraps the raw call — the one allowed site
+        // Caches.scala itself wraps the raw calls — the one allowed site
         case (line, i)
-            if line.contains(".persist(") && name != "Caches.scala" =>
+            if (line.contains(".persist(") ||
+              line.replace(eagerCheckpoint, "").contains("localCheckpoint(")) &&
+              name != "Caches.scala" =>
           s"$name:${i + 1}: $line"
       }
     }
     assert(offenders.isEmpty,
-      s"untracked .persist( calls (use Caches.persistTracked):\n" +
-        offenders.mkString("\n"))
+      s"untracked .persist( or localCheckpoint( calls " +
+        "(use Caches.persistTracked or holdTracked):\n" + offenders.mkString("\n"))
   }
 
   test("no TrieMap in main source outside Caches.scala") {
@@ -160,5 +166,30 @@ class CacheHygieneSpec extends SparkSpec {
     Caches.release()
     assert(Caches.trackedCount == 0, "registry must drain")
     assert(!df.storageLevel.useMemory, "release() must unpersist")
+  }
+
+  test("release() and free() unpersist a row hold") {
+    import graft.analytics.Caches
+    import graft.analytics.Caches.TrackedPersist
+    import org.apache.spark.storage.StorageLevel
+    Caches.release()
+    val sc = spark.sparkContext
+    def hold() = {
+      val rdds0 = sc.getPersistentRDDs.keySet
+      val held = spark.range(100).select(col("id") * 2).holdTracked(StorageLevel.MEMORY_AND_DISK)
+      assert(held.count() === 100)
+      val added = sc.getPersistentRDDs.keySet -- rdds0
+      assert(added.size === 1, s"one held RDD, got $added")
+      (held, added.head)
+    }
+    val (a, aId) = hold()
+    val (_, bId) = hold()
+    assert(Caches.trackedCount === 2)
+    Caches.free(a)
+    assert(Caches.trackedCount === 1)
+    assert(!sc.getPersistentRDDs.contains(aId) && sc.getPersistentRDDs.contains(bId))
+    Caches.release()
+    assert(Caches.trackedCount === 0)
+    assert(!sc.getPersistentRDDs.contains(bId), "release() must free a hold")
   }
 }

@@ -197,6 +197,33 @@ class PipelineSpec extends SparkSpec {
     assert(compiles() - c0 === 0L)
   }
 
+  test("a run holds no rows and caches no plan after it passes, fails or throws") {
+    import graft.analytics.Caches
+    fixture
+    spark.catalog.clearCache()
+    val sc = spark.sparkContext
+    val (rdds0, tracked0) = (sc.getPersistentRDDs.keySet, Caches.trackedCount)
+    def assertFreed(what: String): Unit = {
+      val left = sc.getPersistentRDDs.keySet -- rdds0
+      assert(left.isEmpty, s"$what: RDDs $left still persisted")
+      assert(spark.sharedState.cacheManager.isEmpty, s"$what: a cached plan is left")
+      assert(Caches.trackedCount === tracked0, s"$what: a tracked frame is left")
+    }
+    assert(freshRun("out_hold_passed")._1.geStatus === "PASSED")
+    assertFreed("PASSED run")
+    val failing = suiteFile(
+      """{"expectations": [
+        {"expectation_type": "expect_column_values_to_be_between",
+         "kwargs": {"column": "fuel_level", "min_value": 0, "max_value": 1}}]}""")
+    assert(freshRun("out_hold_failed", Some(failing))._1.geStatus === "FAILED")
+    assertFreed("FAILED run")
+    val file = new java.io.File("target/fixtures/out_hold_is_a_file")
+    file.delete()
+    java.nio.file.Files.writeString(file.toPath, "not a directory")
+    intercept[Exception](LogisticsPipeline.run(spark, rawDir, file.getAbsolutePath))
+    assertFreed("run whose write threw")
+  }
+
   test("curated layer written and round-trips through the warehouse projection") {
     result // force the run (writes happen in run())
     val wh = WarehouseLoad.curated(spark, s"$outDir/curated")
