@@ -36,7 +36,11 @@ case class RunConstant(value: Long, dataType: DataType) extends LeafExpression {
 }
 
 object perRun {
-  /** `from_utc_timestamp(current_timestamp(), zone)` as it reads now. */
-  def now(zone: String): Column = Bridge.column(RunConstant(
-    DateTimeUtils.fromUTCTime(DateTimeUtils.instantToMicros(Instant.now()), zone), TimestampType))
+  /** `from_utc_timestamp(current_timestamp(), zone)` as it reads now, in
+    * epoch microseconds: the value a run's [[now]] column holds. */
+  def micros(zone: String): Long =
+    DateTimeUtils.fromUTCTime(DateTimeUtils.instantToMicros(Instant.now()), zone)
+
+  /** [[micros]] as a timestamp column. */
+  def now(zone: String): Column = Bridge.column(RunConstant(micros(zone), TimestampType))
 }

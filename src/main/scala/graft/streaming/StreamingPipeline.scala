@@ -1,12 +1,19 @@
 package graft.streaming
 
-import graft.analytics.Sizing
+import graft.analytics.{Caches, Sizing}
+import graft.functions.{perRun, RunConstant}
 import graft.pipeline.LogisticsPipeline
 import graft.schemas.Schemas
 import graft.ingest.RawJsonReader
 import graft.sinks.Sinks
 import graft.split.Splitter
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.execution.{CoalesceExec, LogicalRDD, RDDScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
@@ -28,15 +35,16 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * longer resets and rejected no longer accumulates cross-run
   * duplicates (SURVEY.md §2.8 T3).
   *
-  * A trigger is cheap to repeat: its micro-batch runs on the caller's
-  * session ([[onSession]]), and `processed_at`, the one value that
-  * changes from run to run inside the plan, is fixed when the batch's
-  * plan is built and held as a [[graft.functions.RunConstant]], not
-  * inlined into generated code (`batch_id` is in the output path, not
-  * the plan). So a warm trigger reuses every class the first one
-  * compiled: code generation is paid once per JVM, not once per trigger.
-  * Its task count follows the batch's bytes, so a poll-sized batch pays
-  * one task's fixed cost per layer, not one per input file.
+  * A trigger is cheap to repeat. Its two layer writes are planned once
+  * per session, batch schema and session conf, and held: a warm trigger
+  * binds its batch's rows, task count and `processed_at` stamp into a
+  * copy of each held plan, with no analysis, optimization or physical
+  * planning of the stages. The stamp is a [[graft.functions.RunConstant]],
+  * not inlined into generated code (`batch_id` is in the output path, not
+  * the plan), and the writes run on the caller's session, so a warm
+  * trigger also reuses every class the first one compiled. Its task
+  * count follows the batch's bytes, so a poll-sized batch pays one
+  * task's fixed cost per layer, not one per input file.
   */
 object StreamingPipeline {
 
@@ -87,25 +95,85 @@ object StreamingPipeline {
     * poll-sized batches, full fan-out for a backlog or a source of
     * unknown size. An empty layer still leaves its batch directory,
     * holding one zero-row part file with the layer's schema, so both
-    * layers stay readable after any batch. */
+    * layers stay readable after any batch.
+    *
+    * The layers' executed plans are built once per (session, batch
+    * schema, session conf) with the stage functions above, over an empty
+    * placeholder input, and held in the session's memo table
+    * ([[graft.analytics.Caches.SessionMemo]]): a conf change plans anew,
+    * and `Caches.releaseMemos()` drops them. Each trigger writes a copy
+    * bound to the `LogicalRDD` of rows that `foreachBatch` hands over. */
   def run(spark: SparkSession, rawPath: String, outRoot: String,
       checkpoint: String): StreamingQuery =
     rawFileSource(spark, rawPath)
       .writeStream
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpoint)
-      .foreachBatch(onSession(spark) { (batch, batchId) =>
-        val tasks = Sizing.rawBatchPartitions(
-          batch.queryExecution.optimizedPlan.stats.sizeInBytes,
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        val input = batch.queryExecution.logical match {
+          case rows: LogicalRDD => rows
+          case other => throw new IllegalStateException(
+            s"foreachBatch handed a ${other.nodeName}, not the LogicalRDD of a batch's rows")
+        }
+        val key = input.schema.json + spark.conf.getAll.toSeq.sorted.mkString("\n", "\n", "")
+        val plans = layerPlans.getOrElseUpdate((spark, key), LayerPlans(spark, input.output))
+        val tasks = Sizing.rawBatchPartitions(input.stats.sizeInBytes,
           spark.sparkContext.defaultParallelism)
-        val parsed    = RawJsonReader.parse(batch.coalesce(tasks), Schemas.telemetry)
-        val validated = LogisticsPipeline.validateStage(parsed)
-        val curated   = Splitter.curated(validated)
-        val rejected  = Splitter.rejected(validated, LogisticsPipeline.coreCols)
-        Sinks.save(curated, s"$outRoot/curated/batch_id=$batchId", SaveMode.Overwrite)
-        Sinks.save(rejected, s"$outRoot/rejected/batch_id=$batchId", SaveMode.Overwrite)
-      })
+        val stamp = perRun.micros("UTC")
+        for ((layer, plan) <- plans.layers) {
+          val bound = plans.bind(plan, input.rdd, tasks, stamp)
+          Sinks.save(Bridge.ofRdd(spark, bound.output, bound.execute()),
+            s"$outRoot/$layer/batch_id=$batchId", SaveMode.Overwrite)
+        }
+      }
       .start()
+
+  /** The executed plans of a batch's two layer writes, by layer, planned
+    * once over `placeholder`, an empty input of the batch's schema, for
+    * [[bind]] to point at each batch. */
+  private final class LayerPlans(placeholder: RDD[InternalRow],
+      val layers: Seq[(String, SparkPlan)]) {
+
+    /** `plan` over `rows`, coalesced to `tasks` partitions, stamped
+      * `stamp`: the three inputs that change from batch to batch. */
+    def bind(plan: SparkPlan, rows: RDD[InternalRow], tasks: Int, stamp: Long): SparkPlan =
+      plan.transformUp {
+        case scan: RDDScanExec if scan.rdd eq placeholder => scan.copy(rdd = rows)
+        case coalesce: CoalesceExec => coalesce.copy(numPartitions = tasks)
+      }.transformAllExpressions { case RunConstant(_, t) => RunConstant(stamp, t) }
+  }
+
+  private object LayerPlans {
+    /** Parse → validate → split over a placeholder `input`, planned on
+      * `spark`. A plan that [[LayerPlans.bind]] could not bind whole fails
+      * here, on the first trigger: one that reads another input, holds
+      * no or several stamps or coalesces, or shuffles (an exchange would
+      * fix its width when planned). */
+    def apply(spark: SparkSession, input: Seq[Attribute]): LayerPlans = {
+      val placeholder = spark.sparkContext.emptyRDD[InternalRow]
+      val validated = LogisticsPipeline.validateStage(RawJsonReader.parse(
+        Bridge.ofRdd(spark, input, placeholder).coalesce(1), Schemas.telemetry))
+      val layers = Seq("curated" -> Splitter.curated(validated),
+        "rejected" -> Splitter.rejected(validated, LogisticsPipeline.coreCols))
+      new LayerPlans(placeholder, layers.map { case (layer, df) =>
+        val plan = df.queryExecution.executedPlan
+        val reads = plan.collectLeaves().map {
+          case s: RDDScanExec => (s.rdd eq placeholder) && s.output == input
+          case _ => false
+        }
+        val stamps = plan.flatMap(_.expressions.flatMap(_.collect { case c: RunConstant => c }))
+        require(reads == Seq(true), s"a held layer plan must read the batch's rows once:\n$plan")
+        require(stamps.size == 1, s"a held layer plan must carry one stamp:\n$plan")
+        require(plan.collect { case c: CoalesceExec => c }.size == 1 && plan.find {
+          case _: Exchange | _: AdaptiveSparkPlanExec => true
+          case _ => false
+        }.isEmpty, s"a held layer plan must coalesce once and not shuffle:\n$plan")
+        layer -> plan
+      })
+    }
+  }
+
+  private val layerPlans = new Caches.SessionMemo[LayerPlans]
 
   /** `body` as a `foreachBatch` function that sees each micro-batch as a
     * frame of `spark`, the session that starts the stream. Spark hands

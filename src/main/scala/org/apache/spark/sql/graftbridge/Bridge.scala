@@ -26,6 +26,15 @@ object Bridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** A frame of `spark` that reads `rdd`'s rows as `output`: a
+    * `LogicalRDD` leaf, whose constructor takes the classic session. */
+  def ofRdd(spark: org.apache.spark.sql.SparkSession,
+      output: Seq[org.apache.spark.sql.catalyst.expressions.Attribute],
+      rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow])
+      : org.apache.spark.sql.DataFrame =
+    ofRows(spark, org.apache.spark.sql.execution.LogicalRDD(output, rdd)(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]))
+
   /** `org.apache.spark.sql.types.AbstractDataType` is `private[sql]` in
     * Spark 4, but extension expressions need it to declare `inputTypes`
     * (analysis-time typing via `ExpectsInputTypes`) — same in-package

@@ -75,10 +75,12 @@ class StreamingSpec extends SparkSpec {
     def stamps(layer: String) =
       spark.read.parquet(s"$warm/out/$layer")
         .select(col("batch_id").cast("long"), col("processed_at"))
-    val perBatch = stamps("curated").unionByName(stamps("rejected"))
-      .groupBy("batch_id").agg(countDistinct("processed_at"))
+    val both = stamps("curated").unionByName(stamps("rejected"))
+    val perBatch = both.groupBy("batch_id").agg(countDistinct("processed_at"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(perBatch === Map(0L -> 1L, 1L -> 1L, 2L -> 1L))
+    // and each batch its own: a held plan that kept its first stamp writes one
+    assert(both.select("processed_at").distinct().count() === 3L)
   }
 
   /** Land records [from, from + files × perFile) of one seeded stream in
@@ -166,16 +168,10 @@ class StreamingSpec extends SparkSpec {
       assert(graft.analytics.Sizing.rawBatchPartitions(bytes, maxPar) === tasks, s"($bytes, $maxPar)")
   }
 
-  test("a warm trigger over a 4-file, 2000-record batch runs 2 tasks, one per layer") {
+  /** Tasks that `body` runs on the spec session, counted by a listener. */
+  private def tasksOf(body: => Unit): Int = {
     import org.apache.spark.ListenerDrain
     import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-    val dir = s"$base/fanout"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-    def trigger(): Unit =
-      StreamingPipeline.run(spark, s"$dir/landing", s"$dir/out", s"$dir/chk").awaitTermination()
-    land(s"$dir/landing", 0, 4, 500)
-    trigger()
-    land(s"$dir/landing", 2000, 4, 500)
     val tasks = new java.util.concurrent.atomic.AtomicInteger
     val l = new SparkListener {
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit = tasks.incrementAndGet()
@@ -183,11 +179,63 @@ class StreamingSpec extends SparkSpec {
     ListenerDrain(spark.sparkContext)
     spark.sparkContext.addSparkListener(l)
     try {
-      trigger()
+      body
       ListenerDrain(spark.sparkContext)
     } finally spark.sparkContext.removeSparkListener(l)
-    assert(tasks.get === 2)
+    tasks.get
+  }
+
+  test("a warm trigger over a 4-file, 2000-record batch runs 2 tasks, one per layer") {
+    val dir = s"$base/fanout"
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    def trigger(): Unit =
+      StreamingPipeline.run(spark, s"$dir/landing", s"$dir/out", s"$dir/chk").awaitTermination()
+    land(s"$dir/landing", 0, 4, 500)
+    trigger()
+    land(s"$dir/landing", 2000, 4, 500)
+    assert(tasksOf(trigger()) === 2)
     assert(rowsPerBatch(s"$dir/out") === Map(0L -> 2000L, 1L -> 2000L))
+  }
+
+  test("a backlog after a poll-sized batch fans out by its own bytes") {
+    val dir = s"$base/backlog"
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    def trigger(): Unit =
+      StreamingPipeline.run(spark, s"$dir/landing", s"$dir/out", s"$dir/chk").awaitTermination()
+    land(s"$dir/landing", 0, 4, 500)
+    trigger()
+    // 60000 records, ~10 MB of raw JSON: 2 tasks a layer, not the 1 the
+    // first batch's plan was run with
+    land(s"$dir/landing", 2000, 12, 5000)
+    val bytes = new java.io.File(s"$dir/landing").listFiles()
+      .filter(_.getName >= "f_00002000").map(_.length).sum
+    assert(bytes > (8L << 20) && bytes < (12L << 20), s"backlog of $bytes bytes")
+    assert(tasksOf(trigger()) === 4)
+    assert(rowsPerBatch(s"$dir/out") === Map(0L -> 2000L, 1L -> 60000L))
+  }
+
+  test("a trigger's held plans follow the session's conf and the memo table") {
+    import graft.analytics.Caches
+    val dir = s"$base/replan"
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    def trigger(b: Int): Unit = {
+      land(s"$dir/landing", b * 1000, 2, 500)
+      StreamingPipeline.run(spark, s"$dir/landing", s"$dir/out", s"$dir/chk").awaitTermination()
+    }
+    trigger(0)
+    val held = Caches.memoCount
+    GraftSession.withConf(spark, "spark.sql.codegen.wholeStage" -> "false")(trigger(1))
+    assert(Caches.memoCount === held + 1, "a plan-shaping conf change did not re-plan")
+    trigger(2)
+    assert(Caches.memoCount === held + 1, "the session's own conf planned again")
+    Caches.releaseMemos()
+    assert(Caches.memoCount === 0)
+    trigger(3)
+    assert(Caches.memoCount === 1, "the trigger after releaseMemos() held no plan")
+    assert(rowsPerBatch(s"$dir/out") === (0 until 4).map(_.toLong -> 1000L).toMap)
+    val ts = Seq("curated", "rejected")
+      .map(l => spark.read.parquet(s"$dir/out/$l").select("timestamp")).reduce(_ unionByName _)
+    assert(ts.distinct().count() === 4000L)
   }
 
   test("windowed counts with watermark match the plain batch aggregation") {
